@@ -227,28 +227,6 @@ class EngineConfig:
     centroid-expression cap per subspace as ``kmeans_k``, same
     one-scan-per-iteration cost (ALL subspaces' updates ride a single
     exchange of m×k×subdim rows per task).
-    ``jpeg_decoder`` — JPEG codec behind the L5g/L5t mapInPandas seam:
-    ``pure`` (default — jpeg.py's from-scratch T.81 decoder, the
-    oracle-pinned reference implementation) or ``imageio`` (a
-    persistent JVM sidecar per Python worker running javax.imageio's
-    reader — the native swap the multimodal seam note prices at
-    18-175x; llm/native_jpeg.py). Same return contract and plan shape
-    either way; DC-only streams (the registered corpus) decode
-    BIT-IDENTICALLY so the driver hash is decoder-invariant, while
-    AC-bearing JPEGs agree within the conformance fixtures' IDCT
-    rounding tolerance (|diff| <= 2) — the parity test pins both.
-    ``image_decoder`` — PNG/GIF/TIFF codec behind the L5d/L5i/L5r
-    mapInPandas seams (VERDICT r11 item 4): ``pure`` (default — the
-    from-scratch png.py/gif.py/tiff.py decoders, oracle-pinned) or
-    ``imageio`` (the SAME persistent JVM sidecar as ``jpeg_decoder``
-    — javax.imageio sniffs the format, palette images expand through
-    the color map JVM-side). All three formats are LOSSLESS, so
-    parity is BIT-EXACT on every stream the JDK reader accepts
-    (pinned per-format in tests/test_native_jpeg.py); streams it
-    rejects (BigTIFF, >8-bit samples) raise loudly and the TIFF leg
-    keeps the pure decoder for exactly those, so the registered
-    query hashes are decoder-invariant. Independent of
-    ``jpeg_decoder`` so each seam can be priced separately.
     ``phash_mode`` — perceptual image-dedup hash for L2k
     (``llm_dedup_phash``): ``dct256`` (default — a 256-bit fixed-point
     DCT-II hash over the decoded 16×16 pixels, banded 16 × 16-bit; the
@@ -324,20 +302,8 @@ class EngineConfig:
     pq_iters: int = 2
     logreg_iters: int = 3
     phash_mode: str = "dct256"
-    jpeg_decoder: str = "pure"
-    image_decoder: str = "pure"
 
     def __post_init__(self) -> None:
-        if self.jpeg_decoder not in ("pure", "imageio"):
-            raise ValueError(
-                f"jpeg_decoder must be 'pure' or 'imageio', "
-                f"got {self.jpeg_decoder!r}"
-            )
-        if self.image_decoder not in ("pure", "imageio"):
-            raise ValueError(
-                f"image_decoder must be 'pure' or 'imageio', "
-                f"got {self.image_decoder!r}"
-            )
         if self.phash_mode not in ("dct256", "dhash56"):
             raise ValueError(
                 f"phash_mode must be 'dct256' or 'dhash56', "
@@ -464,12 +430,6 @@ def from_env() -> EngineConfig:
         logreg_iters=_env_int("SPARK_GRAFT_LOGREG_ITERS", d.logreg_iters),
         phash_mode=_env_choice(
             "SPARK_GRAFT_PHASH_MODE", d.phash_mode, ("dct256", "dhash56")
-        ),
-        jpeg_decoder=_env_choice(
-            "SPARK_GRAFT_JPEG_DECODER", d.jpeg_decoder, ("pure", "imageio")
-        ),
-        image_decoder=_env_choice(
-            "SPARK_GRAFT_IMAGE_DECODER", d.image_decoder, ("pure", "imageio")
         ),
     )
 

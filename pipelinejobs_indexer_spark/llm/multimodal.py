@@ -45,7 +45,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..config import CONFIG
 from ..registry import register
 from ..tables import load_table, spread
 
@@ -574,68 +573,6 @@ PNG_SIDE = 16  # synthesized fixture images are PNG_SIDE x PNG_SIDE gray
 PNG_GRID = 2   # thumbnail grid: PNG_GRID x PNG_GRID quadrants
 
 
-def _decode_seam(pure, native_loader, sniff_bigtiff: bool = False):
-    """THE image_decoder swap-seam contract, stated once (r13 review:
-    it was restated per format and had started to drift): under the
-    ``pure`` knob the pure decoder runs unwrapped; under ``imageio``,
-    streams the JVM pipe rejects BY DESIGN (>8-bit samples, its loud
-    'unsupported by pipe' error) degrade to the pure decoder instead of
-    failing the whole query, BigTIFF containers sniff straight to pure
-    when asked (the JDK reader lacks the 8-byte-offset container), and
-    any OTHER native failure on a supported stream propagates loudly —
-    never silently-wrong pixels. All wrapped formats are lossless, so
-    the driver hash is decoder-invariant either way.
-
-    ``native_loader`` is a zero-arg callable returning the native
-    decoder, invoked only under the imageio knob — the knob check
-    lives HERE and nowhere else (ADVICE r13: the per-format seams each
-    re-checked it as an early return so their native imports stayed
-    lazy; the loader keeps the import lazy without the duplicate
-    check)."""
-    if CONFIG.image_decoder != "imageio":
-        return pure
-    native = native_loader()
-
-    def dec(data: bytes):
-        if sniff_bigtiff and data[:4] in (b"II+\x00", b"MM\x00+"):
-            return pure(data)
-        try:
-            return native(data)
-        except ValueError as e:
-            if "unsupported by pipe" in str(e):
-                return pure(data)
-            raise
-
-    return dec
-
-
-def _png_decode_seam():
-    """PNG leg of the swap seam (ADVICE r12: a 16-bit gray PNG from an
-    external corpus falls back pure; the registered fixtures are 8-bit
-    by construction)."""
-    from .png import decode_png
-
-    def native():
-        from .native_jpeg import decode_png_native
-
-        return decode_png_native
-
-    return _decode_seam(decode_png, native)
-
-
-def _gif_decode_seam():
-    """GIF leg of the swap seam (GIF is always 8-bit palette-coded, so
-    the fallback is purely defensive symmetry)."""
-    from .gif import decode_gif
-
-    def native():
-        from .native_jpeg import decode_gif_native
-
-        return decode_gif_native
-
-    return _decode_seam(decode_gif, native)
-
-
 def _png_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Synthesize a deterministic grayscale PNG per doc (pixel(y, x) =
     (doc_id*7 + y*W + x) % 256, scanline filters cycling 0..4), then run
@@ -645,13 +582,7 @@ def _png_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     value hash."""
     import numpy as np
 
-    from .png import encode_png_gray
-
-    # the priced swap seam (VERDICT r11 item 4, same contract as the
-    # L5g jpeg_decoder knob): PNG is lossless so both decoders return
-    # the identical array and the driver hash is decoder-invariant;
-    # pipe-rejected depths fall back pure (ADVICE r12)
-    decode_png = _png_decode_seam()
+    from .png import decode_png, encode_png_gray
 
     w = PNG_SIDE
     q = PNG_SIDE // PNG_GRID
@@ -732,11 +663,7 @@ def _gif_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     or palette bug breaks the value hash."""
     import numpy as np
 
-    from .gif import encode_gif
-
-    # same swap seam as the PNG leg: GIF is palette-coded and lossless;
-    # the sidecar expands the color table JVM-side, bit-exactly
-    decode_gif = _gif_decode_seam()
+    from .gif import decode_gif, encode_gif
 
     w = GIF_SIDE
     q = GIF_SIDE // GIF_GRID
@@ -2397,30 +2324,8 @@ def _tiff_rgb(doc_id: int) -> list[list[tuple[int, int, int]]]:
     ]
 
 
-def _tiff_decode_seam():
-    """The L5r swap seam (VERDICT r11 item 4): pure tiff.py or the JVM
-    ImageIO sidecar. TIFF is lossless, so every stream the JDK reader
-    accepts decodes bit-identically (conformance-fixture-pinned); the
-    two stream shapes it structurally lacks — BigTIFF containers and
-    >8-bit samples — keep the pure decoder via an explicit sniff /
-    loud-error check, so the registered query's hash is
-    decoder-invariant with no silent-fallback blur (a native failure
-    on a SUPPORTED stream still propagates; contract in
-    :func:`_decode_seam`)."""
-    from .tiff import decode_tiff
-
-    def native():
-        from .native_jpeg import decode_tiff_native
-
-        return decode_tiff_native
-
-    return _decode_seam(decode_tiff, native, sniff_bigtiff=True)
-
-
 def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .tiff import write_tiff
-
-    decode = _tiff_decode_seam()
+    from .tiff import decode_tiff, write_tiff
 
     for pdf in batches:
         out = {k: [] for k in (
@@ -2431,7 +2336,7 @@ def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # knob cycle: compression none/LZW/PackBits, predictor 1/2,
             # both byte orders, multi-strip splits, and the WhiteIsZero
             # photometric inversion every 7th doc
-            gray = decode(
+            gray = decode_tiff(
                 write_tiff(
                     _tiff_gray(d),
                     compression=[1, 5, 32773, 8][d % 4],
@@ -2443,12 +2348,10 @@ def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             )
             # predictor 2 rides only LZW/Deflate: TIFF 6.0 §14 defines
             # the predictor as part of those codecs, and libtiff/JDK
-            # readers ignore it under PackBits/none — the old cycle's
-            # out-of-spec (PackBits, predictor 2) pairing decoded
-            # differently across the image_decoder seam. Decoded pixels
-            # are predictor-invariant, so the oracle is untouched.
+            # readers ignore it under PackBits/none. Decoded pixels are
+            # predictor-invariant, so the oracle is untouched.
             rgb_comp = [5, 32773, 1, 8][d % 4]
-            rgb = decode(
+            rgb = decode_tiff(
                 write_tiff(
                     _tiff_rgb(d),
                     spp=3,
@@ -2467,7 +2370,7 @@ def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # round 13 — the sub-8 unpack is one loop for every legal
             # depth, and both carry driver-hash evidence
             pbits = 4 if d % 2 == 0 else 2
-            pal = decode(
+            pal = decode_tiff(
                 write_tiff(
                     [[(d + y * 8 + x) % (1 << pbits) for x in range(8)]
                      for y in range(8)],
@@ -2584,12 +2487,7 @@ def _fax_bitmap(d: int) -> tuple[int, int, list[list[int]]]:
 
 
 def _fax_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .tiff import write_tiff
-
-    # same image_decoder seam as L5r: the JDK TIFF reader decodes all
-    # three CCITT compressions (G3 1D/2D, G4) bit-identically — the
-    # fax parity is pinned per-mode in tests/test_native_jpeg.py
-    decode_tiff = _tiff_decode_seam()
+    from .tiff import decode_tiff, write_tiff
 
     for pdf in batches:
         out = {k: [] for k in (
@@ -2826,31 +2724,10 @@ TIFF_TILED_SCHEMA = StructType(
 )
 
 
-def _tiff_pages_decode_seam():
-    """Multi-page mate of :func:`_tiff_decode_seam` (round 13, VERDICT
-    r12 item 5): under the imageio knob the sidecar iterates every IFD
-    via ImageReader.read(i) — the heaviest TIFF leg (L5x's multi-page
-    tiled corpus) no longer drops to pure Python just for paging. The
-    same structural exclusions apply: BigTIFF sniffs to pure, >8-bit
-    samples fall back on the pipe's loud rejection, and any other
-    native failure on a supported stream propagates (contract in
-    :func:`_decode_seam`)."""
-    from .tiff import decode_tiff_pages
-
-    def native():
-        from .native_jpeg import decode_tiff_pages_native
-
-        return decode_tiff_pages_native
-
-    return _decode_seam(decode_tiff_pages, native, sniff_bigtiff=True)
-
-
 def _tiff_tiled_features(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    from .tiff import write_tiff_multi
-
-    decode_tiff_pages = _tiff_pages_decode_seam()
+    from .tiff import decode_tiff_pages, write_tiff_multi
 
     for pdf in batches:
         out = {k: [] for k in (
@@ -3005,15 +2882,7 @@ def _jpeg_dcs(doc_id: int) -> list[int]:
 
 
 def _jpeg_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .jpeg import synth_dc_jpeg
-
-    # the priced swap seam (VERDICT r10 item 7): the codec behind the
-    # stage is a config knob; the plan, batching, and output schema are
-    # identical, and on this DC-only corpus so are the decoded bytes
-    if CONFIG.jpeg_decoder == "imageio":
-        from .native_jpeg import decode_jpeg_native as decode_jpeg
-    else:
-        from .jpeg import decode_jpeg
+    from .jpeg import decode_jpeg, synth_dc_jpeg
 
     for pdf in batches:
         out = {k: [] for k in (
@@ -3074,15 +2943,7 @@ def llm_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jpeg_prog_features(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    from .jpeg import synth_progressive_jpeg
-
-    # same swap seam as _jpeg_features: ImageIO decodes our SOF2
-    # DC-scan scripts bit-identically (DC-only blocks), parity-pinned
-    # in tests/test_native_jpeg.py
-    if CONFIG.jpeg_decoder == "imageio":
-        from .native_jpeg import decode_jpeg_native as decode_jpeg
-    else:
-        from .jpeg import decode_jpeg
+    from .jpeg import decode_jpeg, synth_progressive_jpeg
 
     for pdf in batches:
         out = {k: [] for k in (

@@ -1004,11 +1004,9 @@ def write_tiff(
         if len(palette) != n:
             raise ValueError(f"palette needs {n} entries")
         # 8->16-bit scaling is x 257 (0xFF -> 0xFFFF, TIFF 6.0 full
-        # range), NOT << 8: v*257 >> 8 == v for the pure decoder AND
-        # v*257 * 255 // 65535 == v for the JDK's IndexColorModel
-        # conversion, so both sides of the image_decoder seam recover
-        # the exact 8-bit entries (v << 8 floored one short under the
-        # JDK formula)
+        # range), NOT << 8: v*257 >> 8 == v (this module's decoder) and
+        # v*257 * 255 // 65535 == v (the JDK's IndexColorModel), so
+        # either reader recovers the exact 8-bit entries
         cmap = (
             [r * 257 for r, _g, _b in palette]
             + [g * 257 for _r, g, _b in palette]

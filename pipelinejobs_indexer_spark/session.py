@@ -16,8 +16,15 @@ explicitly ``broadcast()`` hinted so they never shuffle the fact side.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
+
+
+def default_parallelism() -> int:
+    """Cores to plan for: ``SPARK_GRAFT_CPUS``, else this host's count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
 
 # Runtime-settable (SQLConf) knobs — safe to apply to a foreign session.
 _RUNTIME_CONFS = {
@@ -25,7 +32,7 @@ _RUNTIME_CONFS = {
     # test scale that is 200 near-empty tasks per exchange (pure scheduler
     # overhead), and on a real cluster the knob should track cores anyway
     # (~2-3x total cores). AQE coalescing then trims the remainder.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": str(default_parallelism()),
     # The driver-generated events.parquet stores TIMESTAMP(NANOS) which the
     # vectorized parquet reader rejects; read as long and convert (tables.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -61,38 +68,34 @@ def _heap_bytes(size: str) -> int:
         return 0
 
 
-# Sessions whose join-strategy preference has been decided (keyed by
-# applicationId): tune() runs on every load_table call, and re-setting
-# the conf each time would silently clobber an explicit mid-session
-# override (e.g. a test forcing SMJ on a large-heap session) — r14
-# ADVICE. One decision per session, same memoized-per-session pattern
-# as the schema/width caches.
-_smj_pref_appids: set[str] = set()
+# Confs that query results depend on: tune() raises if either fails to
+# apply, instead of letting timestamps hash in the wrong zone or
+# events.parquet fail to read.
+_PARITY_CONFS = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone")
 
 # Sessions already tuned: tune() runs on EVERY load_table / stream
 # construction, and each _RUNTIME_CONFS application is ~10 py4j round
 # trips of pure driver latency (guide §7.3) re-setting values that are
 # already set — session confs persist, and the operators that scope a
 # conf (CC loop, streaming replays) restore it themselves in `finally`.
-# One application per applicationId.
-_tuned_appids: set[str] = set()
+# Keyed on the session object, not its applicationId: a newSession()
+# clone shares the application but has its own SQLConf. A hit costs no
+# py4j round trip, and one decision per session keeps later explicit
+# overrides (e.g. a test forcing SMJ) from being clobbered.
+_tuned: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to any session (ours or the driver's)."""
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        app = None
-    if app is not None and app in _tuned_appids:
+    if spark in _tuned:
         return spark
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going
-    if app is not None:
-        _tuned_appids.add(app)
+        except Exception as e:
+            if k in _PARITY_CONFS:
+                raise RuntimeError(f"parity-critical conf {k}={v} did not apply") from e
+            # non-settable on this build — keep going
     # Prefer shuffled-hash over sort-merge when the planner's size
     # conditions hold (guide §3.1/§9) — skips the per-side sorts; r14
     # interleaved A/B at sf0.1: join_files_job_provenance 1.33 -> 1.11 s,
@@ -105,30 +108,23 @@ def tune(spark: SparkSession) -> SparkSession:
     # spills and always completes, so small-heap sessions keep Spark's
     # default. In local mode the executor heap IS the driver heap; on a
     # real cluster set spark.executor.memory >= 4g (any production
-    # profile) and the preference engages. Decided ONCE per
-    # applicationId so later explicit settings stick (r14 ADVICE).
+    # profile) and the preference engages.
     try:
-        app = spark.sparkContext.applicationId
-        if app not in _smj_pref_appids:
-            master = spark.conf.get("spark.master", "local")
-            key = (
-                "spark.driver.memory"  # local mode: the driver heap IS the executor
-                if master.startswith("local")
-                else "spark.executor.memory"  # cluster: builds happen on executors
-            )
-            heap = _heap_bytes(spark.conf.get(key, "1g"))
-            spark.conf.set(
-                "spark.sql.join.preferSortMergeJoin",
-                "false" if heap >= (4 << 30) else "true",
-            )
-            _smj_pref_appids.add(app)
+        master = spark.conf.get("spark.master", "local")
+        key = (
+            "spark.driver.memory"  # local mode: the driver heap IS the executor
+            if master.startswith("local")
+            else "spark.executor.memory"  # cluster: builds happen on executors
+        )
+        heap = _heap_bytes(spark.conf.get(key, "1g"))
+        spark.conf.set(
+            "spark.sql.join.preferSortMergeJoin",
+            "false" if heap >= (4 << 30) else "true",
+        )
     except Exception:
         pass
+    _tuned.add(spark)
     return spark
-
-
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(app_name: str = "pipelinejobs-indexer-spark") -> SparkSession:

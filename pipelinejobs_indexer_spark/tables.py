@@ -146,8 +146,8 @@ def spread(df: DataFrame) -> DataFrame:
 _SCAN_WIDTH_CACHE: dict[tuple, int] = {}
 
 
-# Fixture-builder LOGICAL-PLAN memo, keyed (applicationId, sf_dir,
-# builder, variant): a fixture view's unresolved plan is identical for
+# Fixture-builder LOGICAL-PLAN memo, keyed (applicationId, builder,
+# bound arguments): a fixture view's unresolved plan is identical for
 # every construction within a session, yet each build re-runs ~100
 # Column-algebra py4j round trips (r15 cProfile: jobs ~0.15 s,
 # archive_files ~0.12 s, messages ~0.10 s of pure driver time per call
@@ -157,28 +157,36 @@ _SCAN_WIDTH_CACHE: dict[tuple, int] = {}
 # referencing them by name: a DataFrame is an immutable plan
 # description, not data — every action on a derived frame still
 # executes the full scan + projection from the parquet inputs; nothing
-# about results or partitioning is retained. Dies with the session
-# (applicationId key).
+# about results or partitioning is retained. Only the current
+# application's entries are kept: a new applicationId evicts the rest.
 _PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _plan_memoized(build):
-    """Memoize a fixture builder's DataFrame per (applicationId, sf_dir,
-    name, extra args)."""
+    """Memoize a fixture builder's DataFrame per (applicationId, name,
+    arguments). Arguments are bound against the builder's signature with
+    defaults applied, so an omitted default and the same value passed
+    explicitly share one entry."""
     import functools
+    import inspect
+
+    sig = inspect.signature(build)
 
     @functools.wraps(build)
-    def wrapper(spark: SparkSession, sf_dir: str, **kw):
+    def wrapper(*args, **kw):
+        bound = sig.bind(*args, **kw)
+        bound.apply_defaults()
+        app = bound.arguments["spark"].sparkContext.applicationId
         key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
+            app,
             build.__name__,
-            tuple(sorted(kw.items())),
+            *((k, v) for k, v in bound.arguments.items() if k != "spark"),
         )
         df = _PLAN_CACHE.get(key)
         if df is None:
-            df = build(spark, sf_dir, **kw)
-            _PLAN_CACHE[key] = df
+            for stale in [k for k in _PLAN_CACHE if k[0] != app]:
+                del _PLAN_CACHE[stale]
+            df = _PLAN_CACHE[key] = build(*bound.args, **bound.kwargs)
         return df
 
     return wrapper
@@ -293,7 +301,9 @@ def pipelines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_plan_memoized
-def archive_files(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
+def archive_files(
+    spark: SparkSession, sf_dir: str, *, spread: bool = True
+) -> DataFrame:
     """Indexed file records derived from lineitem (FIXTURES.md B2).
 
     ``spread=False`` (r14) skips the keyed pre-repartition for consumers

@@ -537,3 +537,70 @@ def test_registry_loads_under_lsh_tables_ceiling():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "LOADED" in out.stdout
+
+
+class _FakeConf:
+    """SparkSession.conf stand-in that rejects one key."""
+
+    def __init__(self, reject: str):
+        self.reject = reject
+        self.applied: dict[str, str] = {}
+
+    def set(self, k, v):
+        if k == self.reject:
+            raise ValueError(f"cannot set {k}")
+        self.applied[k] = v
+
+    def get(self, k, default=None):
+        return self.applied.get(k, default)
+
+
+class _FakeSession:
+    def __init__(self, reject: str):
+        self.conf = _FakeConf(reject)
+
+
+@pytest.mark.parametrize(
+    "key", ["spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"]
+)
+def test_tune_fails_loudly_on_parity_conf(key):
+    from pipelinejobs_indexer_spark import session
+
+    s = _FakeSession(reject=key)
+    with pytest.raises(RuntimeError, match=key):
+        session.tune(s)
+    assert s not in session._tuned
+
+
+def test_tune_skips_noncritical_conf_and_memo_hit_is_free():
+    from pipelinejobs_indexer_spark import session
+
+    s = _FakeSession(reject="spark.sql.adaptive.enabled")
+    session.tune(s)
+    assert s.conf.applied["spark.sql.session.timeZone"] == "UTC"
+    assert s.conf.applied["spark.sql.legacy.parquet.nanosAsLong"] == "true"
+    # a memo hit must not touch the session at all (each conf call is a
+    # py4j round trip on a real one)
+    s.conf = None
+    assert session.tune(s) is s
+
+
+def test_tune_pins_parity_confs_on_new_session(spark):
+    """A newSession() clone shares the applicationId but has its own
+    SQLConf, so it must be tuned in its own right."""
+    from pipelinejobs_indexer_spark.session import tune
+
+    clone = spark.newSession()
+    assert clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    tune(clone)
+    assert clone.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_default_parallelism_follows_host(monkeypatch):
+    from pipelinejobs_indexer_spark.session import default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3

@@ -17,6 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from pipelinejobs_indexer_spark import registry  # noqa: E402
@@ -686,6 +687,10 @@ def test_winnow_df_is_combiner_groupby_not_window(spark, sf_dir):
     assert anti or ("LeftAnti" in plan and "BroadcastHashJoin" in plan), plan
 
 
+# the '117' || sha256(orderkey) process-uuid expression as Spark prints it
+_PROC_HASH = re.compile(r"concat\('?117'?, sha2\(")
+
+
 def test_provenance_join_is_int_keyed_no_explode(spark, sf_dir):
     """J2 (r15): the provenance join runs on the integer job_key — the
     injective '117'||sha256(orderkey) makes proc equality equivalent to
@@ -697,8 +702,27 @@ def test_provenance_join_is_int_keyed_no_explode(spark, sf_dir):
     assert "Generate" not in plan, plan
     assert re.search(r"Join cond.*job_key|\[job_key", plan) or "job_key" in plan, plan
     # exactly the two output uuid sha2s remain (file_uuid + job uuid);
-    # the per-row '117' proc hash is gone from both sides
-    assert "117" not in plan, plan
+    # the per-row '117' proc hash is gone from both sides. Anchored to
+    # the hash expression: a bare "117" also matches expression ids
+    # such as #1175L.
+    assert not _PROC_HASH.search(plan), plan
+    # positive control: the salted twin still explodes the proc hash,
+    # so the pattern is known to match a plan that computes it
+    salted = _formatted_plan(
+        registry.QUERIES["join_provenance_salted"](spark, sf_dir)
+    )
+    assert _PROC_HASH.search(salted), salted
+
+
+def test_provenance_arrays_are_single_element(spark, sf_dir):
+    """The int-keyed join_files_job_provenance equals the unnest +
+    proc equi-join its oracle states only while every generated_by
+    array in both fixtures holds exactly one element."""
+    for build in (archive_files, jobs):
+        rows, bad = build(spark, sf_dir).agg(
+            F.count("*"), F.count(F.when(F.size("generated_by") != 1, 1))
+        ).first()
+        assert rows > 0 and bad == 0, (build.__name__, rows, bad)
 
 
 def test_fixture_builders_are_plan_memoized(spark, sf_dir):
@@ -712,3 +736,26 @@ def test_fixture_builders_are_plan_memoized(spark, sf_dir):
     assert archive_files(spark, sf_dir) is not archive_files(
         spark, sf_dir, spread=False
     )
+    # defaults are bound before keying: omitted and explicit spread=True
+    # are one entry, as are positional and keyword sf_dir
+    assert archive_files(spark, sf_dir) is archive_files(
+        spark, sf_dir, spread=True
+    )
+    assert jobs(spark, sf_dir) is jobs(spark, sf_dir=sf_dir)
+    with pytest.raises(TypeError):
+        archive_files(spark, sf_dir, True)
+
+
+def test_plan_memo_evicts_other_applications(spark, sf_dir):
+    """A miss under a new applicationId drops every other application's
+    fixture plans, so the memo never pins dead sessions' DataFrames."""
+    from pipelinejobs_indexer_spark import tables
+
+    stale = ("app-that-ended", "jobs", ("sf_dir", sf_dir))
+    tables._PLAN_CACHE[stale] = None
+    app = spark.sparkContext.applicationId
+    for k in [k for k in tables._PLAN_CACHE if k[1] == "messages"]:
+        del tables._PLAN_CACHE[k]
+    tables.messages(spark, sf_dir)
+    assert stale not in tables._PLAN_CACHE
+    assert {k[0] for k in tables._PLAN_CACHE} == {app}
