@@ -43,7 +43,8 @@ Scale design (the 100 TB story, per operator):
 
 from __future__ import annotations
 
-import os as _os
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +75,67 @@ HAMMING_MAX = 3
 COSINE_DUP_THRESHOLD = 0.45  # driver data has no planted >0.95 pairs; keep non-trivial
 
 _HEX = "0123456789abcdef"
+
+
+# ------------------------------------------------- candidate-pair core
+# Every banded / capped inverted-index builder below is one join shape
+# with a different key: occurrence rows (doc_id, *key, ...) are
+# optionally df-capped, then self equi-joined on the key. The callers
+# keep their own key extractor, pair dedupe or count, score and
+# threshold; these two helpers are the shared shape.
+def _keys(key) -> list[str]:
+    return [key] if isinstance(key, str) else list(key)
+
+
+def drop_hot_keys(occ: DataFrame, key, cap: int) -> DataFrame:
+    """``occ`` without the rows of any key held by more than ``cap`` rows.
+
+    Guarantee: after the prune the pair join sees at most ``cap`` rows
+    per key (one row per doc and key in every caller, so df is the
+    number of docs holding the key), so a hot key costs at most
+    C(cap, 2) candidate rows instead of C(df, 2). A key that hot is
+    boilerplate (license text, a station logo, a title card) and is
+    dropped from BOTH sides before the join, which also removes it from
+    the measure: overlap on boilerplate is not duplication evidence.
+
+    Shape: df is a combiner ``groupBy`` count, so a hot key collapses
+    map-side and its exchange carries O(distinct keys) rows; the
+    over-cap key list (at most rows / cap entries) is broadcast, and a
+    ``left_anti`` join drops those keys without shuffling the
+    occurrence rows at all. A count-over-key window would have no
+    map-side partial aggregation and would funnel every occurrence of a
+    hot key into one task before the cap dropped it. ``occ`` is read
+    twice (the df count and the prune), so callers cache it."""
+    keys = _keys(key)
+    hot = (
+        occ.groupBy(*keys)
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > cap)
+        .select(*keys)
+    )
+    return occ.join(F.broadcast(hot), keys, "left_anti").select(*occ.columns)
+
+
+def key_pairs(occ: DataFrame, key, carry=()) -> DataFrame:
+    """Self equi-join of occurrence rows on ``key`` with ``doc_id``
+    ordered (each unordered pair once, no self pairs): one row per
+    shared key occurrence, columns ``doc_a``, ``doc_b`` and ``<c>_a``,
+    ``<c>_b`` for each carried column ``c``. Callers ``.distinct()``
+    for a candidate set or ``groupBy(...).count()`` for a shared-key
+    count. The side aliases ``_kp_l``/``_kp_r`` are picked so they
+    cannot shadow a key or carried column (band tables have a ``b``)."""
+    l, r = occ.alias("_kp_l"), occ.alias("_kp_r")
+    on = [F.col(f"_kp_l.{k}") == F.col(f"_kp_r.{k}") for k in _keys(key)]
+    on.append(F.col("_kp_l.doc_id") < F.col("_kp_r.doc_id"))
+    return l.join(r, reduce(operator.and_, on)).select(
+        F.col("_kp_l.doc_id").alias("doc_a"),
+        F.col("_kp_r.doc_id").alias("doc_b"),
+        *[
+            F.col(f"_kp_{s}.{c}").alias(f"{c}_{side}")
+            for c in carry
+            for s, side in (("l", "a"), ("r", "b"))
+        ],
+    )
 
 
 # ---------------------------------------------------------------- shingles
@@ -201,11 +263,10 @@ def _minhash_sig(
     # hfp = hf % P computed ONCE per shingle row: the family expressions
     # each repeated the mod ((hf % P + i*h2) % P), i.e. 16 integer
     # divisions per row where one suffices — and family 0 reduces to
-    # min(hfp) outright since hfp < P already (r15, guide §2.3 narrower
-    # per-row work; same arithmetic, bit-identical results). Each agg is
-    # ONE F.expr instead of ~8 chained Column ops: the Column-algebra
-    # listcomp alone was ~0.24 s of py4j round trips per query
-    # construction (r15 cProfile; guide §7.3 driver overhead).
+    # min(hfp) outright since hfp < P already (same arithmetic,
+    # bit-identical results). Each agg is ONE F.expr instead of ~8
+    # chained Column ops: the Column-algebra listcomp alone was ~0.24 s
+    # of py4j round trips per query construction (cProfile).
     aggs = [
         F.expr(
             f"min((hfp + {i} * h2) % {MINHASH_P})" if i else "min(hfp)"
@@ -228,8 +289,8 @@ def hashed_shingles(docs: DataFrame) -> DataFrame:
     between distinct shingles are ~2^-60 — and because the oracle applies
     the identical hash, any collision replays identically there.
     """
-    # md5 computed ONCE per shingle through an intermediate projection
-    # (r15): the two halves each referenced md5(s) and codegen's
+    # md5 computed ONCE per shingle through an intermediate projection:
+    # the two halves each referenced md5(s) and codegen's
     # common-subexpression elimination was not collapsing them across the
     # conv/substr trees — interleaved A/B at sf0.1 shows the one-md5 form
     # ~8% faster through the signature aggregation. Same bytes, same
@@ -245,9 +306,9 @@ def hashed_shingles(docs: DataFrame) -> DataFrame:
 
 def _bands_inline(n_minhash: int | None = None, n_bands: int | None = None):
     """The per-band LSH keys exploded straight to (b, v) columns, as ONE
-    ``inline(array(named_struct...))`` F.expr (r15): the per-band
+    ``inline(array(named_struct...))`` F.expr: the per-band
     struct/md5/concat_ws Column algebra was ~0.12 s of py4j round trips
-    per query construction (guide §7.3), and explode + a flattening
+    per query construction, and explode + a flattening
     projection was two plan nodes where inline is one generator.
     Expression-identical band values — concat_ws applies the same
     implicit bigint->string casts the Column form did."""
@@ -357,17 +418,7 @@ def minhash_pairs(
     differential in tests/test_fuzz_differential.py)."""
     sig = _minhash_sig(hashed_shingles(docs), with_sets=True, n_minhash=n_minhash).cache()
     bands = sig.select("doc_id", _bands_inline(n_minhash, n_bands))
-    a, b = bands.alias("a"), bands.alias("b2")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.b") == F.col("b2.b"))
-            & (F.col("a.v") == F.col("b2.v"))
-            & (F.col("a.doc_id") < F.col("b2.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b2.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = key_pairs(bands, ["b", "v"]).distinct()
     na = sig.select(
         F.col("doc_id").alias("doc_a"), F.col("hfs").alias("ha"), F.col("n").alias("n_a")
     )
@@ -524,25 +575,10 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
         "sim",
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("b"),
     ).select("doc_id", "sim", "b", F.expr("substring(sim, b*8+1, 8)").alias("v"))
-    a, b = bands.alias("a"), bands.alias("b2")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.b") == F.col("b2.b"))
-            & (F.col("a.v") == F.col("b2.v"))
-            & (F.col("a.doc_id") < F.col("b2.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b2.doc_id").alias("doc_b"),
-            F.col("a.sim").alias("sa"),
-            F.col("b2.sim").alias("sb"),
-        )
-        .distinct()
-    )
+    cand = key_pairs(bands, ["b", "v"], carry=["sim"]).distinct()
     hamming = F.expr(
-        "aggregate(sequence(1, 32), 0L,"
-        " (acc, i) -> acc + if(substring(sa, i, 1) = substring(sb, i, 1), 0L, 1L))"
+        "aggregate(sequence(1, 32), 0L, (acc, i) ->"
+        " acc + if(substring(sim_a, i, 1) = substring(sim_b, i, 1), 0L, 1L))"
     )
     return (
         cand.select("doc_a", "doc_b", hamming.alias("hamming"))
@@ -607,16 +643,7 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= prefix_len)
         .select("doc_id", "hf")
     )
-    pa, pb = pref.alias("pa"), pref.alias("pb")
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.hf") == F.col("pb.hf"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id")),
-        )
-        .select(F.col("pa.doc_id").alias("doc_a"), F.col("pb.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = key_pairs(pref, "hf").distinct()
     sa, sb = sh.alias("sa"), sh.alias("sb")
     common = (
         cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
@@ -748,59 +775,30 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the union is dominated by the larger doc.
 
     Scale discipline: candidate generation is the inverted-index
-    equi-join over DISCRIMINATIVE shingles only — shingles appearing in
-    more than CONTAIN_DF_CAP documents are boilerplate (headers, license
-    blocks) and excluded BEFORE the join, so per-shingle fan-out is
-    bounded by the cap and the join never degenerates on hot shingles
-    (the same hazard L2c's prefix filter addresses; here the cap also
-    changes the MEASURE — containment over boilerplate alone is not a
-    duplication signal, which is exactly the semantics wanted). The df
-    pass, pair count, and size join are all combiner-friendly
-    aggregations / equi-joins on 8-byte shingle hashes. Oracle replays
-    the identical df-capped universe."""
+    equi-join (key_pairs) over DISCRIMINATIVE shingles only — shingles
+    in more than CONTAIN_DF_CAP documents are boilerplate (headers,
+    license blocks) and drop_hot_keys removes them before the join (the
+    hazard L2c's prefix filter addresses; here the cap also changes the
+    MEASURE, which is the semantics wanted). The pair count and size
+    join are combiner aggregations / equi-joins on 8-byte shingle
+    hashes. Oracle replays the identical df-capped universe."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     return containment_pairs(docs)
 
 
 def containment_pairs(docs: DataFrame, df_cap: int = CONTAIN_DF_CAP) -> DataFrame:
     """llm_dedup_containment's core over any (doc_id, text) frame —
-    separated so adversarial tests can plant hot-shingle corpora
-    (tests/test_llm.py pins that the df cap bounds per-shingle join
-    fan-out BEFORE the candidate join, the L2g scale guarantee)."""
-    # cached FIRST: the shingle explode + md5 scan feeds both the df
-    # combiner and the anti-prune (r12 review finding — caching only
-    # the pruned table re-ran the corpus scan twice); int rows, cheap
+    separated so adversarial tests can plant hot-shingle corpora."""
+    # cached: the shingle explode + md5 scan feeds both drop_hot_keys
+    # reads; caching only the pruned table would run the corpus scan
+    # twice. Int rows, cheap.
     hsh = hashed_shingles(docs).select("doc_id", "hf").cache()
-    # df via combiner groupBy + broadcast over-cap anti-prune — NOT a
-    # count-over-hf window (r12, the winnow-fix shape applied family-
-    # wide): a window has no map-side partial aggregation, so every
-    # occurrence of a hot boilerplate shingle would shuffle into ONE
-    # task before the cap dropped it; the groupBy collapses hot
-    # shingles per task, only the tiny over-cap list broadcasts, and
-    # the occurrence table is never shuffled for the prune at all.
-    hot = (
-        hsh.groupBy("hf")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > df_cap)
-        .select("hf")
-    )
     # disc feeds three consumers (both join sides + the size agg);
     # rebuilding it is a cheap broadcast join over the cached rows
-    disc = hsh.join(F.broadcast(hot), "hf", "left_anti").select(
-        "doc_id", "hf"
-    )
+    disc = drop_hot_keys(hsh, "hf", df_cap)
     sizes = disc.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = disc.alias("a"), disc.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.hf") == F.col("b.hf"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("c"))
+    common = key_pairs(disc, "hf").groupBy("doc_a", "doc_b").agg(
+        F.count("*").alias("c")
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
@@ -833,8 +831,8 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. ORACLE-BASELINE ONLY: the plan is an O(n²) theta join, kept
     registered so the LSH primary (llm_dedup_embedding_lsh) has an
     exact ground truth under the driver's hash gate. It REFUSES inputs
-    larger than CONFIG.exact_pairs_max_rows (VERDICT r6 item 6 — a
-    cartesian time bomb if pointed at a real corpus; the count() that
+    larger than CONFIG.exact_pairs_max_rows (a cartesian time bomb
+    if pointed at a real corpus; the count() that
     enforces this is one cheap column-pruned scan, nothing at fixture
     scale and exactly the circuit breaker you want before an accidental
     1e12-pair join). Raise SPARK_GRAFT_EXACT_PAIRS_MAX_ROWS only for a
@@ -946,7 +944,7 @@ def llm_dedup_embedding_lsh(
     1-(1-p_r)^tables for linear-in-tables cost. Table 0 is exactly the
     single-table construction, so ``lsh_tables=1`` (the fixture default)
     is result-identical to the pre-knob plan. Sizing is MEASURED
-    (scripts/lsh_sizing_probe.py, BENCH_sf1.md round 7): grow planes ~
+    (scripts/lsh_sizing_probe.py, BENCH_sf1.md): grow planes ~
     log2(n) to bound occupancy, hold recall with tables. Recall vs the
     exact baseline is pinned in tests/test_llm.py; the DuckDB oracle
     replays the identical bucketing, so the gate checks exact plan
@@ -1103,14 +1101,14 @@ def contamination_pairs(docs: DataFrame, df_cap: int | None = None) -> DataFrame
     # shingles), one extra corpus scan, the honest fixed price of
     # rare-n-gram decontamination (uncached: the bench clears caches per
     # run, and a string-row cache materialization measured slower than
-    # the rescan). An r9 A/B measured the tempting alternative —
+    # the rescan). An A/B measured the tempting alternative —
     # semi-join the corpus scan against the broadcast eval shingle set
     # BEFORE counting df, shrinking the wide exchange to O(eval
     # shingles) — 1.2x SLOWER end-to-end at sf0.1 (1.71 s vs 2.09 s
     # best-of-6 interleaved): the extra broadcast build + hash join
     # costs more than the already-combiner-collapsed exchange saves at
     # this scale. Past ~1e9 distinct shingles the tradeoff flips; the
-    # swap is three lines (BENCH_sf1.md r9 note) and changes no result.
+    # swap is three lines (BENCH_sf1.md) and changes no result.
     dfs = sh.groupBy("s").agg(F.count("*").alias("df"))
     eval_sh = (
         dfs.join(F.broadcast(eval_occ), "s")
@@ -1233,7 +1231,7 @@ def connected_components(
     # from this checkpoint, never from a re-run of the LSH plan.
     pairs = iter_checkpoint(pairs, lazy=True)  # materialized by the count
     n_pairs = pairs.count()
-    # verts stays LAZY (r14): it is consumed exactly once, by the final
+    # verts stays LAZY: it is consumed exactly once, by the final
     # star-forest join after the loop, so checkpointing it bought no
     # reuse and cost a full materialization pass (an extra job + an
     # extra corpus-pairs-scale distinct execution) per clusters query.
@@ -1262,16 +1260,16 @@ def connected_components(
         if pairs_canonical:
             # The caller guarantees pairs are already a canonical edge
             # list (distinct, doc_a < doc_b strictly — what minhash_pairs
-            # emits by construction: its candidate join requires
-            # a.doc_id < b2.doc_id and ends in .distinct()). _canon would
+            # emits by construction: key_pairs orders doc_a < doc_b and
+            # the candidate set ends in .distinct()). _canon would
             # then be a pure no-op: greatest/least only flips orientation,
             # which round 0's symmetrization erases, the u != v filter
             # can't fire on a strict inequality, and distinct re-dedups a
             # distinct set. Skipping it removes one full edge-list
             # exchange + checkpoint materialization + count per clusters
-            # query (r14; the r13 bench paid ~0.4 s for it at sf0.1, and
-            # at 100 TB it is a corpus-pairs-scale shuffle).
-            # Orientation u > v (doc_b as u — r14 ADVICE): the loop's
+            # query (~0.4 s of bench time at sf0.1, and at 100 TB a
+            # corpus-pairs-scale shuffle).
+            # Orientation u > v (doc_b as u): the loop's
             # canonical form from _canon is u > v, so the round-0
             # convergence probe (count + left-anti vs e) can recognize an
             # already-converged graph; fed u < v it could never match and
@@ -1307,13 +1305,13 @@ def _attach_neighborhood_min(df, out: str, w_u, strategy: str | None = None):
 
     * window (default) — one exchange; the hub-keyed WindowExec buffers
       each u's whole neighborhood in one task, in a SPILLABLE sort
-      buffer (measured to 4M-spoke hubs on the r7 crossover probe —
-      see config.py).
+      buffer (measured to 4M-spoke hubs by the CC crossover probe,
+      scripts/cc_crossover_probe.py — see config.py).
     * twophase — combiner groupBy (map-side partial min: shuffle volume
       per hub = one partial row per map task, skew-proof) + a join-back
       to re-attach the min. One more exchange per phase; identical rows
       either way. The join-back strategy is left to the planner: the
-      r7 crossover probe measured the previously-forced shuffle_hash
+      crossover probe measured a forced shuffle_hash
       hint DYING at a 4M-spoke hub ("Can't acquire ... bytes to build
       hash relation" — an SHJ build map is unspillable, and the loop's
       EDGES_PER_TASK partition sizing makes each build
@@ -1401,7 +1399,7 @@ def _clusters_sql() -> str:
 def _attach_cluster_sizes(labels: DataFrame) -> DataFrame:
     """Attach ``n_members`` per cluster via a combiner groupBy +
     planner-chosen join-back, NOT ``count(*) OVER (PARTITION BY
-    cluster_id)`` (VERDICT r12 item 2): the labels frame is
+    cluster_id)``: the labels frame is
     duplicate-population-sized, and a mega-cluster — boilerplate
     identical documents, precisely what dedup exists to find — would
     funnel its entire membership into ONE window task right after the
@@ -1419,9 +1417,9 @@ def _attach_cluster_sizes(labels: DataFrame) -> DataFrame:
 def _attach_canonical(scored: DataFrame) -> DataFrame:
     """Attach ``canonical_id``/``is_canonical`` per cluster via a
     combiner-groupBy argmax + planner-chosen join-back, NOT
-    ``first_value(doc_id) OVER (PARTITION BY cluster_id ...)`` (VERDICT
-    r13 item 1 — the same mega-cluster argument as _attach_cluster_sizes
-    above, applied to the argmax): max_by over a (score, -doc_id)
+    ``first_value(doc_id) OVER (PARTITION BY cluster_id ...)`` (the
+    same mega-cluster argument as _attach_cluster_sizes above, applied
+    to the argmax): max_by over a (score, -doc_id)
     ordering struct collapses map-side, so a 10M-member boilerplate
     cluster ships one partial winner per task instead of funneling its
     whole membership into one WindowExec task; the ordering key is
@@ -1464,7 +1462,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = connected_components(pairs, pairs_canonical=True).cache()
     # _attach_cluster_sizes consumes labels twice (the census groupBy and
     # the join-back): cache so the star-forest assembly materializes once
-    # instead of once per consumer (r14 — the frame is duplicate-
+    # instead of once per consumer (the frame is duplicate-
     # population-sized, so the cache is bounded by the pair DAG; .cache()
     # rather than a checkpoint keeps the full plan visible for the shape
     # pins/PLANS.md, and the driver surface clears caches per query).
@@ -1485,7 +1483,7 @@ def llm_dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = connected_components(
         pairs, min_strategy="twophase", pairs_canonical=True
     ).cache()
-    # same double-consumer cache as llm_dedup_clusters (r14)
+    # same double-consumer cache as llm_dedup_clusters
     return _attach_cluster_sizes(labels)
 
 
@@ -1540,7 +1538,7 @@ def llm_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = quality_score_frame(docs).join(F.broadcast(labels), "doc_id")
     # _attach_canonical consumes scored twice (winners argmax and the
     # join-back): cache so the corpus scan + quality-score projection
-    # run ONCE, not once per consumer (r14). scored is duplicate-
+    # run ONCE, not once per consumer. scored is duplicate-
     # population-sized (inner join against the cluster labels), so the
     # cache is bounded by the pair DAG; .cache() keeps the full plan
     # visible for the shape pins/PLANS.md.
@@ -1973,14 +1971,12 @@ def substring_span_pairs(
     cache_shingles: bool = True,
 ) -> DataFrame:
     """llm_dedup_substring's core over any (doc_id, text) frame —
-    separated so adversarial tests can plant hot-boilerplate corpora
-    (tests/test_llm.py pins that the anchor df cap keeps a block shared
-    by hundreds of docs from quadratically fanning out the candidate
-    join, the L12 scale guarantee). ``anchor_mod=1`` turns EVERY
-    shingle into an anchor — the exhaustive ground truth the L12b
-    recall eval measures the shipped 1/ANCHOR_MOD sample against — and
-    an ``anchor_df_cap`` of None disables the cap (skipping the
-    corpus-wide df window entirely, not just filtering by infinity).
+    separated so adversarial tests can plant hot-boilerplate corpora.
+    ``anchor_mod=1`` turns EVERY shingle into an anchor — the
+    exhaustive ground truth the L12b recall eval measures the shipped
+    1/ANCHOR_MOD sample against — and an ``anchor_df_cap`` of None
+    disables the cap (skipping the corpus-wide df count entirely, not
+    just filtering by infinity).
     ``cache_shingles=False`` trades the shingle-scan recomputes for
     zero cache-storage pressure — the right call when TWO pipelines
     run in one query (the L12b eval) inside a small-heap session."""
@@ -2007,26 +2003,13 @@ def substring_span_pairs(
     )
     if cache_shingles:
         ps = ps.cache()
-    # cached: the sampled-anchor distinct feeds the df combiner AND both
-    # candidate-join sides (r12 — pre-cap it was recomputed per side)
+    # cached: the sampled-anchor distinct feeds both drop_hot_keys reads
+    # and both candidate-join sides; uncached it reruns once per consumer
     anch = ps.filter(F.col("hf") % anchor_mod == 0).select(
         "doc_id", "hf"
     ).distinct().cache()
     if anchor_df_cap is not None:
-        # combiner df + broadcast over-cap anti-prune (r12, the winnow
-        # shape family-wide): a count-over-hf window would funnel every
-        # occurrence of a hot boilerplate anchor into one task before
-        # the cap dropped it; here hot anchors collapse map-side and
-        # only the tiny over-cap list broadcasts
-        hot_anch = (
-            anch.groupBy("hf")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > anchor_df_cap)
-            .select("hf")
-        )
-        anch = anch.join(F.broadcast(hot_anch), "hf", "left_anti").select(
-            "doc_id", "hf"
-        )
+        anch = drop_hot_keys(anch, "hf", anchor_df_cap)
     # In the exhaustive (anchor_mod=1) eval mode, anch and cand are
     # corpus-sized, and Catalyst's size misestimate after the
     # distinct+window chain tries to BROADCAST them (driver OOM at the
@@ -2037,22 +2020,13 @@ def substring_span_pairs(
     exhaustive = anchor_mod == 1
     if exhaustive:
         anch = anch.hint("merge")
-    a, b = anch.alias("a"), anch.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.hf") == F.col("b.hf"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = key_pairs(anch, "hf").distinct()
     if exhaustive:
         cand = cand.hint("merge")
     # The positional sides are corpus-sized BY CONSTRUCTION (every
     # shingle of every doc), yet Catalyst's estimate after the Generate
     # chain reads small and it happily picks them as WHOLE-TABLE
-    # BroadcastHashJoin build sides — the r9 sf1 probe OOM'd exactly
+    # BroadcastHashJoin build sides — an sf1 probe OOM'd exactly
     # there, and at 100 TB a pb broadcast is a cluster-killer. Pin
     # shuffle_hash in BOTH modes: the per-partition build is
     # |side|/shuffle-partitions (scales with the cluster, unlike a
@@ -2142,10 +2116,10 @@ def llm_substring_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     residue with probability ~({ANCHOR_MOD - 1}/{ANCHOR_MOD})^(L-2),
     <17% at L=15 — recall_pct is that bound, measured."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # cap=None skips the corpus-wide df window (not just filters by
+    # cap=None skips the corpus-wide df count (not just filters by
     # infinity), and neither pass caches its shingle table: two cached
     # corpus-shingle copies alongside the sort buffers OOM'd the 1 GB
-    # bare driver session at sf0.1 (r9) — recomputing the explode is
+    # bare driver session at sf0.1 — recomputing the explode is
     # the cheaper currency here
     exact = substring_span_pairs(
         docs, anchor_df_cap=None, anchor_mod=1, cache_shingles=False
@@ -2214,8 +2188,8 @@ def _cdc_params(
 ) -> tuple[int, int, str]:
     """Resolve (window, divisor, hash) overrides against CONFIG, loudly:
     an explicit invalid value (0, negative, unknown hash) ERRORS instead
-    of silently falling back to the default (the _env_int discipline —
-    ADVICE r5)."""
+    of silently falling back to the default (the _env_int
+    discipline)."""
     w = CDC_WINDOW if window is None else window
     d = CDC_DIVISOR if divisor is None else divisor
     h = CDC_HASH if hash_kind is None else hash_kind
@@ -2324,7 +2298,7 @@ def llm_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     combiner groupBy on the 32-hex chunk hash (shuffle O(chunks), ~n/32
     of corpus chars). The window-hash-per-position projection is the
     honest cost of CDC (every byte examined); the DEFAULT boundary rule
-    is the gear hash (round 7, VERDICT r6 item 2) — a FastCDC-style
+    is the gear hash — a FastCDC-style
     gear polynomial over a byte table, pure integer multiply-adds, no
     digest/hex/string allocation per position, ~4x faster than the
     original per-position md5 at sf0.01 in the same plan shape.
@@ -2422,9 +2396,9 @@ def cdc_duplicate_chunks(
 
 
 # The twin always carries the boundary rule the ACTIVE config does NOT
-# run (ADVICE r6: when the active hash was gear, a gear twin was
-# byte-identical to the primary — the alternate-path slot carried no
-# new evidence). Under the gear default the twin replays md5; under an
+# run (when the active hash is gear, a gear twin would be
+# byte-identical to the primary — the alternate-path slot would carry
+# no new evidence). Under the gear default the twin replays md5; under an
 # md5 config it replays gear. The registered KEY stays
 # `llm_dedup_cdc_gear` — driver correctness history and the SURVEY §2
 # inventory key by name, and the name records the twin's original gear
@@ -2453,7 +2427,7 @@ def llm_dedup_cdc_gear(spark: SparkSession, sf_dir: str) -> DataFrame:
     original per-position md5 rule (the engine-independent
     cross-check); under SPARK_GRAFT_CDC_HASH=md5 it runs gear at
     min(active window, 24) — so the slot always carries evidence for a
-    boundary SET the primary didn't compute (ADVICE r6). Same plan
+    boundary SET the primary didn't compute. Same plan
     shape and same realignment property either way (parametrized
     realignment test covers both rules). The key keeps its historical
     name from the md5-default era; CDC_TWIN_HASH says what it runs."""
@@ -2463,12 +2437,12 @@ def llm_dedup_cdc_gear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------- L2k perceptual image dedup (round 10)
+# ------------------------------------------ L2k perceptual image dedup
 #: Shared image fixture: 16x16 gray images built from an 8x8 grid of
 #: constant 2x2 blocks. Two hash modes (CONFIG.phash_mode):
 #:   dhash56 — 2x2 block means -> 8x8 grid, 7 gradient bits per grid
 #:             row = 56-bit hash, banded 7 x 8 bits, radius 6 (< 7
-#:             bands -> pigeonhole-exact). Fixture-scale: the r10 sf1
+#:             bands -> pigeonhole-exact). Fixture-scale: an sf1
 #:             probe measured superlinear pair growth (8-bit bands
 #:             over-populate; 56 bits under-discriminate).
 #: dct256 (default) — fixed-point DCT-II over a FULL-DETAIL 16x16
@@ -2496,7 +2470,7 @@ PHASH_SIDE = 16
 PHASH_GRID = 8
 PHASH_BANDS = 7
 PHASH_MAX_DIST = 6
-#: De-wrap term (round 13, VERDICT r12 item 7): the two-prime quadratic
+#: De-wrap term: the two-prime quadratic
 #: mix repeats with base period lcm(251, 241) = 60,491, so a probe
 #: corpus past ~180k docs (60,491 bases x 3 docs/group) wrapped bases
 #: into genuinely larger dup groups and the sf10 fingerprint probe read
@@ -2819,7 +2793,7 @@ def _phash_pairs_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst after the mapInPandas decode. <= 6 differing bits cannot
     touch all 7 bands, so the banded plan is pigeonhole-EXACT."""
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
-    # cached: one PNG round-trip feeds both self-join sides (r12)
+    # cached: one PNG round-trip feeds both self-join sides
     hashes = docs.mapInPandas(
         _phash_features, schema="doc_id bigint, phash bigint"
     ).cache()
@@ -2836,27 +2810,11 @@ def _phash_pairs_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ])
         ).alias("bb"),
     ).select("doc_id", "phash", "bb.band", "bb.bval")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.phash").alias("ha"),
-            F.col("b.phash").alias("hb"),
-        )
-        .distinct()
-    )
+    cand = key_pairs(bands, ["band", "bval"], carry=["phash"]).distinct()
     return (
         cand.withColumn(
             "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long"),
+            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))).cast("long"),
         )
         .where(F.col("hamming") <= PHASH_MAX_DIST)
         .select("doc_a", "doc_b", "hamming")
@@ -2872,13 +2830,12 @@ def _dct_banded_pairs(
     column), posexplode -> band equi-join -> per-band bit_count(XOR)
     folded with zip_with/aggregate on candidates only. max_dist < 16
     bands, so the banded plan is pigeonhole-EXACT. spread() feeds the
-    CPU-bound decode leg all cores — the r11 video probe measured the
+    CPU-bound decode leg all cores — a video scale probe measured the
     un-spread leg serializing on the fixture's single parquet split
     (wall ratio 10.2x for 10x docs: one core doing 10x the work)."""
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
     # cached: the codec round-trip is the dominant cost and the band
-    # table feeds BOTH self-join sides — one decode, not two (r12, the
-    # videohash review finding applied to the whole DCT family);
+    # table feeds BOTH self-join sides — one decode, not two;
     # O(docs x 16) int rows, trivial memory
     hashes = docs.mapInPandas(
         feature_fn, schema="doc_id bigint, bands array<bigint>"
@@ -2886,26 +2843,10 @@ def _dct_banded_pairs(
     bexp = hashes.select(
         "doc_id", "bands", F.posexplode("bands").alias("band", "bval")
     )
-    a = bexp.alias("a")
-    b = bexp.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.bands").alias("ha"),
-            F.col("b.bands").alias("hb"),
-        )
-        .distinct()
-    )
+    cand = key_pairs(bexp, ["band", "bval"], carry=["bands"]).distinct()
     hamming = F.aggregate(
         F.zip_with(
-            "ha", "hb",
+            "bands_a", "bands_b",
             lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
         ),
         F.lit(0).cast("long"),
@@ -2944,10 +2885,10 @@ def llm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash width is CONFIG.phash_mode: the default 256-bit fixed-point
     DCT (16 x 16-bit bands, radius 12) is the production shape — the
-    r10 sf1 probe measured the original 56-bit dHash (7 x 8-bit
+    sf1 probe measured the original 56-bit dHash (7 x 8-bit
     bands, radius 6) over-clustering superlinearly (793,525 pairs /
     50k docs), which is exactly the 8-bit-band over-population the
-    old docstring priced in; VERDICT r10 item 2 landed the widening.
+    56-bit design priced in, hence the widening.
     Both modes are pigeonhole-EXACT (radius < band count): same pairs
     as brute force at any scale, with only equi-join shuffles (the
     simhash guarantee, restated for images).
@@ -2974,7 +2915,7 @@ def llm_dedup_phash_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _phash_pairs_dhash(spark, sf_dir)
 
 
-# -------------------------- L2m acoustic fingerprint dedup (round 11)
+# ------------------------------------- L2m acoustic fingerprint dedup
 #: The audio-side mate of L2k: per doc a 256-sample int16 clip (groups
 #: of three share a base waveform; non-base docs bump one sample)
 #: round-trips through the REAL FLAC codec (rice/fixed predictors —
@@ -3078,7 +3019,7 @@ def llm_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------- L2n video frame-hash fingerprint (round 11)
+# --------------------------------- L2n video frame-hash fingerprint
 #: The video-side member of the multimodal near-dup family: per doc a
 #: group-structured MJPEG-in-AVI clip (groups of three share base
 #: frames AND length; non-base docs bump one DC block of one frame)
@@ -3094,15 +3035,11 @@ def llm_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: matching, the shape real video dedup (frame-fingerprint indexes)
 #: uses, with the same zero-corpus-pair-join scale story as L2k/L2m.
 VIDEOHASH_SLACK = 2
-#: Per-join-key occurrence cap (VERDICT r11 items 1-2): real video
-#: corpora are full of hot frames (black frames, station logos, title
-#: cards) and a key occurring in f rows costs C(f,2) join rows — the
-#: hot-shingle quadratic L2g/L7 cap for text, restated on frames. A
-#: frame hash shared by more than this many clips is boilerplate and
-#: evidences nothing; it is dropped from BOTH join sides before the
-#: candidate join, and the match thresholds are restated over each
-#: doc's KEPT (discriminative) frames so boilerplate-heavy docs fail
-#: honestly instead of via silent under-count.
+#: Per-join-key occurrence cap (drop_hot_keys): real video corpora are
+#: full of hot frames (black frames, station logos, title cards). The
+#: match thresholds are restated over each doc's KEPT (discriminative)
+#: frames so boilerplate-heavy docs fail honestly instead of via
+#: silent under-count.
 VIDEOHASH_DF_CAP = 64
 
 
@@ -3226,14 +3163,10 @@ def llm_dedup_videohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-pair joins: shuffle is O(docs x frames) hash rows;
     candidates only where frames genuinely collide.
 
-    Hot-frame bound (VERDICT r11 item 2): (frame_idx, fhash,
-    n_frames) bounds fan-out by position+length, but a same-length
-    corpus sharing an intro frame is still C(f,2) at one key — so a
-    combiner groupBy computes per-key occurrence df, the over-cap
-    list broadcasts, and a left-anti join drops boilerplate keys from
-    BOTH sides before the candidate join (the L2g/L7 shingle cap,
-    restated on frames; match over boilerplate frames is not near-dup
-    evidence, which is the semantics wanted). The thresholds restate
+    Hot-frame bound: (frame_idx, fhash, n_frames) bounds fan-out by
+    position+length, but a same-length corpus sharing an intro frame
+    is still C(f,2) at one key, so drop_hot_keys caps each key at
+    VIDEOHASH_DF_CAP docs before the pair join. The thresholds restate
     over each doc's kept-frame count, so with no hot frames the rule
     reduces exactly to the original n_frames - slack. At 100 TB,
     frames per doc grow but the plan is unchanged — real deployments
@@ -3256,38 +3189,18 @@ def videohash_pairs(
 ) -> DataFrame:
     """llm_dedup_videohash's core over any (doc_id, n_frames, frame_idx,
     fhash) frame — separated so adversarial tests can plant hot-frame
-    corpora (tests/test_llm.py pins that the df cap bounds per-key join
-    fan-out BEFORE the candidate join, the L2n scale guarantee)."""
+    corpora."""
     key = ["frame_idx", "fhash", "n_frames"]
-    # cached FIRST: the mapInPandas decode leg is the dominant cost and
-    # feeds both the df combiner and the anti-prune — one decode, not
-    # two (r12 review finding; the winnow fp-cache pattern)
+    # cached: the mapInPandas decode leg is the dominant cost and feeds
+    # both drop_hot_keys reads — one decode, not two
     frames = frames.cache()
-    hot = (
-        frames.groupBy(*key)
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > df_cap)
-        .select(*key)
-    )
     # disc feeds three consumers (both join sides + the kept-size agg);
     # rebuilding it is a cheap broadcast join over the cached int rows
-    disc = frames.join(F.broadcast(hot), key, "left_anti")
+    disc = drop_hot_keys(frames, key, df_cap)
     sizes = disc.groupBy("doc_id").agg(F.count("*").alias("nk"))
-    a = disc.alias("a")
-    b = disc.alias("b")
     matched = (
-        a.join(
-            b,
-            (F.col("a.frame_idx") == F.col("b.frame_idx"))
-            & (F.col("a.fhash") == F.col("b.fhash"))
-            & (F.col("a.n_frames") == F.col("b.n_frames"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_frames").alias("n_frames"),
-        )
+        key_pairs(disc, key, carry=["n_frames"])
+        .groupBy("doc_a", "doc_b", F.col("n_frames_a").alias("n_frames"))
         .agg(F.count("*").alias("matched"))
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("nk").alias("nk_a"))
@@ -3306,7 +3219,7 @@ def videohash_pairs(
     )
 
 
-# ---------------- L2n2 video clip-in-clip containment (round 11)
+# --------------------------- L2n2 video clip-in-clip containment
 #: The containment mate of L2n (the L2g/L12 substring shape restated
 #: on frame sequences): clip A is contained in clip B when A's FULL
 #: frame-hash sequence appears contiguously in B's at some offset.
@@ -3432,19 +3345,14 @@ def llm_video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contained frame (matched == kept-frame count, offset in
     [0, n_container - n_contained]).
 
-    Hot-frame bound (VERDICT r11 item 1): the join key is the frame
-    hash alone, so a frame shared by f clips (black frames, station
-    logos, freeze frames) would cost C(f,2) join rows — the
-    hot-shingle quadratic L2g/L7 cap for text, restated. A combiner
-    groupBy computes per-fhash occurrence df, the over-cap list
-    broadcasts, and a left-anti join drops boilerplate frames from
-    BOTH sides before the candidate join; a frame in >cap clips
-    cannot evidence containment any more than a boilerplate shingle
-    evidences contamination, so the qualification rule restates over
-    the contained doc's KEPT frames (with no hot frames it reduces
-    exactly to the original matched == n_frames). Scale shape after
-    the cap: per-key fan-out <= cap by construction, everything else
-    combiner aggregations / equi-joins.
+    Hot-frame bound: the join key is the frame hash alone, so a frame
+    shared by f clips (black frames, station logos, freeze frames)
+    would cost C(f,2) join rows; drop_hot_keys caps each fhash at
+    VIDEOHASH_DF_CAP occurrences before the pair join. The
+    qualification rule restates over the contained doc's KEPT frames
+    (with no hot frames it reduces exactly to the original matched ==
+    n_frames). The pair join itself is not key_pairs: it matches
+    ordered pairs (doc_id !=, n_frames <=) and groups by offset.
 
     Reference parity: reactor.py:16-213 catalogs uploads opaquely;
     containment audit is pipeline-added curation surface."""
@@ -3461,19 +3369,12 @@ def video_containment_pairs(
 ) -> DataFrame:
     """llm_video_containment's core over any (doc_id, n_frames,
     frame_idx, fhash) frame — separated so adversarial tests can plant
-    hot-frame corpora (tests/test_llm.py pins that the df cap bounds
-    per-fhash join fan-out BEFORE the candidate join)."""
-    # cached FIRST: one decode-leg materialization feeds the df
-    # combiner, both join sides, and the kept-size agg (r12 review
-    # finding — caching only the pruned table re-ran the decode)
+    hot-frame corpora."""
+    # cached: one decode-leg materialization feeds both drop_hot_keys
+    # reads, both join sides, and the kept-size agg; caching only the
+    # pruned table would run the decode twice
     frames = frames.cache()
-    hot = (
-        frames.groupBy("fhash")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > df_cap)
-        .select("fhash")
-    )
-    disc = frames.join(F.broadcast(hot), "fhash", "left_anti")
+    disc = drop_hot_keys(frames, "fhash", df_cap)
     sizes = disc.groupBy("doc_id").agg(F.count("*").alias("nk"))
     a = disc.alias("a")
     c = disc.alias("c")
@@ -3508,7 +3409,7 @@ def video_containment_pairs(
     )
 
 
-# ------------------------------ L2p winnowing fingerprints (round 11)
+# ----------------------------------------- L2p winnowing fingerprints
 #: Winnowing (Schleimer/Wilkerson/Aiken, the MOSS fingerprinting
 #: scheme): hash every positional k-gram, slide a w-position window,
 #: keep each window's MINIMUM hash. Guarantee (the reason to prefer it
@@ -3518,9 +3419,8 @@ def video_containment_pairs(
 #: ~2/(w+1) of all k-grams, so the inverted index is a tunable
 #: fraction of the corpus. Pairs then form by fingerprint equi-join
 #: with a shared-count threshold; fingerprints seen in more than
-#: WINNOW_DF_CAP docs are boilerplate and are dropped from BOTH sides
-#: (the contamination df-cap answer — an fp in f docs costs C(f,2)
-#: join rows, the hot-shingle quadratic at 100 TB). Fixture-measured
+#: WINNOW_DF_CAP docs are boilerplate and drop_hot_keys removes them
+#: from BOTH sides. Fixture-measured
 #: at sf0.01: random-vocabulary collisions share 1-2 fingerprints,
 #: planted near-dups >= 3 (mostly >= 8) — MIN_SHARED 3 splits them.
 WINNOW_K = 3
@@ -3576,37 +3476,30 @@ def llm_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional k-gram hashes (one md5, conv-to-bigint — the exact
     DuckDB-parity conversion the minhash family uses), a w-row sliding
     window-min per doc (spillable sort window, the cc_min 'window'
-    strategy shape), distinct fingerprint values, then a df-cap
-    dropping boilerplate fingerprints from both sides (an fp in f docs
-    costs C(f,2) join rows — the contamination cap, restated), then
-    the inverted-index equi-join with a shared-count threshold.
+    strategy shape), distinct fingerprint values, then drop_hot_keys
+    dropping boilerplate fingerprints from both sides, then the
+    inverted-index equi-join (key_pairs) with a shared-count threshold.
 
-    The df stage is the L7 combiner shape, NOT a count-over-fp window
-    (VERDICT r11 item 2): a window has no map-side partial
-    aggregation, so every (doc, fp) occurrence of a hot boilerplate
-    fingerprint would shuffle into ONE task before the cap could drop
-    it — a straggler factory at 100 TB. Instead df is a groupBy (map-
-    side partial_count collapses hot fps per task; the fp exchange
-    carries O(distinct fps) rows), the tiny over-cap list BROADCASTS,
-    and a left-anti join prunes occurrences without ever shuffling
-    them. Adversarially the over-cap list is bounded by
-    fp_rows / cap; if a corpus ever made that unbroadcastable, the
-    same prune is a shuffle equi-join against the full df frame —
-    joins get AQE skew-splitting, windows don't, which is the whole
-    point of the shape. Shuffles: one by doc (window-min), one
-    distinct-fp-sized (df groupBy), one by fp (pair join) — all
-    equi-key, no corpus-pair join anywhere. The guarantee caveat: the
-    selection scheme promises >= 1 shared fingerprint for any match of
-    >= w + k - 1 words; WINNOW_MIN_SHARED = 3 and the df cap
-    deliberately trade that certainty for precision against
-    single-collision noise and boilerplate (MOSS does the same).
+    Shuffles: one by doc (window-min), one distinct-fp-sized (the df
+    count), one by fp (pair join) — all equi-key, no corpus-pair join
+    anywhere. The guarantee caveat: the selection scheme promises >= 1
+    shared fingerprint for any match of >= w + k - 1 words;
+    WINNOW_MIN_SHARED = 3 and the df cap deliberately trade that
+    certainty for precision against single-collision noise and
+    boilerplate (MOSS does the same).
 
     Reference parity: reactor.py:16-213 catalogs text opaquely;
     fingerprint-certain overlap detection (code/doc plagiarism shape)
     is pipeline-added curation surface."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return winnow_pairs(docs)
+
+
+def winnow_pairs(docs: DataFrame) -> DataFrame:
+    """llm_dedup_winnow's core over any (doc_id, text) frame (fuzz
+    differential in tests/test_fuzz_differential.py)."""
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     w = docs.select("doc_id", F.split("text", " ").alias("w")).filter(
         F.size("w") >= WINNOW_K + WINNOW_W - 1
     )
@@ -3626,8 +3519,8 @@ def llm_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("doc_id").orderBy("i")
         .rowsBetween(-(WINNOW_W - 1), 0)
     )
-    # cached: the fingerprint table feeds the df combiner AND both
-    # anti-join sides — one materialization of the window-min pass
+    # cached: the fingerprint table feeds both drop_hot_keys reads —
+    # one materialization of the window-min pass
     fp = (
         pos.withColumn("fp", F.min("h").over(win))
         .where(F.col("i") >= WINNOW_W)
@@ -3635,28 +3528,9 @@ def llm_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .cache()
     )
-    # combiner df + broadcast over-cap anti-prune (the L7 shape): hot
-    # fps collapse map-side in the groupBy, so no task ever receives a
-    # hot fingerprint's full occurrence list (a window df would)
-    hot = (
-        fp.groupBy("fp")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > WINNOW_DF_CAP)
-        .select("fp")
-    )
-    kept = fp.join(F.broadcast(hot), "fp", "left_anti").select("doc_id", "fp")
-    a = kept.alias("a")
-    b = kept.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        key_pairs(drop_hot_keys(fp, "fp", WINNOW_DF_CAP), "fp")
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("shared_fps"))
         .where(F.col("shared_fps") >= WINNOW_MIN_SHARED)
         .orderBy("doc_a", "doc_b")

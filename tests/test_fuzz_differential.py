@@ -73,6 +73,7 @@ def _run(spark, ddb_mod, rows, core_fn, oracle_sql, name):
         ("minhash_pairs", "llm_dedup_minhash"),
         ("simhash_pairs", "llm_dedup_simhash"),
         ("ngram_jaccard_pairs", "llm_dedup_ngram_jaccard"),
+        ("winnow_pairs", "llm_dedup_winnow"),
         ("text:ngram_novelty", "llm_ngram_novelty"),
     ],
 )

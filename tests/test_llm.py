@@ -1092,20 +1092,45 @@ def test_ngram_novelty_matches_independent_python(spark):
 # --- adversarial skew: df-capped candidate joins (VERDICT r4 item 8) ----
 
 
+def _keys_over(occ, key, cap):
+    """{key tuple: df} for every key held by more than ``cap`` rows."""
+    from pyspark.sql import functions as F
+
+    return {
+        tuple(r[k] for k in key): r.df
+        for r in occ.groupBy(*key).agg(F.count("*").alias("df"))
+        .where(F.col("df") > cap).collect()
+    }
+
+
+def _assert_hot_keys_dropped(occ, kept, key, hot, cap):
+    """``kept`` is ``occ`` minus exactly the rows of the ``hot`` keys, and
+    no kept key is held by more than ``cap`` rows."""
+    from pyspark.sql import functions as F
+
+    kept_keys = {tuple(r) for r in kept.select(*key).distinct().collect()}
+    assert not kept_keys & set(hot), "a hot key survived the prune"
+    kept_max = kept.groupBy(*key).count().agg(F.max("count")).first()[0]
+    assert kept_max <= cap, kept_max
+    assert kept.columns == occ.columns
+    assert kept.count() == occ.count() - sum(hot.values())
+
+
 def test_containment_hot_shingle_fanout_bounded(spark):
     """Planted hot shingle (one boilerplate sentence in 300 docs): without
     the df cap the candidate join would fan out ~C(300,2) pairs from that
-    shingle alone. Pins that (a) the cap excludes it BEFORE the join —
-    max per-shingle df in the capped universe <= CONTAIN_DF_CAP, the
-    per-task fan-out bound; (b) the adversarial pressure is real (the hot
-    shingle's raw df is 300); (c) the answer is exactly the planted
-    true-containment pair, not boilerplate noise."""
+    shingle alone. Pins that (a) drop_hot_keys removes the hot shingles
+    BEFORE the join and keeps every other row — max per-shingle df in
+    the kept table <= CONTAIN_DF_CAP, the per-task fan-out bound; (b)
+    the adversarial pressure is real (the hot shingle's raw df is 300);
+    (c) the answer is exactly the planted true-containment pair, not
+    boilerplate noise."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from pipelinejobs_indexer_spark.llm.dedup import (
         CONTAIN_DF_CAP,
         containment_pairs,
+        drop_hot_keys,
         hashed_shingles,
     )
 
@@ -1121,18 +1146,14 @@ def test_containment_hot_shingle_fanout_bounded(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     hsh = hashed_shingles(docs).select("doc_id", "hf")
-    df_per_shingle = hsh.withColumn(
-        "df", F.count("*").over(Window.partitionBy("hf"))
-    )
     # (b) adversarial pressure: the boilerplate shingles really are hot
-    assert df_per_shingle.agg(F.max("df")).collect()[0][0] == n_hot
+    hot = _keys_over(hsh, ["hf"], CONTAIN_DF_CAP)
+    assert hot and max(hot.values()) == n_hot
     # (a) the fan-out bound the join actually sees
-    capped_max = (
-        df_per_shingle.filter(F.col("df") <= CONTAIN_DF_CAP)
-        .agg(F.max("df"))
-        .collect()[0][0]
+    _assert_hot_keys_dropped(
+        hsh, drop_hot_keys(hsh, "hf", CONTAIN_DF_CAP), ["hf"], hot,
+        CONTAIN_DF_CAP,
     )
-    assert capped_max <= CONTAIN_DF_CAP
     # (c) exact answer: only the planted containment pair
     got = {(r.doc_a, r.doc_b): r.containment for r in containment_pairs(docs).collect()}
     assert set(got) == {(9000, 9001)}
@@ -1209,20 +1230,21 @@ def test_contamination_hot_shingle_fanout_bounded(spark):
 def test_substring_hot_boilerplate_fanout_bounded(spark):
     """Planted hot 20-word block in 300 docs: its anchors' df is 300, so
     without the cap the anchor self-join alone yields ~C(300,2) = 44850
-    candidate pairs to positionally verify. Pins that the capped anchor
-    table bounds per-anchor df (per-task candidate bound), that the block
-    really is hot, and that the answer is exactly the planted unique-run
-    pair (hot-block pairs route to the L8 span-audit/blocklist path —
-    the documented recall tradeoff of the cap)."""
+    candidate pairs to positionally verify. Pins that drop_hot_keys
+    removes the hot anchors and bounds per-anchor df in the kept table
+    (per-task candidate bound), that the block really is hot, and that
+    the answer is exactly the planted unique-run pair (hot-block pairs
+    route to the L8 span-audit/blocklist path — the documented recall
+    tradeoff of the cap)."""
     import hashlib
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from pipelinejobs_indexer_spark.llm.dedup import (
         ANCHOR_DF_CAP,
         ANCHOR_MOD,
         SHINGLE_K,
+        drop_hot_keys,
         substring_span_pairs,
     )
 
@@ -1275,13 +1297,13 @@ def test_substring_hot_boilerplate_fanout_bounded(spark):
         )
         .filter(F.col("hf") % ANCHOR_MOD == 0)
         .distinct()
-        .withColumn("df", F.count("*").over(Window.partitionBy("hf")))
     )
-    assert anch.agg(F.max("df")).collect()[0][0] == n_hot  # pressure is real
-    capped_max = (
-        anch.filter(F.col("df") <= ANCHOR_DF_CAP).agg(F.max("df")).collect()[0][0]
+    hot = _keys_over(anch, ["hf"], ANCHOR_DF_CAP)
+    assert hot and max(hot.values()) == n_hot  # pressure is real
+    _assert_hot_keys_dropped(
+        anch, drop_hot_keys(anch, "hf", ANCHOR_DF_CAP), ["hf"], hot,
+        ANCHOR_DF_CAP,
     )
-    assert capped_max <= ANCHOR_DF_CAP
     got = {(r.doc_a, r.doc_b): r.span_words for r in substring_span_pairs(docs).collect()}
     assert set(got) == {(9000, 9001)}
     assert got[(9000, 9001)] == 18
@@ -3258,15 +3280,14 @@ def test_videohash_hot_frame_fanout_bounded(spark):
     """Planted hot frame (one black frame at the same position of 300
     same-length clips — the station-logo/title-card shape): without the
     df cap that one (frame_idx, fhash, n_frames) key alone would fan
-    out ~C(300,2) candidate pairs. Pins that (a) the cap excludes it
-    BEFORE the join — max per-key df in the capped universe <=
+    out ~C(300,2) candidate pairs. Pins that (a) drop_hot_keys removes
+    it BEFORE the join — max per-key df in the kept table <=
     VIDEOHASH_DF_CAP; (b) the adversarial pressure is real (the hot
     key's raw df is 300); (c) the answer is exactly the planted twin
     pair, and its match is counted over discriminative frames only."""
-    from pyspark.sql import functions as F
-
     from pipelinejobs_indexer_spark.llm.dedup import (
         VIDEOHASH_DF_CAP,
+        drop_hot_keys,
         videohash_pairs,
     )
 
@@ -3284,16 +3305,14 @@ def test_videohash_hot_frame_fanout_bounded(spark):
         rows, "doc_id long, n_frames long, frame_idx long, fhash long"
     )
     key = ["frame_idx", "fhash", "n_frames"]
-    dfs = frames.groupBy(*key).agg(F.count("*").alias("df"))
     # (b) adversarial pressure: the black frame really is hot
-    assert dfs.agg(F.max("df")).collect()[0][0] == n_hot
+    hot = _keys_over(frames, key, VIDEOHASH_DF_CAP)
+    assert hot == {(0, black, 3): n_hot}
     # (a) the fan-out bound the join actually sees
-    capped_max = (
-        dfs.filter(F.col("df") <= VIDEOHASH_DF_CAP)
-        .agg(F.max("df"))
-        .collect()[0][0]
+    _assert_hot_keys_dropped(
+        frames, drop_hot_keys(frames, key, VIDEOHASH_DF_CAP), key, hot,
+        VIDEOHASH_DF_CAP,
     )
-    assert capped_max <= VIDEOHASH_DF_CAP
     # (c) exact answer: only the twin pair; matched over kept frames
     got = {(r.doc_a, r.doc_b): (r.n_frames, r.matched)
            for r in videohash_pairs(frames).collect()}
@@ -3304,14 +3323,14 @@ def test_videohash_hot_frame_fanout_bounded(spark):
 def test_video_containment_hot_frame_fanout_bounded(spark):
     """Planted hot frame shared by 300 clips: uncapped, the fhash-only
     containment join would generate ~300*299 rows from that frame
-    before any offset histogram runs. Pins that (a) the capped universe
-    bounds per-fhash fan-out; (b) the pressure is real; (c) the answer
-    is exactly the planted sub-clip pair at its true offset, with the
-    qualification counted over the contained doc's kept frames."""
-    from pyspark.sql import functions as F
-
+    before any offset histogram runs. Pins that (a) drop_hot_keys
+    removes it and bounds per-fhash fan-out in the kept table; (b) the
+    pressure is real; (c) the answer is exactly the planted sub-clip
+    pair at its true offset, with the qualification counted over the
+    contained doc's kept frames."""
     from pipelinejobs_indexer_spark.llm.dedup import (
         VIDEOHASH_DF_CAP,
+        drop_hot_keys,
         video_containment_pairs,
     )
 
@@ -3329,16 +3348,14 @@ def test_video_containment_hot_frame_fanout_bounded(spark):
     frames = spark.createDataFrame(
         rows, "doc_id long, n_frames long, frame_idx long, fhash long"
     )
-    dfs = frames.groupBy("fhash").agg(F.count("*").alias("df"))
     # (b) adversarial pressure: the black frame really is hot
-    assert dfs.agg(F.max("df")).collect()[0][0] == n_hot
+    hot = _keys_over(frames, ["fhash"], VIDEOHASH_DF_CAP)
+    assert hot == {(black,): n_hot}
     # (a) the fan-out bound the join actually sees
-    capped_max = (
-        dfs.filter(F.col("df") <= VIDEOHASH_DF_CAP)
-        .agg(F.max("df"))
-        .collect()[0][0]
+    _assert_hot_keys_dropped(
+        frames, drop_hot_keys(frames, "fhash", VIDEOHASH_DF_CAP), ["fhash"],
+        hot, VIDEOHASH_DF_CAP,
     )
-    assert capped_max <= VIDEOHASH_DF_CAP
     # (c) exact answer: the planted sub-clip at offset 1, nothing else
     got = [tuple(r) for r in video_containment_pairs(frames).collect()]
     assert got == [(9000, 9001, 1, 2)]

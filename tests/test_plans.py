@@ -247,19 +247,41 @@ def test_approx_distinct_splits_exact_and_sketch(spark, sf_dir):
     assert "approx_count_distinct" in plan
 
 
-def test_containment_plan_is_bounded_equi_joins(spark, sf_dir):
-    """L2g must stay equi-join + combiner aggregations — no pair scan:
-    a nested-loop or cartesian anywhere means the df cap regressed."""
-    df = registry.QUERIES["llm_dedup_containment"](spark, sf_dir)
-    plan = _formatted_plan(df)
+_BROADCAST_ANTI = re.compile(
+    r"\(\d+\) BroadcastHashJoin\n[^\n]*\n[^\n]*\n[^\n]*Join type: LeftAnti"
+)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "llm_dedup_containment",
+        "llm_dedup_substring",
+        "llm_dedup_videohash",
+        "llm_video_containment",
+        "llm_dedup_winnow",
+    ],
+)
+def test_capped_dedup_plan_is_bounded_equi_joins(spark, sf_dir, name):
+    """Every df-capped dedup query must stay equi-joins + combiner
+    aggregations — no pair scan: a nested-loop or cartesian anywhere
+    means the cap regressed. drop_hot_keys' shape must be in the plan:
+    a map-side partial_count for the per-key df (a count-over-key
+    window has none, so a hot key's occurrences would all shuffle into
+    one task) and the over-cap prune as a BROADCAST left-anti join (the
+    occurrence rows are never shuffled for the prune)."""
+    plan = _formatted_plan(registry.QUERIES[name](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
-    # combiner-df groupBy (r12, replaces the df window) + pair-count agg
-    # + two size joins + the spread under each unmaterialized cache
-    # replica: generous static cap — at runtime AQE dedupes the cached
-    # subtree to one materialization (ReusedExchange)
-    assert n_exchanges <= 10, plan
+    assert "partial_count" in plan, plan
+    assert _BROADCAST_ANTI.search(plan), plan
+    if name == "llm_dedup_containment":
+        # df groupBy + pair-count agg + two size joins + the spread
+        # under each unmaterialized cache replica: generous static cap
+        # — at runtime AQE dedupes the cached subtree to one
+        # materialization (ReusedExchange)
+        n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
+        assert n_exchanges <= 10, plan
 
 
 def test_multi_table_lsh_plan_stays_equi_join(spark, sf_dir):
@@ -667,24 +689,13 @@ def test_canonical_argmax_join_back_not_window(spark, sf_dir):
 
 
 def test_winnow_df_is_combiner_groupby_not_window(spark, sf_dir):
-    """L2p's df stage must be the L7 combiner shape (VERDICT r11 item 2):
-    a count-over-fp WINDOW has no map-side partial aggregation, so every
-    occurrence of a hot boilerplate fingerprint would shuffle into one
-    task before the cap dropped it. Pins that (a) no Window in the plan
-    partitions by fp — the only window spec is the per-doc sliding min;
-    (b) a partial (map-side) count keyed on fp sits in the plan — hot
-    fps collapse per task before the fp exchange; (c) the over-cap
-    prune enters as a BROADCAST left-anti join, so the fingerprint
-    occurrence table itself is never shuffled for the prune."""
+    """L2p's df stage must not be a count-over-fp WINDOW: the only window
+    spec in the plan is the per-doc sliding min. The combiner count and
+    broadcast prune are pinned by
+    test_capped_dedup_plan_is_bounded_equi_joins[llm_dedup_winnow]."""
     plan = _formatted_plan(registry.QUERIES["llm_dedup_winnow"](spark, sf_dir))
     specs = re.findall(r"windowspecdefinition\((\w+)", plan)
     assert specs and set(specs) == {"doc_id"}, specs
-    assert "partial_count" in plan, plan
-    anti = re.findall(
-        r"\(\d+\) BroadcastHashJoin\n[^\n]*\n[^\n]*\n[^\n]*Join type: LeftAnti",
-        plan,
-    )
-    assert anti or ("LeftAnti" in plan and "BroadcastHashJoin" in plan), plan
 
 
 # the '117' || sha256(orderkey) process-uuid expression as Spark prints it
