@@ -2792,7 +2792,7 @@ def _phash_pairs_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> bit_count(XOR) Hamming verify on candidates only, entirely in
     Catalyst after the mapInPandas decode. <= 6 differing bits cannot
     touch all 7 bands, so the banded plan is pigeonhole-EXACT."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     # cached: one PNG round-trip feeds both self-join sides
     hashes = docs.mapInPandas(
         _phash_features, schema="doc_id bigint, phash bigint"
@@ -2833,7 +2833,7 @@ def _dct_banded_pairs(
     CPU-bound decode leg all cores — a video scale probe measured the
     un-spread leg serializing on the fixture's single parquet split
     (wall ratio 10.2x for 10x docs: one core doing 10x the work)."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     # cached: the codec round-trip is the dominant cost and the band
     # table feeds BOTH self-join sides — one decode, not two;
     # O(docs x 16) int rows, trivial memory
@@ -3176,7 +3176,7 @@ def llm_dedup_videohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs video uploads opaquely; frame-level
     near-dup is the curation surface a multimodal pipeline adds."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     frames = docs.mapInPandas(
         _videohash_features,
         schema="doc_id bigint, n_frames bigint, frame_idx bigint, fhash bigint",
@@ -3356,7 +3356,7 @@ def llm_video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: reactor.py:16-213 catalogs uploads opaquely;
     containment audit is pipeline-added curation surface."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     frames = docs.mapInPandas(
         _vcontain_features,
         schema="doc_id bigint, n_frames bigint, frame_idx bigint, fhash bigint",

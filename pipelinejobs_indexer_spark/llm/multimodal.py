@@ -644,7 +644,7 @@ def llm_multimodal_thumbnail_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the inflate+defilter pipeline end-to-end. Non-PNG media keep
     the block-mean byte path (llm_multimodal_thumbnail) and the documented
     codec-absent stubs."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_png_thumbs, schema=THUMB_PNG_SCHEMA)
 
 
@@ -733,7 +733,7 @@ def llm_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_multimodal_thumbnail_png pattern). Scale shape: identical to
     L5d — embarrassingly parallel mapInPandas, O(rows) output, no
     shuffle of media bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_gif_thumbs, schema=THUMB_GIF_SCHEMA)
 
 
@@ -848,7 +848,7 @@ def llm_multimodal_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) stores uploads opaquely; animation sampling is
     multimodal-ingest surface this engine adds."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_gif_anim_features, schema=GIF_ANIM_SCHEMA)
 
 
@@ -938,7 +938,7 @@ def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_multimodal_thumbnail_png / llm_multimodal_gif pattern). Scale
     shape: identical to L5d/L5i — embarrassingly parallel mapInPandas,
     O(rows) output, no shuffle of media bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_webp_thumbs, schema=THUMB_GIF_SCHEMA)
 
 
@@ -1276,7 +1276,7 @@ def llm_multimodal_audio_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum. Scale shape: embarrassingly parallel mapInPandas, O(rows)
     output; the step-table join is a 64x89 broadcast-sized dimension,
     never a data shuffle."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_audio_codec_features, schema=AUDIO_CODEC_SCHEMA)
 
 
@@ -1361,7 +1361,7 @@ def llm_multimodal_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug breaks the value hash (the PNG/GIF/WebP pattern). Scale shape:
     identical to L5e — embarrassingly parallel mapInPandas, O(rows)
     output, no shuffle of audio bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_flac_features, schema=FLAC_SCHEMA)
 
 
@@ -1476,8 +1476,8 @@ def llm_multimodal_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     armors, full literal-string escape grammar, BT/Tj/TJ/'/"/Td/T*
     text operators; the WHOLE Standard security handler decrypts for
     real — RC4 V1/V2, AES-128 V4 /AESV2, and AES-256 V5/R6 with the
-    Algorithm 2.B hardened KDF, all on a FIPS-197-vector-pinned pure
-    -int AES core — while fully-passworded docs and custom handlers
+    Algorithm 2.B hardened KDF, AES through ``cryptography`` pinned on
+    the FIPS-197 vectors — while fully-passworded docs and custom handlers
     keep the documented NotImplementedError, and the PDF 1.5
     compressed layout — /Type /XRef cross-reference streams with PNG
     predictors, /Type /ObjStm object streams — is parsed per ISO
@@ -1498,7 +1498,7 @@ def llm_multimodal_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     document bytes shuffle; decompressed stream volume is capped
     (pdf.py MAX_TEXT_BYTES) so hostile inputs cannot balloon executor
     memory."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_pdf_features, schema=PDF_SCHEMA)
 
 
@@ -1706,7 +1706,7 @@ def llm_multimodal_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     order shifts a sum. Scale shape: embarrassingly parallel
     mapInPandas, O(rows) fixed-width output, decoded sample volume
     capped by pdf.py MAX_TEXT_BYTES per document."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_pdf_image_features, schema=PDF_IMG_SCHEMA)
 
 
@@ -2456,7 +2456,7 @@ def llm_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: pixel sums in closed form from doc_id arithmetic. Scale
     shape: zero-exchange mapInPandas, fixed-width rows out, pixel
     volume capped per doc (MAX_TEXT_BYTES)."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_tiff_features, schema=TIFF_SCHEMA)
 
 
@@ -2561,7 +2561,7 @@ def llm_multimodal_tiff_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs scanned uploads as opaque blobs; fax
     decode is multimodal-ingest surface this engine adds on top."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_fax_features, schema=FAX_SCHEMA)
 
 
@@ -2708,7 +2708,7 @@ def llm_multimodal_pdf_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs uploaded PDFs as opaque blobs; the
     image-decode surface is what a training-data pipeline adds."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_pdf_fax_features, schema=PDF_FAX_SCHEMA)
 
 
@@ -2848,7 +2848,7 @@ def llm_multimodal_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs scans as opaque blobs; tiled decode is
     multimodal-ingest surface this engine adds."""
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     return docs.mapInPandas(_tiff_tiled_features, schema=TIFF_TILED_SCHEMA)
 
 

@@ -1,5 +1,5 @@
-"""Pure-stdlib PDF text extraction: object/stream parsing + content
-tokenization, no PDF libraries.
+"""PDF text extraction on the stdlib (plus ``cryptography`` for AES):
+object/stream parsing + content tokenization, no PDF libraries.
 
 Purpose: PDF is one of the largest text-corpus sources an LLM data
 pipeline ingests, and its TEXT layer is honestly decodable with the
@@ -37,14 +37,14 @@ objects.
 Encryption: the ENTIRE Standard security handler decrypts for real —
 RC4 (V1/V2, R2/R3: MD5 algorithms 2-5), AES-128 (V4 /AESV2, R4: the
 "sAlT" object-key salt, /EncryptMetadata variant, CBC + PKCS#7), and
-AES-256 (V5 /AESV3, R5/R6: the Algorithm 2.B hardened SHA-2 KDF built
-on this module's own AES-128-CBC, Algorithm 11/12 U/O verification,
-raw-CBC /UE //OE key unwrap, the /Perms ECB self-check). The AES core
-is FIPS 197 from first principles — computed S-box, GF(2^8) tables,
-128/256 key schedules — pinned in tests against the Appendix C.1/C.3
-block vectors. All of it with the EMPTY user (or owner) password, the
-common "owner-locked" case every reader opens; documents where BOTH
-passwords are real raise NotImplementedError.
+AES-256 (V5 /AESV3, R5/R6: the Algorithm 2.B hardened SHA-2 KDF over
+AES-128-CBC, Algorithm 11/12 U/O verification, raw-CBC /UE //OE key
+unwrap, the /Perms ECB self-check). AES is OpenSSL's, through the
+``cryptography`` package (a hard import: no fallback), pinned in tests
+against the FIPS 197 Appendix C.1/C.3 and SP 800-38A vectors; RC4 is
+pure Python (see :func:`_rc4`). All of it with the EMPTY user (or
+owner) password, the common "owner-locked" case every reader opens;
+documents where BOTH passwords are real raise NotImplementedError.
 
 Fonts: string bytes decode through the Tf-selected font's encoding
 machinery, the part of PDF text extraction real-world documents
@@ -90,8 +90,11 @@ size-capped so a zlib bomb in a hostile PDF cannot balloon memory.
 
 from __future__ import annotations
 
+import functools
 import re
 import zlib
+
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 #: cap on TOTAL decompressed content-stream bytes per document — a
 #: hostile FlateDecode stream must not balloon memory (gif.py bound
@@ -464,9 +467,12 @@ _PAD = bytes(
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
-    """RC4 stream cipher — pure arithmetic, stdlib-honest (the PDF
-    Standard handler's cipher for V1/V2; AES needs a crypto lib and
-    stays NotImplementedError)."""
+    """RC4 stream cipher, the Standard handler's V1/V2 cipher, in pure
+    Python. ``cryptography``'s ARC4 accepts only 40/56/64/80/128/160/
+    192/256-bit keys, while PDF per-object keys are ``min(n + 5, 16)``
+    bytes (11-15 bytes for a 48-120-bit document); any key length
+    works here, and test_rc4_published_vectors' 3/4/6-byte keys pin
+    that."""
     s = list(range(256))
     j = 0
     for i in range(256):
@@ -486,129 +492,16 @@ def _pad_password(pw: bytes) -> bytes:
     return (pw + _PAD)[:32]
 
 
-# ------------------------------------------- AES-128 (FIPS 197, pure int)
-# The V4 Standard handler's /AESV2 crypt filter is AES-128-CBC; the
-# cipher is integer arithmetic over GF(2^8), so it stays stdlib-honest.
-# The S-box is COMPUTED from the spec (multiplicative inverse + affine
-# transform, FIPS 197 §5.1.1) rather than pasted, and the block cipher
-# is pinned in tests against the FIPS 197 Appendix C.1 vector.
-def _gf_mul(a: int, b: int) -> int:
-    out = 0
-    for _ in range(8):
-        if b & 1:
-            out ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B  # the AES reduction polynomial x^8+x^4+x^3+x+1
-        b >>= 1
-    return out
-
-
-def _build_sbox() -> tuple[bytes, bytes]:
-    # multiplicative inverses via exp/log tables over generator 3
-    exp = [0] * 510
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        exp[i] = x
-        log[x] = i
-        x = _gf_mul(x, 3)
-    for i in range(255, 510):
-        exp[i] = exp[i - 255]
-    sbox = bytearray(256)
-    for v in range(256):
-        inv = 0 if v == 0 else exp[255 - log[v]]
-        b = inv
-        s = b
-        for _ in range(4):  # affine transform: XOR of 4 rotations + 0x63
-            b = ((b << 1) | (b >> 7)) & 0xFF
-            s ^= b
-        sbox[v] = s ^ 0x63
-    inv_sbox = bytearray(256)
-    for v, s in enumerate(sbox):
-        inv_sbox[s] = v
-    return bytes(sbox), bytes(inv_sbox)
-
-
-_SBOX, _INV_SBOX = _build_sbox()
-# GF(2^8) multiplication tables for Mix/InvMixColumns — computed, not
-# pasted, and essential for speed: the V5 Algorithm 2.B password hash
-# runs >=64 rounds of AES-CBC over a 2 KiB block, so per-multiply bit
-# loops would make every encrypted-PDF open take seconds.
-_M2, _M3 = (bytes(_gf_mul(v, c) for v in range(256)) for c in (2, 3))
-_M9, _M11, _M13, _M14 = (
-    bytes(_gf_mul(v, c) for v in range(256)) for c in (9, 11, 13, 14)
-)
-
-
-def _aes_expand_key(key: bytes) -> list[list[int]]:
-    """AES-128/256 key schedule: Nr+1 round keys of 16 bytes (FIPS 197
-    §5.2; Nk=4/Nr=10 or Nk=8/Nr=14 — AES-256 adds the extra SubWord on
-    i % Nk == 4)."""
-    if len(key) not in (16, 32):
-        raise ValueError(f"AES needs a 16/32-byte key, got {len(key)}")
-    nk = len(key) // 4
-    nr = nk + 6
-    words = [list(key[i : i + 4]) for i in range(0, len(key), 4)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        w = list(words[i - 1])
-        if i % nk == 0:
-            w = [_SBOX[b] for b in w[1:] + w[:1]]
-            w[0] ^= rcon
-            rcon = _gf_mul(rcon, 2)
-        elif nk == 8 and i % nk == 4:
-            w = [_SBOX[b] for b in w]
-        words.append([a ^ b for a, b in zip(w, words[i - nk])])
-    return [
-        [b for w in words[r * 4 : r * 4 + 4] for b in w]
-        for r in range(nr + 1)
-    ]
-
-
-def _aes_encrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = [b ^ k for b, k in zip(block, rk[0])]
-    for rnd in range(1, nr + 1):
-        s = [_SBOX[b] for b in s]
-        # ShiftRows on the column-major state: row r rotates left by r
-        s = [s[(i + 4 * (i % 4)) % 16] for i in range(16)]
-        if rnd < nr:
-            m = []
-            for c in range(0, 16, 4):
-                a0, a1, a2, a3 = s[c : c + 4]
-                m += [
-                    _M2[a0] ^ _M3[a1] ^ a2 ^ a3,
-                    a0 ^ _M2[a1] ^ _M3[a2] ^ a3,
-                    a0 ^ a1 ^ _M2[a2] ^ _M3[a3],
-                    _M3[a0] ^ a1 ^ a2 ^ _M2[a3],
-                ]
-            s = m
-        s = [b ^ k for b, k in zip(s, rk[rnd])]
-    return bytes(s)
-
-
-def _aes_decrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = [b ^ k for b, k in zip(block, rk[nr])]
-    for rnd in range(nr - 1, -1, -1):
-        # InvShiftRows: row r rotates right by r
-        s = [s[(i - 4 * (i % 4)) % 16] for i in range(16)]
-        s = [_INV_SBOX[b] for b in s]
-        s = [b ^ k for b, k in zip(s, rk[rnd])]
-        if rnd > 0:
-            m = []
-            for c in range(0, 16, 4):
-                a0, a1, a2, a3 = s[c : c + 4]
-                m += [
-                    _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3],
-                    _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3],
-                    _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3],
-                    _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3],
-                ]
-            s = m
-    return bytes(s)
+# ------------------------------------- AES (V4 /AESV2, V5 /AESV3 filters)
+# The block cipher is OpenSSL's through ``cryptography``; these helpers
+# own the PDF layouts around it. Tests pin them against the FIPS 197
+# Appendix C.1/C.3 and SP 800-38A CBC vectors.
+def _aes_ecb_block(key: bytes, block: bytes, decrypt: bool = False) -> bytes:
+    """One AES block in ECB mode: the V5 /Perms record (ISO 32000-2
+    Algorithm 10 writes it, Algorithm 13 checks it)."""
+    c = Cipher(algorithms.AES(key), modes.ECB())
+    ctx = c.decryptor() if decrypt else c.encryptor()
+    return ctx.update(block) + ctx.finalize()
 
 
 def _aes_cbc_encrypt(
@@ -619,20 +512,14 @@ def _aes_cbc_encrypt(
     (/UE //OE, Algorithm 2.B's 64-block loop) use — the IV is then NOT
     prepended (the callers fix it structurally: zero for key wraps,
     K[16:32] for 2.B)."""
-    rk = _aes_expand_key(key)
     if pad:
         n = 16 - len(data) % 16
         data += bytes([n]) * n
     elif len(data) % 16:
         raise ValueError("raw AES-CBC needs whole blocks")
-    out = bytearray(iv if pad else b"")
-    prev = iv
-    for i in range(0, len(data), 16):
-        prev = _aes_encrypt_block(
-            rk, bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        )
-        out += prev
-    return bytes(out)
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    ct = enc.update(data) + enc.finalize()
+    return iv + ct if pad else ct
 
 
 def _aes_cbc_decrypt(key: bytes, data: bytes, pad: bool = True) -> bytes:
@@ -645,25 +532,15 @@ def _aes_cbc_decrypt(key: bytes, data: bytes, pad: bool = True) -> bytes:
         )
     if not pad and (len(data) == 0 or len(data) % 16):
         raise ValueError("raw AES-CBC needs whole blocks")
-    rk = _aes_expand_key(key)
-    prev = data[:16] if pad else bytes(16)
-    start = 16 if pad else 0
-    out = bytearray()
-    for i in range(start, len(data), 16):
-        block = data[i : i + 16]
-        out += bytes(
-            a ^ b for a, b in zip(_aes_decrypt_block(rk, block), prev)
-        )
-        prev = block
+    iv, body = (data[:16], data[16:]) if pad else (bytes(16), data)
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    out = dec.update(body) + dec.finalize()
     if not pad:
-        return bytes(out)
+        return out
     n = out[-1]
     if not 1 <= n <= 16 or out[-n:] != bytes([n]) * n:
         raise ValueError("bad AES-CBC padding (corrupt or wrong key)")
-    return bytes(out[:-n])
-
-
-import functools
+    return out[:-n]
 
 
 @functools.lru_cache(maxsize=64)
@@ -671,14 +548,13 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     """ISO 32000-2 Algorithm 2.B (R6): the hardened SHA-2 password hash
     — iterated SHA-256/384/512 selected by an AES-128-CBC round over
     the 64x-repeated input, terminating after >=64 rounds once the last
-    cipher byte falls under round-32. Every primitive is arithmetic we
-    already carry (hashlib SHA-2, the FIPS-197-pinned AES).
+    cipher byte falls under round-32.
 
-    Memoized: the hash is an anti-brute-force KDF BY DESIGN (~10k AES
-    blocks, ~0.7 s in pure Python), so each distinct (password, salt,
-    udata) is derived once per worker; the fixture writer keeps V5
-    salts doc-independent so a corpus pass pays the KDF once, while
-    per-doc stream decryption still runs for real."""
+    Memoized: the hash is an anti-brute-force KDF BY DESIGN (>=64 CBC
+    passes over a >=2 KiB block, a few ms natively), so each distinct
+    (password, salt, udata) is derived once per worker; the fixture
+    writer keeps V5 salts doc-independent so a corpus pass pays the
+    KDF once, while per-doc stream decryption still runs for real."""
     import hashlib
 
     k = hashlib.sha256(password + salt + udata).digest()
@@ -788,10 +664,12 @@ class _Document:
         self._register_objstms()
 
     def _setup_encryption(self) -> None:
-        """RC4 Standard-handler support (V1/V2, R2/R3) with an EMPTY
-        user password — the common owner-locked case any reader opens.
-        AES (V4/5) and wrong-password documents keep the honest
-        NotImplementedError; a malformed /Encrypt dict is ValueError."""
+        """The Standard security handler with an EMPTY user password —
+        the common owner-locked case any reader opens: RC4 (V1/V2,
+        R2/R3), V4 with an /AESV2 or /V2 crypt filter (R4), and V5 via
+        :meth:`_setup_v5`. Custom handlers, unknown crypt filters and
+        wrong-password documents raise NotImplementedError; a malformed
+        /Encrypt dict is ValueError."""
         enc_ref = None
         for m in re.finditer(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R", self.data):
             enc_ref = (int(m.group(1)), int(m.group(2)))
@@ -879,8 +757,7 @@ class _Document:
         SHA-256 also accepted), Algorithm 11/12 U- and O-verification
         with the EMPTY password, the file key unwrapped from /UE (or
         /OE for owner-locked docs) by raw AES-256-CBC, and the /Perms
-        ECB self-check. All arithmetic already in the module: hashlib
-        SHA-2 plus the FIPS-197-pinned AES core."""
+        ECB self-check: hashlib SHA-2 plus the AES helpers above."""
         import hashlib
 
         r = enc.get("/R")
@@ -921,7 +798,7 @@ class _Document:
             )
         perms = enc.get("/Perms")
         if isinstance(perms, bytes) and len(perms) >= 16:
-            dec = _aes_decrypt_block(_aes_expand_key(key), perms[:16])
+            dec = _aes_ecb_block(key, perms[:16], decrypt=True)
             if dec[9:12] != b"adb":
                 raise ValueError(
                     "PDF V5 /Perms block fails the 'adb' check — corrupt "
@@ -2174,10 +2051,10 @@ def write_pdf(
             # hardened hash of each password (ISO 32000-2 algorithms
             # 8/9); empty owner password keeps the doc owner-openable.
             # Salts and key are doc-INDEPENDENT on purpose: Algorithm
-            # 2.B is an anti-brute-force KDF (~0.7 s/derivation in pure
-            # Python), and fixed inputs let the lru_cache on _hash_2b
-            # amortize it to once per worker across a whole corpus —
-            # per-doc encryption still differs via content and IVs.
+            # 2.B is an anti-brute-force KDF, and fixed inputs let the
+            # lru_cache on _hash_2b derive it once per worker across a
+            # whole corpus — per-doc encryption still differs via
+            # content and IVs.
             file_key = (
                 hashlib.md5(b"graft-v5-K1").digest()
                 + hashlib.md5(b"graft-v5-K2").digest()
@@ -2195,8 +2072,8 @@ def write_pdf(
             oe_val = _aes_cbc_encrypt(
                 _hash_2b(b"", kso, u_val), bytes(16), file_key, pad=False
             )
-            perms_val = _aes_encrypt_block(
-                _aes_expand_key(file_key),
+            perms_val = _aes_ecb_block(
+                file_key,
                 (p_val & 0xFFFFFFFF).to_bytes(4, "little")
                 + b"\xff\xff\xff\xffTadbripp"[:12],
             )

@@ -175,9 +175,9 @@ def pipeline_reindex_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
            GROUP BY 1""",
 )
 def pipeline_document_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed document-ingest pipeline (round 9) — the end-to-end
-    shape a PDF corpus crawl runs, in three plan stages that
-    deliberately cross the Python/JVM boundary exactly once:
+    """Composed document-ingest pipeline — the end-to-end shape a PDF
+    corpus crawl runs, in three plan stages that deliberately cross
+    the Python/JVM boundary exactly once:
 
       1. DECODE (mapInPandas): per doc, a real PDF is synthesized with
          the full L5l knob cycle (fonts, ciphers, 1.5 layouts) and its
@@ -192,12 +192,15 @@ def pipeline_document_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed forms, aggregated by shard) — so the extractor, the
     Catalyst feature expressions, AND the rollup must all agree with
     the closed form for the hash to match. Scale: stage 1 is
-    embarrassingly parallel; stage 2 rides the same tasks (no
-    boundary); stage 3 is the only shuffle, 8 groups with map-side
-    combine."""
-    from ..tables import load_table
+    embarrassingly parallel and runs on every core — spread() puts a
+    round-robin exchange of the one bigint doc_id column in front of
+    the decode when the scan yields fewer splits than cores (the
+    fixture's single row group), and is a no-op at real scale; stage
+    2 rides the same tasks (no boundary); stage 3 is the only
+    shuffle, 8 groups with map-side combine."""
+    from ..tables import load_table, spread
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
 
     def extract(batches):
         import pandas as pd

@@ -13,6 +13,7 @@ round trip cross-checks independently-written paths."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import zlib
@@ -377,22 +378,19 @@ def test_mutation_robustness_pdf15(seed, n_flips):
 def test_aes_block_pins_fips197_vector():
     """External golden vector: FIPS 197 Appendix C.1. The cipher is
     validated against the published standard, not a round trip of our
-    own code (the ADVICE-r8 'symmetric misreading' concern)."""
-    from pipelinejobs_indexer_spark.llm.pdf import (
-        _aes_decrypt_block,
-        _aes_encrypt_block,
-        _aes_expand_key,
-    )
+    own code."""
+    from pipelinejobs_indexer_spark.llm.pdf import _aes_ecb_block
 
     key = bytes(range(16))
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    rk = _aes_expand_key(key)
-    ct = _aes_encrypt_block(rk, pt)
+    ct = _aes_ecb_block(key, pt)
     assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert _aes_decrypt_block(rk, ct) == pt
-    # ... and the FIPS 197 Appendix A.1 key-schedule tail
-    rk2 = _aes_expand_key(bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"))
-    assert bytes(rk2[10]).hex() == "d014f9a8c9ee2589e13f0cc8b6630ca6"
+    assert _aes_ecb_block(key, ct, decrypt=True) == pt
+    # ... and the FIPS 197 Appendix B cipher example, under the Appendix
+    # A.1 key (the native cipher exposes no key schedule to pin)
+    key2 = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
+    ct2 = _aes_ecb_block(key2, bytes.fromhex("3243f6a8885a308d313198a2e0370734"))
+    assert ct2.hex() == "3925841d02dc09fbdc118597196a0b32"
 
 
 def test_roundtrip_aes_encrypted():
@@ -432,18 +430,13 @@ def test_aes_cbc_layout_rejected():
 def test_aes256_block_pins_fips197_c3_vector():
     """External golden vector: FIPS 197 Appendix C.3 (AES-256), plus the
     14-round key schedule implied by matching it."""
-    from pipelinejobs_indexer_spark.llm.pdf import (
-        _aes_decrypt_block,
-        _aes_encrypt_block,
-        _aes_expand_key,
-    )
+    from pipelinejobs_indexer_spark.llm.pdf import _aes_ecb_block
 
-    rk = _aes_expand_key(bytes(range(32)))
-    assert len(rk) == 15
+    key = bytes(range(32))
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = _aes_encrypt_block(rk, pt)
+    ct = _aes_ecb_block(key, pt)
     assert ct.hex() == "8ea2b7ca516745bfeafc49904b496089"
-    assert _aes_decrypt_block(rk, ct) == pt
+    assert _aes_ecb_block(key, ct, decrypt=True) == pt
 
 
 def test_roundtrip_aes256_encrypted():
@@ -1038,50 +1031,82 @@ def test_rc4_published_vectors():
 
 
 def test_aes_fips197_appendix_c_vectors():
-    from pipelinejobs_indexer_spark.llm.pdf import (
-        _aes_decrypt_block,
-        _aes_encrypt_block,
-        _aes_expand_key,
-    )
+    from pipelinejobs_indexer_spark.llm.pdf import _aes_ecb_block
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     # C.1: AES-128
-    rk = _aes_expand_key(bytes.fromhex("000102030405060708090a0b0c0d0e0f"))
-    ct = _aes_encrypt_block(rk, pt)
+    key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
+    ct = _aes_ecb_block(key, pt)
     assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert _aes_decrypt_block(rk, ct) == pt
+    assert _aes_ecb_block(key, ct, decrypt=True) == pt
     # C.3: AES-256
-    rk = _aes_expand_key(bytes.fromhex(
+    key = bytes.fromhex(
         "000102030405060708090a0b0c0d0e0f"
         "101112131415161718191a1b1c1d1e1f"
-    ))
-    ct = _aes_encrypt_block(rk, pt)
+    )
+    ct = _aes_ecb_block(key, pt)
     assert ct.hex() == "8ea2b7ca516745bfeafc49904b496089"
-    assert _aes_decrypt_block(rk, ct) == pt
+    assert _aes_ecb_block(key, ct, decrypt=True) == pt
 
 
 def test_aes_cbc_nist_sp800_38a_vectors():
+    """SP 800-38A F.2 through the PDF CBC helpers themselves: raw mode
+    (``pad=False``) is bare CBC, and the padded stream layout is
+    IV || the same ciphertext || one PKCS#7 block."""
     from pipelinejobs_indexer_spark.llm.pdf import (
-        _aes_encrypt_block,
-        _aes_expand_key,
+        _aes_cbc_decrypt,
+        _aes_cbc_encrypt,
     )
 
     iv = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     p1 = bytes.fromhex("6bc1bee22e409f96e93d7e117393172a")
     p2 = bytes.fromhex("ae2d8a571e03ac9c9eb76fac45af8e51")
     # F.2.1 CBC-AES128.Encrypt, first two blocks
-    rk = _aes_expand_key(bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"))
-    c1 = _aes_encrypt_block(rk, bytes(a ^ b for a, b in zip(p1, iv)))
-    c2 = _aes_encrypt_block(rk, bytes(a ^ b for a, b in zip(p2, c1)))
+    key = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
+    ct = _aes_cbc_encrypt(key, iv, p1 + p2, pad=False)
+    c1, c2 = ct[:16], ct[16:]
     assert c1.hex() == "7649abac8119b246cee98e9b12e9197d"
     assert c2.hex() == "5086cb9b507219ee95db113a917678b2"
+    stream = _aes_cbc_encrypt(key, iv, p1 + p2)
+    assert stream[:48] == iv + ct and len(stream) == 64
+    assert _aes_cbc_decrypt(key, stream) == p1 + p2
     # F.2.5 CBC-AES256.Encrypt, first block
-    rk = _aes_expand_key(bytes.fromhex(
+    key = bytes.fromhex(
         "603deb1015ca71be2b73aef0857d7781"
         "1f352c073b6108d72d9810a30914dff4"
-    ))
-    c1 = _aes_encrypt_block(rk, bytes(a ^ b for a, b in zip(p1, iv)))
+    )
+    c1 = _aes_cbc_encrypt(key, iv, p1, pad=False)
     assert c1.hex() == "f58c4c04d6e5f1ba779eabfb5f7bfbd6"
+
+
+@pytest.mark.parametrize(
+    "args, digest",
+    [
+        (
+            (b"", hashlib.md5(b"graft-v5-vs").digest()[:8], b""),
+            "fbbce994f1a14285ccf3680951a7f601"
+            "9eb8a791c8b98b56ff8ab61291e42494",
+        ),
+        (
+            (b"secret", bytes(range(8)), b""),
+            "952a028e406d92accedad37501d7f8ff"
+            "e7e3d9582c35336d4e434b580de7de76",
+        ),
+        (
+            (b"", bytes(8), bytes(range(48))),
+            "559f7b3d24059e28ab240638e7f2e864"
+            "daa77df7ecc51f248d6d41fbd5aced34",
+        ),
+    ],
+    ids=["writer-salt", "password", "udata"],
+)
+def test_hash_2b_pinned_vectors(args, digest):
+    """ISO 32000-2 Algorithm 2.B digests pinned from an independent
+    pure-Python AES implementation: the KDF's SHA-2 selection reads the
+    cipher output, so any AES or CBC-chaining slip changes the digest."""
+    from pipelinejobs_indexer_spark.llm.pdf import _hash_2b
+
+    assert _hash_2b.__wrapped__(*args).hex() == digest
 
 
 # --------------------------------------------------------------------------

@@ -770,3 +770,21 @@ def test_plan_memo_evicts_other_applications(spark, sf_dir):
     tables.messages(spark, sf_dir)
     assert stale not in tables._PLAN_CACHE
     assert {k[0] for k in tables._PLAN_CACHE} == {app}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pipeline_document_ingest", "llm_multimodal_pdf", "llm_dedup_videohash"],
+)
+def test_decode_leg_spread_keeps_scan_width_memo(spark, sf_dir, name):
+    """The decode legs project doc_id AFTER spread(), so spread() sees
+    load_table's scan marker and memoizes the width probe; projecting
+    first would drop the marker and re-probe on every construction. The
+    round-robin exchange still sits under the decode."""
+    from pipelinejobs_indexer_spark import tables
+
+    tables._SCAN_WIDTH_CACHE.clear()
+    df = registry.QUERIES[name](spark, sf_dir)
+    key = (spark.sparkContext.applicationId, f"{sf_dir}/documents.parquet")
+    assert key in tables._SCAN_WIDTH_CACHE
+    assert "RoundRobinPartitioning" in _formatted_plan(df)
