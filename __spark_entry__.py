@@ -43,17 +43,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _isolated(fn: Callable[[SparkSession, str], DataFrame]):
-    """Per-query cache isolation for long-lived sweep sessions (ADVICE
-    r12): several dedup/tfidf queries .cache() an expensive decode or
-    aggregate leg that stays lazy in the returned frame, so a 199-query
-    sweep in ONE session would otherwise accumulate executor storage
+    """Per-query cache isolation for long-lived sweep sessions: several
+    dedup queries .cache() an expensive decode or aggregate leg that
+    stays lazy in the returned frame, so a sweep of every registered
+    query in ONE session would otherwise accumulate executor storage
     until LRU eviction — and a cached subtree from query A can splice
     itself into query B's physical plan via the shared CacheManager
     (canonicalized-plan match), changing B's measured shape. Dropping
     the cache at query ENTRY keeps each query's footprint and plan
     self-contained; results are unaffected either way.
 
-    CONTRACT (ADVICE r13): this assumes the driver runs queries
+    CONTRACT: this assumes the driver runs queries
     SEQUENTIALLY — build, collect, move on — which is what the sweep
     protocol does. A driver that interleaved building one query's frame
     with collecting another's would have query B's entry unpersist the

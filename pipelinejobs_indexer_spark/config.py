@@ -18,16 +18,16 @@ data-dependent):
 
 * ``lsh_planes`` — target mean bucket occupancy; buckets ~ 2^planes, so
   planes ~ log2(n / desired_bucket_size). 500 rows / 4 planes ~ 31/bucket;
-  1e9 vectors want ~24 planes for the same occupancy. MEASURED (round 7,
-  scripts/lsh_sizing_probe.py, BENCH_sf1.md): the rule bounds candidates
+  1e9 vectors want ~24 planes for the same occupancy. Measured
+  (scripts/lsh_sizing_probe.py, BENCH_sf1.md): the rule bounds candidates
   as written (10x data at fixed planes -> 100x candidates; +log2(10)
   planes restores ~linear), BUT recall on a single hamming-1 table
   decays ~p^planes (0.57 -> 0.18 measured going 4 -> 8 planes at cosine
   0.45) — so on real corpora raise ``lsh_tables`` alongside ``lsh_planes``
   (AND-OR amplification, recall 1-(1-p_r)^b), not planes alone.
 * ``ivf_cent_stride`` — centroids ~ n/stride; SemDeDup-style sqrt(n)
-  centroids means stride ~ sqrt(n). MEASURED (round 7,
-  scripts/ivf_sizing_probe.py, BENCH_sf1.md): cost is
+  centroids means stride ~ sqrt(n). Measured
+  (scripts/ivf_sizing_probe.py, BENCH_sf1.md): cost is
   assignment-dominated and linear in the centroid count (100/328/1000
   cells -> 3.2/8.7/23.7 s at 20k vectors) while flat in ``ivf_nprobe``
   — so stride sets the bill and nprobe is a ~free recall lever until
@@ -35,7 +35,7 @@ data-dependent):
   the assignment and scan terms.
 * ``minhash_hashes`` / ``minhash_bands`` — the S-curve knob:
   P(candidate | jaccard s) = 1-(1-s^r)^b with r = hashes/bands.
-  MEASURED (round 7, scripts/minhash_scurve_probe.py, BENCH_sf1.md):
+  Measured (scripts/minhash_scurve_probe.py, BENCH_sf1.md):
   per-jaccard-bucket recall vs the exact AllPairs ground truth matches
   the closed form within ~1-3pp at every bucket (overall 0.983 at the
   default 16/4), so the formula is trustworthy for re-sizing r/b at a
@@ -105,8 +105,8 @@ class EngineConfig:
     while candidates grow only linearly in tables. The default 1 is the
     fixture-scale single-table construction (and table 0's planes are
     exactly the single-table planes, so tables=1 is result-identical to
-    the pre-knob behavior). MEASURED at the 20k probe (BENCH_sf1.md
-    round-7 addendum): deepening ONE table to hold bucket occupancy
+    the pre-knob behavior). Measured at a 20k-vector probe
+    (BENCH_sf1.md): deepening ONE table to hold bucket occupancy
     collapses recall 0.57 -> 0.18, while (planes=10, tables=8) holds
     recall 0.54 at 3.2x fewer candidates and 2.3x less time than the
     occupancy-blown (planes=4, tables=1) point — and the gap widens
@@ -116,27 +116,12 @@ class EngineConfig:
     ``ivf_nprobe``      — IVF cells probed per query (L3c).
     ``minhash_hashes``  — minhash family size (L2a, L11b).
     ``minhash_bands``   — LSH band count; must divide ``minhash_hashes``.
-    ``cdc_window``      — CDC rolling content window, chars (L13).
+    ``cdc_window``      — CDC rolling content window, chars (L13); at
+    most 24, so the unrolled gear window polynomial stays inside
+    signed-64 arithmetic.
     ``cdc_divisor``     — CDC boundary divisor: expected chunk size ~
     ``cdc_divisor`` chars (L13); tune toward KB-scale chunks on real
     corpora (the 32-char default matches the tiny fixture docs).
-    ``cdc_hash``        — CDC boundary-window hash: ``gear`` (the
-    default — FastCDC-style gear polynomial over a 256-entry byte
-    table; pure integer multiply-adds, no per-position
-    digest/hex/string allocation, ~4× faster per scanned char at
-    sf0.01) or ``md5`` (one md5 of the w-char window per position —
-    the original rule, kept selectable as the engine-independent
-    cross-check and for windows beyond gear's ceiling). Gear became
-    the default in round 7 (VERDICT r6 item 2): the registered
-    primary should run the plan you'd ship, and gear is that plan —
-    same scan shape, strictly less per-position work, identical
-    realignment semantics. Both are content-defined over the same
-    trailing window; the boundary SETS differ, and the DuckDB oracle
-    replays whichever rule is active. Gear requires ``cdc_window``
-    <= 24 (the unrolled window polynomial must stay inside signed-64
-    arithmetic) — that ceiling now bounds the DEFAULT config too, so
-    a wider window must come paired with ``cdc_hash=md5`` (the
-    validation error says so).
     ``contam_df_cap``   — decontamination (L7) drops shingles present in
     more than this many documents from BOTH sides of the train↔eval
     overlap join (numerator AND denominator): boilerplate shingles
@@ -146,33 +131,6 @@ class EngineConfig:
     join-row growth for 10× input before the cap existed). Cap = the
     per-shingle join fan-out bound; raise it with corpus size only if
     boilerplate overlap is genuinely wanted as signal.
-    ``cc_min_strategy``  — how the connected-components loop computes
-    the per-vertex neighborhood minimum. ``window`` (default): one
-    exchange per phase via a window aggregate on the vertex key; a hub
-    vertex lands its whole neighborhood in one WindowExec task, in a
-    SPILLABLE sort buffer. ``twophase``: a combiner groupBy (map-side
-    partial min — per-hub shuffle volume collapses to one partial row
-    per map task, structurally skew-proof) plus a planner-chosen
-    join-back to re-attach the min — one more exchange per phase.
-    MEASURED crossover guidance (r7, scripts/cc_crossover_probe.py —
-    planted star + 4M background edges on local[32], both strategies
-    timed to convergence, parity asserted): ``window`` won EVERY cell,
-    hub degree 50k → 4M (2× the EDGES_PER_TASK budget): 38/36/46/53 s
-    vs twophase's 46/56/61/88 s — i.e. no crossover within the
-    measurable range, window ≤ 0.73× at every point, its time growing
-    only 1.4× for an 80× hub because the window sort spills and
-    streams. The earlier ANALYTIC guidance ("switch near
-    EDGES_PER_TASK") is therefore retired: stay on ``window`` until a
-    single hub's neighborhood is so large that one task's spill-sort
-    becomes a wall-clock straggler (≫ EDGES_PER_TASK, e.g. a
-    100M-degree vertex at 100 TB) — that regime is beyond single-node
-    measurement, and ``twophase`` remains the parity-proven escape
-    hatch for it. The same probe also killed twophase's original
-    forced shuffle_hash join-back: its unspillable hash build died
-    with "Can't acquire … bytes to build hash relation" at the 4M hub
-    (exactly the graphs the path exists for) while window completed;
-    the join-back is now planner-chosen (SMJ sorts spill). Identical
-    results by construction (parity-tested both ways).
     ``exact_pairs_max_rows`` — input-row ceiling for the exact
     all-pairs embedding baseline (L2d, ``llm_dedup_embedding``). That
     query's plan is an O(n²) theta join kept ONLY as the correctness
@@ -199,7 +157,7 @@ class EngineConfig:
     value-verifies the non-default backend every driver sweep); measured
     overhead at replay scale is ~6% (stream_fsm_final at sf0.1: 5.59 s
     in-heap vs 5.92 s rocksdb best-of-3 — the serialization tax you pay
-    until state outgrows the heap, BENCH_sf1.md round-7 addendum).
+    until state outgrows the heap, BENCH_sf1.md).
     ``kmeans_k`` / ``kmeans_iters`` — Lloyd-iteration count and cluster
     count for the distributed k-means trainer (L3e,
     ``llm_embedding_kmeans``). ``kmeans_k`` is capped at 64 because the
@@ -220,43 +178,13 @@ class EngineConfig:
     dim×4 bytes raw; recall wants m·k sized so k^m cells ≫ corpus
     clusters. The 16/16 default is the MEASURED knee of the m∈{4,8,16} ×
     k∈{4,16,64} recall/cost surface at the sf1 probe's 20k vectors
-    (scripts/pq_sizing_probe.py, BENCH_sf1.md round-8 addendum):
+    (scripts/pq_sizing_probe.py, BENCH_sf1.md):
     recall@10 0.34 — equal to m16/k64 at 3.3× less search time — with
     32× compression; at fixed code bits more subspaces beat more
     centroids (m16/k16 0.34 vs m8/k64 0.22 at 64 vs 48 bits). Same ≤64
     centroid-expression cap per subspace as ``kmeans_k``, same
     one-scan-per-iteration cost (ALL subspaces' updates ride a single
     exchange of m×k×subdim rows per task).
-    ``phash_mode`` — perceptual image-dedup hash for L2k
-    (``llm_dedup_phash``): ``dct256`` (default — a 256-bit fixed-point
-    DCT-II hash over the decoded 16×16 pixels, banded 16 × 16-bit; the
-    production width) or ``dhash56`` (the original 56-bit row-gradient
-    dHash, banded 7 × 8-bit — fixture-scale: the r10 sf1 probe measured
-    superlinear pair growth from 8-bit band over-population and ≤6-bit
-    discrimination, which is why the wide hash became the default,
-    VERDICT r10 item 2). Both run the identical banded-LSH plan shape
-    and both are pigeonhole-EXACT at their Hamming radius (radius <
-    band count); the twin query ``llm_dedup_phash_dhash`` keeps the
-    non-default mode under the driver's hash gate every sweep (the CDC
-    twin pattern).
-    ``tfidf_df_strategy`` — how llm_text_tfidf_keywords (L4k) attaches
-    document frequency to the aggregated (doc, term) frame. ``window``
-    (default): ``count(*) OVER (PARTITION BY term)`` — one exchange,
-    but a stopword's partition (one row per document containing it)
-    lands in ONE WindowExec task, and windows get no AQE
-    skew-splitting. ``join``: cache the tf frame, combiner groupBy on
-    term (map-side partial counts — skew-proof), planner-chosen
-    join-back — one more exchange plus the cache materialization.
-    MEASURED crossover (r12 + the r13 tfidf13 second-decade probe,
-    BENCH_sf1.md): ``window`` is 27% faster at sf0.1 (1.49 vs 1.89 s)
-    and still 17% faster at sf10 (6.37 vs 7.67 s, 500k docs, every
-    term of the closed 31-word vocabulary maximally hot — a 500k-row
-    single-term partition spill-sorts without stragglering), so stay
-    on ``window`` until a single term's doc list outgrows a task's
-    spill-sort tolerance (~256 MB — billions of docs); ``join`` is
-    the parity-proven escape hatch for that regime,
-    kept under the driver's value-hash gate every sweep by the
-    ``llm_text_tfidf_keywords_join`` twin (the L9b/L13b pattern).
     ``logreg_iters`` — full-batch gradient-descent sweeps for the linear
     quality-classifier trainer (L3f, ``llm_classifier_logreg``). Each
     sweep is one corpus scan + one map-side-combined gradient aggregate
@@ -269,7 +197,7 @@ class EngineConfig:
     real cluster run — executor loss mid-loop otherwise kills the job,
     because localCheckpoint blocks die with their executor. Measured
     price at replay scale (scripts/checkpoint_overhead_probe.py,
-    BENCH_sf1.md round-7 addendum): tracks checkpointed VOLUME, not
+    BENCH_sf1.md): tracks checkpointed VOLUME, not
     count — +19% on the CC loop (corpus-shaped edge frames each round),
     ~0 on BPE (vocab-sized tables), +4% on the k-means trainer (one
     quantized-frame checkpoint). The
@@ -288,11 +216,8 @@ class EngineConfig:
     minhash_bands: int = 4
     cdc_window: int = 8
     cdc_divisor: int = 32
-    cdc_hash: str = "gear"
     contam_df_cap: int = 64
     exact_pairs_max_rows: int = 50_000
-    cc_min_strategy: str = "window"
-    tfidf_df_strategy: str = "window"
     state_store: str = "hdfs"
     resilient_checkpoints: bool = False
     kmeans_k: int = 4
@@ -301,14 +226,8 @@ class EngineConfig:
     pq_k: int = 16
     pq_iters: int = 2
     logreg_iters: int = 3
-    phash_mode: str = "dct256"
 
     def __post_init__(self) -> None:
-        if self.phash_mode not in ("dct256", "dhash56"):
-            raise ValueError(
-                f"phash_mode must be 'dct256' or 'dhash56', "
-                f"got {self.phash_mode!r}"
-            )
         if not 64 <= self.bloom_bits <= 1 << 26:
             raise ValueError(
                 f"bloom_bits must be in [64, 2^26] (the relational bit-set is "
@@ -370,29 +289,32 @@ class EngineConfig:
             raise ValueError(
                 f"state_store must be 'hdfs' or 'rocksdb', got {self.state_store!r}"
             )
-        if self.cc_min_strategy not in ("window", "twophase"):
+        if self.cdc_window > 24:
             raise ValueError(
-                f"cc_min_strategy must be 'window' or 'twophase', "
-                f"got {self.cc_min_strategy!r}"
+                f"cdc_window must be <= 24 (the gear window polynomial must "
+                f"stay inside signed-64 arithmetic), got {self.cdc_window}"
             )
-        if self.tfidf_df_strategy not in ("window", "join"):
-            raise ValueError(
-                f"tfidf_df_strategy must be 'window' or 'join', "
-                f"got {self.tfidf_df_strategy!r}"
-            )
-        if self.cdc_hash not in ("md5", "gear"):
-            raise ValueError(f"cdc_hash must be 'md5' or 'gear', got {self.cdc_hash!r}")
-        if self.cdc_hash == "gear" and self.cdc_window > 24:
-            raise ValueError(
-                f"cdc_hash='gear' needs cdc_window <= 24 to stay inside "
-                f"signed-64 arithmetic, got {self.cdc_window}; set "
-                f"SPARK_GRAFT_CDC_HASH=md5 to use a wider window"
-            )
+
+#: Env vars of algorithm choices that now have one plan each. A deployment
+#: that still sets one would silently get a different chunking, hash or
+#: plan than it asked for, so ``from_env`` refuses them.
+_RETIRED_ENV = (
+    "SPARK_GRAFT_CDC_HASH",
+    "SPARK_GRAFT_CC_MIN_STRATEGY",
+    "SPARK_GRAFT_TFIDF_DF",
+    "SPARK_GRAFT_PHASH_MODE",
+)
 
 
 def from_env() -> EngineConfig:
     """Build an :class:`EngineConfig` from ``SPARK_GRAFT_*`` env vars,
     falling back to the fixture-scale defaults."""
+    for name in _RETIRED_ENV:
+        if name in os.environ:
+            raise ValueError(
+                f"{name} is no longer supported: the engine runs one plan "
+                f"for this choice; unset it"
+            )
     d = EngineConfig()
     return EngineConfig(
         bloom_bits=_env_int("SPARK_GRAFT_BLOOM_BITS", d.bloom_bits),
@@ -405,16 +327,9 @@ def from_env() -> EngineConfig:
         minhash_bands=_env_int("SPARK_GRAFT_MINHASH_BANDS", d.minhash_bands),
         cdc_window=_env_int("SPARK_GRAFT_CDC_WINDOW", d.cdc_window),
         cdc_divisor=_env_int("SPARK_GRAFT_CDC_DIVISOR", d.cdc_divisor),
-        cdc_hash=_env_choice("SPARK_GRAFT_CDC_HASH", d.cdc_hash, ("md5", "gear")),
         contam_df_cap=_env_int("SPARK_GRAFT_CONTAM_DF_CAP", d.contam_df_cap),
         exact_pairs_max_rows=_env_int(
             "SPARK_GRAFT_EXACT_PAIRS_MAX_ROWS", d.exact_pairs_max_rows
-        ),
-        cc_min_strategy=_env_choice(
-            "SPARK_GRAFT_CC_MIN_STRATEGY", d.cc_min_strategy, ("window", "twophase")
-        ),
-        tfidf_df_strategy=_env_choice(
-            "SPARK_GRAFT_TFIDF_DF", d.tfidf_df_strategy, ("window", "join")
         ),
         state_store=_env_choice(
             "SPARK_GRAFT_STATE_STORE", d.state_store, ("hdfs", "rocksdb")
@@ -428,9 +343,6 @@ def from_env() -> EngineConfig:
         pq_k=_env_int("SPARK_GRAFT_PQ_K", d.pq_k),
         pq_iters=_env_int("SPARK_GRAFT_PQ_ITERS", d.pq_iters),
         logreg_iters=_env_int("SPARK_GRAFT_LOGREG_ITERS", d.logreg_iters),
-        phash_mode=_env_choice(
-            "SPARK_GRAFT_PHASH_MODE", d.phash_mode, ("dct256", "dhash56")
-        ),
     )
 
 

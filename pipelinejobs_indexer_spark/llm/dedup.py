@@ -1180,7 +1180,6 @@ def _canon(e: DataFrame) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_rounds: int = MAX_CC_ITERS,
-    min_strategy: str | None = None,
     pairs_canonical: bool = False,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every vertex of the pair graph, cluster_id
@@ -1193,12 +1192,12 @@ def connected_components(
     (min-over-neighborhood as a window aggregate on the vertex key — one
     exchange per phase instead of a groupBy + join-back pair) plus one
     dedup exchange, all equi-shuffles on vertex keys, localCheckpoint'ed
-    so the driver loop stays constant-cost. For power-law graphs whose
-    hub degree outgrows a task, SPARK_GRAFT_CC_MIN_STRATEGY=twophase
-    swaps each window pass for a combiner groupBy + join-back
-    (_attach_neighborhood_min — skew-proof partial mins at the price
-    of one more exchange per phase; MEASURED crossover guidance in
-    config.py, results identical by construction). The large-star output feeds
+    so the driver loop stays constant-cost. A hub vertex lands its whole
+    neighborhood in one WindowExec task, in a spillable sort buffer:
+    measured on a planted star plus 4M background edges at local[32]
+    (BENCH_sf1.md), the window min beat a combiner groupBy + join-back
+    at every hub degree from 50k to 4M spokes, its time growing only
+    1.4x for an 80x hub. The large-star output feeds
     the small-star window RAW (no intermediate distinct): min-over-window
     is duplicate-insensitive and the round's terminal canon dedups anyway,
     so each round runs three exchanges, not five. Convergence is detected
@@ -1286,9 +1285,7 @@ def connected_components(
                 lazy=True,  # materialized by the count
             )
             e_cnt = e.count()
-        e, prev_cnt = _cc_rounds(
-            e, e_cnt, w_u, _parts, max_rounds, spark, min_strategy
-        )
+        e, prev_cnt = _cc_rounds(e, e_cnt, w_u, _parts, max_rounds, spark)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
         spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
@@ -1299,40 +1296,7 @@ def connected_components(
     )
 
 
-def _attach_neighborhood_min(df, out: str, w_u, strategy: str | None = None):
-    """Attach min(v) over each vertex u's rows as column ``out``, by the
-    configured strategy (config.py `cc_min_strategy`):
-
-    * window (default) — one exchange; the hub-keyed WindowExec buffers
-      each u's whole neighborhood in one task, in a SPILLABLE sort
-      buffer (measured to 4M-spoke hubs by the CC crossover probe,
-      scripts/cc_crossover_probe.py — see config.py).
-    * twophase — combiner groupBy (map-side partial min: shuffle volume
-      per hub = one partial row per map task, skew-proof) + a join-back
-      to re-attach the min. One more exchange per phase; identical rows
-      either way. The join-back strategy is left to the planner: the
-      crossover probe measured a forced shuffle_hash
-      hint DYING at a 4M-spoke hub ("Can't acquire ... bytes to build
-      hash relation" — an SHJ build map is unspillable, and the loop's
-      EDGES_PER_TASK partition sizing makes each build
-      distinct-u/partitions rows, exactly wrong for the graphs this
-      path exists for) while the window strategy completed. The
-      combiner groupBy is the skew-proof part; the join-back only
-      needs to be robust — Catalyst's SMJ sorts spill.
-
-    Strategy defaults from CONFIG at call time (not captured at import)
-    so the parity test can flip it per run; an explicit argument (the
-    registered twophase twin) overrides."""
-    from ..config import CONFIG
-
-    s = CONFIG.cc_min_strategy if strategy is None else strategy
-    if s == "window":
-        return df.withColumn(out, F.min("v").over(w_u))
-    mins = df.groupBy("u").agg(F.min("v").alias(out))
-    return df.join(mins, "u")
-
-
-def _cc_rounds(e, prev_cnt, w_u, _parts, max_rounds, spark, min_strategy=None):
+def _cc_rounds(e, prev_cnt, w_u, _parts, max_rounds, spark):
     """The large-star/small-star iteration of connected_components; edge
     list in, converged star forest out. Split out so the shuffle-partition
     scope in the caller wraps every lazy plan AND its execution."""
@@ -1340,7 +1304,7 @@ def _cc_rounds(e, prev_cnt, w_u, _parts, max_rounds, spark, min_strategy=None):
         spark.conf.set("spark.sql.shuffle.partitions", str(_parts(prev_cnt)))
         # large-star: every neighbor v > u links to min(N(u) + {u})
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        withm = _attach_neighborhood_min(sym, "nbmin", w_u, min_strategy).withColumn(
+        withm = sym.withColumn("nbmin", F.min("v").over(w_u)).withColumn(
             "m", F.least(F.col("nbmin"), F.col("u"))
         )
         # Raw large-star edges (u > v by construction: v > u ≥ m before the
@@ -1351,7 +1315,7 @@ def _cc_rounds(e, prev_cnt, w_u, _parts, max_rounds, spark, min_strategy=None):
             F.col("v").alias("u"), F.col("m").alias("v")
         )
         # small-star: neighbors <= u (and u itself) link to the minimum
-        withm2 = _attach_neighborhood_min(ls, "mn", w_u, min_strategy)
+        withm2 = ls.withColumn("mn", F.min("v").over(w_u))
         ss = iter_checkpoint(
             _canon(
                 withm2.select(F.col("v").alias("u"), F.col("mn").alias("v")).unionByName(
@@ -1375,9 +1339,8 @@ def _cc_rounds(e, prev_cnt, w_u, _parts, max_rounds, spark, min_strategy=None):
 
 
 def _clusters_sql() -> str:
-    """The recursive-CTE components oracle — shared verbatim by
-    llm_dedup_clusters and its twophase twin (identical answer is the
-    twin's whole point)."""
+    """The recursive-CTE components oracle of llm_dedup_clusters, reused
+    by every query built on its components."""
     return f"""WITH RECURSIVE pairs AS ({_minhash_pairs_sql()}),
          edges AS (
            SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -1466,24 +1429,6 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # population-sized, so the cache is bounded by the pair DAG; .cache()
     # rather than a checkpoint keeps the full plan visible for the shape
     # pins/PLANS.md, and the driver surface clears caches per query).
-    return _attach_cluster_sizes(labels)
-
-
-@register("llm_dedup_clusters_twophase", sql=_clusters_sql())
-def llm_dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L9b: llm_dedup_clusters' TWOPHASE-min twin — the power-law escape
-    hatch (SPARK_GRAFT_CC_MIN_STRATEGY=twophase: combiner groupBy
-    partial mins + planner-chosen join-back instead of the hub-keyed
-    window; see _attach_neighborhood_min) registered as its own query
-    so the alternate physical strategy sits under the driver's
-    value-hash gate against the SAME recursive-CTE oracle — identical
-    answers are the knob's contract, proven per-round, not only in the
-    local parity test (the X1b/X3b alternate-path pattern)."""
-    pairs = llm_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(
-        pairs, min_strategy="twophase", pairs_canonical=True
-    ).cache()
-    # same double-consumer cache as llm_dedup_clusters
     return _attach_cluster_sizes(labels)
 
 
@@ -2160,15 +2105,14 @@ def llm_substring_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- L13 content-defined chunking
-# window/divisor/hash are config, not constants (SURVEY §7.4): the divisor
+# window/divisor are config, not constants (SURVEY §7.4): the divisor
 # IS the expected chunk size, a corpus-dependent knob; env overrides move
 # the plan AND the registered oracle together (capture-at-import).
 CDC_WINDOW = CONFIG.cdc_window
 CDC_DIVISOR = CONFIG.cdc_divisor
-CDC_HASH = CONFIG.cdc_hash
 CDC_MIN_DOCS = 2  # report chunks appearing in at least this many docs
 
-# Gear byte table for the FastCDC-style window hash (cdc_hash='gear'):
+# Gear byte table for the FastCDC-style window hash (the boundary rule):
 # 256 values derived from md5 of the byte value itself — deterministic,
 # engine-independent, and rebuilt identically here and in the oracle SQL
 # from this one tuple. 32-bit entries keep the unrolled window polynomial
@@ -2183,23 +2127,18 @@ GEAR_TABLE = tuple(
 _CDC_START = "CASE WHEN k = 1 THEN 1 ELSE bl[k-1] + 1 END"
 
 
-def _cdc_params(
-    window: int | None, divisor: int | None, hash_kind: str | None
-) -> tuple[int, int, str]:
-    """Resolve (window, divisor, hash) overrides against CONFIG, loudly:
-    an explicit invalid value (0, negative, unknown hash) ERRORS instead
-    of silently falling back to the default (the _env_int
-    discipline)."""
+def _cdc_params(window: int | None, divisor: int | None) -> tuple[int, int]:
+    """Resolve (window, divisor) overrides against CONFIG, loudly: an
+    explicit invalid value (0, negative, window past gear's signed-64
+    ceiling) ERRORS instead of silently falling back to the default
+    (the _env_int discipline)."""
     w = CDC_WINDOW if window is None else window
     d = CDC_DIVISOR if divisor is None else divisor
-    h = CDC_HASH if hash_kind is None else hash_kind
     if w <= 0 or d <= 0:
         raise ValueError(f"CDC window/divisor must be positive, got ({w}, {d})")
-    if h not in ("md5", "gear"):
-        raise ValueError(f"CDC hash must be 'md5' or 'gear', got {h!r}")
-    if h == "gear" and w > 24:
+    if w > 24:
         raise ValueError(f"CDC gear hash needs window <= 24, got {w}")
-    return w, d, h
+    return w, d
 
 
 def _gear_boundary_spark(w: int, d: int) -> str:
@@ -2225,34 +2164,20 @@ def _gear_boundary_duck(w: int, d: int) -> str:
     return f"({terms}) % {d} = 0"
 
 
-def _cdc_sql(
-    window: int | None = None,
-    divisor: int | None = None,
-    hash_kind: str | None = None,
-) -> str:
+def _cdc_sql(window: int | None = None, divisor: int | None = None) -> str:
     """DuckDB replay of the CDC boundary rule + chunk aggregation for any
-    (window, divisor, hash) — the registered oracle is this at the
-    active CONFIG; tests pass non-default knobs to both sides."""
-    w, d, h = _cdc_params(window, divisor, hash_kind)
-    if h == "gear":
-        garr = "[" + ", ".join(str(g) for g in GEAR_TABLE) + "]"
-        boundary = (
-            f"SELECT doc_id, text,\n"
-            f"       list_append(\n"
-            f"         [i for i in generate_series({w}, n)\n"
-            f"          if {_gear_boundary_duck(w, d)} and i < n],\n"
-            f"         n) AS bl\n"
-            f"  FROM (SELECT *, {garr} AS garr FROM d)"
-        )
-    else:
-        boundary = f"""SELECT doc_id, text,
-                  list_append(
-                    [i for i in generate_series({w}, n)
-                     if ('0x' || substr(md5(substr(text, i - {w - 1},
-                                                   {w})), 1, 15))::BIGINT
-                        % {d} = 0 and i < n],
-                    n) AS bl
-           FROM d"""
+    (window, divisor) — the registered oracle is this at the active
+    CONFIG; tests pass non-default knobs to both sides."""
+    w, d = _cdc_params(window, divisor)
+    garr = "[" + ", ".join(str(g) for g in GEAR_TABLE) + "]"
+    boundary = (
+        f"SELECT doc_id, text,\n"
+        f"       list_append(\n"
+        f"         [i for i in generate_series({w}, n)\n"
+        f"          if {_gear_boundary_duck(w, d)} and i < n],\n"
+        f"         n) AS bl\n"
+        f"  FROM (SELECT *, {garr} AS garr FROM d)"
+    )
     return f"""WITH d AS (
            SELECT doc_id, text, length(text) AS n FROM documents
            WHERE length(text) >= 1
@@ -2297,82 +2222,61 @@ def llm_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing position-sized ever shuffles. The only exchange is the
     combiner groupBy on the 32-hex chunk hash (shuffle O(chunks), ~n/32
     of corpus chars). The window-hash-per-position projection is the
-    honest cost of CDC (every byte examined); the DEFAULT boundary rule
-    is the gear hash — a FastCDC-style
-    gear polynomial over a byte table, pure integer multiply-adds, no
-    digest/hex/string allocation per position, ~4x faster than the
-    original per-position md5 at sf0.01 in the same plan shape.
-    SPARK_GRAFT_CDC_HASH=md5 selects the md5 rule (the
-    engine-independent cross-check, and the only choice for windows
-    > 24 — gear's signed-64 ceiling now bounds the default config).
-    Oracle replays the identical boundary rule either way, so the gate
-    checks the full chunking decision, not just the aggregate."""
+    honest cost of CDC (every byte examined); the boundary rule is the
+    gear hash — a FastCDC-style gear polynomial over a byte table, pure
+    integer multiply-adds, no digest/hex/string allocation per
+    position, about a quarter of a per-position md5's cost per scanned
+    char at sf0.01 in the same plan shape. Its signed-64 ceiling bounds
+    the window to <= 24 chars. The oracle replays the identical
+    boundary rule, so the gate checks the full chunking decision, not
+    just the aggregate."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     return cdc_duplicate_chunks(docs)
 
 
 def cdc_duplicate_chunks(
-    docs: DataFrame,
-    window: int | None = None,
-    divisor: int | None = None,
-    hash_kind: str | None = None,
+    docs: DataFrame, window: int | None = None, divisor: int | None = None
 ) -> DataFrame:
     """llm_dedup_cdc's core over any (doc_id, text) frame — separated so
     tests can plant insertion-shifted duplicates and verify realignment.
-    Non-None window/divisor/hash overrides are TEST-ONLY (pair them with
-    ``_cdc_sql(window, divisor, hash_kind)``); production tuning goes
-    through the SPARK_GRAFT_CDC_* env knobs, which move plan and oracle
-    together."""
-    w, d, h = _cdc_params(window, divisor, hash_kind)
+    Non-None window/divisor overrides are TEST-ONLY (pair them with
+    ``_cdc_sql(window, divisor)``); production tuning goes through the
+    SPARK_GRAFT_CDC_* env knobs, which move plan and oracle together."""
+    w, d = _cdc_params(window, divisor)
     start = "IF(k = 1, 1, element_at(bl, k - 1) + 1)"
-    base = docs.filter(F.length("text") >= 1)
-    if h == "gear":
-        garr = "array(" + ", ".join(f"{g}L" for g in GEAR_TABLE) + ")"
-        b = (
-            base.select(
-                "doc_id",
-                "text",
-                # per-doc codepoint array: one pass over the chars; the
-                # window polynomial then reads it by index instead of
-                # re-slicing/hashing the string at every position
-                F.expr(
-                    "transform(sequence(1, length(text)),"
-                    " p -> ascii(substring(text, p, 1)) % 256)"
-                ).alias("cs"),
-                F.expr(garr).alias("garr"),
-            )
-            .select(
-                "doc_id",
-                "text",
-                # sequence(1, n) + a leading i >= w guard, NOT
-                # sequence(w, n): Spark's sequence(w, n) is DESCENDING
-                # when n < w (DuckDB's generate_series is empty), and the
-                # out-of-range positions would index past cs before the
-                # i < n term runs. AND short-circuits left-to-right, so
-                # the bounds guards protect the element_at lookups.
-                F.expr(
-                    f"""concat(
-                      filter(sequence(1, length(text)),
-                             i -> i >= {w} AND i < length(text)
-                                  AND ({_gear_boundary_spark(w, d)})),
-                      array(length(text)))"""
-                ).alias("bl"),
-            )
-        )
-    else:
-        b = base.select(
+    garr = "array(" + ", ".join(f"{g}L" for g in GEAR_TABLE) + ")"
+    b = (
+        docs.filter(F.length("text") >= 1)
+        .select(
             "doc_id",
             "text",
+            # per-doc codepoint array: one pass over the chars; the
+            # window polynomial then reads it by index instead of
+            # re-slicing/hashing the string at every position
+            F.expr(
+                "transform(sequence(1, length(text)),"
+                " p -> ascii(substring(text, p, 1)) % 256)"
+            ).alias("cs"),
+            F.expr(garr).alias("garr"),
+        )
+        .select(
+            "doc_id",
+            "text",
+            # sequence(1, n) + a leading i >= w guard, NOT
+            # sequence(w, n): Spark's sequence(w, n) is DESCENDING
+            # when n < w (DuckDB's generate_series is empty), and the
+            # out-of-range positions would index past cs before the
+            # i < n term runs. AND short-circuits left-to-right, so
+            # the bounds guards protect the element_at lookups.
             F.expr(
                 f"""concat(
-                      filter(sequence({w}, length(text)),
-                             i -> cast(conv(substr(md5(substring(text,
-                                      i - {w - 1}, {w})), 1, 15),
-                                      16, 10) as bigint) % {d} = 0
-                                  AND i < length(text)),
-                      array(length(text)))"""
+                  filter(sequence(1, length(text)),
+                         i -> i >= {w} AND i < length(text)
+                              AND ({_gear_boundary_spark(w, d)})),
+                  array(length(text)))"""
             ).alias("bl"),
         )
+    )
     chunks = b.select(
         "doc_id",
         F.explode(
@@ -2395,81 +2299,26 @@ def cdc_duplicate_chunks(
     )
 
 
-# The twin always carries the boundary rule the ACTIVE config does NOT
-# run (when the active hash is gear, a gear twin would be
-# byte-identical to the primary — the alternate-path slot would carry
-# no new evidence). Under the gear default the twin replays md5; under an
-# md5 config it replays gear. The registered KEY stays
-# `llm_dedup_cdc_gear` — driver correctness history and the SURVEY §2
-# inventory key by name, and the name records the twin's original gear
-# role from the md5-default era.
-#
-# The twin must also be registrable under ANY valid config: an md5-mode
-# window may legitimately exceed gear's signed-64 bound (only enforced
-# when cdc_hash="gear"), so a gear-side twin clamps its window to the
-# gear ceiling — plan and oracle derive from the same value, and
-# registry.load_all() can never die resolving the twin's oracle on a
-# config the validation layer accepts.
-CDC_TWIN_HASH = "md5" if CDC_HASH == "gear" else "gear"
-CDC_TWIN_WINDOW = min(CDC_WINDOW, 24) if CDC_TWIN_HASH == "gear" else CDC_WINDOW
-
-
-@register(
-    "llm_dedup_cdc_gear",
-    sql=lambda: _cdc_sql(window=CDC_TWIN_WINDOW, hash_kind=CDC_TWIN_HASH),
-)
-def llm_dedup_cdc_gear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L13b: llm_dedup_cdc's alternate-boundary-rule twin, registered
-    as its own query so the rule the active config does NOT run sits
-    under the driver's value-hash gate against its regenerated oracle
-    every round, not only in the local parity/fuzz tests (the X1b/X3b
-    alternate-path pattern). Under the gear DEFAULT this runs the
-    original per-position md5 rule (the engine-independent
-    cross-check); under SPARK_GRAFT_CDC_HASH=md5 it runs gear at
-    min(active window, 24) — so the slot always carries evidence for a
-    boundary SET the primary didn't compute. Same plan
-    shape and same realignment property either way (parametrized
-    realignment test covers both rules). The key keeps its historical
-    name from the md5-default era; CDC_TWIN_HASH says what it runs."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return cdc_duplicate_chunks(
-        docs, window=CDC_TWIN_WINDOW, hash_kind=CDC_TWIN_HASH
-    )
-
-
 # ------------------------------------------ L2k perceptual image dedup
-#: Shared image fixture: 16x16 gray images built from an 8x8 grid of
-#: constant 2x2 blocks. Two hash modes (CONFIG.phash_mode):
-#:   dhash56 — 2x2 block means -> 8x8 grid, 7 gradient bits per grid
-#:             row = 56-bit hash, banded 7 x 8 bits, radius 6 (< 7
-#:             bands -> pigeonhole-exact). Fixture-scale: an sf1
-#:             probe measured superlinear pair growth (8-bit bands
-#:             over-populate; 56 bits under-discriminate).
-#: dct256 (default) — fixed-point DCT-II over a FULL-DETAIL 16x16
-#:             decoded image (per-pixel variation, not the dHash's 2x2
-#:             blocks: a 256-bit hash needs 256 independent pixel
-#:             degrees of freedom — a 2x-upsampled input makes the
-#:             u=8 DCT basis row cancel exactly (C[8][2k] =
-#:             -C[8][2k+1]) and mirrors u <-> 16-u, leaving ~31
-#:             near-constant bits whose band collects into a
-#:             low-cardinality bucket and a QUADRATIC candidate join —
-#:             measured: band 8 constant over 3000 docs; full-detail
-#:             input: every band >= 1006 distinct / 3000 docs).
-#:             Integer cosine table C[u][x] =
-#:             round(cos(pi*(2x+1)*u/32) * 2^14), coefficients
-#:             D = C @ P^T @ C^T (|D| <= 255*16^2*2^28 ~ 1.75e13,
-#:             exact in int64), bit(u,v) = D[u][v] > median(D) (the
-#:             median of 256 int64s interpolates two mid values whose
-#:             sum < 2^53, so float64 and DuckDB DOUBLE agree exactly),
-#:             banded 16 x 16-bit with band u = bit row u, radius 12
-#:             (< 16 bands -> pigeonhole-exact). The cosine table is
-#:             embedded LITERALLY in the oracle SQL, so Spark (numpy
-#:             int64) and DuckDB compute bit-identical hashes — no
-#:             float-threshold ambiguity anywhere in the pipeline.
+#: Perceptual hash: a 256-bit fixed-point DCT-II over a FULL-DETAIL
+#: 16x16 decoded gray image. Full detail (per-pixel variation, not
+#: constant 2x2 blocks) because a 256-bit hash needs 256 independent
+#: pixel degrees of freedom — a 2x-upsampled input makes the u=8 DCT
+#: basis row cancel exactly (C[8][2k] = -C[8][2k+1]) and mirrors
+#: u <-> 16-u, leaving ~31 near-constant bits whose band collects into
+#: a low-cardinality bucket and a QUADRATIC candidate join — measured:
+#: band 8 constant over 3000 docs; full-detail input: every band >=
+#: 1006 distinct / 3000 docs. Integer cosine table C[u][x] =
+#: round(cos(pi*(2x+1)*u/32) * 2^14), coefficients D = C @ P^T @ C^T
+#: (|D| <= 255*16^2*2^28 ~ 1.75e13, exact in int64), bit(u,v) =
+#: D[u][v] > median(D) (the median of 256 int64s interpolates two mid
+#: values whose sum < 2^53, so float64 and DuckDB DOUBLE agree
+#: exactly), banded 16 x 16-bit with band u = bit row u, radius 12
+#: (< 16 bands -> pigeonhole-exact). The cosine table is embedded
+#: LITERALLY in the oracle SQL, so Spark (numpy int64) and DuckDB
+#: compute bit-identical hashes — no float-threshold ambiguity
+#: anywhere in the pipeline.
 PHASH_SIDE = 16
-PHASH_GRID = 8
-PHASH_BANDS = 7
-PHASH_MAX_DIST = 6
 #: De-wrap term: the two-prime quadratic
 #: mix repeats with base period lcm(251, 241) = 60,491, so a probe
 #: corpus past ~180k docs (60,491 bases x 3 docs/group) wrapped bases
@@ -2511,63 +2360,20 @@ def _phash_dct_cos() -> list[list[int]]:
 _PHASH_DCT_COS = _phash_dct_cos()
 
 
-def _phash_bump(d: int) -> tuple[int, int, int]:
-    """Per-doc perturbation of the shared base image: docs in a group
-    of three (same d // 3) differ only by a bounded brightness bump on
-    one (or two adjacent) 2x2 blocks — a few gradient bits flip, so
-    in-group pairs stay within the Hamming radius while cross-base
-    pairs drift far. Returns (bx, by, amount); amount 0 = untouched."""
-    if d % 3 == 0:
-        return 0, 0, 0
-    return d % PHASH_GRID, (d // PHASH_GRID) % PHASH_GRID, 2 * (d % 3)
-
-
-def _phash_decoded_image(d: int):
-    """Per-doc 16x16 gray image as GENUINELY DECODED pixels: build the
-    8x8 grid, upsample to constant 2x2 blocks, round-trip through the
-    real PNG codec (filter cycle + Adam7 on odd docs), return the
-    decoded int64 16x16 plane — a decode bug shifts hash bits and the
-    driver hash, composing the codec layer with the dedup engine."""
-    import numpy as np
-
-    from .png import decode_png, encode_png_gray
-
-    g = PHASH_GRID
-    b = d // 3
-    bx, by, amt = _phash_bump(d)
-    # quadratic mix over TWO prime moduli (251, 241): adjacent
-    # cell differences vary per cell (row gradients carry real
-    # entropy — affine grids give constant-step wrap patterns);
-    # the third-prime wrap digit (PHASH_WRAP docstring) keeps base
-    # equivalence classes from forming past 60,491 bases — both were
-    # probe-found failure modes. Bumps of 2/4 never overflow.
-    e = (b // PHASH_WRAP) % PHASH_WRAP_PRIME
-    grid = [
-        [((b % 251 + x * 17 + y * 29)
-          * (b % 241 + x * 3 + y * 7 + 1)
-          + e * (x * 13 + y * 31 + 1)) % 251
-         for x in range(g)]
-        for y in range(g)
-    ]
-    if amt:
-        grid[by][bx] += amt
-    img = np.repeat(
-        np.repeat(np.array(grid, dtype=np.uint8), 2, axis=0),
-        2, axis=1,
-    )
-    return decode_png(
-        encode_png_gray(img, row_filters=(0, 1, 2, 3, 4),
-                        interlace=d % 2 == 1)
-    )[:, :, 0].astype(np.int64)
-
-
 def _phash_decoded_image_full(d: int):
-    """Full-detail 16x16 mate of :func:`_phash_decoded_image` for the
-    256-bit DCT hash: the same two-prime quadratic mix evaluated PER
+    """Per-doc full-detail 16x16 gray image as GENUINELY DECODED pixels
+    for the 256-bit DCT hash: a two-prime quadratic mix evaluated PER
     PIXEL (x, y in 0..15) so all 256 degrees of freedom carry entropy
-    (see the mode comment above — 2x2-block input degenerates the u=8
-    DCT band into a quadratic candidate join), same one-pixel bump for
-    non-base docs, same real PNG round trip."""
+    (see the hash comment above — 2x2-block input degenerates the u=8
+    DCT band into a quadratic candidate join), a bounded one-pixel bump
+    for non-base docs, then a round trip through the real PNG codec
+    (filter cycle + Adam7 on odd docs) — a decode bug shifts hash bits
+    and the driver hash, composing the codec layer with the dedup
+    engine. Two prime moduli (251, 241) vary adjacent-pixel
+    differences per pixel (affine grids give constant-step wrap
+    patterns); the third-prime wrap digit (PHASH_WRAP comment) keeps
+    base equivalence classes from forming past 60,491 bases. Bumps of
+    2/4 never overflow."""
     import numpy as np
 
     from .png import decode_png, encode_png_gray
@@ -2589,34 +2395,6 @@ def _phash_decoded_image_full(d: int):
         encode_png_gray(img, row_filters=(0, 1, 2, 3, 4),
                         interlace=d % 2 == 1)
     )[:, :, 0].astype(np.int64)
-
-
-def _phash_features(batches):
-    """doc_id -> 56-bit dHash over the decoded pixels: 2x2 block means
-    (exact integers — blocks are constant) -> 8x8 grid, 7 row-gradient
-    bits per row."""
-    import pandas as pd
-
-    g = PHASH_GRID
-    for pdf in batches:
-        out = {"doc_id": [], "phash": []}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            dec = _phash_decoded_image(d)
-            means = dec.reshape(g, 2, g, 2).mean(axis=(1, 3)).astype(
-                "int64"
-            )
-            h = 0
-            for y in range(g):
-                for x in range(g - 1):
-                    if means[y][x] > means[y][x + 1]:
-                        h |= 1 << (y * (g - 1) + x)
-            out["doc_id"].append(d)
-            out["phash"].append(h)
-        yield pd.DataFrame({
-            "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-            "phash": pd.Series(out["phash"], dtype="int64"),
-        })
 
 
 def _dct256_bands(mat) -> list[int]:
@@ -2650,58 +2428,6 @@ def _phash_dct_features(batches):
             "doc_id": pd.Series(ids, dtype="int64"),
             "bands": pd.Series(bands),
         })
-
-
-def _phash_grid_sql(xe: str, ye: str) -> str:
-    """The 8x8 grid-cell value as a SQL expression over grid coords
-    ``xe``/``ye`` (both referencing a doc row aliased ``d``). The dHash
-    oracle passes grid coords directly; the DCT oracle passes pixel
-    coords floor-divided by 2 (constant 2x2 blocks, PNG is lossless, so
-    decoded pixel (px, py) == grid cell (px//2, py//2) exactly)."""
-    return (
-        f"(((d.doc_id // 3) % 251 + {xe} * 17 + {ye} * 29)"
-        f" * ((d.doc_id // 3) % 241 + {xe} * 3 + {ye} * 7 + 1)"
-        f" + (((d.doc_id // 3) // {PHASH_WRAP}) % {PHASH_WRAP_PRIME})"
-        f" * ({xe} * 13 + {ye} * 31 + 1)) % 251"
-        " + CASE WHEN d.doc_id % 3 != 0"
-        f"       AND {xe} = d.doc_id % {PHASH_GRID}"
-        f"       AND {ye} = (d.doc_id // {PHASH_GRID}) % {PHASH_GRID}"
-        "  THEN 2 * (d.doc_id % 3) ELSE 0 END"
-    )
-
-
-def _phash_dhash_sql() -> str:
-    grid = _phash_grid_sql("x.x", "y.y")
-    return f"""WITH cells AS (
-             SELECT d.doc_id, x.x, y.y,
-                    CAST({grid} AS BIGINT) AS v
-             FROM (SELECT doc_id FROM documents) d,
-                  generate_series(0, {PHASH_GRID - 1}) AS x(x),
-                  generate_series(0, {PHASH_GRID - 1}) AS y(y)),
-           hashes AS (
-             SELECT a.doc_id,
-                    CAST(SUM(CASE WHEN a.v > b.v THEN
-                          (1::BIGINT << (a.y * {PHASH_GRID - 1} + a.x))
-                          ELSE 0 END) AS BIGINT) AS phash
-             FROM cells a JOIN cells b
-               ON a.doc_id = b.doc_id AND a.y = b.y AND b.x = a.x + 1
-             WHERE a.x < {PHASH_GRID - 1}
-             GROUP BY a.doc_id),
-           bands AS (
-             SELECT doc_id, phash, g.b AS band,
-                    (phash >> (8 * g.b)) & 255 AS bval
-             FROM hashes, generate_series(0, {PHASH_BANDS - 1}) AS g(b)),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    a.phash AS ha, b.phash AS hb
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bval = b.bval
-              AND a.doc_id < b.doc_id)
-           SELECT doc_a, doc_b,
-                  CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-           FROM cand
-           WHERE bit_count(xor(ha, hb)) <= {PHASH_MAX_DIST}
-           ORDER BY doc_a, doc_b"""
 
 
 def _phash_grid16_sql() -> str:
@@ -2781,45 +2507,8 @@ def _dct_banded_sql(grid: str, max_dist: int) -> str:
            ORDER BY doc_a, doc_b"""
 
 
-def _phash_sql(mode: str) -> str:
-    if mode == "dct256":
-        return _dct_banded_sql(_phash_grid16_sql(), PHASH_DCT_MAX_DIST)
-    return _phash_dhash_sql()
-
-
-def _phash_pairs_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 56-bit dHash plan: 7 x 8-bit band explode -> band equi-join
-    -> bit_count(XOR) Hamming verify on candidates only, entirely in
-    Catalyst after the mapInPandas decode. <= 6 differing bits cannot
-    touch all 7 bands, so the banded plan is pigeonhole-EXACT."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    # cached: one PNG round-trip feeds both self-join sides
-    hashes = docs.mapInPandas(
-        _phash_features, schema="doc_id bigint, phash bigint"
-    ).cache()
-    bands = hashes.select(
-        "doc_id", "phash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("phash", 8 * b).bitwiseAND(255)
-                    .alias("bval"),
-                )
-                for b in range(PHASH_BANDS)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", "phash", "bb.band", "bb.bval")
-    cand = key_pairs(bands, ["band", "bval"], carry=["phash"]).distinct()
-    return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))).cast("long"),
-        )
-        .where(F.col("hamming") <= PHASH_MAX_DIST)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
+def _phash_sql() -> str:
+    return _dct_banded_sql(_phash_grid16_sql(), PHASH_DCT_MAX_DIST)
 
 
 def _dct_banded_pairs(
@@ -2860,22 +2549,12 @@ def _dct_banded_pairs(
     )
 
 
-def _phash_pairs_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dct_banded_pairs(
-        spark, sf_dir, _phash_dct_features, PHASH_DCT_MAX_DIST
-    )
-
-
-PHASH_MODE = CONFIG.phash_mode
-PHASH_TWIN_MODE = "dhash56" if PHASH_MODE == "dct256" else "dct256"
-
-
-@register("llm_dedup_phash", sql=lambda: _phash_sql(PHASH_MODE))
+@register("llm_dedup_phash", sql=_phash_sql)
 def llm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2k: PERCEPTUAL image near-dup — the image-side mate of the text
     near-dup family and the query that composes the codec layer with
     the dedup engine. Per doc a 16x16 gray image (groups of three docs
-    share a base; the non-base docs carry a one-block brightness bump)
+    share a base; the non-base docs carry a one-pixel brightness bump)
     round-trips through the REAL PNG codec (filter cycle + Adam7 on
     odd docs) inside mapInPandas; the perceptual hash then goes
     through the standard banded-LSH shape ENTIRELY in Catalyst: band
@@ -2883,36 +2562,20 @@ def llm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates only — zero corpus-pair joins, shuffle O(docs x bands),
     embarrassingly-parallel decode leg.
 
-    Hash width is CONFIG.phash_mode: the default 256-bit fixed-point
-    DCT (16 x 16-bit bands, radius 12) is the production shape — the
-    sf1 probe measured the original 56-bit dHash (7 x 8-bit
-    bands, radius 6) over-clustering superlinearly (793,525 pairs /
-    50k docs), which is exactly the 8-bit-band over-population the
-    56-bit design priced in, hence the widening.
-    Both modes are pigeonhole-EXACT (radius < band count): same pairs
-    as brute force at any scale, with only equi-join shuffles (the
-    simhash guarantee, restated for images).
+    The hash is a 256-bit fixed-point DCT (16 x 16-bit bands, radius
+    12): a 56-bit dHash (7 x 8-bit bands, radius 6) measured at sf1
+    over-clustered superlinearly (793,525 pairs / 50k docs) from
+    8-bit-band over-population. The banded plan is pigeonhole-EXACT
+    (radius < band count): same pairs as brute force at any scale,
+    with only equi-join shuffles (the simhash guarantee, restated for
+    images).
 
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs image uploads opaquely; perceptual
     dedup is the multimodal curation surface a training pipeline adds."""
-    if PHASH_MODE == "dct256":
-        return _phash_pairs_dct(spark, sf_dir)
-    return _phash_pairs_dhash(spark, sf_dir)
-
-
-@register("llm_dedup_phash_dhash", sql=lambda: _phash_sql(PHASH_TWIN_MODE))
-def llm_dedup_phash_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2k twin: runs whichever phash mode the active config does NOT,
-    so the non-default hash sits under the driver's value-hash gate
-    against its regenerated oracle every sweep rather than only in
-    local parity tests (the CDC-twin / X1b pattern). Under the dct256
-    DEFAULT this runs the 56-bit dHash (the name's historical mode);
-    under SPARK_GRAFT_PHASH_MODE=dhash56 it runs the 256-bit DCT —
-    PHASH_TWIN_MODE says what it runs."""
-    if PHASH_TWIN_MODE == "dct256":
-        return _phash_pairs_dct(spark, sf_dir)
-    return _phash_pairs_dhash(spark, sf_dir)
+    return _dct_banded_pairs(
+        spark, sf_dir, _phash_dct_features, PHASH_DCT_MAX_DIST
+    )
 
 
 # ------------------------------------- L2m acoustic fingerprint dedup
@@ -3475,8 +3138,8 @@ def llm_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-caps on top of that guarantee — see the caveat below). Entirely in Catalyst:
     positional k-gram hashes (one md5, conv-to-bigint — the exact
     DuckDB-parity conversion the minhash family uses), a w-row sliding
-    window-min per doc (spillable sort window, the cc_min 'window'
-    strategy shape), distinct fingerprint values, then drop_hot_keys
+    window-min per doc (spillable sort window, the CC loop's
+    neighborhood-min shape), distinct fingerprint values, then drop_hot_keys
     dropping boilerplate fingerprints from both sides, then the
     inverted-index equi-join (key_pairs) with a shared-count threshold.
 

@@ -808,8 +808,7 @@ TFIDF_TOP_K = 5
 
 
 def _tfidf_sql() -> str:
-    """The L4k oracle — shared verbatim by llm_text_tfidf_keywords and
-    its join-shape twin (identical answer is the twin's whole point)."""
+    """The L4k oracle of llm_text_tfidf_keywords."""
     return f"""WITH words AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term
            FROM documents
@@ -834,41 +833,6 @@ def _tfidf_sql() -> str:
          FROM ranked WHERE rank <= {TFIDF_TOP_K}"""
 
 
-def _tfidf_keywords(
-    spark: SparkSession, sf_dir: str, strategy: str | None = None
-) -> DataFrame:
-    """Shared body for L4k and its twin; ``strategy`` defaults to
-    config.py ``tfidf_df_strategy`` (SPARK_GRAFT_TFIDF_DF)."""
-    from ..config import CONFIG
-
-    s = CONFIG.tfidf_df_strategy if strategy is None else strategy
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    )
-    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    if s == "join":
-        # cache tf so the combiner-df leg and the join probe side share
-        # ONE scan+explode+aggregate materialization (without it,
-        # Catalyst re-derives the corpus aggregation under both join
-        # inputs — the exact double-scan the window shape avoids)
-        tf = tf.cache()
-        dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-        tfdf = tf.join(dfreq, "term")
-    else:
-        tfdf = tf.withColumn(
-            "df", F.count("*").over(Window.partitionBy("term"))
-        )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tf"), F.asc("df"), F.asc("term")
-    )
-    return (
-        tfdf.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TFIDF_TOP_K)
-        .select("doc_id", "term", "tf", "df", "rank")
-    )
-
-
 @register("llm_text_tfidf_keywords", sql=_tfidf_sql())
 def llm_text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4k: per-document distinctive-keyword extraction — the tf-idf
@@ -888,38 +852,31 @@ def llm_text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ahead of the final sort. Nothing occurrence-sized ever reaches the
     driver.
 
-    Hot-term shape knob (r12 A/B, r13 knob — config.py
-    ``tfidf_df_strategy``): unlike the winnow/L2g df caps, this
-    window's per-term partition is the AGGREGATED (doc, term) frame —
-    one row per document containing the term — and df rides every
-    output row, so hot terms cannot be pruned away; the only choice is
-    WHERE the per-term count happens. ``window`` (default) was
-    A/B-measured 27% faster at sf0.1 (1.49 vs 1.89 s) AND on the
-    31-term maximally-hot sf1 closed-vocabulary probe (1.66 vs 2.11 s)
-    — the tf cache materialization plus the extra exchange cost more
+    Hot terms: unlike the winnow/L2g df caps, this window's per-term
+    partition is the AGGREGATED (doc, term) frame — one row per
+    document containing the term — and df rides every output row, so
+    hot terms cannot be pruned away; the only choice is WHERE the
+    per-term count happens. The term-keyed window was measured against
+    a cached-tf combiner groupBy + join-back (BENCH_sf1.md): 27% faster
+    at sf0.1 (1.49 vs 1.89 s) and 17% faster at sf10 (6.37 vs 7.67 s,
+    500k docs, every term of a closed 31-word vocabulary maximally
+    hot) — the cache materialization plus the extra exchange cost more
     than the window saves until a single term's doc list outgrows a
-    task's spill-sort tolerance (~256 MB, billions of docs). For that
-    regime SPARK_GRAFT_TFIDF_DF=join swaps in the cached combiner
-    groupBy + planner-chosen join-back (skew-splittable by AQE where
-    windows are not), proven identical every driver sweep by the
-    registered twin below."""
-    return _tfidf_keywords(spark, sf_dir)
-
-
-@register("llm_text_tfidf_keywords_join", sql=_tfidf_sql())
-def llm_text_tfidf_keywords_join(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """L4k2: llm_text_tfidf_keywords' JOIN-shape twin — the
-    hot-vocabulary escape hatch (SPARK_GRAFT_TFIDF_DF=join: cached tf +
-    combiner df groupBy + planner-chosen join-back instead of the
-    term-keyed count window) registered as its own query so the
-    alternate physical strategy sits under the driver's value-hash gate
-    against the SAME oracle — identical answers are the knob's
-    contract, proven per-round, not only in the local parity test (the
-    L9b/L13b twin pattern; measured crossover in the primary's
-    docstring and config.py)."""
-    return _tfidf_keywords(spark, sf_dir, strategy="join")
+    task's spill-sort tolerance (~256 MB, billions of docs)."""
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    words = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("term")
+    )
+    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tfdf = tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
+    w = Window.partitionBy("doc_id").orderBy(
+        F.desc("tf"), F.asc("df"), F.asc("term")
+    )
+    return (
+        tfdf.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TFIDF_TOP_K)
+        .select("doc_id", "term", "tf", "df", "rank")
+    )
 
 
 # Split thresholds in per-mille of the hash space: [0, 900) train,
@@ -2521,7 +2478,6 @@ def curate_v4(docs: DataFrame) -> DataFrame:
 def _curate_v5_sql() -> str:
     from .dedup import (
         AUDIOHASH_MAX_DIST,
-        PHASH_MODE,
         _audiohash_grid_sql,
         _dct_banded_sql,
         _phash_sql,
@@ -2529,7 +2485,7 @@ def _curate_v5_sql() -> str:
     )
 
     return f"""WITH v4 AS ({_curate_v4_sql()}),
-         ph AS ({_phash_sql(PHASH_MODE)}),
+         ph AS ({_phash_sql()}),
          au AS ({_dct_banded_sql(_audiohash_grid_sql(), AUDIOHASH_MAX_DIST)}),
          vi AS ({_videohash_sql()}),
          mm_drop AS (

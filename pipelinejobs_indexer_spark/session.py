@@ -43,13 +43,13 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Let AQE (incl. partition coalescing) apply to .cache() materialization
-    # too (default false): the dedup/tfidf cached legs otherwise pin the
+    # too (default false): the dedup cached legs otherwise pin the
     # static shuffle-partition count — e.g. llm_dedup_incremental_minhash's
     # cached signature index materialized as 32 near-empty partitions and
     # was then written as 32 tiny parquet files (guide §6 small-files);
     # with AQE the cached leg coalesces to the advisory size at ANY scale.
     # No result depends on cached partitioning (no spark_partition_id /
-    # monotonically_increasing_id over cached frames — r14 audit), and the
+    # monotonically_increasing_id over cached frames), and the
     # one partition-derived operator (sort_history) is data-bucketed by
     # design.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",

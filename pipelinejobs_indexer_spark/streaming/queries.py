@@ -293,9 +293,9 @@ def stream_fsm_alt_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_store knob (core.py state_store_conf; sizing note in
     config.py) is driver-hash-verified every round against the same
     SQL oracle as the primary, not only pinned by the pytest parity
-    test. Same alternate-path-twin pattern as llm_dedup_cdc_gear:
-    the twin always carries evidence for the path the primary does
-    not run.
+    test. The twin always carries evidence for the backend the primary
+    does not run: the backend decides where keyed state lives and
+    whether it survives executor loss, so both stay in service.
 
     The config swap is scoped to the synchronous replay (run_to_batch
     returns only after the availableNow query terminates; the

@@ -78,7 +78,6 @@ SHOWCASE = {
     "llm_corpus_curate_v5": "v4 stack + ONE broadcast LEFT ANTI over the union of the three multimodal pair sets (phash/audiohash/videohash doc_b) — the cross-modality keep/drop plan, zero new corpus-scale shuffles",
     "llm_bpe_train": "K-step unrolled merge loop over the cached vocab-sized word table; argmax broadcast into codegen replace",
     "llm_multimodal_video_frames": "one MapInPandas stage over the pruned doc_id scan — AVI walk + per-frame JPEG decode in place, only 9-int rows shuffle",
-    "llm_dedup_cdc_gear": "alternate CDC boundary rule (md5 under the r7 gear default): same codegen array-expr shape and one combiner groupBy on the chunk hash; the primary llm_dedup_cdc now carries the pure-integer gear polynomial",
     "llm_multimodal_gif": "real GIF decode via mapInPandas: ArrowEvalPython over the doc_id projection only — O(rows) leaves the worker, no media bytes shuffle",
     "llm_multimodal_webp": "real lossless-WebP (VP8L) decode via mapInPandas over the pruned doc_id scan — prefix codes + LZ77 + transforms run in place, only 3-int rows shuffle",
     "llm_multimodal_flac": "real FLAC decode via mapInPandas over the pruned doc_id scan — rice/LPC/CRC/MD5 verification in place, only 4-int rows shuffle",
@@ -88,7 +87,6 @@ SHOWCASE = {
     "llm_embedding_kmeans": "final Lloyd assignment: broadcast-literal argmin fold in one codegen projection over the checkpointed quantized scan — no join, no exchange (each training iteration added only a posexplode→combiner groupBy collecting k×dim rows)",
     "llm_classifier_logreg": "final scoring pass: trained weights ride the plan as a literal array inside one codegen sigmoid projection — zero exchanges (each gradient sweep was a posexplode→combiner groupBy of dim+1 exact-integer rows)",
     "llm_text_tfidf_keywords": "ONE corpus scan: explode → combiner groupBy (doc,term), df via count window over the same frame (no self-join re-scan), per-doc top-k lowered to WindowGroupLimit",
-    "llm_text_tfidf_keywords_join": "the SPARK_GRAFT_TFIDF_DF=join twin: cached tf feeds both join inputs (one scan/explode/agg), df via combiner groupBy + planner join-back — the hot-vocabulary escape hatch, skew-splittable where the window is not",
     "llm_dedup_clusters": "large-star/small-star CC behind checkpoints; n_members via combiner groupBy + join-back (no cluster_id window — a mega-cluster never funnels into one task)",
     "llm_corpus_split": "deterministic 90/5/5 holdout: pure codegen hash-bucket projection, zero shuffle beyond the fixture spread",
     "llm_dedup_canonical": "component labels broadcast into one cached scored-documents pass + combiner max_by argmax join-back (r14; was a first_value window) — no corpus-scale shuffle beyond L9's own",
@@ -108,7 +106,6 @@ SHOWCASE = {
     "llm_dedup_audiohash": "one mapInPandas FLAC round-trip leg (spread) -> 16x16-bit band equi-join -> XOR popcount verify on candidates only; pigeonhole-exact at radius 12",
     "llm_dedup_videohash": "AVI walk + T.81 frame decode leg (spread) -> combiner per-key df + broadcast anti-prune -> (frame_idx, fhash, n_frames) band join -> kept-count verify; hot-frame fan-out <= cap by construction",
     "llm_video_containment": "frame decode leg -> per-fhash df broadcast prune -> fhash equi-join -> offset-histogram alignment; no pair scan, per-key fan-out <= cap",
-    "llm_dedup_phash_dhash": "the 56-bit dHash twin of L2k under the driver gate: identical banded plan, 7 x 8-bit bands",
     "fn_storage_uri_map": "literal CASE projection over the config-sized system table — zero shuffle, never a join",
 }
 

@@ -265,14 +265,6 @@ def main() -> None:
         # the combiner-df shape fix (the third weak-flagged query)
         scales = (("sf0.1", SF01), ("sf1", probe_lo))
         queries = ["llm_dedup_winnow"]
-    elif mode == "tfidf13":
-        # round 13: second decade for BOTH tfidf df shapes — the knob's
-        # crossover claim measured where every term is maximally hot
-        # (closed 31-word vocabulary at 500k docs)
-        probe_hi = os.path.join(ROOT, ".scale_probe", "sf10")
-        _link_missing_tables(probe_hi)
-        scales = (("sf1", probe_lo), ("sf10", probe_hi))
-        queries = ["llm_text_tfidf_keywords", "llm_text_tfidf_keywords_join"]
     elif mode == "curate5":
         # round 13: first decade for the cross-modality capstone alone
         # (sf10's videohash leg is minutes — probe v5's own composition

@@ -127,36 +127,18 @@ def test_lsh_tables_knob_validation(monkeypatch):
             cfg.from_env()
 
 
-def test_cdc_nondefault_knobs_match_oracle(spark, ddb, sf_dir):
-    """16-char window / divisor 16 instead of 8/32: different boundary
-    set and chunk sizes, same differential-parity requirement."""
+@pytest.mark.parametrize("window, divisor", [(16, 16), (12, 16)])
+def test_cdc_nondefault_knobs_match_oracle(spark, ddb, sf_dir, window, divisor):
+    """A non-default window / divisor instead of 8/32: different
+    boundary set and chunk sizes, same differential-parity
+    requirement."""
     from pipelinejobs_indexer_spark.tables import load_table
 
-    assert (dedup.CDC_WINDOW, dedup.CDC_DIVISOR) != (16, 16)
+    assert (dedup.CDC_WINDOW, dedup.CDC_DIVISOR) != (window, divisor)
     docs = load_table(spark, sf_dir, "documents")
-    sdf = dedup.cdc_duplicate_chunks(docs, window=16, divisor=16)
-    duck = ddb.execute(dedup._cdc_sql(window=16, divisor=16)).df()
-    assert_frames_match(sdf.toPandas(), duck, "llm_dedup_cdc[16/16]")
-
-
-def test_cdc_nondefault_hash_matches_oracle(spark, ddb, sf_dir):
-    """Both boundary rules stay oracle-verified whatever the default:
-    gear is the default since r7 (VERDICT r6 item 2), so md5 is now the
-    non-default rule — a different boundary SET, a distinct chunking
-    decision the oracle must replay; plus a non-default gear
-    window/divisor combination (the original VERDICT r5 item 4
-    coverage)."""
-    from pipelinejobs_indexer_spark.tables import load_table
-
-    assert dedup.CDC_HASH == "gear", "gear is the shipped default"
-    assert dedup.CDC_TWIN_HASH == "md5", "twin must carry the alternate rule"
-    docs = load_table(spark, sf_dir, "documents")
-    sdf = dedup.cdc_duplicate_chunks(docs, hash_kind="md5")
-    duck = ddb.execute(dedup._cdc_sql(hash_kind="md5")).df()
-    assert_frames_match(sdf.toPandas(), duck, "llm_dedup_cdc[md5]")
-    sdf2 = dedup.cdc_duplicate_chunks(docs, window=12, divisor=16, hash_kind="gear")
-    duck2 = ddb.execute(dedup._cdc_sql(12, 16, "gear")).df()
-    assert_frames_match(sdf2.toPandas(), duck2, "llm_dedup_cdc[gear 12/16]")
+    sdf = dedup.cdc_duplicate_chunks(docs, window=window, divisor=divisor)
+    duck = ddb.execute(dedup._cdc_sql(window=window, divisor=divisor)).df()
+    assert_frames_match(sdf.toPandas(), duck, f"llm_dedup_cdc[{window}/{divisor}]")
 
 
 def test_cdc_gear_unicode_codepoint_parity(spark):
@@ -181,47 +163,27 @@ def test_cdc_gear_unicode_codepoint_parity(spark):
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     try:
-        for kind in ("gear", "md5"):
-            got = dedup.cdc_duplicate_chunks(docs, window=4, divisor=8, hash_kind=kind)
-            want = con.execute(dedup._cdc_sql(4, 8, kind)).df()
-            assert_frames_match(got.toPandas(), want, f"llm_dedup_cdc[{kind} unicode]")
+        got = dedup.cdc_duplicate_chunks(docs, window=4, divisor=8)
+        want = con.execute(dedup._cdc_sql(4, 8)).df()
+        assert_frames_match(got.toPandas(), want, "llm_dedup_cdc[gear unicode]")
     finally:
         con.close()
 
 
 def test_cdc_invalid_overrides_error_loudly():
-    """An explicit invalid knob (0 window/divisor, unknown hash, gear
-    window beyond the signed-64 bound) ERRORS instead of silently using
-    the default (ADVICE r5: the old `x or DEFAULT` pattern swallowed 0)."""
-    for kwargs in (
-        {"window": 0},
-        {"divisor": 0},
-        {"window": -3},
-        {"hash_kind": "sha1"},
-        {"window": 25, "hash_kind": "gear"},
-    ):
+    """An explicit invalid knob (0 window/divisor, window beyond gear's
+    signed-64 bound) ERRORS instead of silently using the default (the
+    old `x or DEFAULT` pattern swallowed 0)."""
+    for kwargs in ({"window": 0}, {"divisor": 0}, {"window": -3}, {"window": 25}):
         with pytest.raises(ValueError):
-            dedup._cdc_params(
-                kwargs.get("window"), kwargs.get("divisor"), kwargs.get("hash_kind")
-            )
-    with pytest.raises(ValueError):
-        cfg.EngineConfig(cdc_hash="sha1")
-    with pytest.raises(ValueError):
-        cfg.EngineConfig(cdc_hash="gear", cdc_window=25)
+            dedup._cdc_params(kwargs.get("window"), kwargs.get("divisor"))
+    with pytest.raises(ValueError, match="cdc_window"):
+        cfg.EngineConfig(cdc_window=25)
 
 
 def test_cdc_hash_and_contam_cap_env_parsing(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_CDC_HASH", "gear")
     monkeypatch.setenv("SPARK_GRAFT_CONTAM_DF_CAP", "128")
-    c = cfg.from_env()
-    assert (c.cdc_hash, c.contam_df_cap) == ("gear", 128)
-    monkeypatch.setenv("SPARK_GRAFT_CC_MIN_STRATEGY", "twophase")
-    assert cfg.from_env().cc_min_strategy == "twophase"
-    monkeypatch.delenv("SPARK_GRAFT_CC_MIN_STRATEGY")
-    monkeypatch.setenv("SPARK_GRAFT_CDC_HASH", "crc32")
-    with pytest.raises(ValueError):
-        cfg.from_env()
-    monkeypatch.delenv("SPARK_GRAFT_CDC_HASH")
+    assert cfg.from_env().contam_df_cap == 128
     monkeypatch.setenv("SPARK_GRAFT_CONTAM_DF_CAP", "0")
     with pytest.raises(ValueError):
         cfg.from_env()
@@ -251,6 +213,25 @@ def test_exact_embedding_baseline_row_cap(spark, sf_dir, monkeypatch):
     assert cfg.from_env().exact_pairs_max_rows == 123
     monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRS_MAX_ROWS", "0")
     with pytest.raises(ValueError):
+        cfg.from_env()
+
+
+@pytest.mark.parametrize(
+    "name, old_default",
+    [
+        ("SPARK_GRAFT_CDC_HASH", "gear"),
+        ("SPARK_GRAFT_CC_MIN_STRATEGY", "window"),
+        ("SPARK_GRAFT_TFIDF_DF", "window"),
+        ("SPARK_GRAFT_PHASH_MODE", "dct256"),
+    ],
+)
+def test_retired_algorithm_env_vars_are_refused(monkeypatch, name, old_default):
+    """Each of these once chose between two plans for one operator; the
+    engine now runs one. A deployment still setting one (even to the
+    old default) must fail at config time, naming the variable, rather
+    than silently get a chunking, hash or plan it did not ask for."""
+    monkeypatch.setenv(name, old_default)
+    with pytest.raises(ValueError, match=name):
         cfg.from_env()
 
 
@@ -356,94 +337,6 @@ def test_state_store_backend_identical_results(spark, sf_dir, monkeypatch):
     assert "RocksDB" not in spark.conf.get(key, "HDFSBacked")
 
 
-def test_registry_loads_under_md5_mode_wide_cdc_window():
-    """Round-6 review regression, updated for the r7 gear default:
-    SPARK_GRAFT_CDC_WINDOW=32 is only valid PAIRED with cdc_hash=md5
-    (gear's <=24 signed-64 ceiling now bounds the default config and
-    the validation error must say how to escape it). Under that md5
-    config the gear-side twin used to raise at registry.load_all()
-    resolving its oracle, killing all 146 queries; the twin clamps its
-    window to the gear ceiling, so the whole registry must load. Run in
-    subprocesses so the env overrides reach the import-time config
-    capture."""
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    # wide window alone: the gear default must refuse it, loudly and early
-    bad = subprocess.run(
-        [sys.executable, "-c", "import pipelinejobs_indexer_spark.config as c"],
-        env=dict(os.environ, SPARK_GRAFT_CDC_WINDOW="32"),
-        cwd=repo,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert bad.returncode != 0
-    assert "SPARK_GRAFT_CDC_HASH=md5" in bad.stderr
-
-    env = dict(os.environ, SPARK_GRAFT_CDC_WINDOW="32", SPARK_GRAFT_CDC_HASH="md5")
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "from pipelinejobs_indexer_spark import registry;"
-            "registry.load_all();"
-            "assert len(registry.QUERIES) == len(registry.ORACLE) >= 146;"
-            "from pipelinejobs_indexer_spark.llm import dedup;"
-            "assert (dedup.CDC_TWIN_HASH, dedup.CDC_TWIN_WINDOW) == ('gear', 24);"
-            "print('LOADED', len(registry.QUERIES))",
-        ],
-        env=env,
-        cwd=repo,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "LOADED" in out.stdout
-
-
-def test_cc_min_strategy_parity(spark, sf_dir, monkeypatch):
-    """VERDICT r5 item 7: the two-phase (combiner groupBy + join-back)
-    neighborhood min must produce IDENTICAL clusters to the default
-    window min — on the registered minhash-cluster query AND on a
-    planted power-law star+chain graph (the hub shape the escape hatch
-    exists for). The knob changes the exchange structure, never the
-    answer."""
-    import dataclasses
-
-    from pipelinejobs_indexer_spark.llm.dedup import (
-        connected_components,
-        llm_dedup_clusters,
-    )
-
-    hub_edges = [(0, v) for v in range(1, 301)]           # 300-degree hub
-    chain = [(v, v + 1) for v in range(500, 540)]          # diameter stress
-    pairs = spark.createDataFrame(
-        [{"doc_a": a, "doc_b": b} for a, b in hub_edges + chain]
-    )
-
-    def run_both(fn):
-        monkeypatch.setattr(
-            cfg, "CONFIG", dataclasses.replace(cfg.CONFIG, cc_min_strategy="window")
-        )
-        w = sorted(map(tuple, fn().collect()))
-        monkeypatch.setattr(
-            cfg, "CONFIG", dataclasses.replace(cfg.CONFIG, cc_min_strategy="twophase")
-        )
-        t = sorted(map(tuple, fn().collect()))
-        return w, t
-
-    w, t = run_both(lambda: connected_components(pairs))
-    assert w == t and len(w) == 342  # 301 star + 41 chain vertices
-    star = {r for r in w if r[1] == 0}
-    assert len(star) == 301  # the hub component collapses to min=0
-    w2, t2 = run_both(lambda: llm_dedup_clusters(spark, sf_dir))
-    assert w2 == t2 and len(w2) > 0
-
-
 def test_module_constants_track_the_active_config():
     """similarity/dedup capture CONFIG at import; if someone edits a
     default in one place only, the captured constants and the config
@@ -458,7 +351,6 @@ def test_module_constants_track_the_active_config():
     assert dedup.N_BANDS == CONFIG.minhash_bands
     assert dedup.CDC_WINDOW == CONFIG.cdc_window
     assert dedup.CDC_DIVISOR == CONFIG.cdc_divisor
-    assert dedup.CDC_HASH == CONFIG.cdc_hash
     assert dedup.CONTAM_DF_CAP == CONFIG.contam_df_cap
 
 

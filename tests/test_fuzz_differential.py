@@ -105,13 +105,12 @@ def test_dedup_cores_match_oracle_on_random_corpora(
 
 
 def test_cdc_gear_hash_matches_oracle_on_random_corpora(spark):
-    """The gear window hash is a different boundary rule than the
-    registered md5 default, so it gets its own fuzz family: random
-    adversarial corpora through cdc_duplicate_chunks(hash_kind='gear')
-    vs the regenerated gear oracle (VERDICT r5 item 4)."""
+    """The gear window hash gets its own fuzz family: random
+    adversarial corpora through cdc_duplicate_chunks vs the regenerated
+    gear oracle."""
     import duckdb
 
-    oracle = dedup._cdc_sql(hash_kind="gear")
+    oracle = dedup._cdc_sql()
 
     @settings(
         max_examples=10,
@@ -126,7 +125,7 @@ def test_cdc_gear_hash_matches_oracle_on_random_corpora(spark):
             spark,
             duckdb,
             rows,
-            lambda df: dedup.cdc_duplicate_chunks(df, hash_kind="gear"),
+            dedup.cdc_duplicate_chunks,
             oracle,
             "llm_dedup_cdc[gear]",
         )

@@ -479,11 +479,6 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         assert got == expect, f"trial {trial}: mismatch vs union-find"
         ml = {r.doc_id: r.cluster_id for r in _cc_min_label(pairs, 64).collect()}
         assert got == ml, f"trial {trial}: mismatch vs min-label"
-        tp = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(pairs, min_strategy="twophase").collect()
-        }
-        assert got == tp, f"trial {trial}: mismatch window vs twophase min"
 
 
 def test_repetition_matches_python_recompute(spark):
@@ -982,15 +977,13 @@ def test_sample_frames_riff_contract():
 # --- L13 CDC / L14 novelty semantics ------------------------------------
 
 
-@pytest.mark.parametrize("hash_kind", ["md5", "gear"])
-def test_cdc_realigns_after_insertion_where_fixed_width_cannot(spark, hash_kind):
+def test_cdc_realigns_after_insertion_where_fixed_width_cannot(spark):
     """The CDC property: doc B = injected prefix + doc A. Content-defined
     boundaries realign after the insertion, so A and B share most of A's
     chunks; fixed-width chunking at the same granularity shares NONE
     (every window shifts by the prefix length) — computed inline as the
-    control. Unrelated docs share nothing. Parametrized over BOTH window
-    hashes: the gear polynomial must preserve the realignment property,
-    not just oracle parity (VERDICT r5 item 4)."""
+    control. Unrelated docs share nothing. The gear polynomial must
+    preserve the realignment property, not just oracle parity."""
     import hashlib
 
     from pipelinejobs_indexer_spark.llm.dedup import (
@@ -1005,7 +998,7 @@ def test_cdc_realigns_after_insertion_where_fixed_width_cannot(spark, hash_kind)
     docs = spark.createDataFrame(
         [(1, a), (2, b), (3, unrelated)], "doc_id long, text string"
     )
-    rows = cdc_duplicate_chunks(docs, hash_kind=hash_kind).collect()
+    rows = cdc_duplicate_chunks(docs).collect()
     shared_chars = sum(r.chunk_chars for r in rows if r.n_docs >= 2)
     assert rows, "prefix-shifted duplicate produced no shared CDC chunks"
     # realignment must recover a substantial fraction of A verbatim

@@ -429,7 +429,7 @@ def test_tfidf_single_scan_and_window_df(spark, sf_dir):
     groupBy, term window, doc window), no join nodes at all, and the
     per-doc top-k lowered to WindowGroupLimit so only k rows per
     partition survive to the final sort."""
-    # the join twin caches tf; a lingering cache entry would splice an
+    # a cache entry left by an earlier query could splice an
     # InMemoryTableScan into THIS plan via the shared CacheManager
     spark.catalog.clearCache()
     plan = _formatted_plan(registry.QUERIES["llm_text_tfidf_keywords"](spark, sf_dir))
@@ -587,38 +587,8 @@ def test_retention_offsets_are_exact_weeks(spark):
     assert (1, 2) not in out
 
 
-def test_tfidf_join_twin_df_is_combiner_groupby(spark, sf_dir):
-    """L4k2 (the SPARK_GRAFT_TFIDF_DF=join escape hatch): df must come
-    from a combiner groupBy + join-back, NOT a term-keyed window — (a)
-    the only window spec left is the per-doc rank; (b) a partial
-    (map-side) count sits in the plan, so a stopword's occurrences
-    collapse per task before the term exchange; (c) the tf frame is
-    CACHED so the corpus scan+explode+aggregate runs once even though
-    the join consumes it twice (Catalyst can't reuse the aggregation
-    subtree across a self-join)."""
-    spark.catalog.clearCache()
-    plan = _formatted_plan(
-        registry.QUERIES["llm_text_tfidf_keywords_join"](spark, sf_dir)
-    )
-    specs = re.findall(r"windowspecdefinition\((\w+)", plan)
-    assert specs and set(specs) == {"doc_id"}, specs
-    assert "partial_count" in plan, plan
-    assert "InMemoryTableScan" in plan, plan
-    # both strategies produce identical rows on the live fixture — run
-    # through the driver-surface isolation wrapper, which clears the
-    # twin's tf cache at each query's entry (__spark_entry__._isolated,
-    # ADVICE r12) so the primary's shape stays self-contained
-    import __spark_entry__ as entrymod
-
-    q = entrymod.queries()
-    a = q["llm_text_tfidf_keywords"](spark, sf_dir).collect()
-    b = q["llm_text_tfidf_keywords_join"](spark, sf_dir).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    spark.catalog.clearCache()
-
-
 def test_cluster_sizes_join_back_not_window(spark, sf_dir):
-    """L9/L9b's n_members must be a combiner groupBy + join-back, not
+    """L9's n_members must be a combiner groupBy + join-back, not
     count() over a cluster_id window (VERDICT r12 item 2): a planted
     10k-member mega-cluster — boilerplate dedup's normal output — must
     not funnel into one WindowExec task after the CC loop was made
