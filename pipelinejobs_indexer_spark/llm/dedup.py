@@ -48,11 +48,12 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..oracle import with_fixtures  # noqa: F401  (kept for symmetry with peers)
 from ..registry import register
 from ..session import iter_checkpoint
-from ..tables import load_table, spread
+from ..tables import doc_ids, load_table, map_rows, spread
 
 from ..config import CONFIG
 
@@ -1262,18 +1263,18 @@ def connected_components(
             # emits by construction: key_pairs orders doc_a < doc_b and
             # the candidate set ends in .distinct()). _canon would
             # then be a pure no-op: greatest/least only flips orientation,
-            # which round 0's symmetrization erases, the u != v filter
+            # which the first CC iteration's symmetrization erases, the u != v filter
             # can't fire on a strict inequality, and distinct re-dedups a
             # distinct set. Skipping it removes one full edge-list
             # exchange + checkpoint materialization + count per clusters
             # query (~0.4 s of bench time at sf0.1, and at 100 TB a
             # corpus-pairs-scale shuffle).
             # Orientation u > v (doc_b as u): the loop's
-            # canonical form from _canon is u > v, so the round-0
+            # canonical form from _canon is u > v, so the first-iteration
             # convergence probe (count + left-anti vs e) can recognize an
             # already-converged graph; fed u < v it could never match and
             # a converged input paid one guaranteed extra CC round.
-            # Results identical either way: round-0 symmetrization erases
+            # Results identical either way: the first iteration's symmetrization erases
             # edge orientation.
             e = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
             e_cnt = n_pairs
@@ -2414,20 +2415,15 @@ def _dct256_bands(mat) -> list[int]:
     return [int(v) for v in (bits * shifts).sum(axis=1)]
 
 
-def _phash_dct_features(batches):
+def _phash_dct_rows(d: int):
     """doc_id -> DCT-hash bands over the PNG-round-tripped pixels."""
-    import pandas as pd
+    yield d, _dct256_bands(_phash_decoded_image_full(d))
 
-    for pdf in batches:
-        ids, bands = [], []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            ids.append(d)
-            bands.append(_dct256_bands(_phash_decoded_image_full(d)))
-        yield pd.DataFrame({
-            "doc_id": pd.Series(ids, dtype="int64"),
-            "bands": pd.Series(bands),
-        })
+
+#: Output of the DCT-hash decode legs: 16 x 16-bit band values per doc.
+BANDS_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("bands", ArrayType(LongType()))]
+)
 
 
 def _phash_grid16_sql() -> str:
@@ -2512,7 +2508,7 @@ def _phash_sql() -> str:
 
 
 def _dct_banded_pairs(
-    spark: SparkSession, sf_dir: str, feature_fn, max_dist: int
+    spark: SparkSession, sf_dir: str, per_doc, max_dist: int
 ) -> DataFrame:
     """The 256-bit DCT banded plan, shared by L2k (image) and L2m
     (audio): the decode leg emits 16 x 16-bit band values (an array
@@ -2522,13 +2518,10 @@ def _dct_banded_pairs(
     CPU-bound decode leg all cores — a video scale probe measured the
     un-spread leg serializing on the fixture's single parquet split
     (wall ratio 10.2x for 10x docs: one core doing 10x the work)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     # cached: the codec round-trip is the dominant cost and the band
     # table feeds BOTH self-join sides — one decode, not two;
     # O(docs x 16) int rows, trivial memory
-    hashes = docs.mapInPandas(
-        feature_fn, schema="doc_id bigint, bands array<bigint>"
-    ).cache()
+    hashes = map_rows(doc_ids(spark, sf_dir), per_doc, BANDS_SCHEMA).cache()
     bexp = hashes.select(
         "doc_id", "bands", F.posexplode("bands").alias("band", "bval")
     )
@@ -2573,9 +2566,7 @@ def llm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs image uploads opaquely; perceptual
     dedup is the multimodal curation surface a training pipeline adds."""
-    return _dct_banded_pairs(
-        spark, sf_dir, _phash_dct_features, PHASH_DCT_MAX_DIST
-    )
+    return _dct_banded_pairs(spark, sf_dir, _phash_dct_rows, PHASH_DCT_MAX_DIST)
 
 
 # ------------------------------------- L2m acoustic fingerprint dedup
@@ -2640,20 +2631,9 @@ def _audiohash_samples(d: int):
     return np.array(out["samples"], dtype=np.int64).reshape(n, n)
 
 
-def _audiohash_features(batches):
+def _audiohash_rows(d: int):
     """doc_id -> DCT-hash bands over the FLAC-round-tripped samples."""
-    import pandas as pd
-
-    for pdf in batches:
-        ids, bands = [], []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            ids.append(d)
-            bands.append(_dct256_bands(_audiohash_samples(d)))
-        yield pd.DataFrame({
-            "doc_id": pd.Series(ids, dtype="int64"),
-            "bands": pd.Series(bands),
-        })
+    yield d, _dct256_bands(_audiohash_samples(d))
 
 
 @register(
@@ -2677,9 +2657,7 @@ def llm_dedup_audiohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reactor.py:16-213) catalogs audio uploads opaquely; acoustic
     near-dup is the curation surface a multimodal training pipeline
     adds on top."""
-    return _dct_banded_pairs(
-        spark, sf_dir, _audiohash_features, AUDIOHASH_MAX_DIST
-    )
+    return _dct_banded_pairs(spark, sf_dir, _audiohash_rows, AUDIOHASH_MAX_DIST)
 
 
 # --------------------------------- L2n video frame-hash fingerprint
@@ -2712,54 +2690,45 @@ def _videohash_n_frames(d: int) -> int:
 
 def _videohash_dcs(d: int, f: int) -> list[int]:
     """Quantized DC per 8x8 block (TL, TR, BL, BR) of frame f — the
-    L5h sign-mixing formulas over the GROUP id (d // 3), plus the
-    one-block bump on frame d % n_frames for non-base docs."""
-    b = d // 3
-    dcs = [
-        (b + 11 * f) % 41 - 20,
-        (b // 5 + 13 * f) % 53 - 26,
-        -((b + 7 * f) % 31),
-        (b + 3 * f) % 23,
-    ]
+    L5h formulas over the GROUP id (d // 3), plus the one-block bump on
+    frame d % n_frames for non-base docs."""
+    from .multimodal import _avi_frame_dcs
+
+    dcs = _avi_frame_dcs(d // 3, f)
     if d % 3 != 0 and f == d % _videohash_n_frames(d):
         dcs[d % 4] += d % 3
     return dcs
 
 
-def _videohash_features(batches):
-    """doc_id -> one row per frame (doc_id, n_frames, frame_idx,
-    fhash) from GENUINELY WALKED + DECODED bytes: synth JPEG frames ->
-    assemble_avi_mjpeg -> avi_mjpeg_frames RIFF walk -> decode_jpeg
-    per frame -> corner-pixel pack. A container-walk or JPEG bug
-    shifts frame hashes and the driver hash."""
-    import pandas as pd
+#: Output of the video frame-hash decode legs: one row per frame.
+FRAME_HASH_SCHEMA = StructType(
+    [StructField(c, LongType()) for c in ("doc_id", "n_frames", "frame_idx", "fhash")]
+)
 
+
+def _frame_hash_rows(d: int, frame_dcs: list[list[int]]):
+    """One FRAME_HASH_SCHEMA row per frame of doc d's clip, from
+    GENUINELY WALKED + DECODED bytes: one DC-only JPEG per DC list ->
+    assemble_avi_mjpeg -> avi_mjpeg_frames RIFF walk -> decode_jpeg per
+    frame -> the four block-corner pixels packed into one int. A
+    container-walk or JPEG bug shifts frame hashes and the driver
+    hash."""
     from .jpeg import decode_jpeg, synth_dc_jpeg
     from .multimodal import AVI_SIDE, JPEG_Q, assemble_avi_mjpeg, avi_mjpeg_frames
 
-    for pdf in batches:
-        out = {"doc_id": [], "n_frames": [], "frame_idx": [], "fhash": []}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            nf = _videohash_n_frames(d)
-            avi = assemble_avi_mjpeg([
-                synth_dc_jpeg([_videohash_dcs(d, f)], AVI_SIDE, AVI_SIDE,
-                              q=JPEG_Q)
-                for f in range(nf)
-            ])
-            meta = avi_mjpeg_frames(avi)
-            s = AVI_SIDE - 1
-            for idx, frame in enumerate(meta["frames"]):
-                px = decode_jpeg(frame)[3]
-                fh = ((px[0][0] * 256 + px[0][s]) * 256
-                      + px[s][0]) * 256 + px[s][s]
-                out["doc_id"].append(d)
-                out["n_frames"].append(nf)
-                out["frame_idx"].append(idx)
-                out["fhash"].append(fh)
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    avi = assemble_avi_mjpeg(
+        [synth_dc_jpeg([dcs], AVI_SIDE, AVI_SIDE, q=JPEG_Q) for dcs in frame_dcs]
+    )
+    s = AVI_SIDE - 1
+    for idx, frame in enumerate(avi_mjpeg_frames(avi)["frames"]):
+        px = decode_jpeg(frame)[3]
+        fhash = ((px[0][0] * 256 + px[0][s]) * 256 + px[s][0]) * 256 + px[s][s]
+        yield d, len(frame_dcs), idx, fhash
+
+
+def _videohash_rows(d: int):
+    nf = _videohash_n_frames(d)
+    return _frame_hash_rows(d, [_videohash_dcs(d, f) for f in range(nf)])
 
 
 def _videohash_sql() -> str:
@@ -2839,11 +2808,7 @@ def llm_dedup_videohash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs video uploads opaquely; frame-level
     near-dup is the curation surface a multimodal pipeline adds."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    frames = docs.mapInPandas(
-        _videohash_features,
-        schema="doc_id bigint, n_frames bigint, frame_idx bigint, fhash bigint",
-    )
+    frames = map_rows(doc_ids(spark, sf_dir), _videohash_rows, FRAME_HASH_SCHEMA)
     return videohash_pairs(frames)
 
 
@@ -2907,46 +2872,15 @@ def _vcontain_frames(d: int) -> list[int]:
     return list(range(nb - 1))
 
 
-def _vcontain_features(batches):
-    """doc_id -> one row per frame from WALKED + DECODED bytes (the
-    L2n machinery over the containment fixture): synth each base-frame
-    JPEG, assemble the AVI, walk, decode, hash corners."""
-    import pandas as pd
+def _vcontain_rows(d: int):
+    """The L2n frame-hash machinery over the containment fixture: the
+    doc's frames are the base frames _vcontain_frames(d) of its group's
+    clip."""
+    from .multimodal import _avi_frame_dcs
 
-    from .jpeg import decode_jpeg, synth_dc_jpeg
-    from .multimodal import AVI_SIDE, JPEG_Q, assemble_avi_mjpeg, avi_mjpeg_frames
-
-    for pdf in batches:
-        out = {"doc_id": [], "n_frames": [], "frame_idx": [], "fhash": []}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            b = d // 3
-            base_idx = _vcontain_frames(d)
-            avi = assemble_avi_mjpeg([
-                synth_dc_jpeg(
-                    [[
-                        (b + 11 * bf) % 41 - 20,
-                        (b // 5 + 13 * bf) % 53 - 26,
-                        -((b + 7 * bf) % 31),
-                        (b + 3 * bf) % 23,
-                    ]],
-                    AVI_SIDE, AVI_SIDE, q=JPEG_Q,
-                )
-                for bf in base_idx
-            ])
-            meta = avi_mjpeg_frames(avi)
-            s = AVI_SIDE - 1
-            for idx, frame in enumerate(meta["frames"]):
-                px = decode_jpeg(frame)[3]
-                fh = ((px[0][0] * 256 + px[0][s]) * 256
-                      + px[s][0]) * 256 + px[s][s]
-                out["doc_id"].append(d)
-                out["n_frames"].append(len(base_idx))
-                out["frame_idx"].append(idx)
-                out["fhash"].append(fh)
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    return _frame_hash_rows(
+        d, [_avi_frame_dcs(d // 3, bf) for bf in _vcontain_frames(d)]
+    )
 
 
 def _vcontain_sql() -> str:
@@ -3019,11 +2953,7 @@ def llm_video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: reactor.py:16-213 catalogs uploads opaquely;
     containment audit is pipeline-added curation surface."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    frames = docs.mapInPandas(
-        _vcontain_features,
-        schema="doc_id bigint, n_frames bigint, frame_idx bigint, fhash bigint",
-    )
+    frames = map_rows(doc_ids(spark, sf_dir), _vcontain_rows, FRAME_HASH_SCHEMA)
     return video_containment_pairs(frames)
 
 

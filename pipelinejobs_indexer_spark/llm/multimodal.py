@@ -32,9 +32,6 @@ maxRecordsPerBatch` bounds per-batch memory for the pandas stage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -46,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import register
-from ..tables import load_table, spread
+from ..tables import doc_ids, load_table, map_rows, spread
 
 # magic-number table (reference analog: `filetype` sniffing; same table as
 # functions/udfs.py F12 but over raw bytes here)
@@ -380,25 +377,16 @@ def probe_video(content: bytes) -> dict:
     }
 
 
-def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched feature extraction over (doc_id, content) frames.
-
-    Deterministic byte-level features only (no codec deps): size, md5,
+def _byte_feature_rows(doc_id, content):
+    """Deterministic byte-level features only (no codec deps): size, md5,
     head bytes, sniffed MIME. Real decoders plug in per-MIME here.
     """
     import hashlib
 
-    for pdf in batches:
-        content = pdf["content"]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": content.map(len).astype("int64"),
-                "content_md5": content.map(lambda b: hashlib.md5(b).hexdigest()),
-                "head_hex": content.map(lambda b: b[:8].hex()),
-                "mime_sniffed": content.map(sniff_mime),
-            }
-        )
+    yield (
+        doc_id, len(content), hashlib.md5(content).hexdigest(),
+        content[:8].hex(), sniff_mime(content),
+    )
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,12 +465,10 @@ def llm_multimodal_features_arrow(spark: SparkSession, sf_dir: str) -> DataFrame
     path. Same answer as `llm_multimodal_features`; the point under test is
     the Arrow plumbing a real image/audio decoder needs: binary column in,
     typed feature frame out, content column never shuffled. Real decoders
-    (decode_image/decode_audio stubs) plug into `_extract_features` per-MIME.
+    (decode_image/decode_audio stubs) plug into `_byte_feature_rows` per-MIME.
     """
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "content").mapInPandas(
-        _extract_features, schema=FEATURES_SCHEMA
-    )
+    media = media_table(spark, sf_dir).select("doc_id", "content")
+    return map_rows(media, _byte_feature_rows, FEATURES_SCHEMA)
 
 
 FRAME_BYTES = 64   # fake "frame" stride over the byte stream
@@ -507,24 +493,17 @@ THUMB_SCHEMA = StructType(
 )
 
 
-def _sample_frames_fake(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fake_frame_rows(doc_id, content):
     """Deterministic frame sampler: the byte stream chunked into
     FRAME_BYTES-sized frames, every FRAME_EVERY-th kept. Real video swaps
-    this for an ffmpeg-backed decoder (sample_frames stub) — the batch
-    iteration, fan-out shape, and output schema stay identical."""
+    this for an ffmpeg-backed decoder (sample_frames stub) — the fan-out
+    shape and output schema stay identical."""
     import hashlib
 
-    for pdf in batches:
-        out = {"doc_id": [], "frame_idx": [], "frame_md5": [], "n_frames": []}
-        for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-            n_frames = (len(content) + FRAME_BYTES - 1) // FRAME_BYTES
-            for idx in range(0, n_frames, FRAME_EVERY):
-                frame = content[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
-                out["doc_id"].append(doc_id)
-                out["frame_idx"].append(idx)
-                out["frame_md5"].append(hashlib.md5(frame).hexdigest())
-                out["n_frames"].append(n_frames)
-        yield pd.DataFrame(out)
+    n_frames = (len(content) + FRAME_BYTES - 1) // FRAME_BYTES
+    for idx in range(0, n_frames, FRAME_EVERY):
+        frame = content[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
+        yield doc_id, idx, hashlib.md5(frame).hexdigest(), n_frames
 
 
 @register(
@@ -553,10 +532,8 @@ def llm_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing is value-checked, not just row-counted. Scale: frames-per-row
     is bounded by the media length — partition by bytes, never shuffle
     content, aggregate on the emitted metadata only."""
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "content").mapInPandas(
-        _sample_frames_fake, schema=FRAMES_SCHEMA
-    )
+    media = media_table(spark, sf_dir).select("doc_id", "content")
+    return map_rows(media, _fake_frame_rows, FRAMES_SCHEMA)
 
 
 def resize_image(content: bytes, mime: str, w: int, h: int) -> "object":
@@ -573,7 +550,18 @@ PNG_SIDE = 16  # synthesized fixture images are PNG_SIDE x PNG_SIDE gray
 PNG_GRID = 2   # thumbnail grid: PNG_GRID x PNG_GRID quadrants
 
 
-def _png_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _quadrant_rows(doc_id: int, img, grid: int):
+    """(doc_id, cell, integer mean) per cell of a grid x grid split of a
+    square 2-D array, cells numbered row-major: the thumbnail reduction
+    the PNG, GIF and WebP legs share."""
+    q = img.shape[0] // grid
+    for k in range(grid * grid):
+        qy, qx = divmod(k, grid)
+        cell = img[qy * q : (qy + 1) * q, qx * q : (qx + 1) * q]
+        yield doc_id, k, int(cell.sum()) // cell.size
+
+
+def _png_thumb_rows(doc_id: int):
     """Synthesize a deterministic grayscale PNG per doc (pixel(y, x) =
     (doc_id*7 + y*W + x) % 256, scanline filters cycling 0..4), then run
     the REAL decode — zlib inflate + per-row defiltering including Paeth —
@@ -585,30 +573,17 @@ def _png_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from .png import decode_png, encode_png_gray
 
     w = PNG_SIDE
-    q = PNG_SIDE // PNG_GRID
-    for pdf in batches:
-        out = {"doc_id": [], "cell": [], "mean_px": []}
-        for doc_id in pdf["doc_id"]:
-            yy, xx = np.mgrid[0:w, 0:w]
-            img = ((int(doc_id) * 7 + yy * w + xx) % 256).astype(np.uint8)
-            # odd docs take the Adam7-interlaced layout (round 9): same
-            # pixels out, so the closed-form oracle is untouched while
-            # the seven-pass scatter path carries driver-hash evidence
-            dec = decode_png(
-                encode_png_gray(
-                    img,
-                    row_filters=(0, 1, 2, 3, 4),
-                    interlace=(int(doc_id) % 2 == 1),
-                )
-            )
-            dec = dec[:, :, 0].astype(np.int64)
-            for k in range(PNG_GRID * PNG_GRID):
-                qy, qx = divmod(k, PNG_GRID)
-                cell = dec[qy * q : (qy + 1) * q, qx * q : (qx + 1) * q]
-                out["doc_id"].append(int(doc_id))
-                out["cell"].append(k)
-                out["mean_px"].append(int(cell.sum()) // cell.size)
-        yield pd.DataFrame(out)
+    yy, xx = np.mgrid[0:w, 0:w]
+    img = ((doc_id * 7 + yy * w + xx) % 256).astype(np.uint8)
+    # odd docs take the Adam7-interlaced layout: same pixels out, so the
+    # closed-form oracle is untouched while the seven-pass scatter path
+    # carries driver-hash evidence
+    dec = decode_png(
+        encode_png_gray(
+            img, row_filters=(0, 1, 2, 3, 4), interlace=(doc_id % 2 == 1)
+        )
+    )
+    return _quadrant_rows(doc_id, dec[:, :, 0].astype(np.int64), PNG_GRID)
 
 
 THUMB_PNG_SCHEMA = StructType(
@@ -644,8 +619,7 @@ def llm_multimodal_thumbnail_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the inflate+defilter pipeline end-to-end. Non-PNG media keep
     the block-mean byte path (llm_multimodal_thumbnail) and the documented
     codec-absent stubs."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_png_thumbs, schema=THUMB_PNG_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _png_thumb_rows, THUMB_PNG_SCHEMA)
 
 
 # --------------------------------------------- L5i real GIF decode path
@@ -654,7 +628,7 @@ GIF_GRID = 2    # quadrant grid, the PNG-thumbnail pattern
 GIF_COLORS = 64  # palette entries; pal[i] = (3i%256, 5i%256, 7i%256)
 
 
-def _gif_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _gif_thumb_rows(doc_id: int):
     """Synthesize a deterministic INTERLACED palette GIF per doc (index
     (y, x) = (doc_id*11 + y*W + x) % GIF_COLORS), then run the REAL
     decode — LZW inflate, de-interlace, palette expansion — and emit
@@ -666,29 +640,13 @@ def _gif_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from .gif import decode_gif, encode_gif
 
     w = GIF_SIDE
-    q = GIF_SIDE // GIF_GRID
     pal = np.stack(
-        [
-            (np.arange(GIF_COLORS) * 3) % 256,
-            (np.arange(GIF_COLORS) * 5) % 256,
-            (np.arange(GIF_COLORS) * 7) % 256,
-        ],
-        axis=1,
+        [(np.arange(GIF_COLORS) * m) % 256 for m in (3, 5, 7)], axis=1
     ).astype(np.uint8)
-    for pdf in batches:
-        out = {"doc_id": [], "cell": [], "mean_rgb": []}
-        for doc_id in pdf["doc_id"]:
-            yy, xx = np.mgrid[0:w, 0:w]
-            idx = ((int(doc_id) * 11 + yy * w + xx) % GIF_COLORS).astype(np.uint8)
-            dec = decode_gif(encode_gif(idx, pal, interlace=True))
-            rgb_sum = dec.astype(np.int64).sum(axis=2)
-            for k in range(GIF_GRID * GIF_GRID):
-                qy, qx = divmod(k, GIF_GRID)
-                cell = rgb_sum[qy * q : (qy + 1) * q, qx * q : (qx + 1) * q]
-                out["doc_id"].append(int(doc_id))
-                out["cell"].append(k)
-                out["mean_rgb"].append(int(cell.sum()) // cell.size)
-        yield pd.DataFrame(out)
+    yy, xx = np.mgrid[0:w, 0:w]
+    idx = ((doc_id * 11 + yy * w + xx) % GIF_COLORS).astype(np.uint8)
+    dec = decode_gif(encode_gif(idx, pal, interlace=True))
+    return _quadrant_rows(doc_id, dec.astype(np.int64).sum(axis=2), GIF_GRID)
 
 
 THUMB_GIF_SCHEMA = StructType(
@@ -721,20 +679,19 @@ _GIF_IDX = (
             GROUP BY d.doc_id, c.k""",
 )
 def llm_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5i: REAL GIF decode in the thumbnail path (VERDICT r5 item 6 —
-    the last image class a stdlib-only container can honestly decode).
-    Per doc, an interlaced 64-color GIF is synthesized from a
-    closed-form index formula, decoded by the pure-stdlib codec (gif.py:
-    spec-complete LZW with 12-bit growth + dictionary reset, interlace
-    reorder, palette expansion), and reduced to quadrant means of the
+    """L5i: REAL GIF decode in the thumbnail path (GIF is an image class
+    a stdlib-only container can honestly decode: LZW and palettes are
+    exact integer work). Per doc, an interlaced 64-color GIF is
+    synthesized from a closed-form index formula, decoded by the
+    pure-stdlib codec (gif.py: spec-complete LZW with 12-bit growth +
+    dictionary reset, interlace reorder, palette expansion), and reduced to quadrant means of the
     RGB sums. The DuckDB oracle never sees a GIF: it recomputes the
     expected means from the same closed form, so the hash certifies the
     LZW+interlace+palette pipeline end-to-end (the
     llm_multimodal_thumbnail_png pattern). Scale shape: identical to
     L5d — embarrassingly parallel mapInPandas, O(rows) output, no
     shuffle of media bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_gif_thumbs, schema=THUMB_GIF_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _gif_thumb_rows, THUMB_GIF_SCHEMA)
 
 
 # ------------------------------------------ L5z animated-GIF frame walk
@@ -750,9 +707,7 @@ GIF_ANIM_SCHEMA = StructType(
 )
 
 
-def _gif_anim_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _gif_anim_rows(d: int):
     import numpy as np
 
     from .gif import decode_gif_frames, encode_gif_frames
@@ -763,46 +718,31 @@ def _gif_anim_features(
          for i in range(16)],
         dtype=np.uint8,
     )
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_frames", "delay_total", "px_sum", "px_wsum",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            n = 2 + d % 3
-            yy, xx = np.mgrid[0:w, 0:w]
-            frames = [
-                {
-                    "indices": ((d + 3 * xx + 5 * yy + 7 * f) % 16).astype(
-                        np.uint8
-                    ),
-                    "delay_cs": 4 + (d + f) % 9,
-                    "disposal": f % 4,
-                    "interlace": f == 1,
-                }
-                for f in range(n)
-            ]
-            dec = decode_gif_frames(encode_gif_frames(frames, pal))
-            if len(dec) != n:
-                raise ValueError(f"animation decoded {len(dec)} != {n}")
-            s = ws = dtot = 0
-            for f, fr in enumerate(dec):
-                if fr["delay_cs"] != 4 + (d + f) % 9:
-                    raise ValueError("GCE delay did not round-trip")
-                if fr["disposal"] != f % 4:
-                    raise ValueError("GCE disposal did not round-trip")
-                fsum = int(fr["pixels"].astype(np.int64).sum())
-                s += fsum
-                ws += (f + 1) * fsum
-                dtot += fr["delay_cs"]
-            out["doc_id"].append(d)
-            out["n_frames"].append(n)
-            out["delay_total"].append(dtot)
-            out["px_sum"].append(s)
-            out["px_wsum"].append(ws)
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    n = 2 + d % 3
+    yy, xx = np.mgrid[0:w, 0:w]
+    frames = [
+        {
+            "indices": ((d + 3 * xx + 5 * yy + 7 * f) % 16).astype(np.uint8),
+            "delay_cs": 4 + (d + f) % 9,
+            "disposal": f % 4,
+            "interlace": f == 1,
+        }
+        for f in range(n)
+    ]
+    dec = decode_gif_frames(encode_gif_frames(frames, pal))
+    if len(dec) != n:
+        raise ValueError(f"animation decoded {len(dec)} != {n}")
+    s = ws = dtot = 0
+    for f, fr in enumerate(dec):
+        if fr["delay_cs"] != 4 + (d + f) % 9:
+            raise ValueError("GCE delay did not round-trip")
+        if fr["disposal"] != f % 4:
+            raise ValueError("GCE disposal did not round-trip")
+        fsum = int(fr["pixels"].astype(np.int64).sum())
+        s += fsum
+        ws += (f + 1) * fsum
+        dtot += fr["delay_cs"]
+    yield d, n, dtot, s, ws
 
 
 @register(
@@ -834,7 +774,7 @@ def _gif_anim_features(
            FROM (SELECT doc_id FROM documents) d""",
 )
 def llm_multimodal_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5z: animated-GIF frame walk (round 10) — per doc a real
+    """L5z: animated-GIF frame walk — per doc a real
     animation of 2-4 frames (GCE delay/disposal per frame, NETSCAPE
     loop extension, frame 1 interlaced) is encoded, then every frame
     decoded back through decode_gif_frames with its control metadata
@@ -848,8 +788,7 @@ def llm_multimodal_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) stores uploads opaquely; animation sampling is
     multimodal-ingest surface this engine adds."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_gif_anim_features, schema=GIF_ANIM_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _gif_anim_rows, GIF_ANIM_SCHEMA)
 
 
 # -------------------------------------------- L5j real WebP decode path
@@ -858,7 +797,7 @@ WEBP_GRID = 2    # quadrant grid, the PNG/GIF-thumbnail pattern
 WEBP_VALS = 48   # pixel formula period (rich enough for LZ77 + cache)
 
 
-def _webp_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _webp_thumb_rows(doc_id: int):
     """Synthesize a deterministic RGBA image per doc (v(y, x) =
     (doc_id*17 + y*W + x) % WEBP_VALS; r,g,b = 7v,3v,13v mod 256), encode
     it as a REAL lossless WebP (subtract-green transform + greedy LZ77 +
@@ -872,34 +811,17 @@ def _webp_thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from .webp import decode_webp, encode_webp
 
     w = WEBP_SIDE
-    q = WEBP_SIDE // WEBP_GRID
-    for pdf in batches:
-        out = {"doc_id": [], "cell": [], "mean_rgb": []}
-        for doc_id in pdf["doc_id"]:
-            yy, xx = np.mgrid[0:w, 0:w]
-            v = (int(doc_id) * 17 + yy * w + xx) % WEBP_VALS
-            img = np.stack(
-                [
-                    (v * 7) % 256,
-                    (v * 3) % 256,
-                    (v * 13) % 256,
-                    np.full_like(v, 255),
-                ],
-                axis=2,
-            ).astype(np.uint8)
-            dec = decode_webp(
-                encode_webp(
-                    img, subtract_green=True, use_lz77=True, cache_bits=4
-                )
-            )
-            rgb_sum = dec[:, :, :3].astype(np.int64).sum(axis=2)
-            for k in range(WEBP_GRID * WEBP_GRID):
-                qy, qx = divmod(k, WEBP_GRID)
-                cell = rgb_sum[qy * q : (qy + 1) * q, qx * q : (qx + 1) * q]
-                out["doc_id"].append(int(doc_id))
-                out["cell"].append(k)
-                out["mean_rgb"].append(int(cell.sum()) // cell.size)
-        yield pd.DataFrame(out)
+    yy, xx = np.mgrid[0:w, 0:w]
+    v = (doc_id * 17 + yy * w + xx) % WEBP_VALS
+    img = np.stack(
+        [(v * 7) % 256, (v * 3) % 256, (v * 13) % 256, np.full_like(v, 255)],
+        axis=2,
+    ).astype(np.uint8)
+    dec = decode_webp(
+        encode_webp(img, subtract_green=True, use_lz77=True, cache_bits=4)
+    )
+    rgb_sum = dec[:, :, :3].astype(np.int64).sum(axis=2)
+    return _quadrant_rows(doc_id, rgb_sum, WEBP_GRID)
 
 
 _WEBP_V = (
@@ -924,9 +846,9 @@ _WEBP_V = (
             GROUP BY d.doc_id, c.k""",
 )
 def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5j: REAL lossless-WebP decode in the thumbnail path (VERDICT r7
-    item 6 — the last stubbed image format a stdlib-only container can
-    honestly decode; lossy VP8 keeps its NotImplementedError contract).
+    """L5j: REAL lossless-WebP decode in the thumbnail path (VP8L is
+    exact integer work a stdlib-only container can honestly decode;
+    lossy VP8 keeps its NotImplementedError contract).
     Per doc, an RGBA image is synthesized from a closed-form value
     formula, encoded as a real VP8L bitstream (subtract-green transform,
     greedy LZ77 with mapped short distances, 4-bit color cache,
@@ -938,33 +860,23 @@ def llm_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_multimodal_thumbnail_png / llm_multimodal_gif pattern). Scale
     shape: identical to L5d/L5i — embarrassingly parallel mapInPandas,
     O(rows) output, no shuffle of media bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_webp_thumbs, schema=THUMB_GIF_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _webp_thumb_rows, THUMB_GIF_SCHEMA)
 
 
-def _thumbnail_fake(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fake_thumb_rows(doc_id, content):
     """Deterministic 'resize': block-mean the byte stream into THUMB_CELLS
     cells (integer mean per cell) with numpy — the same Arrow-in,
     vectorized-compute, typed-frame-out shape a real resampler has."""
     import numpy as np
 
-    for pdf in batches:
-        out = {"doc_id": [], "cell": [], "mean_byte": []}
-        for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-            arr = np.frombuffer(content, dtype=np.uint8)
-            n = len(arr)
-            for k in range(THUMB_CELLS):
-                lo = (k * n) // THUMB_CELLS
-                hi = ((k + 1) * n) // THUMB_CELLS
-                cell = arr[lo:hi]
-                if len(cell) == 0:
-                    # content shorter than THUMB_CELLS bytes: some cells are
-                    # empty — skip them (oracle filters the same cells out)
-                    continue
-                out["doc_id"].append(doc_id)
-                out["cell"].append(k)
-                out["mean_byte"].append(int(cell.sum()) // len(cell))
-        yield pd.DataFrame(out)
+    arr = np.frombuffer(content, dtype=np.uint8)
+    n = len(arr)
+    for k in range(THUMB_CELLS):
+        cell = arr[(k * n) // THUMB_CELLS : ((k + 1) * n) // THUMB_CELLS]
+        # content shorter than THUMB_CELLS bytes leaves some cells empty:
+        # they are skipped (the oracle filters the same cells out)
+        if len(cell):
+            yield doc_id, k, int(cell.sum()) // len(cell)
 
 
 @register(
@@ -984,10 +896,8 @@ def llm_multimodal_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     THUMB_CELLS integer cells (numpy over Arrow batches). The oracle
     recomputes the identical integer means from the character codes —
     a real resampler replaces only the numpy kernel (resize_image stub)."""
-    media = media_table(spark, sf_dir)
-    return media.select("doc_id", "content").mapInPandas(
-        _thumbnail_fake, schema=THUMB_SCHEMA
-    )
+    media = media_table(spark, sf_dir).select("doc_id", "content")
+    return map_rows(media, _fake_thumb_rows, THUMB_SCHEMA)
 
 
 # ------------------------------------------------ L5e real WAV audio path
@@ -1020,7 +930,7 @@ def synth_wav(doc_id: int) -> bytes:
     hand-assembled with struct (NOT the wave writer — so the stdlib
     parser in decode_audio is an independent check of every header
     field). Sample width cycles per doc — 16-bit, 24-bit (3-byte
-    two's complement, round 10), 32-bit — with the amplitude scaled
+    two's complement), 32-bit — with the amplitude scaled
     to the width so RMS/peak stay closed-form."""
     import struct
 
@@ -1060,25 +970,17 @@ def synth_wav(doc_id: int) -> bytes:
     return hdr + pcm
 
 
-def _audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _audio_rows(doc_id: int):
     import math
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "sample_rate", "n_channels", "n_frames",
-            "duration_ms", "rms", "peak",
-        )}
-        for doc_id in pdf["doc_id"]:
-            audio = decode_audio(synth_wav(int(doc_id)), "audio/wav")
-            s = audio["samples"]
-            out["doc_id"].append(int(doc_id))
-            out["sample_rate"].append(audio["rate"])
-            out["n_channels"].append(audio["channels"])
-            out["n_frames"].append(audio["frames"])
-            out["duration_ms"].append(audio["frames"] * 1000 // audio["rate"])
-            out["rms"].append(round(math.sqrt(sum(v * v for v in s) / len(s))))
-            out["peak"].append(max(abs(v) for v in s))
-        yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in out.items()})
+    audio = decode_audio(synth_wav(doc_id), "audio/wav")
+    s = audio["samples"]
+    yield (
+        doc_id, audio["rate"], audio["channels"], audio["frames"],
+        audio["frames"] * 1000 // audio["rate"],
+        round(math.sqrt(sum(v * v for v in s) / len(s))),
+        max(abs(v) for v in s),
+    )
 
 
 @register(
@@ -1102,8 +1004,8 @@ def llm_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5e: REAL audio decode path — per-doc synthesized RIFF/PCM WAV
     bytes are parsed by the stdlib ``wave`` module (decode_audio) and the
     decoded sample stream reduced to signal features (rate, channels,
-    frames, duration, RMS, peak) in an Arrow mapInPandas stage. Since
-    round 10 the sample width cycles 16/24/32-bit per doc — 24-bit is
+    frames, duration, RMS, peak) in an Arrow mapInPandas stage. The
+    sample width cycles 16/24/32-bit per doc — 24-bit is
     the studio/archival width, its 3-byte sign extension cross-checked
     against audioop — with amplitude scaled so the closed form holds.
 
@@ -1119,8 +1021,7 @@ def llm_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature row leaves the Python worker, so shuffle volume is O(rows),
     never O(audio bytes); with a real archive the same stage reads the
     binary column (S15 feeds it) instead of synthesizing."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(_audio_features, schema=AUDIO_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _audio_rows, AUDIO_SCHEMA)
 
 
 # ---------------------------------- L5p companded / ADPCM audio codecs
@@ -1136,9 +1037,7 @@ AUDIO_CODEC_SCHEMA = StructType(
 )
 
 
-def _audio_codec_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _audio_codec_rows(d: int):
     import struct
 
     from .g711 import (
@@ -1148,51 +1047,36 @@ def _audio_codec_features(
         write_wav,
     )
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "mu_sum", "alaw_sum", "adpcm_sum", "adpcm_last",
-            "n_frames",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            mu_pay = bytes((d + t) % 256 for t in range(128))
-            al_pay = bytes((d * 5 + t * 3) % 256 for t in range(128))
-            mu = decode_audio(
-                write_wav(WAVE_FMT_MULAW, mu_pay, channels=1, rate=8000,
-                          bits=8, block_align=1, frames=128),
-                "audio/wav",
-            )
-            al = decode_audio(
-                write_wav(WAVE_FMT_ALAW, al_pay, channels=1, rate=8000,
-                          bits=8, block_align=1, frames=128),
-                "audio/wav",
-            )
-            # one mono IMA block: header predictor P0 / step index i0,
-            # then 64 constant nibbles c (0..3: index walks DOWN the
-            # step table, predictor strictly accumulates — parameters
-            # sized so the int16 clamp is provably never hit, keeping
-            # the decode on the closed-form grid)
-            p0 = d % 1000 - 500
-            i0 = d % 51
-            c = d % 4
-            hdr = struct.pack("<hBB", p0, i0, 0)
-            ad = decode_audio(
-                write_wav(WAVE_FMT_IMA_ADPCM, hdr + bytes([c | (c << 4)] * 32),
-                          channels=1, rate=8000, bits=4, block_align=36,
-                          frames=65),
-                "audio/wav",
-            )
-            out["doc_id"].append(d)
-            out["mu_sum"].append(sum(mu["samples"]))
-            out["alaw_sum"].append(sum(al["samples"]))
-            out["adpcm_sum"].append(sum(ad["samples"]))
-            out["adpcm_last"].append(ad["samples"][-1])
-            out["n_frames"].append(
-                mu["frames"] + al["frames"] + ad["frames"]
-            )
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    mu_pay = bytes((d + t) % 256 for t in range(128))
+    al_pay = bytes((d * 5 + t * 3) % 256 for t in range(128))
+    mu = decode_audio(
+        write_wav(WAVE_FMT_MULAW, mu_pay, channels=1, rate=8000,
+                  bits=8, block_align=1, frames=128),
+        "audio/wav",
+    )
+    al = decode_audio(
+        write_wav(WAVE_FMT_ALAW, al_pay, channels=1, rate=8000,
+                  bits=8, block_align=1, frames=128),
+        "audio/wav",
+    )
+    # one mono IMA block: header predictor P0 / step index i0, then 64
+    # constant nibbles c (0..3: index walks DOWN the step table,
+    # predictor strictly accumulates — parameters sized so the int16
+    # clamp is provably never hit, keeping the decode on the
+    # closed-form grid)
+    p0 = d % 1000 - 500
+    i0 = d % 51
+    c = d % 4
+    hdr = struct.pack("<hBB", p0, i0, 0)
+    ad = decode_audio(
+        write_wav(WAVE_FMT_IMA_ADPCM, hdr + bytes([c | (c << 4)] * 32),
+                  channels=1, rate=8000, bits=4, block_align=36, frames=65),
+        "audio/wav",
+    )
+    yield (
+        d, sum(mu["samples"]), sum(al["samples"]), sum(ad["samples"]),
+        ad["samples"][-1], mu["frames"] + al["frames"] + ad["frames"],
+    )
 
 
 def _ima_steps_values() -> str:
@@ -1257,7 +1141,7 @@ def _ima_steps_values() -> str:
            FROM mu JOIN al USING (doc_id) JOIN ad USING (doc_id)""",
 )
 def llm_multimodal_audio_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5p: REAL companded / ADPCM audio decode (round 9) — the WAV
+    """L5p: REAL companded / ADPCM audio decode — the WAV
     formats the stdlib ``wave`` module cannot read but real archives
     are full of: G.711 μ-law (fmt 7) and A-law (fmt 6), every PSTN /
     telephony capture, and IMA ADPCM (fmt 0x11), the classic 4:1
@@ -1276,8 +1160,7 @@ def llm_multimodal_audio_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum. Scale shape: embarrassingly parallel mapInPandas, O(rows)
     output; the step-table join is a 64x89 broadcast-sized dimension,
     never a data shuffle."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_audio_codec_features, schema=AUDIO_CODEC_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _audio_codec_rows, AUDIO_CODEC_SCHEMA)
 
 
 # --------------------------------------------- L5k real FLAC decode path
@@ -1298,29 +1181,19 @@ def _flac_wave(doc_id: int):
     return np.stack([left, right], axis=1)
 
 
-def _flac_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _flac_rows(doc_id: int):
     import numpy as np
 
     from .flac import encode_flac
 
-    for pdf in batches:
-        out = {"doc_id": [], "seg": [], "sum_left": [], "sum_right": []}
-        for doc_id in pdf["doc_id"]:
-            wave = _flac_wave(int(doc_id))
-            data = encode_flac(
-                wave, 8000, 16, stereo="mid-side", partition_order=2
-            )
-            audio = decode_audio(data, "audio/flac")
-            s = np.array(audio["samples"], dtype=np.int64).reshape(-1, 2)
-            for seg in range(FLAC_FRAMES // FLAC_SEG):
-                chunk = s[seg * FLAC_SEG : (seg + 1) * FLAC_SEG]
-                out["doc_id"].append(int(doc_id))
-                out["seg"].append(seg)
-                out["sum_left"].append(int(chunk[:, 0].sum()))
-                out["sum_right"].append(int(chunk[:, 1].sum()))
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    data = encode_flac(
+        _flac_wave(doc_id), 8000, 16, stereo="mid-side", partition_order=2
+    )
+    audio = decode_audio(data, "audio/flac")
+    s = np.array(audio["samples"], dtype=np.int64).reshape(-1, 2)
+    for seg in range(FLAC_FRAMES // FLAC_SEG):
+        chunk = s[seg * FLAC_SEG : (seg + 1) * FLAC_SEG]
+        yield doc_id, seg, int(chunk[:, 0].sum()), int(chunk[:, 1].sum())
 
 
 FLAC_SCHEMA = StructType(
@@ -1348,9 +1221,9 @@ _FLAC_T = f"(s.seg * {FLAC_SEG} + t.t)"
             GROUP BY d.doc_id, s.seg""",
 )
 def llm_multimodal_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5k: REAL FLAC decode in the audio-features path (round 8 — the
-    next audio class a stdlib-only container can honestly decode; FLAC
-    is pure integer arithmetic, unlike the float-MDCT mp3/ogg stubs).
+    """L5k: REAL FLAC decode in the audio-features path (an audio class
+    a stdlib-only container can honestly decode: FLAC is pure integer
+    arithmetic, unlike the float-MDCT mp3/ogg stubs).
     Per doc, a closed-form stereo clip is encoded as a real FLAC stream
     (mid-side decorrelation, auto constant/fixed predictors per
     subframe, 4-partition rice residuals, CRC-8/16 framing, stream MD5)
@@ -1361,8 +1234,7 @@ def llm_multimodal_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug breaks the value hash (the PNG/GIF/WebP pattern). Scale shape:
     identical to L5e — embarrassingly parallel mapInPandas, O(rows)
     output, no shuffle of audio bytes."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_flac_features, schema=FLAC_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _flac_rows, FLAC_SCHEMA)
 
 
 # ------------------------------------------ L5l real PDF text extraction
@@ -1383,60 +1255,60 @@ def _pdf_pages(doc_id: int) -> list[list[str]]:
     ]
 
 
-def _pdf_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import re as _re
+def _pdf_container_knobs(d: int) -> dict:
+    """The container cycle every synthesized PDF rides. Ciphers: every
+    7th doc RC4 (V2/R3), every 11th AES-128 (V4 /AESV2, CBC + sAlT
+    object keys), every 13th AES-256 (V5/R6: Algorithm 2.B hardened-KDF
+    unwrap, shared file key per spec); precedence 13 > 11 > 7 keeps the
+    knobs exclusive and all three ciphers driver-hashed. PDF 1.5
+    layouts: d%4==1 -> xref stream with the PNG Up predictor; d%4==3 ->
+    xref stream + ObjStm packing (d=21, 33, ... compose 1.5 layouts
+    with encryption)."""
+    return dict(
+        encrypt_rc4=(d % 7 == 0 and d % 11 != 0 and d % 13 != 0),
+        encrypt_aes=(d % 11 == 0 and d % 13 != 0),
+        encrypt_aes256=(d % 13 == 0),
+        xref_stream=(d % 4 == 1),
+        objstm=(d % 4 == 3),
+    )
 
-    from .pdf import extract_pdf_text, write_pdf
 
-    for pdf in batches:
-        out = {"doc_id": [], "n_pages": [], "n_lines": [], "n_chars": [],
-               "digit_sum": []}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            data = write_pdf(
-                _pdf_pages(d),
-                compress=True,
-                use_tj_array=(d % 3 == 1),
-                # every 9th-ish doc positions lines with the absolute
-                # text matrix (Tm) instead of relative Td moves
-                use_tm=(d % 9 == 4),
-                hex_strings=(d % 3 == 2),
-                ascii85=(d % 5 == 0),
-                # every 7th doc RC4 (V2/R3), every 11th AES-128 (V4
-                # /AESV2, CBC + sAlT object keys), every 13th AES-256
-                # (V5/R6: Algorithm 2.B hardened-KDF unwrap, shared
-                # file key per spec); precedence 13 > 11 > 7 keeps the
-                # knobs exclusive and all three ciphers driver-hashed
-                encrypt_rc4=(d % 7 == 0 and d % 11 != 0 and d % 13 != 0),
-                encrypt_aes=(d % 11 == 0 and d % 13 != 0),
-                encrypt_aes256=(d % 13 == 0),
-                # PDF 1.5 layouts: d%4==1 -> xref stream with the PNG Up
-                # predictor; d%4==3 -> xref stream + ObjStm packing (and
-                # d=21, 33, ... compose 1.5 layouts with encryption)
-                xref_stream=(d % 4 == 1),
-                objstm=(d % 4 == 3),
-                # font machinery (round 9): the same closed-form ASCII
-                # text rides every encoding path — WinAnsi/MacRoman base
-                # codecs, /Differences remapping the WHOLE charset to
-                # codes 161+ (nothing decodes without the map), and
-                # Type0 Identity-H 2-byte codes through a /ToUnicode
-                # CMap — so a font-table bug shifts counts off the oracle
-                font=[None, "winansi", "differences", "type0",
-                      "macroman", None][d % 6],
-            )
-            text = extract_pdf_text(data)
-            pages = text.split("\f")
-            lines = [ln for p in pages for ln in p.split("\n")]
-            out["doc_id"].append(d)
-            out["n_pages"].append(len(pages))
-            out["n_lines"].append(len(lines))
-            out["n_chars"].append(len(text))
-            out["digit_sum"].append(
-                sum(int(m) for m in _re.findall(r"w(\d)", text))
-            )
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+def synth_text_pdf(d: int) -> bytes:
+    """The L5l fixture: doc d's closed-form text layer (_pdf_pages)
+    written as a real PDF whose writer path varies per doc, so every
+    extractor branch carries driver-hash evidence."""
+    from .pdf import write_pdf
+
+    return write_pdf(
+        _pdf_pages(d),
+        compress=True,
+        use_tj_array=(d % 3 == 1),
+        # every 9th-ish doc positions lines with the absolute text
+        # matrix (Tm) instead of relative Td moves
+        use_tm=(d % 9 == 4),
+        hex_strings=(d % 3 == 2),
+        ascii85=(d % 5 == 0),
+        # font machinery: the same closed-form ASCII text rides every
+        # encoding path — WinAnsi/MacRoman base codecs, /Differences
+        # remapping the WHOLE charset to codes 161+ (nothing decodes
+        # without the map), and Type0 Identity-H 2-byte codes through a
+        # /ToUnicode CMap — so a font-table bug shifts counts off the
+        # oracle
+        font=[None, "winansi", "differences", "type0", "macroman", None][d % 6],
+        **_pdf_container_knobs(d),
+    )
+
+
+def _pdf_rows(d: int):
+    import re
+
+    from .pdf import extract_pdf_text
+
+    text = extract_pdf_text(synth_text_pdf(d))
+    pages = text.split("\f")
+    n_lines = sum(len(p.split("\n")) for p in pages)
+    digit_sum = sum(int(m) for m in re.findall(r"w(\d)", text))
+    yield d, len(pages), n_lines, len(text), digit_sum
 
 
 PDF_SCHEMA = StructType(
@@ -1469,7 +1341,7 @@ PDF_SCHEMA = StructType(
             GROUP BY d.doc_id""",
 )
 def llm_multimodal_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5l: REAL PDF text extraction (round 8) — the corpus-ingest step
+    """L5l: REAL PDF text extraction — the corpus-ingest step
     a training-data pipeline runs on its largest document source, and a
     text layer the stdlib honestly decodes (pdf.py: object-graph parse,
     Root→Pages→Kids tree walk, FlateDecode via zlib + ASCIIHex/ASCII85
@@ -1498,8 +1370,7 @@ def llm_multimodal_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     document bytes shuffle; decompressed stream volume is capped
     (pdf.py MAX_TEXT_BYTES) so hostile inputs cannot balloon executor
     memory."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_pdf_features, schema=PDF_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _pdf_rows, PDF_SCHEMA)
 
 
 # ------------------------------------------ L5n PDF embedded-image decode
@@ -1518,8 +1389,9 @@ PDF_IMG_SCHEMA = StructType(
 def _fixture_palette(n: int) -> list:
     """The fixture ColorMap closed form shared by the L5r TIFF palette
     and the L5n PDF /Indexed lookup — their oracles replay this exact
-    (i*5, i*7, i*11) % 251 arithmetic, so the constant lives ONCE
-    (r13 review: the PDF copy was an eyeballed duplicate)."""
+    (i*5, i*7, i*11) % 251 arithmetic, so the constant lives ONCE: a
+    second hand-written copy could drift from the one its oracle
+    replays."""
     return [((i * 5) % 251, (i * 7) % 251, (i * 11) % 251)
             for i in range(n)]
 
@@ -1570,8 +1442,8 @@ def _pdf_image_specs(doc_id: int) -> tuple[list[list[str]], list[list[dict]]]:
                 },
                 {
                     # /Indexed palette image whose INDEX DEPTH cycles
-                    # 2/4/8 bits per doc (round 13: sub-8 packed
-                    # samples share the TIFF bit-unpack) — the decoded
+                    # 2/4/8 bits per doc (sub-8 packed samples share
+                    # the TIFF bit-unpack) — the decoded
                     # RGB is depth-invariant, so one closed-form oracle
                     # covers all three packings
                     "kind": "indexed",
@@ -1590,57 +1462,25 @@ def _pdf_image_specs(doc_id: int) -> tuple[list[list[str]], list[list[dict]]]:
     return pages, images
 
 
-def _pdf_image_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _pdf_image_rows(d: int):
     from .pdf import extract_pdf_images, write_pdf
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_images", "sum_width", "sum_height",
-            "px_sum_jpeg", "px_sum_raw", "px_sum_pal",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            pages, images = _pdf_image_specs(d)
-            data = write_pdf(
-                pages,
-                images=images,
-                # the L5l knob cycle: ciphers 13 > 11 > 7, d%4 layouts —
-                # so encrypted DCTDecode streams and ObjStm-packed image
-                # dictionaries both carry evidence here too
-                encrypt_rc4=(d % 7 == 0 and d % 11 != 0 and d % 13 != 0),
-                encrypt_aes=(d % 11 == 0 and d % 13 != 0),
-                encrypt_aes256=(d % 13 == 0),
-                xref_stream=(d % 4 == 1),
-                objstm=(d % 4 == 3),
-            )
-            per_page = extract_pdf_images(data)
-            imgs = [i for page in per_page for i in page]
-            out["doc_id"].append(d)
-            out["n_images"].append(len(imgs))
-            out["sum_width"].append(sum(i["width"] for i in imgs))
-            out["sum_height"].append(sum(i["height"] for i in imgs))
-            out["px_sum_jpeg"].append(
-                sum(sum(i["samples"]) for i in imgs if i["width"] == 16)
-            )
-            out["px_sum_raw"].append(
-                sum(
-                    sum(i["samples"])
-                    for i in imgs
-                    if i["width"] == 8 and i["n_components"] == 1
-                )
-            )
-            out["px_sum_pal"].append(
-                sum(
-                    sum(i["samples"])
-                    for i in imgs
-                    if i["width"] == 8 and i["n_components"] == 3
-                )
-            )
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    pages, images = _pdf_image_specs(d)
+    # the L5l container cycle, so encrypted DCTDecode streams and
+    # ObjStm-packed image dictionaries carry evidence here too
+    data = write_pdf(pages, images=images, **_pdf_container_knobs(d))
+    imgs = [i for page in extract_pdf_images(data) for i in page]
+
+    def px_sum(keep):
+        return sum(sum(i["samples"]) for i in imgs if keep(i))
+
+    yield (
+        d, len(imgs),
+        sum(i["width"] for i in imgs), sum(i["height"] for i in imgs),
+        px_sum(lambda i: i["width"] == 16),
+        px_sum(lambda i: i["width"] == 8 and i["n_components"] == 1),
+        px_sum(lambda i: i["width"] == 8 and i["n_components"] == 3),
+    )
 
 
 @register(
@@ -1686,7 +1526,7 @@ def _pdf_image_features(
                 JOIN pl USING (doc_id)""",
 )
 def llm_multimodal_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5n: REAL PDF embedded-image decode (round 9) — the image half
+    """L5n: REAL PDF embedded-image decode — the image half
     of corpus PDF ingest, closing the "image filters" refusal the L5l
     docstring documented. Per doc, a multi-page PDF embeds three image
     XObjects per page: a grayscale DC-only baseline JPEG under /Filter
@@ -1694,7 +1534,7 @@ def llm_multimodal_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     generators embed photos), a raw 8-bit gray bitmap whose raster
     filter cycles Flate / RunLengthDecode (§7.4.5) / LZWDecode
     (§7.4.4.2 TIFF variant, MSB-first 9→12-bit codes, EarlyChange) /
-    none, and (round 13) an /Indexed palette image whose index depth
+    none, and an /Indexed palette image whose index depth
     cycles 2/4/8 bits — the sub-8 packed-sample path (§8.9.5.2,
     sharing the TIFF bit-unpack) under the same cipher/layout matrix. The L5l knob cycle applies on top (RC4/AES-128/AES-256
     ciphers, xref-stream and ObjStm layouts), so an AES-encrypted
@@ -1706,8 +1546,7 @@ def llm_multimodal_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     order shifts a sum. Scale shape: embarrassingly parallel
     mapInPandas, O(rows) fixed-width output, decoded sample volume
     capped by pdf.py MAX_TEXT_BYTES per document."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_pdf_image_features, schema=PDF_IMG_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _pdf_image_rows, PDF_IMG_SCHEMA)
 
 
 # --------------------------------------------- L5f MP4 container probing
@@ -1759,25 +1598,12 @@ def synth_mp4(doc_id: int) -> bytes:
     return ftyp + box(b"moov", mvhd + traks)
 
 
-def _video_probe_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "brand", "timescale", "duration_ms", "n_tracks")}
-        for doc_id in pdf["doc_id"]:
-            meta = probe_video(synth_mp4(int(doc_id)))
-            out["doc_id"].append(int(doc_id))
-            out["brand"].append(meta["brand"])
-            out["timescale"].append(meta["timescale"])
-            out["duration_ms"].append(meta["duration_ms"])
-            out["n_tracks"].append(meta["n_tracks"])
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "brand": pd.Series(out["brand"], dtype="object"),
-                "timescale": pd.Series(out["timescale"], dtype="int64"),
-                "duration_ms": pd.Series(out["duration_ms"], dtype="int64"),
-                "n_tracks": pd.Series(out["n_tracks"], dtype="int64"),
-            }
-        )
+def _video_probe_rows(doc_id: int):
+    meta = probe_video(synth_mp4(doc_id))
+    yield (
+        doc_id, meta["brand"], meta["timescale"], meta["duration_ms"],
+        meta["n_tracks"],
+    )
 
 
 @register(
@@ -1806,10 +1632,7 @@ def llm_multimodal_video_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     because it reads only box headers: with binaryFile input the scan
     can stop after the moov box instead of fetching terabytes of mdat
     payload."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _video_probe_features, schema=VIDEO_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _video_probe_rows, VIDEO_SCHEMA)
 
 
 # ----------------------------------- L5s EBML / WebM container probe
@@ -1963,28 +1786,12 @@ WEBM_SCHEMA = StructType(
 )
 
 
-def _webm_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "doctype", "duration_ms", "n_video", "n_audio",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            meta = probe_webm(synth_webm(d))
-            out["doc_id"].append(d)
-            out["doctype"].append(meta["doctype"])
-            out["duration_ms"].append(meta["duration_ms"])
-            out["n_video"].append(meta["n_video"])
-            out["n_audio"].append(meta["n_audio"])
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "doctype": pd.Series(out["doctype"], dtype="object"),
-                "duration_ms": pd.Series(out["duration_ms"], dtype="int64"),
-                "n_video": pd.Series(out["n_video"], dtype="int64"),
-                "n_audio": pd.Series(out["n_audio"], dtype="int64"),
-            }
-        )
+def _webm_rows(d: int):
+    meta = probe_webm(synth_webm(d))
+    yield (
+        d, meta["doctype"], meta["duration_ms"], meta["n_video"],
+        meta["n_audio"],
+    )
 
 
 @register(
@@ -1997,7 +1804,7 @@ def _webm_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
            FROM documents""",
 )
 def llm_multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5s: REAL Matroska/WebM container probe (round 9) — the EBML
+    """L5s: REAL Matroska/WebM container probe — the EBML
     element walk per RFC 8794 (vint IDs keep the marker bit, sizes
     strip it; children bounded by their parents), completing the
     video-container triage family beside MP4 (L5f) and AVI (L5h):
@@ -2008,10 +1815,7 @@ def llm_multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     AV1 frame pixels stay the honest ffmpeg refusal; at 100 TB this
     header-only pass triages before any decode. Oracle: every field
     from doc_id arithmetic. Scale: zero-exchange mapInPandas."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _webm_features, schema=WEBM_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _webm_rows, WEBM_SCHEMA)
 
 
 # ------------------------------- L5q Ogg / MP3 container + frame probes
@@ -2218,28 +2022,13 @@ AUDIO_PROBE_SCHEMA = StructType(
 )
 
 
-def _audio_probe_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "ogg_pages", "ogg_packets", "ogg_granule",
-            "mp3_frames", "mp3_kbps", "mp3_duration_ms",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            og = probe_ogg(synth_ogg(d))
-            mp = probe_mp3(synth_mp3_frames(d))
-            out["doc_id"].append(d)
-            out["ogg_pages"].append(og["n_pages"])
-            out["ogg_packets"].append(og["n_packets"])
-            out["ogg_granule"].append(og["final_granule"])
-            out["mp3_frames"].append(mp["n_frames"])
-            out["mp3_kbps"].append(mp["kbps"])
-            out["mp3_duration_ms"].append(mp["duration_ms"])
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+def _audio_probe_rows(d: int):
+    og = probe_ogg(synth_ogg(d))
+    mp = probe_mp3(synth_mp3_frames(d))
+    yield (
+        d, og["n_pages"], og["n_packets"], og["final_granule"],
+        mp["n_frames"], mp["kbps"], mp["duration_ms"],
+    )
 
 
 def _mp3_kbps_sql() -> str:
@@ -2269,7 +2058,7 @@ def _mp3_rate_sql() -> str:
            FROM documents""",
 )
 def llm_multimodal_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5q: REAL Ogg + MP3 metadata triage (round 9) — the no-codec
+    """L5q: REAL Ogg + MP3 metadata triage — the no-codec
     half of the two remaining float-MDCT audio refusals, the L5f
     video-probe pattern applied to audio: per doc, a synthesized Ogg
     stream (RFC 3533 page grammar: capture pattern, lacing tables with
@@ -2284,10 +2073,7 @@ def llm_multimodal_audio_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     a CASE); a wrong lacing rule, CRC, or frame-length formula shifts
     a count. Sample DECODE for mp3/ogg stays the documented honest
     refusal (float MDCT needs codec libs)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _audio_probe_features, schema=AUDIO_PROBE_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _audio_probe_rows, AUDIO_PROBE_SCHEMA)
 
 
 # --------------------------------------------- L5r baseline TIFF decode
@@ -2324,78 +2110,58 @@ def _tiff_rgb(doc_id: int) -> list[list[tuple[int, int, int]]]:
     ]
 
 
-def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _tiff_rows(d: int):
     from .tiff import decode_tiff, write_tiff
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "gray_w", "gray_h", "gray_sum", "rgb_sum", "pal_sum",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            # knob cycle: compression none/LZW/PackBits, predictor 1/2,
-            # both byte orders, multi-strip splits, and the WhiteIsZero
-            # photometric inversion every 7th doc
-            gray = decode_tiff(
-                write_tiff(
-                    _tiff_gray(d),
-                    compression=[1, 5, 32773, 8][d % 4],
-                    predictor=1 + d % 2,
-                    big_endian=(d // 2) % 2 == 0,
-                    rows_per_strip=2 + d % 3,
-                    photometric=0 if d % 7 == 0 else None,
-                )
-            )
-            # predictor 2 rides only LZW/Deflate: TIFF 6.0 §14 defines
-            # the predictor as part of those codecs, and libtiff/JDK
-            # readers ignore it under PackBits/none. Decoded pixels are
-            # predictor-invariant, so the oracle is untouched.
-            rgb_comp = [5, 32773, 1, 8][d % 4]
-            rgb = decode_tiff(
-                write_tiff(
-                    _tiff_rgb(d),
-                    spp=3,
-                    compression=rgb_comp,
-                    predictor=(
-                        1 + (d // 3) % 2 if rgb_comp in (5, 8) else 1
-                    ),
-                    big_endian=d % 2 == 0,
-                    # every 6th-ish doc ships the RGB image as BigTIFF
-                    big=(d % 6 == 1),
-                )
-            )
-            # palette-color image: indices are doc arithmetic, the
-            # ColorMap is the fixed closed-form TIFF_PALETTE. Index
-            # depth cycles 4-bit (even docs) / 2-bit (odd docs) since
-            # round 13 — the sub-8 unpack is one loop for every legal
-            # depth, and both carry driver-hash evidence
-            pbits = 4 if d % 2 == 0 else 2
-            pal = decode_tiff(
-                write_tiff(
-                    [[(d + y * 8 + x) % (1 << pbits) for x in range(8)]
-                     for y in range(8)],
-                    palette=TIFF_PALETTE[: 1 << pbits],
-                    bits=pbits,
-                    compression=[32773, 1, 5, 8][d % 4],
-                    big_endian=(d // 5) % 2 == 0,
-                )
-            )
-            h, w, _nc, px = gray
-            out["doc_id"].append(d)
-            out["gray_w"].append(w)
-            out["gray_h"].append(h)
-            out["gray_sum"].append(sum(v for row in px for v in row))
-            _h2, _w2, _nc2, px2 = rgb
-            out["rgb_sum"].append(
-                sum(c for row in px2 for p in row for c in p)
-            )
-            _h3, _w3, _nc3, px3 = pal
-            out["pal_sum"].append(
-                sum(c for row in px3 for p in row for c in p)
-            )
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
+    # knob cycle: compression none/LZW/PackBits, predictor 1/2, both
+    # byte orders, multi-strip splits, and the WhiteIsZero photometric
+    # inversion every 7th doc
+    h, w, _nc, gray = decode_tiff(
+        write_tiff(
+            _tiff_gray(d),
+            compression=[1, 5, 32773, 8][d % 4],
+            predictor=1 + d % 2,
+            big_endian=(d // 2) % 2 == 0,
+            rows_per_strip=2 + d % 3,
+            photometric=0 if d % 7 == 0 else None,
         )
+    )
+    # predictor 2 rides only LZW/Deflate: TIFF 6.0 §14 defines the
+    # predictor as part of those codecs, and libtiff/JDK readers ignore
+    # it under PackBits/none. Decoded pixels are predictor-invariant,
+    # so the oracle is untouched.
+    rgb_comp = [5, 32773, 1, 8][d % 4]
+    rgb = decode_tiff(
+        write_tiff(
+            _tiff_rgb(d),
+            spp=3,
+            compression=rgb_comp,
+            predictor=(1 + (d // 3) % 2 if rgb_comp in (5, 8) else 1),
+            big_endian=d % 2 == 0,
+            # every 6th-ish doc ships the RGB image as BigTIFF
+            big=(d % 6 == 1),
+        )
+    )[3]
+    # palette-color image: indices are doc arithmetic, the ColorMap is
+    # the fixed closed-form TIFF_PALETTE. Index depth cycles 4-bit (even
+    # docs) / 2-bit (odd docs) — the sub-8 unpack is one loop for every
+    # legal depth, and both carry driver-hash evidence
+    pbits = 4 if d % 2 == 0 else 2
+    pal = decode_tiff(
+        write_tiff(
+            [[(d + y * 8 + x) % (1 << pbits) for x in range(8)]
+             for y in range(8)],
+            palette=TIFF_PALETTE[: 1 << pbits],
+            bits=pbits,
+            compression=[32773, 1, 5, 8][d % 4],
+            big_endian=(d // 5) % 2 == 0,
+        )
+    )[3]
+    yield (
+        d, w, h, sum(v for row in gray for v in row),
+        sum(c for row in rgb for p in row for c in p),
+        sum(c for row in pal for p in row for c in p),
+    )
 
 
 @register(
@@ -2441,23 +2207,22 @@ def _tiff_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
            FROM g JOIN r USING (doc_id) JOIN pl USING (doc_id)""",
 )
 def llm_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5r: REAL baseline-TIFF decode (round 9, tiff.py) — the
+    """L5r: REAL baseline-TIFF decode (tiff.py) — the
     scanned-document archive format a corpus ingest meets right after
     PDF: tag-directory walk in BOTH byte orders, strips with
     RowsPerStrip splits, Compression 1/5/8/32773 (LZW shared
     byte-for-byte with PDF LZWDecode; PackBits is TIFF 6.0 §9's
     scheme where 128 is a no-op, NOT the PDF RunLengthDecode EOD; 8 is
     Adobe Deflate), horizontal-differencing predictor, the WhiteIsZero photometric
-    inversion, and palette index depth 4-bit/2-bit (round 13: the
-    sub-8 unpack is one loop for 1/2/4-bit alike) — all cycled per doc
+    inversion, and palette index depth 4-bit/2-bit (the sub-8 unpack
+    is one loop for 1/2/4-bit alike) — all cycled per doc
     so every path carries driver-hash evidence. Bilevel Group 3/4 fax stays an honest refusal: the
     T.4/T.6 code tables are arbitrary published constants a
     from-memory implementation could get self-consistently wrong.
     Oracle: pixel sums in closed form from doc_id arithmetic. Scale
     shape: zero-exchange mapInPandas, fixed-width rows out, pixel
     volume capped per doc (MAX_TEXT_BYTES)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_tiff_features, schema=TIFF_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _tiff_rows, TIFF_SCHEMA)
 
 
 # --------------------------------------------- L5u CCITT fax decode path
@@ -2486,45 +2251,40 @@ def _fax_bitmap(d: int) -> tuple[int, int, list[list[int]]]:
     return w, h, rows
 
 
-def _fax_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fax_rows(d: int):
     from .tiff import decode_tiff, write_tiff
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "fax_w", "fax_h", "black_sum", "pos_sum",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h, rows = _fax_bitmap(d)
-            # knob cycle: all three CCITT compressions, the G3 2D flag,
-            # and strip splitting — the decoded page must be identical
-            # through every path
-            comp = [2, 3, 4][d % 3]
-            tif = write_tiff(
-                rows,
-                compression=comp,
-                t4_two_d=(comp == 3 and (d // 3) % 2 == 0),
-                rows_per_strip=h if d % 5 < 3 else (h + 1) // 2,
-                big_endian=(d // 7) % 2 == 0,
-            )
-            dh, dw, _nc, px = decode_tiff(tif)
-            if (dh, dw) != (h, w):
-                raise ValueError(f"fax geometry {dh}x{dw} != {h}x{w}")
-            # photometric-0 output: white=255, black=0
-            black = pos = 0
-            for y, row in enumerate(px):
-                for x, v in enumerate(row):
-                    if v == 0:
-                        black += 1
-                        pos += x + w * y + 1
-            out["doc_id"].append(d)
-            out["fax_w"].append(w)
-            out["fax_h"].append(h)
-            out["black_sum"].append(black)
-            out["pos_sum"].append(pos)
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    w, h, rows = _fax_bitmap(d)
+    # knob cycle: all three CCITT compressions, the G3 2D flag, and
+    # strip splitting — the decoded page must be identical through
+    # every path
+    comp = [2, 3, 4][d % 3]
+    tif = write_tiff(
+        rows,
+        compression=comp,
+        t4_two_d=(comp == 3 and (d // 3) % 2 == 0),
+        rows_per_strip=h if d % 5 < 3 else (h + 1) // 2,
+        big_endian=(d // 7) % 2 == 0,
+    )
+    dh, dw, _nc, px = decode_tiff(tif)
+    if (dh, dw) != (h, w):
+        raise ValueError(f"fax geometry {dh}x{dw} != {h}x{w}")
+    # photometric-0 output: white=255, black=0; row-major scan order
+    # makes the 1-based flat index x + w*y + 1
+    black, pos = _black_sums(v for row in px for v in row)
+    yield d, w, h, black, pos
+
+
+def _black_sums(samples) -> tuple[int, int]:
+    """(black count, sum of 1-based positions of black samples) over a
+    row-major bilevel sample stream where black decodes to 0: the
+    weighted sum pins pixel placement, not just density."""
+    black = pos = 0
+    for i, v in enumerate(samples):
+        if v == 0:
+            black += 1
+            pos += i + 1
+    return black, pos
 
 
 @register(
@@ -2545,7 +2305,7 @@ def _fax_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
            GROUP BY d.doc_id""",
 )
 def llm_multimodal_tiff_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5u: REAL CCITT Group 3/4 fax decode (round 10, fax.py) — the
+    """L5u: REAL CCITT Group 3/4 fax decode (fax.py) — the
     bilevel compression of scanned-document TIFFs. The knob cycle per
     doc covers compression 2 (MH byte-aligned lines), 3 (T.4 EOLs,
     both the 1D and 2D-flag dialects via T4Options), and 4 (T.6 MMR),
@@ -2561,8 +2321,7 @@ def llm_multimodal_tiff_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs scanned uploads as opaque blobs; fax
     decode is multimodal-ingest surface this engine adds on top."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_fax_features, schema=FAX_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _fax_rows, FAX_SCHEMA)
 
 
 # ------------------------------------- L5w PDF CCITTFaxDecode filter path
@@ -2578,76 +2337,50 @@ PDF_FAX_SCHEMA = StructType(
 )
 
 
-def _pdf_fax_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _pdf_fax_rows(d: int):
     from .pdf import extract_pdf_images, write_pdf
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_images", "black_a", "wsum_a", "black_b", "wsum_b",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            wa, ha, rows_a = _fax_bitmap(d)
-            wb = 16 + d % 9
-            hb = 8 + d % 5
-            rows_b = [
-                [1 if (2 * d + 1 + 3 * x + 5 * y) % 7 < 3 else 0
-                 for x in range(wb)]
-                for y in range(hb)
-            ]
-            kb = d % 2  # image B cycles /K 0 (MH) and /K 1 (mixed 2D)
-            data = write_pdf(
-                [["fax doc"]],
-                images=[[
-                    {
-                        # image A: /K < 0 T.6 MMR — what office scanners
-                        # actually emit — cycling /EncodedByteAlign, the
-                        # /BlackIs1 + /Decode [1 0] writer pairing, and
-                        # the /ImageMask stencil form (no color space)
-                        "kind": "fax", "rows": rows_a,
-                        "width": wa, "height": ha, "k": -1,
-                        "byte_align": d % 2 == 1,
-                        "black_is_1": d % 5 == 0,
-                        "mask": d % 3 == 2,
-                    },
-                    {
-                        "kind": "fax", "rows": rows_b,
-                        "width": wb, "height": hb, "k": kb,
-                        "byte_align": kb == 0 and d % 3 == 0,
-                        "black_is_1": d % 5 == 3,
-                    },
-                ]],
-                # the L5l container cycle: ciphers 13 > 11 > 7, layouts
-                encrypt_rc4=(d % 7 == 0 and d % 11 != 0 and d % 13 != 0),
-                encrypt_aes=(d % 11 == 0 and d % 13 != 0),
-                encrypt_aes256=(d % 13 == 0),
-                xref_stream=(d % 4 == 1),
-                objstm=(d % 4 == 3),
-            )
-            imgs = extract_pdf_images(data)[0]
-            if len(imgs) != 2:
-                raise ValueError(f"expected 2 fax images, got {len(imgs)}")
-            sums = []
-            for im, (w, h) in zip(imgs, ((wa, ha), (wb, hb))):
-                if (im["width"], im["height"]) != (w, h):
-                    raise ValueError("fax image geometry drifted")
-                black = pos = 0
-                for i, v in enumerate(im["samples"]):
-                    if v == 0:  # /Decode-normalized: black = gray 0
-                        black += 1
-                        pos += i + 1
-                sums.append((black, pos))
-            out["doc_id"].append(d)
-            out["n_images"].append(len(imgs))
-            out["black_a"].append(sums[0][0])
-            out["wsum_a"].append(sums[0][1])
-            out["black_b"].append(sums[1][0])
-            out["wsum_b"].append(sums[1][1])
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    wa, ha, rows_a = _fax_bitmap(d)
+    wb = 16 + d % 9
+    hb = 8 + d % 5
+    rows_b = [
+        [1 if (2 * d + 1 + 3 * x + 5 * y) % 7 < 3 else 0 for x in range(wb)]
+        for y in range(hb)
+    ]
+    kb = d % 2  # image B cycles /K 0 (MH) and /K 1 (mixed 2D)
+    data = write_pdf(
+        [["fax doc"]],
+        images=[[
+            {
+                # image A: /K < 0 T.6 MMR — what office scanners actually
+                # emit — cycling /EncodedByteAlign, the /BlackIs1 +
+                # /Decode [1 0] writer pairing, and the /ImageMask
+                # stencil form (no color space)
+                "kind": "fax", "rows": rows_a,
+                "width": wa, "height": ha, "k": -1,
+                "byte_align": d % 2 == 1,
+                "black_is_1": d % 5 == 0,
+                "mask": d % 3 == 2,
+            },
+            {
+                "kind": "fax", "rows": rows_b,
+                "width": wb, "height": hb, "k": kb,
+                "byte_align": kb == 0 and d % 3 == 0,
+                "black_is_1": d % 5 == 3,
+            },
+        ]],
+        **_pdf_container_knobs(d),
+    )
+    imgs = extract_pdf_images(data)[0]
+    if len(imgs) != 2:
+        raise ValueError(f"expected 2 fax images, got {len(imgs)}")
+    sums = []
+    for im, (w, h) in zip(imgs, ((wa, ha), (wb, hb))):
+        if (im["width"], im["height"]) != (w, h):
+            raise ValueError("fax image geometry drifted")
+        # /Decode-normalized samples: black = gray 0
+        sums += _black_sums(im["samples"])
+    yield (d, len(imgs), *sums)
 
 
 @register(
@@ -2686,7 +2419,7 @@ def _pdf_fax_features(
            FROM a JOIN b USING (doc_id)""",
 )
 def llm_multimodal_pdf_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5w: PDF /CCITTFaxDecode raster filter (round 10) — scanner PDFs
+    """L5w: PDF /CCITTFaxDecode raster filter — scanner PDFs
     are fax strips wrapped per page, so this closes the last common
     raster-filter refusal in pdf.py. Per doc, two bilevel image
     XObjects: A is /K < 0 T.6 MMR (the dominant real-world dialect)
@@ -2708,8 +2441,7 @@ def llm_multimodal_pdf_fax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs uploaded PDFs as opaque blobs; the
     image-decode surface is what a training-data pipeline adds."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_pdf_fax_features, schema=PDF_FAX_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _pdf_fax_rows, PDF_FAX_SCHEMA)
 
 
 # --------------------------------------------- L5x tiled-TIFF layout path
@@ -2724,72 +2456,49 @@ TIFF_TILED_SCHEMA = StructType(
 )
 
 
-def _tiff_tiled_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _tiff_tiled_rows(d: int):
     from .tiff import decode_tiff_pages, write_tiff_multi
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "tiff_w", "tiff_h", "px_sum", "px_wsum",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = 40 + d % 27
-            h = 20 + d % 13
-            # depth cycle: every 11th doc is 16-BIT gray (2-byte
-            # samples in the file byte order), every 5th 4-bit, every
-            # 7th 2-bit — bit-packed rows repack per tile; sub-8
-            # samples scale by 255/(2^g - 1), 16-bit come back raw
-            g = (16 if d % 11 == 0 else
-                 4 if d % 5 == 0 else (2 if d % 7 == 0 else 8))
-            mx = (1 << g) - 1
-            # multi-page chain: every d%4==2 doc carries TWO IFDs
-            # (page 1's pattern reseeds by +1009)
-            n_pages = 2 if d % 4 == 2 else 1
-            pages = [
-                [
-                    [(x * 5 + y * 11 + d + p * 1009) % (mx + 1)
-                     for x in range(w)]
-                    for y in range(h)
-                ]
-                for p in range(n_pages)
-            ]
-            # knob cycle: tile grid shapes (edge tiles pad-and-crop on
-            # the never-aligned geometry), every byte codec, predictor,
-            # both byte orders, BigTIFF every 6th doc
-            opts = dict(
-                compression=[1, 5, 8, 32773][d % 4],
-                predictor=2 if d % 2 and d % 4 != 3 and g == 8 else 1,
-                bits=g,
-                tile_size=[(16, 16), (32, 16), (16, 32)][d % 3],
-                big_endian=(d // 2) % 2 == 0,
-                big=d % 6 == 0,
-            )
-            tif = write_tiff_multi(pages, **opts)
-            decoded = decode_tiff_pages(tif)
-            if len(decoded) != n_pages:
-                raise ValueError(
-                    f"IFD chain has {len(decoded)} pages, wrote {n_pages}"
-                )
-            s = ws = 0
-            for dh, dw, _nc, got in decoded:
-                if (dh, dw) != (h, w):
-                    raise ValueError(
-                        f"tiled geometry {dh}x{dw} != {h}x{w}"
-                    )
-                for y, row in enumerate(got):
-                    for x, v in enumerate(row):
-                        s += v
-                        ws += (x + w * y) * v
-            out["doc_id"].append(d)
-            out["tiff_w"].append(w)
-            out["tiff_h"].append(h)
-            out["px_sum"].append(s)
-            out["px_wsum"].append(ws)
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
+    w = 40 + d % 27
+    h = 20 + d % 13
+    # depth cycle: every 11th doc is 16-BIT gray (2-byte samples in the
+    # file byte order), every 5th 4-bit, every 7th 2-bit — bit-packed
+    # rows repack per tile; sub-8 samples scale by 255/(2^g - 1),
+    # 16-bit come back raw
+    g = 16 if d % 11 == 0 else 4 if d % 5 == 0 else (2 if d % 7 == 0 else 8)
+    # multi-page chain: every d%4==2 doc carries TWO IFDs (page 1's
+    # pattern reseeds by +1009)
+    n_pages = 2 if d % 4 == 2 else 1
+    pages = [
+        [[(x * 5 + y * 11 + d + p * 1009) % (1 << g) for x in range(w)]
+         for y in range(h)]
+        for p in range(n_pages)
+    ]
+    # knob cycle: tile grid shapes (edge tiles pad-and-crop on the
+    # never-aligned geometry), every byte codec, predictor, both byte
+    # orders, BigTIFF every 6th doc
+    decoded = decode_tiff_pages(
+        write_tiff_multi(
+            pages,
+            compression=[1, 5, 8, 32773][d % 4],
+            predictor=2 if d % 2 and d % 4 != 3 and g == 8 else 1,
+            bits=g,
+            tile_size=[(16, 16), (32, 16), (16, 32)][d % 3],
+            big_endian=(d // 2) % 2 == 0,
+            big=d % 6 == 0,
         )
+    )
+    if len(decoded) != n_pages:
+        raise ValueError(f"IFD chain has {len(decoded)} pages, wrote {n_pages}")
+    s = ws = 0
+    for dh, dw, _nc, got in decoded:
+        if (dh, dw) != (h, w):
+            raise ValueError(f"tiled geometry {dh}x{dw} != {h}x{w}")
+        for y, row in enumerate(got):
+            for x, v in enumerate(row):
+                s += v
+                ws += (x + w * y) * v
+    yield d, w, h, s, ws
 
 
 @register(
@@ -2826,14 +2535,14 @@ def _tiff_tiled_features(
            GROUP BY g.doc_id""",
 )
 def llm_multimodal_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5x: tiled-TIFF layout decode (round 10, TIFF 6.0 §15) — the
+    """L5x: tiled-TIFF layout decode (TIFF 6.0 §15) — the
     organization pyramidal and GeoTIFF-style scans use. Per doc the
     knob cycle covers three tile grids against a never-tile-aligned
     geometry (edge tiles pad-then-crop), all four byte codecs, the
     horizontal-differencing predictor (which must RESET at each tile
     boundary — a strip-shaped pass would smear across seams), both
     byte orders, and BigTIFF containers; every 5th/7th doc is 4-/2-bit
-    bit-packed grayscale (round-10 sub-8 depth support — packing
+    bit-packed grayscale (sub-8 depth support — packing
     resets per tile row, samples scale by the exact-integer linear
     mapping x17/x85); every d%4==2 doc is a MULTI-PAGE file (two IFDs
     chained by the next-IFD pointer, decode_tiff_pages walking the
@@ -2848,8 +2557,7 @@ def llm_multimodal_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference (SD2E/pipelinejobs-indexer,
     reactor.py:16-213) catalogs scans as opaque blobs; tiled decode is
     multimodal-ingest surface this engine adds."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
-    return docs.mapInPandas(_tiff_tiled_features, schema=TIFF_TILED_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _tiff_tiled_rows, TIFF_TILED_SCHEMA)
 
 
 # ----------------------------------------------- L5g real JPEG decode path
@@ -2881,26 +2589,20 @@ def _jpeg_dcs(doc_id: int) -> list[int]:
     ]
 
 
-def _jpeg_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .jpeg import decode_jpeg, synth_dc_jpeg
+def _jpeg_corner_rows(doc_id: int, jpg: bytes):
+    """Decode one 16x16 JPEG to the JPEG_SCHEMA row: geometry plus the
+    four corner pixels, one per 8x8 DC block."""
+    from .jpeg import decode_jpeg
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_components",
-            "px_tl", "px_tr", "px_bl", "px_br",
-        )}
-        for doc_id in pdf["doc_id"]:
-            jpg = synth_dc_jpeg([_jpeg_dcs(int(doc_id))], 16, 16, q=JPEG_Q)
-            h, w, nc, px = decode_jpeg(jpg)
-            out["doc_id"].append(int(doc_id))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_components"].append(nc)
-            out["px_tl"].append(px[0][0])
-            out["px_tr"].append(px[0][15])
-            out["px_bl"].append(px[15][0])
-            out["px_br"].append(px[15][15])
-        yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in out.items()})
+    h, w, nc, px = decode_jpeg(jpg)
+    yield doc_id, w, h, nc, px[0][0], px[0][15], px[15][0], px[15][15]
+
+
+def _jpeg_rows(doc_id: int):
+    from .jpeg import synth_dc_jpeg
+
+    jpg = synth_dc_jpeg([_jpeg_dcs(doc_id)], 16, 16, q=JPEG_Q)
+    return _jpeg_corner_rows(doc_id, jpg)
 
 
 @register(
@@ -2935,44 +2637,22 @@ def llm_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus the stage reads the binary column (S15 feeds it); a
     production deployment swaps jpeg.py for libjpeg-turbo bindings with
     the identical stage shape — the engine-side contract is unchanged."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(_jpeg_features, schema=JPEG_SCHEMA)
+    return map_rows(doc_ids(spark, sf_dir), _jpeg_rows, JPEG_SCHEMA)
 
 
 # ------------------------------ L5t progressive (SOF2) JPEG decode path
-def _jpeg_prog_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from .jpeg import decode_jpeg, synth_progressive_jpeg
+def _jpeg_prog_rows(d: int):
+    from .jpeg import synth_progressive_jpeg
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_components",
-            "px_tl", "px_tr", "px_bl", "px_br",
-        )}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            blocks = [(dc, 1, 0) for dc in _jpeg_dcs(d)]
-            jpg = synth_progressive_jpeg(
-                blocks, 16, 16, q=JPEG_Q,
-                # odd docs use DC successive approximation (a first
-                # scan at Al=1 + a refinement-bit scan), even docs a
-                # single full-precision DC scan — both real scan
-                # scripts, same closed-form pixels
-                refine_dc=(d % 2 == 1),
-            )
-            h, w, nc, px = decode_jpeg(jpg)
-            out["doc_id"].append(d)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_components"].append(nc)
-            out["px_tl"].append(px[0][0])
-            out["px_tr"].append(px[0][15])
-            out["px_bl"].append(px[15][0])
-            out["px_br"].append(px[15][15])
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-        )
+    jpg = synth_progressive_jpeg(
+        [(dc, 1, 0) for dc in _jpeg_dcs(d)], 16, 16, q=JPEG_Q,
+        # odd docs use DC successive approximation (a first scan at
+        # Al=1 + a refinement-bit scan), even docs a single
+        # full-precision DC scan — both real scan scripts, same
+        # closed-form pixels
+        refine_dc=(d % 2 == 1),
+    )
+    return _jpeg_corner_rows(d, jpg)
 
 
 @register(
@@ -2990,7 +2670,7 @@ def _jpeg_prog_features(
 def llm_multimodal_jpeg_progressive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """L5t: REAL progressive-JPEG decode (round 9) — SOF2 is what most
+    """L5t: REAL progressive-JPEG decode — SOF2 is what most
     web JPEGs actually are, and it was this decoder's last honest
     in-reach refusal: scans now accumulate into a per-block coefficient
     store (DC-first, DC refinement bits, AC-first spectral bands with
@@ -3006,10 +2686,7 @@ def llm_multimodal_jpeg_progressive(
     reordering, not a different image). Full random DC+AC progressive
     content is differential-pinned against the baseline decoder in
     unit tests, pixel-exact. Scale: the L5g mapInPandas shape."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _jpeg_prog_features, schema=JPEG_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _jpeg_prog_rows, JPEG_SCHEMA)
 
 
 # -------------------------- L5m float-DSP (AC) JPEG with Parseval bands
@@ -3030,41 +2707,22 @@ def _jpeg_dsp_blocks(d: int) -> list[tuple[int, int, int]]:
     return out
 
 
-def _jpeg_dsp_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_dsp_rows(d: int):
     from .jpeg import decode_jpeg, synth_ac_jpeg
 
     q = JPEG_DSP_Q
-    for pdf in batches:
-        out = {k: [] for k in
-               ("doc_id", "n_blocks", "n_pixels", "dc_ok", "energy_ok")}
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            blocks = _jpeg_dsp_blocks(d)
-            jpg = synth_ac_jpeg(blocks, 8 * len(blocks), 8, q=q)
-            h, w, nc, px = decode_jpeg(jpg)
-            dc_ok = energy_ok = True
-            for b, (dc, u, ac) in enumerate(blocks):
-                pix = [px[y][8 * b + x] for y in range(8) for x in range(8)]
-                mean = sum(pix) / 64.0
-                energy = sum((p - mean) ** 2 for p in pix)
-                dc_ok = dc_ok and abs(mean - (128 + q * dc / 8.0)) <= 1.0
-                energy_ok = energy_ok and (
-                    abs(energy - (q * ac) ** 2) <= 16 * q * abs(ac) + 64
-                )
-            out["doc_id"].append(d)
-            out["n_blocks"].append(len(blocks))
-            out["n_pixels"].append(h * w)
-            out["dc_ok"].append(dc_ok)
-            out["energy_ok"].append(energy_ok)
-        yield pd.DataFrame(
-            {
-                k: pd.Series(
-                    v, dtype="int64" if k != "dc_ok" and k != "energy_ok"
-                    else "bool"
-                )
-                for k, v in out.items()
-            }
+    blocks = _jpeg_dsp_blocks(d)
+    h, w, nc, px = decode_jpeg(synth_ac_jpeg(blocks, 8 * len(blocks), 8, q=q))
+    dc_ok = energy_ok = True
+    for b, (dc, u, ac) in enumerate(blocks):
+        pix = [px[y][8 * b + x] for y in range(8) for x in range(8)]
+        mean = sum(pix) / 64.0
+        energy = sum((p - mean) ** 2 for p in pix)
+        dc_ok = dc_ok and abs(mean - (128 + q * dc / 8.0)) <= 1.0
+        energy_ok = energy_ok and (
+            abs(energy - (q * ac) ** 2) <= 16 * q * abs(ac) + 64
         )
+    yield d, len(blocks), h * w, dc_ok, energy_ok
 
 
 JPEG_DSP_SCHEMA = StructType(
@@ -3088,7 +2746,7 @@ JPEG_DSP_SCHEMA = StructType(
 )
 def llm_multimodal_jpeg_dsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5m: the float-DSP door, opened with the tolerance-banded oracle
-    pattern (VERDICT r8 item 6; the agg_approx_distinct shape). L5g's
+    pattern (the agg_approx_distinct shape). L5g's
     DC-only blocks collapse the real float IDCT to integers; here every
     block carries one nonzero AC coefficient (synth_ac_jpeg: run-length
     + ZRL paths, frequencies u=1..7 cycled per doc), so the cosine
@@ -3110,10 +2768,7 @@ def llm_multimodal_jpeg_dsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical mapInPandas shape to L5g — synthesis + decode in
     the worker, five fixed-width columns out, shuffle O(rows) never
     O(bytes)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _jpeg_dsp_features, schema=JPEG_DSP_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _jpeg_dsp_rows, JPEG_DSP_SCHEMA)
 
 
 # ------------------------------------- L5h real MJPEG/AVI frame-pixel path
@@ -3214,29 +2869,16 @@ def assemble_avi_mjpeg(jpegs: list[bytes]) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _video_frame_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = (
-        "doc_id", "frame_idx", "n_frames", "width", "height",
-        "px_tl", "px_tr", "px_bl", "px_br",
-    )
-    for pdf in batches:
-        out = {k: [] for k in cols}
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            # one container walk per doc: sample off the walked meta
-            # directly (calling sample_frames would re-walk the bytes)
-            meta = avi_mjpeg_frames(synth_avi_mjpeg(doc_id))
-            for idx, px in _sample_from_meta(meta, AVI_FRAME_EVERY):
-                out["doc_id"].append(doc_id)
-                out["frame_idx"].append(idx)
-                out["n_frames"].append(meta["n_frames"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["px_tl"].append(px[0][0])
-                out["px_tr"].append(px[0][AVI_SIDE - 1])
-                out["px_bl"].append(px[AVI_SIDE - 1][0])
-                out["px_br"].append(px[AVI_SIDE - 1][AVI_SIDE - 1])
-        yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in out.items()})
+def _video_frame_rows(doc_id: int):
+    # one container walk per doc: sample off the walked meta directly
+    # (calling sample_frames would re-walk the bytes)
+    meta = avi_mjpeg_frames(synth_avi_mjpeg(doc_id))
+    s = AVI_SIDE - 1
+    for idx, px in _sample_from_meta(meta, AVI_FRAME_EVERY):
+        yield (
+            doc_id, idx, meta["n_frames"], meta["width"], meta["height"],
+            px[0][0], px[0][s], px[s][0], px[s][s],
+        )
 
 
 @register(
@@ -3254,7 +2896,8 @@ def _video_frame_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
 )
 def llm_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5h: REAL video frame-pixel decode — closes the last codec gap that
-    pure-stdlib code CAN close (VERDICT r4 item 3): per doc, a hand-
+    pure-stdlib code CAN close (MJPEG frames are standalone baseline
+    JPEGs, so no inter-frame codec is needed): per doc, a hand-
     assembled MJPEG-in-AVI container (2-6 frames, each a closed-form
     baseline JPEG) is walked by avi_mjpeg_frames (RIFF chunk grammar —
     struct parsing only) and every AVI_FRAME_EVERY-th frame is decoded
@@ -3278,10 +2921,7 @@ def llm_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (H.264 etc.) still need ffmpeg and keep the sample_frames stub
     contract — MJPEG is the codec a stdlib-only container can decode
     honestly, and it exercises the identical engine-side plumbing."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id").mapInPandas(
-        _video_frame_features, schema=VIDEO_FRAMES_SCHEMA
-    )
+    return map_rows(doc_ids(spark, sf_dir), _video_frame_rows, VIDEO_FRAMES_SCHEMA)
 
 
 # ------------------------------ L5y committed-fixture conformance query
@@ -3402,58 +3042,34 @@ CONFORMANCE_SCHEMA = StructType(
 )
 
 
-def _conformance_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _conformance_rows(name: str):
     import numpy as np
 
-    by_name = {m["name"]: m for m in _conformance_manifest()}
-    for pdf in batches:
-        out = {k: [] for k in (
-            "name", "width", "height", "channels",
-            "decode_ok", "px_sum", "px_wsum",
-        )}
-        for name in pdf["name"]:
-            m = by_name[str(name)]
-            got = _conformance_decode(m)
-            ref = _conformance_ref(m)
-            if got.shape[2] == 1 and ref.shape[2] == 3:
-                ok_gray = (
-                    (ref[:, :, 0] == ref[:, :, 1]).all()
-                    and (ref[:, :, 0] == ref[:, :, 2]).all()
-                )
-                ref = ref[:, :, :1]
-            else:
-                ok_gray = True
-            if m["lossy"]:
-                diff = np.abs(got.astype("int64") - ref.astype("int64"))
-                ok = bool(
-                    ok_gray and got.shape == ref.shape
-                    and diff.max() <= 2 and diff.mean() <= 0.1
-                )
-                s = ws = -1
-            else:
-                ok = bool(
-                    ok_gray and got.shape == ref.shape
-                    and (got == ref).all()
-                )
-                flat = got.reshape(-1).astype("int64")
-                w = np.arange(1, flat.size + 1, dtype="int64")
-                s, ws = int(flat.sum()), int((flat * w).sum())
-            out["name"].append(m["name"])
-            out["width"].append(got.shape[1])
-            out["height"].append(got.shape[0])
-            out["channels"].append(got.shape[2])
-            out["decode_ok"].append(1 if ok else 0)
-            out["px_sum"].append(s)
-            out["px_wsum"].append(ws)
-        yield pd.DataFrame({
-            "name": pd.Series(out["name"], dtype="object"),
-            **{k: pd.Series(out[k], dtype="int64") for k in (
-                "width", "height", "channels",
-                "decode_ok", "px_sum", "px_wsum",
-            )},
-        })
+    m = next(m for m in _conformance_manifest() if m["name"] == name)
+    got = _conformance_decode(m)
+    ref = _conformance_ref(m)
+    if got.shape[2] == 1 and ref.shape[2] == 3:
+        ok_gray = (
+            (ref[:, :, 0] == ref[:, :, 1]).all()
+            and (ref[:, :, 0] == ref[:, :, 2]).all()
+        )
+        ref = ref[:, :, :1]
+    else:
+        ok_gray = True
+    if m["lossy"]:
+        diff = np.abs(got.astype("int64") - ref.astype("int64"))
+        ok = bool(
+            ok_gray and got.shape == ref.shape
+            and diff.max() <= 2 and diff.mean() <= 0.1
+        )
+        s = ws = -1
+    else:
+        ok = bool(ok_gray and got.shape == ref.shape and (got == ref).all())
+        flat = got.reshape(-1).astype("int64")
+        w = np.arange(1, flat.size + 1, dtype="int64")
+        s, ws = int(flat.sum()), int((flat * w).sum())
+    h, w, ch = got.shape
+    yield name, w, h, ch, 1 if ok else 0, s, ws
 
 
 def _conformance_oracle_sql() -> str:
@@ -3490,8 +3106,9 @@ def _conformance_oracle_sql() -> str:
 def llm_multimodal_conformance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """L5y: third-party codec conformance UNDER THE DRIVER HASH (the
-    round-9 VERDICT item-1 stretch goal): every committed JDK-encoded
+    """L5y: third-party codec conformance UNDER THE DRIVER HASH (pytest
+    alone would leave the driver sweep blind to codec regressions):
+    every committed JDK-encoded
     fixture (PNG at all five legal depths, baseline+progressive JPEG,
     GIF, TIFF across LZW/PackBits/Deflate/fax/tiled/multi-page/
     palette/bilevel) is decoded by the in-repo codecs and compared to
@@ -3510,6 +3127,4 @@ def llm_multimodal_conformance(
     surface this engine adds."""
     names = sorted(m["name"] for m in _conformance_manifest())
     df = spark.createDataFrame([(n,) for n in names], ["name"])
-    return df.repartition(8).mapInPandas(
-        _conformance_features, schema=CONFORMANCE_SCHEMA
-    )
+    return map_rows(df.repartition(8), _conformance_rows, CONFORMANCE_SCHEMA)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..oracle import with_fixtures
 from ..registry import register
-from ..tables import load_table
+from ..tables import load_table, map_rows
 
 # Nested binary fixture tree (scripts/make_fixture_tree.py): mirrors the
 # shape of the reference's archive tree /root/reference/tests/store/uploads/
@@ -215,21 +215,8 @@ def scan_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan shape; member-content extraction is a separate operator
     feeding the multimodal decode path (llm/multimodal.py).
     """
-    import pandas as pd
-
-    def expand(batches):
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rel = path.split("/uploads/", 1)[-1]
-                out.extend(_zip_member_rows(rel, bytes(content)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "archive", "member", "size_bytes", "compress_size",
-                    "crc32", "method", "is_dir",
-                ],
-            )
+    def expand(path, content):
+        return _zip_member_rows(path.split("/uploads/", 1)[-1], bytes(content))
 
     df = (
         spark.read.format("binaryFile")
@@ -238,22 +225,38 @@ def scan_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(_UPLOADS)
         .select("path", "content")
     )
-    return df.mapInPandas(expand, ARCHIVE_MEMBER_SCHEMA)
+    return map_rows(df, expand, ARCHIVE_MEMBER_SCHEMA)
 
 
 MEMBER_CONTENT_MAX_BYTES = 1 << 20  # skip members larger than 1 MB
 
 
-def _member_content_oracle_sql() -> str:
-    """Ground-truth extraction table off the committed fixtures (direct
-    filesystem reads, not Spark): sha256 + sniffed mime per extracted
-    member. Lazily rendered (registry resolves at load_all)."""
+def _zip_content_rows(archive_rel: str, content: bytes):
+    """(archive, member, n_bytes, sha256, sniffed mime) per extracted
+    (size-capped, non-directory) member of one zip's bytes. Like
+    _zip_member_rows, shared by the distributed extractor and the
+    oracle builder over different byte sources."""
     import hashlib
     import io
     import zipfile
 
     from ..llm.multimodal import sniff_mime
 
+    with zipfile.ZipFile(io.BytesIO(content)) as zf:
+        for info in zf.infolist():
+            if info.is_dir() or info.file_size > MEMBER_CONTENT_MAX_BYTES:
+                continue
+            data = zf.read(info)
+            yield (
+                archive_rel, info.filename, len(data),
+                hashlib.sha256(data).hexdigest(), sniff_mime(data[:16]),
+            )
+
+
+def _member_content_oracle_sql() -> str:
+    """Ground-truth extraction table off the committed fixtures (direct
+    filesystem reads, not Spark): sha256 + sniffed mime per extracted
+    member. Lazily rendered (registry resolves at load_all)."""
     rows = []
     for dirpath, _, files in sorted(os.walk(_UPLOADS)):
         for fn in sorted(files):
@@ -261,16 +264,11 @@ def _member_content_oracle_sql() -> str:
                 continue
             p = os.path.join(dirpath, fn)
             rel = os.path.relpath(p, _UPLOADS)
-            with open(p, "rb") as f, zipfile.ZipFile(io.BytesIO(f.read())) as zf:
-                for info in zf.infolist():
-                    if info.is_dir() or info.file_size > MEMBER_CONTENT_MAX_BYTES:
-                        continue
-                    data = zf.read(info)
+            with open(p, "rb") as f:
+                for r in _zip_content_rows(rel, f.read()):
                     rows.append(
-                        f"({_sql_str(rel)}, {_sql_str(info.filename)},"
-                        f" {len(data)},"
-                        f" '{hashlib.sha256(data).hexdigest()}',"
-                        f" '{sniff_mime(data[:16])}')"
+                        f"({_sql_str(r[0])}, {_sql_str(r[1])}, {r[2]},"
+                        f" '{r[3]}', '{r[4]}')"
                     )
     values = ",\n           ".join(rows)
     return f"""SELECT archive, member, CAST(n_bytes AS BIGINT) AS n_bytes,
@@ -297,40 +295,9 @@ def scan_archive_member_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     and result volume stay O(members), not O(bytes). The oracle is the
     same extraction off the committed fixtures via direct file reads —
     proving the distributed path byte-identical with ground truth."""
-    import hashlib
-    import io
-    import zipfile
 
-    import pandas as pd
-
-    from ..llm.multimodal import sniff_mime
-
-    def extract(batches):
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rel = path.split("/uploads/", 1)[-1]
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
-                    for info in zf.infolist():
-                        if (
-                            info.is_dir()
-                            or info.file_size > MEMBER_CONTENT_MAX_BYTES
-                        ):
-                            continue
-                        data = zf.read(info)
-                        out.append(
-                            (
-                                rel,
-                                info.filename,
-                                len(data),
-                                hashlib.sha256(data).hexdigest(),
-                                sniff_mime(data[:16]),
-                            )
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["archive", "member", "n_bytes", "sha256", "mime_sniffed"],
-            )
+    def extract(path, content):
+        return _zip_content_rows(path.split("/uploads/", 1)[-1], bytes(content))
 
     df = (
         spark.read.format("binaryFile")
@@ -339,7 +306,8 @@ def scan_archive_member_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(_UPLOADS)
         .select("path", "content")
     )
-    return df.mapInPandas(
+    return map_rows(
+        df,
         extract,
         "archive string, member string, n_bytes bigint, sha256 string,"
         " mime_sniffed string",
@@ -428,7 +396,6 @@ TAR_MEMBER_SCHEMA = (
     "archive string, member string, size_bytes bigint, mtime bigint,"
     " is_dir boolean, sha16 string"
 )
-TAR_MEMBER_COLS = ["archive", "member", "size_bytes", "mtime", "is_dir", "sha16"]
 
 
 def _tar_member_rows(archive_rel: str, content: bytes):
@@ -508,21 +475,14 @@ def scan_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def expand(batches):
-        import pandas as pd
+    def expand(path, content):
+        rel = os.path.relpath(path.replace("file:", ""), _UPLOADS)
+        return _tar_member_rows(rel, bytes(content))
 
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rel = os.path.relpath(path.replace("file:", ""), _UPLOADS)
-                out.extend(_tar_member_rows(rel, bytes(content)))
-            yield pd.DataFrame(out, columns=TAR_MEMBER_COLS)
-
-    return df.mapInPandas(expand, TAR_MEMBER_SCHEMA)
+    return map_rows(df, expand, TAR_MEMBER_SCHEMA)
 
 
 WEBDATASET_PARTS_SCHEMA = "shard string, key string, ext string, payload string"
-WEBDATASET_PARTS_COLS = ["shard", "key", "ext", "payload"]
 
 
 def _webdataset_oracle_sql() -> str:
@@ -580,30 +540,18 @@ def scan_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def parts(batches):
+    def parts(path, content):
         import io
         import tarfile
 
-        import pandas as pd
+        rel = os.path.relpath(path.replace("file:", ""), _UPLOADS)
+        with tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r:*") as tf:
+            for info in tf:
+                if info.isreg():
+                    key, _, ext = info.name.rpartition(".")
+                    yield rel, key, ext, tf.extractfile(info).read().decode("utf-8")
 
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rel = os.path.relpath(path.replace("file:", ""), _UPLOADS)
-                with tarfile.open(
-                    fileobj=io.BytesIO(bytes(content)), mode="r:*"
-                ) as tf:
-                    for info in tf:
-                        if not info.isreg():
-                            continue
-                        key, _, ext = info.name.rpartition(".")
-                        out.append(
-                            (rel, key, ext,
-                             tf.extractfile(info).read().decode("utf-8"))
-                        )
-            yield pd.DataFrame(out, columns=WEBDATASET_PARTS_COLS)
-
-    p = df.mapInPandas(parts, WEBDATASET_PARTS_SCHEMA)
+    p = map_rows(df, parts, WEBDATASET_PARTS_SCHEMA)
     return p.groupBy("shard", "key").agg(
         F.coalesce(
             F.max(F.when(F.col("ext") == "txt", F.col("payload"))), F.lit("")

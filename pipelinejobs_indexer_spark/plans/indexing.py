@@ -198,43 +198,15 @@ def pipeline_document_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's single row group), and is a no-op at real scale; stage
     2 rides the same tasks (no boundary); stage 3 is the only
     shuffle, 8 groups with map-side combine."""
-    from ..tables import load_table, spread
+    from ..tables import doc_ids, map_rows
 
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
+    def extract(d):
+        from ..llm.multimodal import synth_text_pdf
+        from ..llm.pdf import extract_pdf_text
 
-    def extract(batches):
-        import pandas as pd
+        yield d, extract_pdf_text(synth_text_pdf(d))
 
-        from ..llm.multimodal import _pdf_pages
-        from ..llm.pdf import extract_pdf_text, write_pdf
-
-        for pdf in batches:
-            ids, texts = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                data = write_pdf(
-                    _pdf_pages(d),
-                    compress=True,
-                    use_tj_array=(d % 3 == 1),
-                    use_tm=(d % 9 == 4),
-                    hex_strings=(d % 3 == 2),
-                    ascii85=(d % 5 == 0),
-                    encrypt_rc4=(d % 7 == 0 and d % 11 != 0 and d % 13 != 0),
-                    encrypt_aes=(d % 11 == 0 and d % 13 != 0),
-                    encrypt_aes256=(d % 13 == 0),
-                    xref_stream=(d % 4 == 1),
-                    objstm=(d % 4 == 3),
-                    font=[None, "winansi", "differences", "type0",
-                          "macroman", None][d % 6],
-                )
-                ids.append(d)
-                texts.append(extract_pdf_text(data))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"),
-                 "text": pd.Series(texts, dtype="object")}
-            )
-
-    extracted = docs.mapInPandas(extract, "doc_id bigint, text string")
+    extracted = map_rows(doc_ids(spark, sf_dir), extract, "doc_id bigint, text string")
     feats = extracted.select(
         "doc_id",
         F.length("text").alias("n_chars"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructType
 
 from .session import tune
 
@@ -138,6 +139,51 @@ def spread(df: DataFrame) -> DataFrame:
     if width < n:
         df = df.repartition(n)
     return df
+
+
+def doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table's ``doc_id`` column, spread across cores: the
+    input of every per-doc decode leg. spread() runs on the loaded scan,
+    before the projection, so it still sees load_table's scan marker and
+    memoizes the width probe."""
+    return spread(load_table(spark, sf_dir, "documents")).select("doc_id")
+
+
+def map_rows(df: DataFrame, per_row, schema) -> DataFrame:
+    """Run ``per_row`` over every row of ``df`` in one ``mapInPandas``
+    stage. ``per_row(*row)`` takes the row's columns in ``df`` order and
+    yields zero or more output tuples in ``schema`` field order; see
+    map_row_batches for how each batch's frame is typed. ``schema`` is a
+    StructType or a DDL string."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+
+    def batches_fn(batches):
+        return map_row_batches(batches, per_row, schema)
+
+    return df.mapInPandas(batches_fn, schema=schema)
+
+
+_PANDAS_DTYPES = {LongType: "int64", BooleanType: "bool"}
+
+
+def map_row_batches(batches, per_row, schema: StructType):
+    """map_rows' batch generator: one output frame per input batch, built
+    column-wise from the tuples ``per_row`` yields. Each column takes its
+    field's dtype (bigint -> int64, boolean -> bool, anything else
+    object), so a batch whose rows all yield nothing still carries the
+    schema's columns and dtypes."""
+    import pandas as pd
+
+    names = schema.fieldNames()
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType), object) for f in schema.fields]
+    for pdf in batches:
+        rows = zip(*(pdf[c].tolist() for c in pdf.columns))
+        out = [t for row in rows for t in per_row(*row)]
+        cols = list(zip(*out)) if out else [()] * len(names)
+        yield pd.DataFrame(
+            {n: pd.Series(c, dtype=t) for n, c, t in zip(names, cols, dtypes)}
+        )
 
 
 # Scan-width memo. Two key shapes share it (no collision): spread()'s

@@ -104,35 +104,6 @@ def test_dedup_cores_match_oracle_on_random_corpora(
     check()
 
 
-def test_cdc_gear_hash_matches_oracle_on_random_corpora(spark):
-    """The gear window hash gets its own fuzz family: random
-    adversarial corpora through cdc_duplicate_chunks vs the regenerated
-    gear oracle."""
-    import duckdb
-
-    oracle = dedup._cdc_sql()
-
-    @settings(
-        max_examples=10,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(rows=corpora())
-    def check(rows):
-        if not rows:
-            return
-        _run(
-            spark,
-            duckdb,
-            rows,
-            dedup.cdc_duplicate_chunks,
-            oracle,
-            "llm_dedup_cdc[gear]",
-        )
-
-    check()
-
-
 def test_curate_full_matches_oracle_on_random_corpora(spark):
     """End-to-end fuzz of the capstone curation DAG (normalize-dedup →
     decontaminate → quality gate → stratified sample) vs its registered

@@ -3027,10 +3027,13 @@ def test_phash_dct_banded_exactness_and_separation():
     import pandas as pd
 
     from pipelinejobs_indexer_spark.llm import dedup as D
+    from pipelinejobs_indexer_spark.tables import map_row_batches
 
     assert D.PHASH_DCT_MAX_DIST < D.PHASH_DCT_BANDS  # exactness precondition
 
-    out = pd.concat(list(D._phash_dct_features([pd.DataFrame({"doc_id": range(120)})])))
+    out = pd.concat(list(map_row_batches(
+        [pd.DataFrame({"doc_id": range(120)})], D._phash_dct_rows, D.BANDS_SCHEMA
+    )))
     assert len(out) == 120 and all(len(b) == D.PHASH_DCT_BANDS for b in out.bands)
     assert all(0 <= v < (1 << 16) for b in out.bands for v in b)
     h = dict(zip(out.doc_id, out.bands))
@@ -3087,10 +3090,13 @@ def test_audiohash_banded_exactness_and_separation():
     import pandas as pd
 
     from pipelinejobs_indexer_spark.llm import dedup as D
+    from pipelinejobs_indexer_spark.tables import map_row_batches
 
     assert D.AUDIOHASH_MAX_DIST < D.PHASH_DCT_BANDS
 
-    out = pd.concat(list(D._audiohash_features([pd.DataFrame({"doc_id": range(120)})])))
+    out = pd.concat(list(map_row_batches(
+        [pd.DataFrame({"doc_id": range(120)})], D._audiohash_rows, D.BANDS_SCHEMA
+    )))
     h = dict(zip(out.doc_id, out.bands))
 
     def ham(a, b):
@@ -3156,10 +3162,11 @@ def test_videohash_match_semantics_and_decode_is_load_bearing():
     import pandas as pd
 
     from pipelinejobs_indexer_spark.llm import dedup as D
+    from pipelinejobs_indexer_spark.tables import map_row_batches
 
-    out = pd.concat(list(
-        D._videohash_features([pd.DataFrame({"doc_id": range(90)})])
-    ))
+    out = pd.concat(list(map_row_batches(
+        [pd.DataFrame({"doc_id": range(90)})], D._videohash_rows, D.FRAME_HASH_SCHEMA
+    )))
     # decoded frame hashes equal the closed form (2*dc + 128 corners)
     for _, r in out.iterrows():
         d, f = int(r.doc_id), int(r.frame_idx)
@@ -3204,10 +3211,11 @@ def test_video_containment_offset_semantics():
     import pandas as pd
 
     from pipelinejobs_indexer_spark.llm import dedup as D
+    from pipelinejobs_indexer_spark.tables import map_row_batches
 
-    out = pd.concat(list(
-        D._vcontain_features([pd.DataFrame({"doc_id": range(90)})])
-    ))
+    out = pd.concat(list(map_row_batches(
+        [pd.DataFrame({"doc_id": range(90)})], D._vcontain_rows, D.FRAME_HASH_SCHEMA
+    )))
     by_doc = {
         d: g.sort_values("frame_idx").fhash.tolist()
         for d, g in out.groupby("doc_id")

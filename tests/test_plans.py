@@ -758,3 +758,50 @@ def test_decode_leg_spread_keeps_scan_width_memo(spark, sf_dir, name):
     key = (spark.sparkContext.applicationId, f"{sf_dir}/documents.parquet")
     assert key in tables._SCAN_WIDTH_CACHE
     assert "RoundRobinPartitioning" in _formatted_plan(df)
+
+
+def test_map_row_batches_types_columns_from_schema():
+    """map_rows' batch generator, driven directly with pandas (no Spark
+    session): per_row gets each input row's columns positionally and
+    may yield 0, 1 or 3 rows; the output columns follow the schema's
+    order with bigint -> int64, boolean -> bool and anything else
+    object, and a batch whose rows all yield nothing still carries
+    those columns and dtypes."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        BooleanType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from pipelinejobs_indexer_spark.tables import map_row_batches
+
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("tag", StringType()),
+            StructField("odd", BooleanType()),
+        ]
+    )
+
+    def per_row(doc_id, n):
+        for i in range(n):
+            yield doc_id, f"t{i}", i % 2 == 1
+
+    batches = [
+        pd.DataFrame({"doc_id": [10, 11, 12], "n": [0, 1, 3]}),
+        pd.DataFrame({"doc_id": [13, 14], "n": [0, 0]}),
+    ]
+    full, empty = map_row_batches(batches, per_row, schema)
+    for out in (full, empty):
+        assert list(out.columns) == ["doc_id", "tag", "odd"]
+        assert [str(t) for t in out.dtypes] == ["int64", "object", "bool"]
+    assert full.values.tolist() == [
+        [11, "t0", False],
+        [12, "t0", False],
+        [12, "t1", True],
+        [12, "t2", False],
+    ]
+    assert len(empty) == 0
