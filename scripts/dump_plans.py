@@ -129,8 +129,10 @@ def main() -> None:
         "",
     ]
     # SHOWCASE (annotated) entries first, then every remaining registry
-    # name in registration order — full coverage, no silent omissions
-    names = list(SHOWCASE) + [n for n in registry.QUERIES if n not in SHOWCASE]
+    # name sorted — full coverage, no silent omissions, and a stable
+    # section order (registry.QUERIES order depends on load_all's module
+    # order, so it is not a regeneration-stable key)
+    names = list(SHOWCASE) + sorted(n for n in registry.QUERIES if n not in SHOWCASE)
     for name in names:
         note = SHOWCASE.get(
             name,
