@@ -856,14 +856,9 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"SPARK_GRAFT_EXACT_PAIRS_MAX_ROWS for a deliberate "
             f"ground-truth run."
         )
+    from .similarity import _cos
+
     a, b = emb.alias("a"), emb.alias("b")
-
-    def _cos(va, vb):
-        dot = F.expr(f"aggregate(zip_with({va}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-        na = F.sqrt(F.expr(f"aggregate({va}, 0D, (acc, x) -> acc + x * x)"))
-        nb = F.sqrt(F.expr(f"aggregate({vb}, 0D, (acc, x) -> acc + x * x)"))
-        return dot / (na * nb)
-
     cos = _cos("a.v", "b.v")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -957,12 +952,7 @@ def llm_dedup_embedding_lsh(
     n_tables)`` (tests/test_config.py); production tuning goes through
     SPARK_GRAFT_LSH_PLANES / SPARK_GRAFT_LSH_TABLES, moving both.
     """
-    from .similarity import (
-        N_PLANES,
-        _bucket_expr_spark,
-        _cos as _sim_cos,
-        probes_spark,
-    )
+    from .similarity import N_PLANES, _bucket_expr_spark, _cos, probes_spark
 
     r = n_planes or N_PLANES
     t_count = n_tables or CONFIG.lsh_tables
@@ -996,7 +986,7 @@ def llm_dedup_embedding_lsh(
     )
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    cos = _sim_cos("va", "vb")
+    cos = _cos("va", "vb")
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")

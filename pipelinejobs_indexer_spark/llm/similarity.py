@@ -53,19 +53,20 @@ def _plane_weight(p: int, d: int) -> float:
     return _HEX.index(ch) + 1 - 8.5
 
 
-def _cos(va: str, vb: str):
-    dot = F.expr(
-        f"aggregate(zip_with({va}, {vb}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+def _cos_sql(a: str, b: str) -> str:
+    """Cosine of two array<double> expressions as one Spark SQL string —
+    dot / (sqrt(a·a) * sqrt(b·b)), each sum a sequential fold — the one
+    spelling of every Spark-side cosine; callers round(..., 6) it, as
+    the oracles' _COS_LIST_SQL does."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (a, x) -> a + x) /"
+        f" (sqrt(aggregate({a}, 0D, (a, x) -> a + x * x)) *"
+        f"  sqrt(aggregate({b}, 0D, (a, x) -> a + x * x)))"
     )
-    na = F.sqrt(F.expr(f"aggregate({va}, 0D, (acc, x) -> acc + x * x)"))
-    nb = F.sqrt(F.expr(f"aggregate({vb}, 0D, (acc, x) -> acc + x * x)"))
-    return dot / (na * nb)
 
 
-_COS_SQL = """
-  list_sum([q.v[i] * e.v[i] for i in generate_series(1, len(q.v))]) /
-  (sqrt(list_sum([x * x for x in q.v])) * sqrt(list_sum([x * x for x in e.v])))
-"""
+def _cos(va: str, vb: str):
+    return F.expr(_cos_sql(va, vb))
 
 
 @register(
@@ -290,12 +291,10 @@ def _ivf_cells(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     the centroid array is broadcast and the argmax folds per row inside
     codegen, so building the inverted file never shuffles the corpus.
     Ties keep the lowest cid (fold scans cid-ascending, strict >)."""
-    cos_c = (
-        "aggregate(zip_with(v, c.cv, (x, y) -> x * y), 0D, (a, x) -> a + x) /"
-        " (sqrt(aggregate(v, 0D, (a, x) -> a + x * x)) *"
-        "  sqrt(aggregate(c.cv, 0D, (a, x) -> a + x * x)))"
+    scored_cents = (
+        "transform(cents, c -> named_struct('cid', c.cid,"
+        f" 'c', round({_cos_sql('v', 'c.cv')}, 6)))"
     )
-    scored_cents = f"transform(cents, c -> named_struct('cid', c.cid, 'c', round({cos_c}, 6)))"
     best = (
         f"aggregate({scored_cents},"
         " named_struct('cid', cast(-1 as bigint), 'c', cast(-2 as double)),"
@@ -396,11 +395,7 @@ def _ivf_probe_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
             "qid",
             "qv",
             F.col("c.cid").alias("cell"),
-            F.round(F.expr(
-                "aggregate(zip_with(qv, c.cv, (x, y) -> x * y), 0D, (a, x) -> a + x) /"
-                " (sqrt(aggregate(qv, 0D, (a, x) -> a + x * x)) *"
-                "  sqrt(aggregate(c.cv, 0D, (a, x) -> a + x * x)))"
-            ), 6).alias("ccos"),
+            F.round(_cos("qv", "c.cv"), 6).alias("ccos"),
         )
         .withColumn(
             "r",
@@ -723,9 +718,9 @@ def llm_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan (100 TB): one scan → codegen per-vector squared norm (the only
     O(dim) work) → 1-row global stat aggregate broadcast back over the
     per-vector frame — no shuffle of vector payloads, no window over the
-    corpus; the flag is a codegen projection. Magnitude ceiling
-    (corrected per ADVICE r7): s ≤ dims·1e12 (~6.4e13 at 64 dims), so
-    Σs² ~ 4e27·n fits decimal(38,0) to ~2e10 vectors, but the WORST-CASE
+    corpus; the flag is a codegen projection. Magnitude ceiling — the
+    deviation term, not Σs², binds: s ≤ dims·1e12 (~6.4e13 at 64 dims),
+    so Σs² ~ 4e27·n fits decimal(38,0) to ~2e10 vectors, but the WORST-CASE
     deviation term (s·n − Σs)² ~ (6.4e13·n)² overflows decimal(38,0)
     already around n ~ 2e5 — it stays in range at larger n only while
     deviations remain far below s·n (the normal regime: for |z|-style
@@ -768,8 +763,7 @@ def embedding_outliers(emb: DataFrame) -> DataFrame:
     )
     # Decimal overflow in non-ANSI Spark yields NULL silently; NULL
     # dev²/bound from a non-NULL norm means the (s·n − Σs)² headroom ran
-    # out (see docstring) — fail loudly instead of nulling the flags
-    # (ADVICE r7).
+    # out (see docstring) — fail loudly instead of nulling the flags.
     overflow = (
         F.col("s").isNotNull()
         & F.col("n").isNotNull()

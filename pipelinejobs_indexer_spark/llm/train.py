@@ -44,8 +44,9 @@ explode it sits behind.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..config import CONFIG
 from ..registry import register
@@ -66,59 +67,81 @@ _QUANT = f"transform(cast(embedding as array<double>), x -> cast(round(x * {QSCA
 _QUANT_SQL = f"[CAST(round(x * {QSCALE}) AS BIGINT) for x in embedding::DOUBLE[]]"
 
 
-# --------------------------------------------------------------- k-means
+# ------------------------------------------------- the one Lloyd fit
 
 
-def _dist_expr(cent: list[int]) -> Column:
-    """Exact integer squared-L2 distance from ``xq`` to one centroid,
-    folded inside codegen (no UDF, no shuffle)."""
+def _l2_sql(col: str, cent: list[int]) -> str:
+    """Exact integer squared-L2 distance from the array expression
+    ``col`` to one centroid, folded inside codegen (no UDF, no shuffle)."""
     arr = "array(" + ",".join(f"{int(v)}L" for v in cent) + ")"
-    return F.expr(
-        f"aggregate(zip_with(xq, {arr}, (x, y) -> (x - y) * (x - y)), "
+    return (
+        f"aggregate(zip_with({col}, {arr}, (x, y) -> (x - y) * (x - y)), "
         f"0L, (a, x) -> a + x)"
     )
 
 
-def _assign(q: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Nearest-centroid assignment as ONE projection: array_min over
-    (distance, index) structs — lexicographic struct ordering gives the
-    min distance with ties broken toward the smallest cluster index,
-    matching the oracle's ``ORDER BY d, j`` row_number."""
-    structs = [
-        F.struct(_dist_expr(c).alias("d"), F.lit(j).alias("j"))
-        for j, c in enumerate(cents)
-    ]
-    return q.withColumn("a", F.array_min(F.array(*structs)))
+def _argmin_sql(col: str, cents: list[list[int]]) -> str:
+    """Nearest-centroid assignment of ``col`` as ONE SQL expression:
+    array_min over (distance, index) structs — lexicographic struct
+    ordering gives the min distance with ties broken toward the smallest
+    index, matching the oracles' ``ORDER BY d, j`` row_number. One
+    string is one py4j call for all k structs, and ``struct(... AS d,
+    j AS j)`` resolves to the same tree the Column-API struct builds."""
+    structs = ", ".join(
+        f"struct({_l2_sql(col, c)} AS d, {j} AS j)" for j, c in enumerate(cents)
+    )
+    return f"array_min(array({structs}))"
 
 
-def kmeans_plan(e: DataFrame) -> DataFrame:
-    """Lloyd k-means over an embeddings-shaped frame (vec_id, label,
-    embedding); returns the final assignment (vec_id, label, cluster,
-    dist) after ``CONFIG.kmeans_iters`` exact-integer iterations.
+def _quantized(e: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, xq) on the 1e3 grid. The fit scans it iters+1
+    times, so it is checkpointed; the fit's stats action materializes it."""
+    q = e.select("vec_id", *keep, F.expr(_QUANT).alias("xq"))
+    return iter_checkpoint(spread(q), lazy=True)
+
+
+def _lloyd(
+    q: DataFrame, m: int, k: int, iters: int, who: str
+) -> tuple[list[list[list[int]]], list[str]]:
+    """Lloyd k-means over ``m`` contiguous equal subspaces of ``q.xq``
+    (m=1 is plain k-means on the whole vector; m>1 is PQ codebook
+    training). Returns (cents[m][j][pos], per-subspace slice exprs).
 
     Init is the deterministic vec_id stride sample (rank j*floor(n/k) —
-    the same "strided seed" family llm_similarity_ivf uses, so this
-    trainer refines exactly the kind of seed set the IVF index starts
-    from). Empty clusters keep their previous centroid. Requires dense
-    vec_ids 0..n-1 (the testdata contract; violated ids raise loudly).
-    """
-    k, iters = CONFIG.kmeans_k, CONFIG.kmeans_iters
-    q = e.select("vec_id", "label", F.expr(_QUANT).alias("xq"))
-    # iterated over iters+1 times: materialize once, cut lineage
-    q = iter_checkpoint(spread(q), lazy=True)  # materialized by the stats/count action
+    the same "strided seed" family llm_similarity_ivf uses, so the fit
+    refines exactly the kind of seed set the IVF index starts from).
+    Empty clusters keep their previous centroid. Requires dense vec_ids
+    0..n-1 (the testdata contract) and a fixed dimension that m divides;
+    violations raise loudly.
+
+    One scan per iteration trains ALL subspaces: each row explodes to m
+    (subspace, code, sub-vector) structs and one combiner
+    groupBy(m, code, pos) carries at most m×k×subdim rows per task; the
+    codebooks live on the driver between iterations and ride the next
+    plan as broadcast literals."""
     stats = q.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("vec_id").alias("lo"),
         F.max("vec_id").alias("hi"),
+        F.max(F.size("xq")).alias("dim"),
+        F.min(F.size("xq")).alias("dim_lo"),
     ).first()
-    n = stats["n"]
+    n, dim = stats["n"], stats["dim"]
     if n < k:
-        raise ValueError(f"kmeans needs at least k={k} vectors, got {n}")
+        raise ValueError(f"{who} needs at least k={k} vectors, got {n}")
     if stats["lo"] != 0 or stats["hi"] != n - 1:
         raise ValueError(
-            f"kmeans strided init expects dense vec_ids 0..n-1, got range "
+            f"{who} strided init expects dense vec_ids 0..n-1, got range "
             f"[{stats['lo']}, {stats['hi']}] over {n} rows"
         )
+    if dim != stats["dim_lo"]:
+        raise ValueError(f"{who} requires a fixed embedding dimension")
+    if dim % m != 0:
+        raise ValueError(
+            f"{who}: m={m} subspaces must divide the embedding dim {dim} "
+            f"(contiguous equal subspaces)"
+        )
+    sub = dim // m
     stride = n // k
     seed_ids = [j * stride for j in range(k)]
     seeds = {
@@ -128,29 +151,52 @@ def kmeans_plan(e: DataFrame) -> DataFrame:
     missing = [i for i in seed_ids if i not in seeds]
     if missing:
         raise ValueError(
-            f"kmeans strided init expects dense vec_ids 0..n-1; missing {missing}"
+            f"{who} strided init expects dense vec_ids 0..n-1; missing {missing}"
         )
-    cents = [seeds[i] for i in seed_ids]
-    dim = len(cents[0])
+    cents = [
+        [seeds[i][mm * sub : (mm + 1) * sub] for i in seed_ids] for mm in range(m)
+    ]
+    slices = (
+        ["xq"] if m == 1 else [f"slice(xq, {mm * sub + 1}, {sub})" for mm in range(m)]
+    )
     for _ in range(iters):
-        stats = (
-            _assign(q, cents)
-            .select(F.col("a.j").alias("cluster"), "xq")
-            .select("cluster", F.posexplode("xq").alias("pos", "val"))
-            .groupBy("cluster", "pos")
+        structs = ", ".join(
+            f"struct({mm} AS m, {_argmin_sql(s, c)}.j AS code, {s} AS sv)"
+            for mm, (s, c) in enumerate(zip(slices, cents))
+        )
+        rows = (
+            q.select(F.expr(f"explode(array({structs}))").alias("t"))
+            .select("t.m", "t.code", F.posexplode("t.sv").alias("pos", "val"))
+            .groupBy("m", "code", "pos")
             .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("cnt"))
             .collect()
         )
-        sums: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            sums.setdefault(r["cluster"], {})[r["pos"]] = (r["s"], r["cnt"])
+        sums: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
+        for r in rows:
+            sums.setdefault((r["m"], r["code"]), {})[r["pos"]] = (r["s"], r["cnt"])
         cents = [
-            [sums[j][p][0] // sums[j][p][1] for p in range(dim)]
-            if j in sums
-            else cents[j]  # empty cluster: centroid carries over
-            for j in range(k)
+            [
+                [sums[(mm, j)][p][0] // sums[(mm, j)][p][1] for p in range(sub)]
+                if (mm, j) in sums
+                else cents[mm][j]  # empty cluster: centroid carries over
+                for j in range(k)
+            ]
+            for mm in range(m)
         ]
-    return _assign(q, cents).select(
+    return cents, slices
+
+
+# --------------------------------------------------------------- k-means
+
+
+def kmeans_plan(e: DataFrame) -> DataFrame:
+    """Lloyd k-means over an embeddings-shaped frame (vec_id, label,
+    embedding); returns the final assignment (vec_id, label, cluster,
+    dist) after ``CONFIG.kmeans_iters`` exact-integer iterations of the
+    one-subspace ``_lloyd`` fit."""
+    q = _quantized(e, "label")
+    (cents,), (col,) = _lloyd(q, 1, CONFIG.kmeans_k, CONFIG.kmeans_iters, "kmeans")
+    return q.withColumn("a", F.expr(_argmin_sql(col, cents))).select(
         "vec_id",
         "label",
         F.col("a.j").alias("cluster"),
@@ -215,7 +261,8 @@ def llm_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape per iteration (the 100 TB story): assignment is a
     broadcast-literal argmin fold inside whole-stage codegen (no join, no
     shuffle — the centroid set rides the plan); the update is
-    posexplode -> groupBy(cluster, pos) with map-side partial
+    posexplode -> groupBy(m, code, pos) (m = 0: the one-subspace case of
+    the PQ fit) with map-side partial
     aggregation, so the exchange carries at most k x dim rows PER MAP
     TASK and the driver collects exactly k x dim totals. Total cost =
     iters scans of a (vec_id, xq) projection; nothing corpus-sized ever
@@ -361,24 +408,29 @@ def llm_classifier_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- L3i product quantization
 
 
-def _sub_dist_expr(col: str, cent: list[int]) -> Column:
-    """Exact integer squared-L2 distance from the sub-vector expression
-    ``col`` to one subspace centroid, folded inside codegen."""
-    arr = "array(" + ",".join(f"{int(v)}L" for v in cent) + ")"
-    return F.expr(
-        f"aggregate(zip_with({col}, {arr}, (x, y) -> (x - y) * (x - y)), "
-        f"0L, (a, x) -> a + x)"
+def _pq_knobs(
+    m: int | None = None, k: int | None = None, iters: int | None = None
+) -> tuple[int, int, int]:
+    """(pq_m, pq_k, pq_iters) with CONFIG filling every None."""
+    return (
+        CONFIG.pq_m if m is None else m,
+        CONFIG.pq_k if k is None else k,
+        CONFIG.pq_iters if iters is None else iters,
     )
 
 
-def _sub_assign(col: str, cents: list[list[int]]) -> Column:
-    """argmin (distance, code) struct over one subspace's centroid set —
-    ties toward the smaller code, matching the oracle's ORDER BY d, j."""
-    structs = [
-        F.struct(_sub_dist_expr(col, c).alias("d"), F.lit(j).alias("j"))
-        for j, c in enumerate(cents)
-    ]
-    return F.array_min(F.array(*structs))
+def _pq_fit(
+    e: DataFrame,
+    m: int | None = None,
+    k: int | None = None,
+    iters: int | None = None,
+) -> tuple[DataFrame, list[list[list[int]]], list[str]]:
+    """The m-subspace ``_lloyd`` fit: (checkpointed quantized frame,
+    cents[m][j][pos], per-subspace slice exprs) — the one fit the
+    encoder, the ADC searches and the recall audit run off."""
+    m, k, iters = _pq_knobs(m, k, iters)
+    q = _quantized(e)
+    return (q, *_lloyd(q, m, k, iters, "pq"))
 
 
 def pq_plan(
@@ -389,129 +441,23 @@ def pq_plan(
 ) -> DataFrame:
     """Product-quantization codebook training + encoding over an
     embeddings-shaped frame: the vector splits into CONFIG.pq_m
-    contiguous subspaces, each trained with its own pq_k-centroid Lloyd
-    loop (pq_iters iterations, same exact-integer grid as kmeans_plan,
-    same strided seed, same empty-cluster carry-over), then every vector
+    contiguous subspaces, all trained by one ``_lloyd`` fit (pq_k
+    centroids each, pq_iters iterations, same exact-integer grid, strided
+    seed and empty-cluster carry-over as kmeans_plan), then every vector
     is encoded as its per-subspace nearest-centroid codes plus the exact
-    integer reconstruction error.
-
-    One scan per iteration trains ALL subspaces: each row explodes to
-    pq_m (subspace, code, sub-vector) structs and one combiner
-    groupBy(m, code, pos) carries m×k×subdim rows per task — the same
-    O(model) exchange discipline as L3e/L3f. Codebooks live on the
-    driver between iterations and ride the next plan as broadcast
-    literals."""
-    q, cents, _sub, slices = _pq_fit(e, m, k, iters)
-    m_sub = len(cents)
-    assigns = [
-        _sub_assign(slices[mm], cents[mm]).alias(f"a{mm}")
-        for mm in range(m_sub)
-    ]
-    out = q.select("vec_id", *assigns)
-    code = F.concat_ws(
-        "|", *[F.col(f"a{mm}.j").cast("string") for mm in range(m_sub)]
+    integer reconstruction error."""
+    q, cents, slices = _pq_fit(e, m, k, iters)
+    ms = range(len(cents))
+    code = ", ".join(f"cast(a{mm}.j as string)" for mm in ms)
+    err = " + ".join(f"a{mm}.d" for mm in ms)
+    return q.select(
+        "vec_id",
+        *[F.expr(_argmin_sql(slices[mm], cents[mm])).alias(f"a{mm}") for mm in ms],
+    ).select(
+        "vec_id",
+        F.expr(f"concat_ws('|', {code})").alias("pq_code"),
+        F.expr(err).alias("err"),
     )
-    err = F.col("a0.d")
-    for mm in range(1, m_sub):
-        err = err + F.col(f"a{mm}.d")
-    return out.select("vec_id", code.alias("pq_code"), err.alias("err"))
-
-
-def _pq_fit(
-    e: DataFrame,
-    m: int | None = None,
-    k: int | None = None,
-    iters: int | None = None,
-) -> tuple[DataFrame, list[list[list[int]]], int, list[str]]:
-    """Train the per-subspace codebooks; returns (checkpointed quantized
-    frame, cents[m][j][pos], subdim, per-subspace slice exprs) so both
-    the encoder (pq_plan) and the ADC search (pq_search_plan) run off
-    one fit."""
-    m_sub = CONFIG.pq_m if m is None else m
-    k = CONFIG.pq_k if k is None else k
-    iters = CONFIG.pq_iters if iters is None else iters
-    q = e.select("vec_id", F.expr(_QUANT).alias("xq"))
-    q = iter_checkpoint(spread(q), lazy=True)  # materialized by the stats/count action
-    stats = q.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("vec_id").alias("lo"),
-        F.max("vec_id").alias("hi"),
-        F.max(F.size("xq")).alias("dim"),
-        F.min(F.size("xq")).alias("dim_lo"),
-    ).first()
-    n, dim = stats["n"], stats["dim"]
-    if n < k:
-        raise ValueError(f"pq needs at least pq_k={k} vectors, got {n}")
-    if stats["lo"] != 0 or stats["hi"] != n - 1:
-        raise ValueError(
-            f"pq strided init expects dense vec_ids 0..n-1, got range "
-            f"[{stats['lo']}, {stats['hi']}] over {n} rows"
-        )
-    if dim != stats["dim_lo"]:
-        raise ValueError("pq requires a fixed embedding dimension")
-    if dim % m_sub != 0:
-        raise ValueError(
-            f"pq_m={m_sub} must divide the embedding dim {dim} "
-            f"(contiguous equal subspaces)"
-        )
-    sub = dim // m_sub
-    stride = n // k
-    seed_ids = [j * stride for j in range(k)]
-    seeds = {
-        r["vec_id"]: list(r["xq"])
-        for r in q.filter(F.col("vec_id").isin(seed_ids)).collect()
-    }
-    missing = [i for i in seed_ids if i not in seeds]
-    if missing:
-        raise ValueError(
-            f"pq strided init expects dense vec_ids 0..n-1; missing {missing}"
-        )
-    cents = [
-        [seeds[i][m * sub : (m + 1) * sub] for i in seed_ids]
-        for m in range(m_sub)
-    ]
-    slices = [f"slice(xq, {m * sub + 1}, {sub})" for m in range(m_sub)]
-    for _ in range(iters):
-        structs = [
-            F.struct(
-                F.lit(m).alias("m"),
-                _sub_assign(slices[m], cents[m])["j"].alias("code"),
-                F.expr(slices[m]).alias("sv"),
-            )
-            for m in range(m_sub)
-        ]
-        ex = (
-            q.select(F.explode(F.array(*structs)).alias("t"))
-            .select(
-                F.col("t.m").alias("m"),
-                F.col("t.code").alias("code"),
-                F.posexplode(F.col("t.sv")).alias("pos", "val"),
-            )
-        )
-        rows = (
-            ex.groupBy("m", "code", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        sums: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-        for r in rows:
-            sums.setdefault((r["m"], r["code"]), {})[r["pos"]] = (
-                r["s"],
-                r["cnt"],
-            )
-        cents = [
-            [
-                [
-                    sums[(m, j)][p][0] // sums[(m, j)][p][1]
-                    for p in range(sub)
-                ]
-                if (m, j) in sums
-                else cents[m][j]  # empty cell: centroid carries over
-                for j in range(k)
-            ]
-            for m in range(m_sub)
-        ]
-    return q, cents, sub, slices
 
 
 def _pq_ctes(m_sub: int, k: int, iters: int) -> list[str]:
@@ -574,9 +520,7 @@ def _pq_sql(
     the identical integer grid (the _kmeans_sql pattern, once per
     subspace; sub-vector bounds derive from len(xq) so the SQL needs no
     dimension literal)."""
-    m_sub = CONFIG.pq_m if m is None else m
-    k = CONFIG.pq_k if k is None else k
-    iters = CONFIG.pq_iters if iters is None else iters
+    m_sub, k, iters = _pq_knobs(m, k, iters)
     ctes = _pq_ctes(m_sub, k, iters)
     code = " || '|' || ".join(f"CAST(f{m}.j AS VARCHAR)" for m in range(m_sub))
     err = " + ".join(f"f{m}.d" for m in range(m_sub))
@@ -599,8 +543,8 @@ def llm_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes per vector at the measured-knee 16×16 default vs 256 bytes raw
     float32 — 32× — the compression that lets a 100 TB embedding corpus
     serve distance queries from RAM via asymmetric code-to-centroid
-    lookup tables; defaults sized by scripts/pq_sizing_probe.py,
-    BENCH_sf1.md round-8 addendum).
+    lookup tables; the 16×16 default is the recall/fidelity knee that
+    scripts/pq_sizing_probe.py measures, tabled in BENCH_sf1.md).
     Trains per-subspace Lloyd codebooks under the L3e exact-integer
     discipline and emits each vector's code string plus its exact
     integer reconstruction error — the fidelity audit that sizes
@@ -617,14 +561,70 @@ def llm_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------- L3j PQ asymmetric-distance search
-# Query set: vec_id < N (the L3a convention). Aliased to similarity's
-# N_QUERIES — NOT independently defined — because llm_similarity_ivfpq
-# selects probe CELLS via similarity._ivf_probe_cells (which filters on
-# N_QUERIES) while its PQ probe set and DuckDB oracle filter on this
-# constant: two definitions could silently desynchronize the plan from
-# its oracle (ADVICE r7).
+# Query set: vec_id < N (the L3a convention). PQ_SEARCH_QUERIES aliases
+# similarity.N_QUERIES so the IVF probe cells (similarity._ivf_probe_cells
+# filters on N_QUERIES) and the PQ probe set and oracles cannot diverge.
 from .similarity import N_QUERIES as PQ_SEARCH_QUERIES
 PQ_SEARCH_TOP_K = 10
+
+
+def _pq_codes(
+    q: DataFrame, cents: list[list[list[int]]], slices: list[str]
+) -> DataFrame:
+    """(vec_id, c0..c{m-1}): every vector's per-subspace code."""
+    return q.select(
+        "vec_id",
+        *[
+            F.expr(f"{_argmin_sql(s, c)}.j").alias(f"c{mm}")
+            for mm, (s, c) in enumerate(zip(slices, cents))
+        ],
+    )
+
+
+def _adc_sql(
+    q: DataFrame, cents: list[list[list[int]]], who: str
+) -> list[tuple[int, str]]:
+    """(probe vec_id, ADC SQL) for every probe (vec_id < PQ_SEARCH_QUERIES),
+    ascending: each probe's exact integer d² to every centroid of every
+    subspace becomes a k-entry literal table on the DRIVER (m×k×n_probes
+    ints, model-sized state), and its ADC is the sum of m ``element_at``
+    lookups by the codes c0..c{m-1} — one SQL string per probe."""
+    probes = sorted(
+        q.filter(F.col("vec_id") < PQ_SEARCH_QUERIES).collect(),
+        key=lambda r: r["vec_id"],
+    )
+    if not probes:
+        # n >= k passes the fit while the probe set can still be empty;
+        # an empty probe array would only fail later, at analysis, with
+        # an opaque error
+        raise ValueError(
+            f"{who}: empty probe set — no rows with vec_id < "
+            f"{PQ_SEARCH_QUERIES} in the embeddings frame"
+        )
+    sub = len(cents[0][0])
+    out = []
+    for p in probes:
+        pv = list(p["xq"])
+        terms = []
+        for mm, cm in enumerate(cents):
+            pm = pv[mm * sub : (mm + 1) * sub]
+            table = ",".join(
+                f"{sum((x - y) * (x - y) for x, y in zip(pm, c))}L" for c in cm
+            )
+            terms.append(f"element_at(array({table}), c{mm} + 1)")
+        out.append((int(p["vec_id"]), " + ".join(terms)))
+    return out
+
+
+def _adc_top_k(scored: DataFrame) -> DataFrame:
+    """Per-probe top-k by (adc, vec_id) — exact integers, so the order is
+    engine-independent."""
+    w = Window.partitionBy("qid").orderBy("adc", "vec_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= PQ_SEARCH_TOP_K)
+        .select("qid", "vec_id", "adc", "rank")
+    )
 
 
 def pq_search_plan(
@@ -634,91 +634,43 @@ def pq_search_plan(
     iters: int | None = None,
 ) -> DataFrame:
     """ADC top-k over the PQ fit: every corpus vector is reduced to its
-    per-subspace codes, every probe precomputes its k-entry distance
-    table per subspace (exact integer d² probe-subvector→centroid, on
-    the DRIVER — m×k×n_probes ints, the model-sized state this family
-    always keeps driver-side), and the scan scores each vector as the
-    sum of m table lookups — the asymmetric distance computation that
-    makes PQ indexes servable from RAM. Self-matches excluded; rank by
-    (adc, vec_id) so ordering is engine-independent (exact integers —
-    no float tie hazard at all)."""
-    q, cents, sub, slices = _pq_fit(e, m, k, iters)
-    m_sub = len(cents)
-    probes = sorted(
-        q.filter(F.col("vec_id") < PQ_SEARCH_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
+    per-subspace codes, every probe's distance tables ride the plan as
+    literals (``_adc_sql``), and the scan scores each vector as the sum
+    of m table lookups — the asymmetric distance computation that makes
+    PQ indexes servable from RAM. Self-matches excluded; rank by
+    (adc, vec_id)."""
+    q, cents, slices = _pq_fit(e, m, k, iters)
+    structs = ", ".join(
+        f"struct({qid} AS qid, {adc} AS adc)"
+        for qid, adc in _adc_sql(q, cents, "pq_search_plan")
     )
-    if not probes:
-        # n >= k can pass (_pq_fit's check) while the probe set is empty
-        # (no vec_id < PQ_SEARCH_QUERIES); F.array() of zero columns
-        # would only fail later at analysis with an opaque error
-        # (ADVICE r7).
-        raise ValueError(
-            "pq_search_plan: empty probe set — no rows with vec_id < "
-            f"{PQ_SEARCH_QUERIES} in the embeddings frame"
-        )
-
-    def d2(a: list[int], b: list[int]) -> int:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    codes = q.select(
-        "vec_id",
-        *[
-            _sub_assign(slices[mm], cents[mm])["j"].alias(f"c{mm}")
-            for mm in range(m_sub)
-        ],
-    )
-    structs = []
-    for p in probes:
-        pv = list(p["xq"])
-        adc = None
-        for mm in range(m_sub):
-            table = [
-                d2(pv[mm * sub : (mm + 1) * sub], cents[mm][j])
-                for j in range(len(cents[mm]))
-            ]
-            arr = "array(" + ",".join(f"{v}L" for v in table) + ")"
-            term = F.expr(f"element_at({arr}, c{mm} + 1)")
-            adc = term if adc is None else adc + term
-        structs.append(
-            F.struct(
-                F.lit(int(p["vec_id"])).alias("qid"), adc.alias("adc")
-            )
-        )
     scored = (
-        codes.select("vec_id", F.explode(F.array(*structs)).alias("t"))
+        _pq_codes(q, cents, slices)
+        .select("vec_id", F.expr(f"explode(array({structs}))").alias("t"))
         .select(F.col("t.qid").alias("qid"), "vec_id", F.col("t.adc").alias("adc"))
         .filter(F.col("vec_id") != F.col("qid"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= PQ_SEARCH_TOP_K)
-        .select("qid", "vec_id", "adc", "rank")
-    )
+    return _adc_top_k(scored)
 
 
-def _pq_search_sql(
-    m: int | None = None, k: int | None = None, iters: int | None = None
-) -> str:
-    """Oracle: the shared PQ CTE chain + per-probe distance tables off
-    the final codebooks (c{iters}x{m}) + the same ADC sum and ranking."""
-    m_sub = CONFIG.pq_m if m is None else m
-    k = CONFIG.pq_k if k is None else k
-    iters = CONFIG.pq_iters if iters is None else iters
-    ctes = _pq_ctes(m_sub, k, iters)
+def _pq_adc_ctes(m_sub: int, k: int, iters: int) -> list[str]:
+    """``_pq_ctes`` plus dt{m}: every probe's exact d² to each final
+    centroid of subspace m — the oracles' ADC distance tables."""
     dist = (
         "list_sum([(p.sq[i] - c.sq[i]) * (p.sq[i] - c.sq[i]) "
         "for i in generate_series(1, len(p.sq))])"
     )
-    for mm in range(m_sub):
-        ctes.append(
-            f"""dt{mm} AS MATERIALIZED (SELECT p.vec_id AS qid, c.j, {dist} AS d
+    return _pq_ctes(m_sub, k, iters) + [
+        f"""dt{mm} AS MATERIALIZED (SELECT p.vec_id AS qid, c.j, {dist} AS d
        FROM em{mm} p CROSS JOIN c{iters}x{mm} c
        WHERE p.vec_id < {PQ_SEARCH_QUERIES})"""
-        )
+        for mm in range(m_sub)
+    ]
+
+
+def _pq_adc_join(m_sub: int) -> str:
+    """FROM clause scoring every vector (a0.vec_id) against every probe
+    (d0.qid): its final codes f{m} looked up in the probe's tables dt{m}."""
     joins = ["f0 a0"]
     for mm in range(1, m_sub):
         joins.append(f"JOIN f{mm} a{mm} ON a{mm}.vec_id = a0.vec_id")
@@ -727,20 +679,32 @@ def _pq_search_sql(
         joins.append(
             f"JOIN dt{mm} d{mm} ON d{mm}.j = a{mm}.j AND d{mm}.qid = d0.qid"
         )
-    adc = " + ".join(f"d{mm}.d" for mm in range(m_sub))
-    ctes.append(
-        f"""scored AS (SELECT d0.qid, a0.vec_id, CAST({adc} AS BIGINT) AS adc
-       FROM {' '.join(joins)}
-       WHERE a0.vec_id <> d0.qid)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""\nSELECT qid, vec_id, adc, rank FROM (
+    return " ".join(joins)
+
+
+def _adc_sum_sql(m_sub: int) -> str:
+    return " + ".join(f"d{mm}.d" for mm in range(m_sub))
+
+
+_ADC_TOP_K_SQL = f"""\nSELECT qid, vec_id, adc, rank FROM (
          SELECT *, row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rank
          FROM scored
        ) WHERE rank <= {PQ_SEARCH_TOP_K}"""
+
+
+def _pq_search_sql(
+    m: int | None = None, k: int | None = None, iters: int | None = None
+) -> str:
+    """Oracle: the shared PQ CTE chain + per-probe distance tables off
+    the final codebooks (c{iters}x{m}) + the same ADC sum and ranking."""
+    m_sub, k, iters = _pq_knobs(m, k, iters)
+    ctes = _pq_adc_ctes(m_sub, k, iters)
+    ctes.append(
+        f"""scored AS (SELECT d0.qid, a0.vec_id, CAST({_adc_sum_sql(m_sub)} AS BIGINT) AS adc
+       FROM {_pq_adc_join(m_sub)}
+       WHERE a0.vec_id <> d0.qid)"""
     )
+    return "WITH " + ",\n".join(ctes) + _ADC_TOP_K_SQL
 
 
 @register("llm_similarity_pq", sql=_pq_search_sql)
@@ -768,18 +732,8 @@ def llm_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_sql() -> str:
     from .similarity import _COS_LIST_SQL, CENT_STRIDE, N_PROBE
 
-    m_sub, k, iters = CONFIG.pq_m, CONFIG.pq_k, CONFIG.pq_iters
-    ctes = _pq_ctes(m_sub, k, iters)
-    dist = (
-        "list_sum([(p.sq[i] - c.sq[i]) * (p.sq[i] - c.sq[i]) "
-        "for i in generate_series(1, len(p.sq))])"
-    )
-    for mm in range(m_sub):
-        ctes.append(
-            f"""dt{mm} AS MATERIALIZED (SELECT p.vec_id AS qid, c.j, {dist} AS d
-       FROM em{mm} p CROSS JOIN c{iters}x{mm} c
-       WHERE p.vec_id < {PQ_SEARCH_QUERIES})"""
-        )
+    m_sub, k, iters = _pq_knobs()
+    ctes = _pq_adc_ctes(m_sub, k, iters)
     ctes.append(
         "ed AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
     )
@@ -812,19 +766,11 @@ def _ivfpq_sql() -> str:
         joins.append(
             f"JOIN dt{mm} d{mm} ON d{mm}.j = a{mm}.j AND d{mm}.qid = cand.qid"
         )
-    adc = " + ".join(f"d{mm}.d" for mm in range(m_sub))
     ctes.append(
-        f"""scored AS (SELECT cand.qid, cand.vec_id, CAST({adc} AS BIGINT) AS adc
+        f"""scored AS (SELECT cand.qid, cand.vec_id, CAST({_adc_sum_sql(m_sub)} AS BIGINT) AS adc
        FROM {' '.join(joins)})"""
     )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""\nSELECT qid, vec_id, adc, rank FROM (
-         SELECT *, row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rank
-         FROM scored
-       ) WHERE rank <= {PQ_SEARCH_TOP_K}"""
-    )
+    return "WITH " + ",\n".join(ctes) + _ADC_TOP_K_SQL
 
 
 @register("llm_similarity_ivfpq", sql=lambda: _ivfpq_sql())
@@ -851,8 +797,7 @@ def llm_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _centroid_array, _ivf_cells, _ivf_probe_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q, cents, sub, slices = _pq_fit(emb)
-    m_sub = len(cents)
+    q, cents, slices = _pq_fit(emb)
     e = spread(emb).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -864,84 +809,28 @@ def llm_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
     )
-    codes = q.select(
-        "vec_id",
-        *[
-            _sub_assign(slices[mm], cents[mm])["j"].alias(f"c{mm}")
-            for mm in range(m_sub)
-        ],
+    adc = " ".join(
+        f"WHEN qid = {qid} THEN {t}"
+        for qid, t in _adc_sql(q, cents, "llm_similarity_ivfpq")
     )
-    probes = sorted(
-        q.filter(F.col("vec_id") < PQ_SEARCH_QUERIES).collect(),
-        key=lambda r: r["vec_id"],
+    scored = _pq_codes(q, cents, slices).join(F.broadcast(cand), "vec_id").select(
+        "qid", "vec_id", F.expr(f"CASE {adc} END").alias("adc")
     )
-    if not probes:
-        raise ValueError(
-            "llm_similarity_ivfpq: empty probe set — no rows with "
-            f"vec_id < {PQ_SEARCH_QUERIES} in the embeddings frame"
-        )
-
-    def d2(a: list[int], b: list[int]) -> int:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    adc = None
-    for p in probes:
-        pv = list(p["xq"])
-        term = None
-        for mm in range(m_sub):
-            table = [
-                d2(pv[mm * sub : (mm + 1) * sub], cents[mm][j])
-                for j in range(len(cents[mm]))
-            ]
-            arr = "array(" + ",".join(f"{v}L" for v in table) + ")"
-            t = F.expr(f"element_at({arr}, c{mm} + 1)")
-            term = t if term is None else term + t
-        branch = (F.col("qid") == int(p["vec_id"]), term)
-        adc = F.when(*branch) if adc is None else adc.when(*branch)
-    scored = codes.join(F.broadcast(cand), "vec_id").select(
-        "qid", "vec_id", adc.alias("adc")
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= PQ_SEARCH_TOP_K)
-        .select("qid", "vec_id", "adc", "rank")
-    )
+    return _adc_top_k(scored)
 
 
 # ------------------------------------- L3l PQ recall evaluation
 def _pq_recall_sql() -> str:
     from .similarity import _COS_LIST_SQL
 
-    m_sub, k, iters = CONFIG.pq_m, CONFIG.pq_k, CONFIG.pq_iters
-    ctes = _pq_ctes(m_sub, k, iters)
-    dist = (
-        "list_sum([(p.sq[i] - c.sq[i]) * (p.sq[i] - c.sq[i]) "
-        "for i in generate_series(1, len(p.sq))])"
-    )
-    for mm in range(m_sub):
-        ctes.append(
-            f"""dt{mm} AS MATERIALIZED (SELECT p.vec_id AS qid, c.j, {dist} AS d
-       FROM em{mm} p CROSS JOIN c{iters}x{mm} c
-       WHERE p.vec_id < {PQ_SEARCH_QUERIES})"""
-        )
-    joins = ["f0 a0"]
-    for mm in range(1, m_sub):
-        joins.append(f"JOIN f{mm} a{mm} ON a{mm}.vec_id = a0.vec_id")
-    joins.append("JOIN dt0 d0 ON d0.j = a0.j")
-    for mm in range(1, m_sub):
-        joins.append(
-            f"JOIN dt{mm} d{mm} ON d{mm}.j = a{mm}.j AND d{mm}.qid = d0.qid"
-        )
-    adc = " + ".join(f"d{mm}.d" for mm in range(m_sub))
+    m_sub, k, iters = _pq_knobs()
+    ctes = _pq_adc_ctes(m_sub, k, iters)
     ctes.append(
         f"""pq_hits AS (SELECT qid, vec_id FROM (
        SELECT d0.qid, a0.vec_id,
               row_number() OVER (PARTITION BY d0.qid
-                                 ORDER BY {adc}, a0.vec_id) AS rank
-       FROM {' '.join(joins)}
+                                 ORDER BY {_adc_sum_sql(m_sub)}, a0.vec_id) AS rank
+       FROM {_pq_adc_join(m_sub)}
        WHERE a0.vec_id <> d0.qid
      ) WHERE rank <= {PQ_SEARCH_TOP_K})"""
     )
@@ -1002,6 +891,8 @@ def pq_recall(
 ) -> DataFrame:
     """llm_pq_recall_eval's core with the knobs overridable, so tests
     can pin that a richer codebook buys recall."""
+    from .similarity import _cos
+
     e = spread(emb).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1011,17 +902,10 @@ def pq_recall(
     q = e.filter(F.col("vec_id") < PQ_SEARCH_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
-    cos = F.expr(
-        "aggregate(zip_with(qv, v, (x, y) -> x * y), 0D, (a, x) -> a + x) /"
-        " (sqrt(aggregate(qv, 0D, (a, x) -> a + x * x)) *"
-        "  sqrt(aggregate(v, 0D, (a, x) -> a + x * x)))"
-    )
-    from pyspark.sql.window import Window
-
     exact = (
         F.broadcast(q)
         .join(e, F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(cos, 6).alias("cosine"))
+        .select("qid", "vec_id", F.round(_cos("qv", "v"), 6).alias("cosine"))
         .withColumn(
             "rank",
             F.row_number().over(

@@ -407,14 +407,14 @@ def test_scale_probe_census_strips_initial_plans_and_dedupes():
 
 
 def test_trainer_final_passes_are_exchange_free(spark, sf_dir):
-    """L3e/L3f's plan claim (PLANS.md): the returned final pass is a
+    """L3e/L3f/L3i's plan claim (PLANS.md): the returned final pass is a
     broadcast-literal codegen projection over the checkpointed quantized
     frame — model state rides the plan, so there is NO Join, NO Window,
     and NO Exchange of any kind (the training iterations' only exchanges
     are the posexplode->combiner groupBys, executed during construction,
     and the lineage cut means not even the spread repartition survives
     into the returned frame's plan)."""
-    for name in ("llm_embedding_kmeans", "llm_classifier_logreg"):
+    for name in ("llm_embedding_kmeans", "llm_classifier_logreg", "llm_embedding_pq"):
         df = registry.QUERIES[name](spark, sf_dir)
         plan = _formatted_plan(df)
         assert "Exchange" not in plan, (name, plan)

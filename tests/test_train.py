@@ -128,6 +128,38 @@ def test_pq_identical_vectors_code_zero_err_zero(spark):
     assert all(r["pq_code"] == "0|0|0|0" and r["err"] == 0 for r in out)
 
 
+def test_pq_encode_projection_makes_fewer_py4j_calls_than_m_times_k(spark, monkeypatch):
+    """The final encode renders each subspace's argmin as ONE SQL string:
+    at m = k = 16 it must cost fewer py4j round trips than the m*k = 256
+    per-centroid Column structs it replaces would (those cost several
+    calls each). Only calls made after the fit returns are counted."""
+    from pipelinejobs_indexer_spark.llm import train
+
+    m = k = 16
+    rows = [(i, 0, [((i * 7 + d) % 11) / 10.0 for d in range(32)]) for i in range(20)]
+    df = spark.createDataFrame(rows, _SCHEMA)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, [0]
+
+    def counted(*a, **kw):
+        calls[0] += 1
+        return send(*a, **kw)
+
+    fit = train._pq_fit
+
+    def fit_then_reset(*a, **kw):
+        out = fit(*a, **kw)
+        calls[0] = 0
+        return out
+
+    monkeypatch.setattr(client, "send_command", counted)
+    monkeypatch.setattr(train, "_pq_fit", fit_then_reset)
+    out = train.pq_plan(df, m=m, k=k, iters=1)
+    assert calls[0] < m * k, calls[0]
+    monkeypatch.undo()
+    assert out.count() == 20
+
+
 def _pq_python(rows, m_sub, k, iters, qscale=1000):
     """Independent full PQ recompute: quantize → strided seeds →
     Lloyd per subspace (argmin ties to smaller code, floor-div updates,
