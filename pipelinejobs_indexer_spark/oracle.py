@@ -16,6 +16,11 @@ DuckDB parity notes:
 
 from __future__ import annotations
 
+import hashlib
+import os
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
 PET_ADJ_SQL = "['fond','quick','brave','calm','eager','gentle','happy','jolly']"
 PET_NOUN_SQL = "['bug','fox','owl','crab','newt','lark','moth']"
 
@@ -115,3 +120,11 @@ def with_fixtures(sql: str, *views: str) -> str:
     if stripped.upper().startswith("WITH"):
         return f"WITH {ctes}, {stripped[4:].lstrip()}"
     return f"WITH {ctes} {sql}"
+
+
+def fingerprint(sql: str) -> str:
+    """md5 of an oracle's SQL with this package's absolute directory
+    replaced by ``<pkg>``: an oracle that reads a package fixture by path
+    (``scan_archive_listing``'s ``fixtures/uploads``) fingerprints the
+    same in every checkout. ``ORACLE_FP.json`` holds one per query."""
+    return hashlib.md5(sql.replace(_PKG_DIR, "<pkg>").encode()).hexdigest()

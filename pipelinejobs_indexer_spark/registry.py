@@ -2,7 +2,9 @@
 
 Operator modules register each query with an optional DuckDB oracle SQL
 string. ``load_all()`` imports every operator module exactly once so the
-registry is fully populated before the driver enumerates it.
+registry is fully populated before the driver enumerates it. ``QUERIES``
+and ``ORACLE`` keep registration order; ``ORACLE_FP.json`` at the repo
+root pins each oracle's text (``tests/test_parity.py`` checks it).
 """
 
 from __future__ import annotations
@@ -17,14 +19,12 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# Ordered so an external correctness sweep that enumerates the registry
-# front-to-back reaches the least-recently-proven queries first: streaming,
-# LLM-pipeline, sink, and composed-plan queries lead; the operator families
-# with standing green evidence trail.
+# The import order of the operator modules, and so the order in which
+# ``QUERIES`` and ``ORACLE`` enumerate. Nothing re-sorts them afterwards.
 _MODULES = [
     "pipelinejobs_indexer_spark.streaming.queries",
-    "pipelinejobs_indexer_spark.llm.dedup",
     "pipelinejobs_indexer_spark.llm.similarity",
+    "pipelinejobs_indexer_spark.llm.dedup",
     "pipelinejobs_indexer_spark.llm.train",
     "pipelinejobs_indexer_spark.llm.text",
     "pipelinejobs_indexer_spark.llm.multimodal",
@@ -43,212 +43,6 @@ _MODULES = [
 ]
 
 _loaded = False
-
-
-def _latest_green_round(root: str | None = None) -> dict[str, int]:
-    """Latest driver round with a full green (rows+schema+hash) row per
-    query, read from the accumulated ``CORRECTNESS_r*.json`` files at the
-    repo root. Queries absent from the mapping have no hash-level driver
-    evidence yet and must enumerate first (the driver caps each sweep at
-    ~50 queries). Computing this from the evidence files — instead of a
-    hand-maintained tier list — keeps the rotation fresh every round."""
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError) as exc:
-            # A malformed evidence file must not silently reshuffle the
-            # whole sweep rotation (VERDICT r7 item 7 — the r6 bench-file
-            # lesson applied to correctness): warn loudly and skip.
-            import sys
-
-            print(
-                f"WARNING: registry rotation skipping unreadable evidence "
-                f"file {os.path.basename(path)}: {exc}",
-                file=sys.stderr,
-            )
-            continue
-        if not isinstance(data, dict):
-            import sys
-
-            print(
-                f"WARNING: registry rotation skipping non-object evidence "
-                f"file {os.path.basename(path)}",
-                file=sys.stderr,
-            )
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _git_commit_time(root: str, relpath: str) -> int | None:
-    """Unix time of the last commit touching *relpath*, or None when git
-    (or the history) is unavailable — rotation must degrade to age-only
-    ordering on a gitless deployment, never fail."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", root, "log", "-1", "--format=%ct", "--", relpath],
-            capture_output=True, text=True, timeout=10,
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    val = out.stdout.strip()
-    return int(val) if out.returncode == 0 and val.isdigit() else None
-
-
-def _stale_evidence_queries(latest: dict[str, int], root: str | None = None) -> set[str]:
-    """Queries whose SOURCE MODULE was committed after the evidence file
-    of their latest green round — their standing green row no longer
-    proves the code that would run today (VERDICT r10 item 4: dedup.py
-    changed in r10 while llm_dedup_minhash's newest hash evidence was
-    r8, and age-only rotation would make it wait ~4 rounds for
-    re-proof). These must front-load into the driver's ~50-query sweep
-    window alongside never-proven queries."""
-    import inspect
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    evidence_time: dict[int, int | None] = {}
-    module_time: dict[str, int | None] = {}
-    stale: set[str] = set()
-    for name, fn in QUERIES.items():
-        rnd = latest.get(name)
-        if rnd is None:
-            continue  # never green — already front-loaded by tier 0
-        if rnd not in evidence_time:
-            # the unpadded fallback only exists for rounds < 10, where
-            # the two formatted names differ — for rnd >= 10 they are
-            # identical and the `or` would re-run the same git log
-            # subprocess on every cache miss (ADVICE r11)
-            padded, plain = f"CORRECTNESS_r{rnd:02d}.json", f"CORRECTNESS_r{rnd}.json"
-            ev = _git_commit_time(root, padded)
-            if ev is None and plain != padded:
-                ev = _git_commit_time(root, plain)
-            evidence_time[rnd] = ev
-        ev = evidence_time[rnd]
-        if ev is None:
-            continue
-        try:
-            src = os.path.relpath(inspect.getsourcefile(fn), root)
-        except (TypeError, ValueError):
-            continue
-        if src not in module_time:
-            module_time[src] = _git_commit_time(root, src)
-        mt = module_time[src]
-        if mt is not None and mt > ev:
-            stale.add(name)
-    return stale
-
-
-# Evidence this many rounds older than the newest round on file escalates
-# ahead of the source-dirty tier. Rationale (VERDICT r12 item 1): one
-# module edit can dirty more queries than the driver's ~50-query sweep
-# window holds, EVERY round — dedup.py alone carries ~30 queries — so a
-# clean-and-stable query ordered behind the dirty tier can stay unproven
-# indefinitely while its substrate (Spark/DuckDB versions, fixtures,
-# shared helpers) drifts. Four rounds is the observed starvation horizon:
-# the r12 audit found 16 queries parked on r7/r8 evidence.
-_AGE_ESCALATION_ROUNDS = 4
-
-
-def _age_escalated_queries(latest: dict[str, int]) -> set[str]:
-    """Queries whose latest green evidence is ``_AGE_ESCALATION_ROUNDS``
-    or more rounds behind the newest round on file. These bound the
-    proof rotation's tail: they outrank merely source-dirty names (whose
-    population can exceed the sweep window every round) so no green row
-    ever ages past the horizon while dirtier-but-younger proofs recycle."""
-    if not latest:
-        return set()
-    newest = max(latest.values())
-    return {
-        n for n, rnd in latest.items() if newest - rnd >= _AGE_ESCALATION_ROUNDS
-    }
-
-
-def _changed_oracle_queries(root: str | None = None) -> set[str]:
-    """Queries whose CURRENT oracle SQL no longer matches the
-    fingerprint recorded at their last driver-verified green row
-    (ORACLE_FP.json, maintained by scripts/update_oracle_fingerprints
-    .py). A changed oracle is a changed CONTRACT: the standing
-    evidence proved a different statement, so these outrank even
-    source-dirty queries in the sweep rotation (VERDICT r11 item 8 —
-    the three r12 df-cap fixes rewrote their oracles, and evidence-age
-    ordering alone would have parked them behind ~70 merely
-    source-dirty dedup/multimodal queries, past the ~50-query sweep
-    window). Oracles must already be resolved (no callables) when
-    this runs. Missing file or missing names degrade silently to
-    'unchanged' — the age tiers still apply."""
-    import hashlib
-    import json
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        with open(os.path.join(root, "ORACLE_FP.json")) as fh:
-            fps = json.load(fh)
-    except (OSError, ValueError):
-        return set()
-    return {
-        n
-        for n, sql in ORACLE.items()
-        if isinstance(sql, str)
-        and n in fps
-        and fps[n] != hashlib.md5(sql.encode()).hexdigest()
-    }
-
-
-def _reproof_queries(latest: dict[str, int], root: str | None = None) -> set[str]:
-    """Named re-proof obligations from REPROOF.json — queries the previous
-    round's verdict explicitly requires green in THIS round's sample.
-    Exists because the heuristic tiers cannot always honor such a mandate:
-    in r15 the source-dirty population (~128 names) exceeded the driver's
-    ~50-query sweep window and the four r14-mandated queries carried the
-    youngest evidence within it, so every defensible within-tier ordering
-    left them outside the window. Entries are inert once the query has a
-    green driver row from the file's ``round`` or later (so a stale file
-    never distorts future rotations), and the list is expected to stay a
-    handful of names — a window-sized list would starve the age tier.
-    Missing/malformed file degrades silently to 'no obligations'."""
-    import json
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        with open(os.path.join(root, "REPROOF.json")) as fh:
-            data = json.load(fh)
-        rnd = int(data["round"])
-        names = data["queries"]
-    except (OSError, ValueError, KeyError, TypeError):
-        return set()
-    return {
-        n for n in names
-        if isinstance(n, str) and n in QUERIES and latest.get(n, -1) < rnd
-    }
 
 
 def register(
@@ -276,64 +70,7 @@ def load_all() -> None:
         return
     for mod in _MODULES:
         importlib.import_module(mod)
-    # Front-load queries whose standing evidence is stalest. Oracled
-    # queries with no green driver row ever enumerate first (round 0),
-    # alongside queries whose source module was committed AFTER their
-    # latest evidence file (source-change-aware rotation, VERDICT r10
-    # item 4 — a green row from round N proves nothing about code
-    # committed in round N+1); then oracled queries by ascending
-    # latest-green round, so a 50-query sweep always refreshes the
-    # least-recently-proven slice. Rows-only queries (no DuckDB oracle —
-    # a driver row carries little information) trail everything with
-    # hash evidence to gain.
-    latest = _latest_green_round()
-    stale = _stale_evidence_queries(latest)
-    aged = _age_escalated_queries(latest)
-    reproof = _reproof_queries(latest)
     for n, v in ORACLE.items():  # resolve lazily-rendered oracle SQL
         if callable(v):
             ORACLE[n] = v()
-    changed = _changed_oracle_queries()
-
-    # Tier precedence is structural — (oracled?, tier_rank, evidence
-    # round) — not arithmetic offsets in one shared keyspace (ADVICE
-    # r13: magnitude encoding only held while round numbers stayed well
-    # under the offsets, and any offset tweak could silently reorder
-    # tiers). Ranks, first-to-sweep first:
-    #   0 changed-oracle — the CONTRACT moved, standing evidence is
-    #     void (VERDICT r11 item 8);
-    #   1 never-proven — no green driver row at all;
-    #   2 age-escalated — evidence past the horizon, ahead of the
-    #     (possibly window-sized) source-dirty tier so the rotation's
-    #     tail stays bounded (VERDICT r12 item 1 — 16 queries sat on
-    #     r7/r8 evidence behind ~70 dirty names for five rounds);
-    #   3 verdict-mandated re-proofs (REPROOF.json, r15) — explicit
-    #     per-round obligations the heuristics cannot guarantee when
-    #     the dirty population exceeds the sweep window; inert once
-    #     proven at/after the file's round;
-    #   4 source-dirty — module committed after the latest evidence,
-    #     ordered among themselves by evidence age (a whole-module
-    #     edit can mark more queries stale than one 50-query sweep
-    #     holds — the oldest proofs must re-run first);
-    #   5 fresh — ordered by ascending latest-green round.
-    def tier(n: str) -> tuple[int, int, int]:
-        if n not in ORACLE:
-            return (1, 0, latest.get(n, 0))
-        if n not in latest:
-            return (0, 1, 0)
-        if n in changed:
-            return (0, 0, latest[n])
-        if n in aged:
-            return (0, 2, latest[n])
-        if n in reproof:
-            return (0, 3, latest[n])
-        if n in stale:
-            return (0, 4, latest[n])
-        return (0, 5, latest[n])
-
-    ordered = sorted(QUERIES, key=tier)
-    for mapping in (QUERIES, ORACLE):
-        snapshot = {n: mapping[n] for n in ordered if n in mapping}
-        mapping.clear()
-        mapping.update(snapshot)
     _loaded = True

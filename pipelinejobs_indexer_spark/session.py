@@ -137,9 +137,9 @@ def get_spark(app_name: str = "pipelinejobs-indexer-spark") -> SparkSession:
         # PySpark 4 wraps EVERY DataFrame API call with error-context
         # capture: a Python stack inspection plus two extra py4j round
         # trips (a conf.get and a PySparkCurrentOrigin.set) per call —
-        # pure driver-side plan-construction overhead (guide §7.3), worth
-        # 25-45% of construct time on the expression-heavy DAGs (r15
-        # measured: pipeline_index_job construct 0.53 -> 0.30 s, minhash
+        # pure driver-side plan-construction overhead, worth 25-45% of
+        # construct time on the expression-heavy DAGs (measured:
+        # pipeline_index_job construct 0.53 -> 0.30 s, minhash
         # 0.55 -> 0.41 s). Error messages lose only the user call-site
         # line; results and plans are identical. Static conf, so it must
         # be set at build time — a cluster spark-submit should pass the
@@ -167,7 +167,7 @@ _checkpoint_dir_appids: set[str] = set()
 def iter_checkpoint(df, lazy: bool = False):
     """Materialize an iterative-loop intermediate and cut its lineage.
 
-    ``lazy=True`` (r14) defers the localCheckpoint's materialization to
+    ``lazy=True`` defers the localCheckpoint's materialization to
     the caller's NEXT action — for call sites that immediately count the
     checkpointed frame (the CC loop's convergence counts, its pair-DAG
     setup), eager+count was two jobs per round doing one job's work; a
@@ -229,7 +229,7 @@ def iter_checkpoint(df, lazy: bool = False):
             # host-local: on a real cluster, checkpoint files written
             # there are invisible to other executors and die with the
             # host — exactly the loss the flag exists to prevent. Say so
-            # ONCE, loudly, at selection time (ADVICE r5).
+            # ONCE, loudly, at selection time.
             log.warning(
                 "resilient_checkpoints is ON but SPARK_GRAFT_CHECKPOINT_DIR "
                 "is unset — falling back to host-local temp dir %s, which "

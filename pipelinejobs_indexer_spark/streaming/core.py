@@ -28,7 +28,7 @@ def _batch_schema(spark: SparkSession, path: str) -> StructType:
     """Probe a parquet file's batch-reader schema, memoized per
     (applicationId, path) in tables._SCHEMA_CACHE: schema inference runs
     a ~130 ms driver-side footer job per call, and every streaming-query
-    construction was re-paying it (r14 measurement). Shares the batch
+    construction was re-paying it (measured). Shares the batch
     loaders' cache so either side's first probe serves both."""
     from ..tables import _SCHEMA_CACHE
 
@@ -81,7 +81,7 @@ def _source_bytes(path: str) -> int:
     """Total bytes of a parquet source: file size, or the file-size sum
     for a directory-style dataset. ``os.path.getsize`` on a directory
     returns the inode size (~4 KB), which would classify any corpus-scale
-    directory dataset as 'small' (r14 ADVICE); summing the tree sizes it
+    directory dataset as 'small'; summing the tree sizes it
     correctly. Raises OSError for a missing path (callers decide the
     fallback)."""
     import os as _os
@@ -106,9 +106,9 @@ def replay_partitions(sf_dir: str, table: str = "events") -> int:
     session parallelism. A few-MB replay runs 1-2 stores instead of
     paying 32 stores' bookkeeping per micro-batch; a 100 TB backlog
     keeps every core busy. Sized from the replayed stream's ACTUAL
-    source table (r14 ADVICE — a documents replay was sized from
-    events.parquet), directory-aware via _source_bytes. Mirrors the
-    edge-count sizing in llm/dedup.connected_components."""
+    source table (a documents replay sized from events.parquet would
+    misjudge its state volume), directory-aware via _source_bytes.
+    Mirrors the edge-count sizing in llm/dedup.connected_components."""
     from ..session import default_parallelism
 
     try:
@@ -163,7 +163,7 @@ def run_to_batch(
     is given, shuffle partitions (== state-store count, fixed at the
     query's first checkpoint) are scoped to replay_partitions() for the
     run and restored afterwards; ``table`` names the replayed source so
-    the sizing reads the stream's actual input (r14 ADVICE).
+    the sizing reads the stream's actual input.
 
     The state-store backend comes from ``CONFIG.state_store``
     (SPARK_GRAFT_STATE_STORE) via :func:`state_store_conf`: the default
@@ -176,7 +176,7 @@ def run_to_batch(
     spark = stream_df.sparkSession
     name = f"stream_out_{_uuid.uuid4().hex}"
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    # RAM-backed checkpoint for SMALL replays (r14): the replay harness's
+    # RAM-backed checkpoint for SMALL replays: the replay harness's
     # checkpoint (offset/commit logs + state snapshots) is ephemeral by
     # construction — availableNow into a driver-memory sink has nothing
     # durable to restart — yet the default temp-dir checkpoint pays real

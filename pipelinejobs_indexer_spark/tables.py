@@ -53,7 +53,7 @@ PET_NOUN = ["bug", "fox", "owl", "crab", "newt", "lark", "moth"]
 # session re-probes and distinct sf_dirs never collide. These memoize
 # METADATA the session could cache itself (parquet footer schema, scan
 # split width) — never data or results; every action still recomputes
-# from the parquet inputs. Motivation (r14 measurement): a bare
+# from the parquet inputs. Measured reason: a bare
 # ``spark.read.parquet(path)`` runs a driver-side schema-inference job
 # per call (~130 ms); with an explicit schema the reader builds in
 # ~25 ms. A bench sweep constructs each query fresh per run at ~2
@@ -93,7 +93,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Scan-identity marker (set AFTER any events normalization so the
     # returned frame carries it): lets spread() consult the width cache
     # instead of re-running the ~50 ms plan->RDD probe per construction.
-    # Brittleness note (VERDICT r14 item 4): a private attribute on a
+    # Brittleness note: a private attribute on a
     # DataFrame works on classic PySpark but would be silently dropped
     # by a Spark Connect DataFrame (different proxy object) — the
     # failure mode is a harmless re-probe per construction, never a
@@ -124,7 +124,7 @@ def spread(df: DataFrame) -> DataFrame:
     conversion, ~50 ms of driver time) is cached per (applicationId,
     path) when the frame carries load_table's scan-identity marker:
     scan width is fixed for a given path within a session, and every
-    query construction was re-paying the probe (r14 measurement).
+    query construction was re-paying the probe (measured).
     Frames without the marker (derived/test frames) probe as before.
     """
     from .session import default_parallelism
@@ -195,9 +195,9 @@ _SCAN_WIDTH_CACHE: dict[tuple, int] = {}
 # Fixture-builder LOGICAL-PLAN memo, keyed (applicationId, builder,
 # bound arguments): a fixture view's unresolved plan is identical for
 # every construction within a session, yet each build re-runs ~100
-# Column-algebra py4j round trips (r15 cProfile: jobs ~0.15 s,
-# archive_files ~0.12 s, messages ~0.10 s of pure driver time per call
-# — guide §7.3). Memoizing the DataFrame HANDLE is the plan-level
+# Column-algebra py4j round trips (cProfile: jobs ~0.15 s,
+# archive_files ~0.12 s, messages ~0.10 s of pure driver time per
+# call). Memoizing the DataFrame HANDLE is the plan-level
 # analog of the schema cache above — the semantic equivalent of
 # registering the fixture views once per session (CREATE TEMP VIEW) and
 # referencing them by name: a DataFrame is an immutable plan
@@ -352,7 +352,7 @@ def archive_files(
 ) -> DataFrame:
     """Indexed file records derived from lineitem (FIXTURES.md B2).
 
-    ``spread=False`` (r14) skips the keyed pre-repartition for consumers
+    ``spread=False`` skips the keyed pre-repartition for consumers
     whose plans prune every sha2-derived column (e.g. the storage aggs:
     ext/level/length only): there the projection left in the scan stage
     is a few CASE/round expressions, partial aggregation collapses it

@@ -129,9 +129,9 @@ def main() -> None:
         "",
     ]
     # SHOWCASE (annotated) entries first, then every remaining registry
-    # name sorted — full coverage, no silent omissions, and a stable
-    # section order (registry.QUERIES order depends on load_all's module
-    # order, so it is not a regeneration-stable key)
+    # name sorted by name — full coverage, no silent omissions, and a
+    # section order that keeps diffs small when a query is added,
+    # renamed or moved between modules
     names = list(SHOWCASE) + sorted(n for n in registry.QUERIES if n not in SHOWCASE)
     for name in names:
         note = SHOWCASE.get(

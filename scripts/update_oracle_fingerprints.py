@@ -1,109 +1,35 @@
-"""Maintain ORACLE_FP.json — an md5 fingerprint of each query's DuckDB
-oracle SQL *as last proven by a driver hash row*.
+"""Write ORACLE_FP.json: the fingerprint (``oracle.fingerprint``) of
+every registered query's DuckDB oracle SQL.
 
-``registry.load_all()`` front-loads any query whose CURRENT oracle text
-no longer matches its recorded fingerprint: a changed oracle is a
-changed contract, so the standing green evidence proves a different
-statement and the query must re-run at the head of the next sweep
-(VERDICT r11 item 8).
-
-Run at ROUND START, before making changes:
+``tests/test_parity.py::test_oracle_sql_matches_fingerprints`` fails
+when an oracle's text no longer matches its fingerprint. Run this script
+when an oracle is changed on purpose, and record that change in
+CHANGES.md:
 
     python scripts/update_oracle_fingerprints.py
-
-Default mode refreshes ONLY the names with a fully-green
-(rows+schema+hash) row in the newest CORRECTNESS_r*.json — at round
-start the working tree is exactly the code the driver just verified,
-so those queries' current oracle text is proven text. Names without a
-fresh green row keep their old fingerprint: if their text changed, the
-mismatch must SURVIVE until the driver re-proves them.
-
-``--bootstrap`` writes every oracled name unconditionally — used once
-from a tree whose entire registry carried green evidence (the round-11
-commit), never on a tree with unproven oracle edits. Always run from
-the DEPLOYED checkout (/root/repo): some oracles embed absolute
-fixture paths (scan_archive_listing), so fingerprints taken in a
-scratch worktree differ spuriously.
-
-``--void NAME [NAME...]`` stamps the named queries' fingerprints with
-a sentinel that can never match, voiding their standing evidence and
-front-loading them into the next sweep. Use when a query's PLAN was
-rewritten but its oracle text is unchanged (e.g. the r12 winnow df
-shape fix) — the next green driver row overwrites the sentinel with
-the true fingerprint via the default refresh.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
 import json
 import os
-import re
 import sys
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-ROOT = os.path.dirname(HERE)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 FP_PATH = os.path.join(ROOT, "ORACLE_FP.json")
 
 
-def _green_names_latest_round() -> set[str]:
-    newest, names = -1, set()
-    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if rnd < newest:
-            continue
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        green = {
-            n
-            for n, row in data.items()
-            if isinstance(row, dict)
-            and row.get("rows_match")
-            and row.get("schema_match")
-            and row.get("hash_match")
-        }
-        if rnd > newest:
-            newest, names = rnd, green
-    return names
-
-
 def main() -> None:
     from pipelinejobs_indexer_spark import registry
+    from pipelinejobs_indexer_spark.oracle import fingerprint
 
     registry.load_all()
-    try:
-        with open(FP_PATH) as fh:
-            fps = json.load(fh)
-    except (OSError, ValueError):
-        fps = {}
-    if "--void" in sys.argv:
-        names = sys.argv[sys.argv.index("--void") + 1 :]
-        unknown = [n for n in names if n not in registry.ORACLE]
-        if not names or unknown:
-            raise SystemExit(f"--void needs registered names; bad: {unknown}")
-        for n in names:
-            fps[n] = "VOID-pending-reproof"
-        refresh = set()
-    elif "--bootstrap" in sys.argv:
-        refresh = set(registry.ORACLE)
-    else:
-        refresh = _green_names_latest_round() & set(registry.ORACLE)
-    for n in sorted(refresh):
-        fps[n] = hashlib.md5(registry.ORACLE[n].encode()).hexdigest()
-    # drop names no longer registered (renames)
-    fps = {n: h for n, h in fps.items() if n in registry.ORACLE}
+    fps = {n: fingerprint(sql) for n, sql in registry.ORACLE.items()}
     with open(FP_PATH, "w") as fh:
         json.dump(fps, fh, indent=1, sort_keys=True)
-    print(f"wrote {FP_PATH}: {len(fps)} fingerprints, {len(refresh)} refreshed")
+    print(f"wrote {FP_PATH}: {len(fps)} fingerprints")
 
 
 if __name__ == "__main__":
