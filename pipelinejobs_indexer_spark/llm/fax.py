@@ -17,7 +17,7 @@ Three TIFF compression schemes share the machinery:
 The run-length code tables (ITU-T T.4 Tables 2, 3 and 3a: white and
 black terminating codes 0..63, makeup codes 64..1728, and the shared
 extended makeups 1792..2560) are arbitrary published constants. Their
-transcription here is pinned EXTERNALLY by the round-10 conformance
+transcription here is pinned EXTERNALLY by the conformance
 fixtures: tests/fixtures/conformance/fax_*.tif are written by the
 JDK's independent TIFFFaxCompressor (com.sun.imageio), with the JDK
 reader's decoded pixels committed alongside — a transcription error
@@ -27,12 +27,13 @@ silently re-align: every line must sum exactly to the row width).
 The 2D (MMR) coder follows T.4 §4.2.1.3 changing-element semantics:
 vertical modes V(0)/VR(1..3)/VL(1..3), horizontal mode (001 + two MH
 runs), and pass mode (0001), with b1/b2 located on the reference line
-relative to a0's colour.
+relative to a0's colour. The mode words, like the run codes, are one
+published table that both sides read.
 
 The writer side (encode_g4 / encode_mh / encode_g3) exists so the
 registered query can synthesize fax payloads at scale and so round
-trips cross-check independently-written paths — the gif.py/tiff.py
-discipline. Encoder and decoder share only the published tables.
+trips cross-check the coding logic. Encoder and decoder share only the
+published tables and bits.py's MSB-first bit I/O.
 
 Reference parity: the reference pipeline (SD2E/pipelinejobs-indexer,
 reactor.py:16-213) catalogs uploads as opaque blobs; fax decode is
@@ -40,6 +41,8 @@ part of the multimodal ingest surface a training-data pipeline adds.
 """
 
 from __future__ import annotations
+
+from .bits import MsbReader, MsbWriter, read_symbol
 
 # ---------------------------------------------------------------- tables
 # ITU-T T.4 Table 2 — white run codes (run -> bit string)
@@ -115,90 +118,48 @@ _EXT_MAKEUP = {
     2560: "000000011111",
 }
 
-EOL = "000000000001"
-
-# 2D coding mode words (T.4 §4.2.1.3.4, Table 4)
-_MODE_PASS = "0001"
-_MODE_HORIZ = "001"
-_MODE_V = {0: "1", 1: "011", -1: "010", 2: "000011", -2: "000010",
-           3: "0000011", -3: "0000010"}
+# 2D coding mode words (T.4 §4.2.1.3.4, Table 4): pass, horizontal,
+# and vertical a1 - b1 offsets
+_MODE_WORDS = {"P": "0001", "H": "001", 0: "1", 1: "011", -1: "010",
+               2: "000011", -2: "000010", 3: "0000011", -3: "0000010"}
 
 
-def _invert(codes: dict[int, str], extra: dict[int, str]) -> dict:
-    """(length, code-int) -> run length lookup for the bit reader."""
-    out = {}
-    for run, bits in codes.items():
-        out[(len(bits), int(bits, 2))] = run
-    for run, bits in extra.items():
-        out[(len(bits), int(bits, 2))] = run
-    return out
+def _writer_table(*tables: dict) -> dict:
+    """Merge key -> bit-string tables into key -> (code, length), the
+    form MsbWriter.write takes; converted once at import."""
+    return {k: (int(b, 2), len(b)) for t in tables for k, b in t.items()}
 
 
-_WHITE_DECODE = _invert(_WHITE_CODES, _EXT_MAKEUP)
-_BLACK_DECODE = _invert(_BLACK_CODES, _EXT_MAKEUP)
-_MAX_CODE_LEN = 13  # longest code word in any table
+def _reader_table(codes: dict) -> dict:
+    """(length, code) -> key, the table read_symbol resolves against."""
+    return {(ln, code): k for k, (code, ln) in codes.items()}
 
 
-class _Bits:
-    """MSB-first bit reader over the strip bytes."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def eof(self) -> bool:
-        return self.pos >= 8 * len(self.data)
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            if self.eof():
-                raise ValueError("fax stream truncated mid-code")
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def peek(self, n: int) -> tuple[int, int]:
-        """Up to n bits without consuming; returns (bits, got)."""
-        save = self.pos
-        got = min(n, 8 * len(self.data) - save)
-        v = self.read(got) if got else 0
-        self.pos = save
-        return v, got
-
-    def byte_align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
+_WHITE = _writer_table(_WHITE_CODES, _EXT_MAKEUP)
+_BLACK = _writer_table(_BLACK_CODES, _EXT_MAKEUP)
+_MODE = _writer_table(_MODE_WORDS)
+_WHITE_DECODE = _reader_table(_WHITE)
+_BLACK_DECODE = _reader_table(_BLACK)
+_MODE_DECODE = _reader_table(_MODE)
+_MAX_CODE_LEN = 13  # longest code word in any run table
+EOL = (0b000000000001, 12)
+_EOFB = (0b000000000001_000000000001, 24)  # two EOLs
 
 
-def _read_run(bits: _Bits, table: dict) -> int:
+def _read_run(bits: MsbReader, table: dict) -> int:
     """One full run length: zero or more makeup codes (>= 64) then a
     terminating code (< 64). Every code word is resolved shortest-first
     against the published tables; an unmatched 13-bit window is
     corruption."""
     total = 0
     while True:
-        code = 0
-        length = 0
-        run = None
-        while length < _MAX_CODE_LEN:
-            code = (code << 1) | bits.read(1)
-            length += 1
-            run = table.get((length, code))
-            if run is not None:
-                break
-        if run is None:
-            raise ValueError(
-                f"no fax code word matches {code:0{length}b}"
-            )
+        run = read_symbol(bits, table, _MAX_CODE_LEN)
         total += run
         if run < 64:
             return total
 
 
-def _decode_mh_line(bits: _Bits, width: int) -> list[int]:
+def _decode_mh_line(bits: MsbReader, width: int) -> list[int]:
     """One 1D (Modified Huffman) line -> changing-element positions
     (the pixel index where each colour transition happens), always
     starting with a white run (a black first pixel is a white run of
@@ -237,7 +198,7 @@ def _b1_b2(ref: list[int], a0: int, a0_white: bool, width: int):
 
 
 def _decode_2d_line(
-    bits: _Bits, ref: list[int], width: int
+    bits: MsbReader, ref: list[int], width: int
 ) -> list[int]:
     """One 2D-coded line against reference changes -> changes list."""
     changes: list[int] = []
@@ -245,30 +206,11 @@ def _decode_2d_line(
     white = True
     while True:
         b1, b2 = _b1_b2(ref, a0, white, width)
-        # resolve the mode word
-        if bits.read(1):
-            mode = ("V", 0)
-        else:
-            if bits.read(1):
-                # 01x: VL1 (010) or VR1 (011)
-                mode = ("V", 1 if bits.read(1) else -1)
-            elif bits.read(1):
-                mode = ("H", None)  # 001
-            elif bits.read(1):
-                mode = ("P", None)  # 0001
-            else:
-                # 0000 1x / 0000 01x / 0000 001x -> V2/V3 words
-                if bits.read(1):
-                    mode = ("V", 2 if bits.read(1) else -2)
-                elif bits.read(1):
-                    mode = ("V", 3 if bits.read(1) else -3)
-                else:
-                    raise ValueError(
-                        "unsupported fax 2D extension/EOL inside a line"
-                    )
-        if mode[0] == "P":
+        # an extension or EOL word (0000001 / 0000000) matches no mode
+        mode = read_symbol(bits, _MODE_DECODE, 7)
+        if mode == "P":
             a0 = b2  # colour unchanged, no transition recorded
-        elif mode[0] == "H":
+        elif mode == "H":
             start = a0 if a0 > 0 else 0
             r1 = _read_run(bits, _WHITE_DECODE if white else _BLACK_DECODE)
             r2 = _read_run(bits, _BLACK_DECODE if white else _WHITE_DECODE)
@@ -280,7 +222,7 @@ def _decode_2d_line(
             changes.append(a2)
             a0 = a2
         else:
-            a1 = b1 + mode[1]
+            a1 = b1 + mode
             if not (0 <= a1 <= width):
                 raise ValueError("fax vertical mode lands outside the row")
             changes.append(a1)
@@ -308,14 +250,14 @@ def _changes_to_bits(changes: list[int], width: int) -> bytearray:
     return row
 
 
-def _find_eol(bits: _Bits) -> bool:
+def _find_eol(bits: MsbReader) -> bool:
     """Consume fill bits (zeros) up to and including the next EOL.
     Returns False cleanly at end of data."""
     zeros = 0
     while True:
         if bits.eof():
             return False
-        b = bits.read(1)
+        b = bits.read_bit()
         if b == 0:
             zeros += 1
             if zeros > 64 * 8:
@@ -346,14 +288,14 @@ def decode_fax(
         raise NotImplementedError("T.4 uncompressed mode (bit 1)")
     if compression == 4 and t6_options & 0b10:
         raise NotImplementedError("T.6 uncompressed mode")
-    bits = _Bits(data)
+    bits = MsbReader(data)
     rows: list[bytearray] = []
     ref: list[int] = [width, width]  # imaginary all-white reference
     two_d = bool(t4_options & 0b1)
     for y in range(height):
         if compression == 2:
             if y:
-                bits.byte_align()
+                bits.align()
             changes = _decode_mh_line(bits, width)
         elif compression == 3:
             # an EOL precedes every line per T.4; tolerate a missing
@@ -375,7 +317,7 @@ def decode_fax(
                         f"fax strip ends after {y} of {height} rows"
                     )
                 if two_d:
-                    line_is_1d = bool(bits.read(1))
+                    line_is_1d = bool(bits.read_bit())
             if line_is_1d:
                 changes = _decode_mh_line(bits, width)
             else:
@@ -388,46 +330,16 @@ def decode_fax(
 
 
 # ------------------------------------------------------------- encoders
-class _BitW:
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, bits: str) -> None:
-        for ch in bits:
-            self.acc = (self.acc << 1) | (ch == "1")
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.n = 0
-
-    def byte_align(self) -> None:
-        while self.n:
-            self.put("0")
-
-    def flush(self) -> bytes:
-        self.byte_align()
-        return bytes(self.buf)
-
-
-def _put_run(w: _BitW, run: int, white: bool) -> None:
-    table = _WHITE_CODES if white else _BLACK_CODES
+def _put_run(w: MsbWriter, run: int, white: bool) -> None:
+    table = _WHITE if white else _BLACK
     while run >= 2624:  # wider-than-2560+63 runs repeat the largest makeup
-        w.put(_EXT_MAKEUP[2560])
+        w.write(*table[2560])
         run -= 2560
-    if run >= 1792:
+    if run >= 64:
         mk = (run // 64) * 64
-        w.put(_EXT_MAKEUP[mk])
+        w.write(*table[mk])
         run -= mk
-    elif run >= 64:
-        mk = (run // 64) * 64
-        w.put(table[mk])
-        run -= mk
-    w.put(table[run])
+    w.write(*table[run])
 
 
 def _row_changes(row, width: int) -> list[int]:
@@ -443,9 +355,9 @@ def _row_changes(row, width: int) -> list[int]:
 
 def encode_mh(rows, width: int) -> bytes:
     """Compression 2: MH lines, each starting on a byte boundary."""
-    w = _BitW()
+    w = MsbWriter()
     for row in rows:
-        w.byte_align()
+        w.align()
         pos = 0
         white = True
         for c in _row_changes(row, width) + [width]:
@@ -457,7 +369,7 @@ def encode_mh(rows, width: int) -> bytes:
     return w.flush()
 
 
-def _encode_1d_line(w: _BitW, changes: list[int], width: int) -> None:
+def _encode_1d_line(w: MsbWriter, changes: list[int], width: int) -> None:
     pos = 0
     white = True
     for c in changes + [width]:
@@ -469,7 +381,7 @@ def _encode_1d_line(w: _BitW, changes: list[int], width: int) -> None:
 
 
 def _encode_2d_line(
-    w: _BitW, changes: list[int], ref: list[int], width: int
+    w: MsbWriter, changes: list[int], ref: list[int], width: int
 ) -> None:
     cl = changes + [width, width]
     a0 = -1
@@ -479,17 +391,17 @@ def _encode_2d_line(
         b1, b2 = _b1_b2(ref, a0, white, width)
         a1 = cl[ci] if ci < len(cl) else width
         if b2 < a1:
-            w.put(_MODE_PASS)
+            w.write(*_MODE["P"])
             a0 = b2
         elif abs(a1 - b1) <= 3:
-            w.put(_MODE_V[a1 - b1])
+            w.write(*_MODE[a1 - b1])
             a0 = a1
             white = not white
             ci += 1
         else:
             a2 = cl[ci + 1] if ci + 1 < len(cl) else width
             start = a0 if a0 > 0 else 0
-            w.put(_MODE_HORIZ)
+            w.write(*_MODE["H"])
             _put_run(w, a1 - start, white)
             _put_run(w, a2 - a1, not white)
             a0 = a2
@@ -500,13 +412,13 @@ def _encode_2d_line(
 
 def encode_g4(rows, width: int) -> bytes:
     """Compression 4 (T.6 MMR) with a trailing EOFB."""
-    w = _BitW()
+    w = MsbWriter()
     ref = [width, width]
     for row in rows:
         changes = _row_changes(row, width)
         _encode_2d_line(w, changes, ref, width)
         ref = changes if changes else [width, width]
-    w.put(EOL + EOL)  # EOFB
+    w.write(*_EOFB)
     return w.flush()
 
 
@@ -515,14 +427,14 @@ def encode_g3(rows, width: int, two_d: bool = False) -> bytes:
     two_d set (T4Options bit 0), the first line is 1D and subsequent
     lines are 2D-coded against the previous line, each EOL carrying
     the 1D/2D flag bit."""
-    w = _BitW()
+    w = MsbWriter()
     ref: list[int] | None = None
     for row in rows:
         changes = _row_changes(row, width)
-        w.put(EOL)
+        w.write(*EOL)
         if two_d:
             line_1d = ref is None
-            w.put("1" if line_1d else "0")
+            w.write(int(line_1d), 1)
             if line_1d:
                 _encode_1d_line(w, changes, width)
             else:
@@ -534,7 +446,7 @@ def encode_g3(rows, width: int, two_d: bool = False) -> bytes:
 
 
 # --------------------------------------------- PDF CCITTFaxDecode layer
-def _rest_is_zero_fill(bits: _Bits) -> bool:
+def _rest_is_zero_fill(bits: MsbReader) -> bool:
     """True when every bit from the current position to the end of the
     data is zero — i.e. what remains is pad/fill, not another line (no
     fax line can be all zero bits: every code table entry contains a
@@ -573,7 +485,7 @@ def decode_fax_pdf(
         raise ValueError("CCITTFax image with zero width")
     if rows is not None and rows <= 0:
         raise ValueError("CCITTFax image with zero height")
-    bits = _Bits(data)
+    bits = MsbReader(data)
     out: list[bytearray] = []
     ref: list[int] = [columns, columns]
     # a hard backstop so a hostile stream with rows=None cannot spin:
@@ -585,13 +497,13 @@ def decode_fax_pdf(
             # pad) sits on the byte boundary in aligned streams, and
             # peeking it from mid-byte would mistake it for line data
             # (soak-found)
-            bits.byte_align()
+            bits.align()
         if rows is None:
             rem = 8 * len(data) - bits.pos
             if rem <= 0:
                 break
             head, got = bits.peek(24)
-            if got == 24 and head == 0b000000000001_000000000001:
+            if got == 24 and head == _EOFB[0]:
                 break  # EOFB
             if _rest_is_zero_fill(bits):
                 break  # zero pad tail, not a line
@@ -621,7 +533,7 @@ def decode_fax_pdf(
                     raise ValueError(
                         f"fax stream ends after {len(out)} of {rows} rows"
                     )
-                if bits.read(1):
+                if bits.read_bit():
                     changes = _decode_mh_line(bits, columns)
                 else:
                     changes = _decode_2d_line(bits, ref, columns)
@@ -647,22 +559,22 @@ def encode_ccitt_pdf(
             return encode_g4(rows, width)
         # /EncodedByteAlign with MMR: each coded line begins on a byte
         # boundary (rare but legal — §7.4.6 Table 11)
-        w = _BitW()
+        w = MsbWriter()
         ref = [width, width]
         for i, row in enumerate(rows):
             if i:
-                w.byte_align()
+                w.align()
             changes = _row_changes(row, width)
             _encode_2d_line(w, changes, ref, width)
             ref = changes if changes else [width, width]
-        w.byte_align()
-        w.put(EOL + EOL)  # EOFB
+        w.align()
+        w.write(*_EOFB)
         return w.flush()
     if k > 0:
         return encode_g3(rows, width, two_d=True)
     if byte_align:
         return encode_mh(rows, width)
-    w = _BitW()
+    w = MsbWriter()
     for row in rows:
         _encode_1d_line(w, _row_changes(row, width), width)
     return w.flush()

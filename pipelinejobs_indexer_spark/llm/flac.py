@@ -1,8 +1,8 @@
 """Pure-stdlib FLAC codec: rice coding + integer predictors, no codec
 libraries.
 
-Purpose: close the next audio-decoder class a stdlib-only container can
-honestly decode (the gif.py/webp.py discipline, round 8). The
+Purpose: decode the audio class that needs no float DSP, with the
+same stdlib-only discipline as gif.py and webp.py. The
 NotImplementedError contract in multimodal.decode_audio lumped FLAC
 with mp3/ogg, but FLAC is NOT float DSP: every decode step is integer
 arithmetic — unary/rice residual coding, fixed polynomial predictors,
@@ -25,10 +25,10 @@ corrupt payloads are data errors, never a codec gap.
 The encoder is spec-subset but real — per-subframe choice over
 constant/fixed orders (or caller-pinned LPC coefficients and rice
 escapes), any stereo mode, any partition order — so an encode→decode
-round trip exercises every decoder branch with independently-written
-bit paths (the webp.py pattern).
+round trip exercises every decoder branch. Bit packing and the CRCs
+come from bits.py, whose round trips tests/test_bits.py checks.
 
-Conformance status (round 10): the CRC layer is pinned EXTERNALLY —
+Conformance status: the CRC layer is pinned EXTERNALLY —
 both framing CRCs match the published reveng catalogue check values
 for "123456789" (CRC-8 poly 0x07 → 0xF4; CRC-16 poly 0x8005 init 0 →
 0xFEE8, tests/test_flac.py), and the stream MD5 is hashlib's. The
@@ -49,6 +49,8 @@ import struct
 
 import numpy as np
 
+from .bits import MsbReader, MsbWriter, crc_msb
+
 #: refuse streams declaring more than this many samples x channels
 MAX_SAMPLES = 1 << 26
 
@@ -67,107 +69,6 @@ _SAMPLE_SIZE_CODES = {8: 1, 12: 2, 16: 4, 20: 5, 24: 6}
 _SAMPLE_SIZE_BITS = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
-def _crc8(data: bytes) -> int:
-    """CRC-8, poly 0x07, init 0 (frame-header CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16, poly 0x8005, init 0 (whole-frame CRC)."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = (
-                ((crc << 1) ^ 0x8005) & 0xFFFF
-                if crc & 0x8000
-                else (crc << 1) & 0xFFFF
-            )
-    return crc
-
-
-# ---------------------------------------------------------------- bit I/O
-class _BitReader:
-    """MSB-first bit reader (FLAC byte order — the opposite of VP8L's)."""
-
-    def __init__(self, data: bytes, pos_bits: int = 0) -> None:
-        self.data = data
-        self.pos = pos_bits
-
-    def read(self, n: int) -> int:
-        end = self.pos + n
-        if end > 8 * len(self.data):
-            raise ValueError("truncated FLAC bitstream")
-        v = 0
-        for i in range(self.pos, end):
-            v = (v << 1) | ((self.data[i >> 3] >> (7 - (i & 7))) & 1)
-        self.pos = end
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        """Count 0 bits up to the terminating 1 bit."""
-        n = 0
-        limit = 8 * len(self.data)
-        while True:
-            if self.pos >= limit:
-                raise ValueError("truncated FLAC bitstream (unary)")
-            bit = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-            self.pos += 1
-            if bit:
-                return n
-            n += 1
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        return self.pos >> 3
-
-
-class _BitWriter:
-    """MSB-first bit packer."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                self.acc = 0
-                self.nbits = 0
-
-    def write_signed(self, value: int, n: int) -> None:
-        self.write(value & ((1 << n) - 1), n)
-
-    def write_unary(self, n: int) -> None:
-        while n >= 32:
-            self.write(0, 32)
-            n -= 32
-        self.write(1, n + 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0, "unaligned frame"
-        return bytes(self.out)
-
-
 def _utf8_coded(value: int) -> bytes:
     """FLAC's extended-UTF-8 coded number (frame/sample index): n follow
     bytes carry 6 bits each, the lead byte carries 6-n bits behind an
@@ -184,7 +85,7 @@ def _utf8_coded(value: int) -> bytes:
     return bytes(out)
 
 
-def _read_utf8_coded(br: _BitReader) -> int:
+def _read_utf8_coded(br: MsbReader) -> int:
     b0 = br.read(8)
     if b0 < 0x80:
         return b0
@@ -214,7 +115,7 @@ def _unzigzag(u: int) -> int:
 
 
 def _read_residual(
-    br: _BitReader, block_size: int, order: int
+    br: MsbReader, block_size: int, order: int
 ) -> list[int]:
     method = br.read(2)
     if method > 1:
@@ -244,7 +145,7 @@ def _read_residual(
 
 
 def _write_residual(
-    bw: _BitWriter,
+    bw: MsbWriter,
     res: list[int],
     block_size: int,
     order: int,
@@ -267,7 +168,7 @@ def _write_residual(
             bw.write(escape, pbits)
             bw.write(escape_raw, 5)
             for r in part:
-                bw.write_signed(r, escape_raw)
+                bw.write(r, escape_raw)
             continue
         # pick the rice parameter minimizing the coded size
         best_param, best_cost = 0, None
@@ -284,7 +185,7 @@ def _write_residual(
 
 # ------------------------------------------------------------- subframes
 def _read_subframe(
-    br: _BitReader, block_size: int, bps: int
+    br: MsbReader, block_size: int, bps: int
 ) -> list[int]:
     if br.read(1):
         raise ValueError("bad FLAC subframe padding bit")
@@ -337,7 +238,7 @@ def _read_subframe(
 
 
 def _encode_subframe(
-    bw: _BitWriter,
+    bw: MsbWriter,
     chan: list[int],
     bps: int,
     order: int | None,
@@ -353,7 +254,7 @@ def _encode_subframe(
             bw.write(0, 1)
             bw.write(0, 6)
             bw.write(0, 1)
-            bw.write_signed(chan[0], bps)
+            bw.write(chan[0], bps)
             return
         best, best_cost = 0, None
         for o in range(min(4, n) + 1):
@@ -381,11 +282,11 @@ def _encode_subframe(
         bw.write(32 | (o - 1), 6)
         bw.write(0, 1)  # no wasted bits
         for s in chan[:o]:
-            bw.write_signed(s, bps)
+            bw.write(s, bps)
         bw.write(prec - 1, 4)
-        bw.write_signed(shift, 5)
+        bw.write(shift, 5)
         for c in coefs:
-            bw.write_signed(c, prec)
+            bw.write(c, prec)
         res = [
             chan[i]
             - (sum(c * chan[i - j - 1] for j, c in enumerate(coefs)) >> shift)
@@ -398,7 +299,7 @@ def _encode_subframe(
         bw.write(1, 6)
         bw.write(0, 1)
         for s in chan:
-            bw.write_signed(s, bps)
+            bw.write(s, bps)
         return
     order = min(order, n)  # a pinned order can exceed a short final frame
     coefs = _FIXED_COEFS[order]
@@ -406,7 +307,7 @@ def _encode_subframe(
     bw.write(8 + order, 6)
     bw.write(0, 1)
     for s in chan[:order]:
-        bw.write_signed(s, bps)
+        bw.write(s, bps)
     res = [
         chan[i] - sum(c * chan[i - j - 1] for j, c in enumerate(coefs))
         for i in range(order, n)
@@ -435,7 +336,7 @@ def decode_flac(data: bytes) -> dict:
         if btype == 0:
             if length != 34:
                 raise ValueError(f"bad FLAC STREAMINFO length {length}")
-            br = _BitReader(body)
+            br = MsbReader(body)
             info = {
                 "min_bs": br.read(16),
                 "max_bs": br.read(16),
@@ -523,7 +424,7 @@ _RATE_TABLE = {
 def _decode_frame(
     data: bytes, pos: int, info: dict, out: list[list[int]]
 ) -> int:
-    br = _BitReader(data, pos * 8)
+    br = MsbReader(data, pos * 8)
     sync = br.read(14)
     if sync != 0b11111111111110:
         raise ValueError(f"bad FLAC frame sync at byte {pos}")
@@ -557,9 +458,9 @@ def _decode_frame(
         raise ValueError("reserved FLAC sample size code 3")
     else:
         bps = _SAMPLE_SIZE_BITS[size_code]
-    header_end = br.byte_pos()
+    header_end = br.pos >> 3
     crc8 = br.read(8)
-    if _crc8(data[pos:header_end]) != crc8:
+    if crc_msb(data[pos:header_end], 0x07, 8) != crc8:
         raise ValueError("FLAC frame header CRC-8 mismatch")
     if chan_code < 8:
         n_chan = chan_code + 1
@@ -590,9 +491,9 @@ def _decode_frame(
     else:
         raise ValueError(f"reserved FLAC channel assignment {chan_code}")
     br.align()
-    frame_end = br.byte_pos()
+    frame_end = br.pos >> 3
     crc16 = br.read(16)
-    if _crc16(data[pos:frame_end]) != crc16:
+    if crc_msb(data[pos:frame_end], 0x8005, 16) != crc16:
         raise ValueError("FLAC frame CRC-16 mismatch")
     lim = 1 << (info["bits"] - 1)
     for c, chan in enumerate(chans):
@@ -600,7 +501,7 @@ def _decode_frame(
             if not -lim <= s < lim:
                 raise ValueError("FLAC sample exceeds declared bit depth")
         out[c].extend(chan)
-    return br.byte_pos()
+    return br.pos >> 3
 
 
 # --------------------------------------------------------------- encoding
@@ -656,7 +557,7 @@ def encode_flac(
             partition_order, escape_raw, wide_rice,
         )
         frame_idx += 1
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(block_size, 16)  # min/max block size (last frame may be short
     bw.write(block_size, 16)  # — spec permits, decoders must not assume)
     bw.write(0, 24)
@@ -665,7 +566,7 @@ def encode_flac(
     bw.write(channels - 1, 3)
     bw.write(bits - 1, 5)
     bw.write(n, 36)
-    streaminfo = bw.bytes() + md5.digest()
+    streaminfo = bw.flush() + md5.digest()
     head = bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
     return _MAGIC + head + bytes(frames)
 
@@ -684,7 +585,7 @@ def _encode_frame(
     wide_rice: bool,
 ) -> bytes:
     bs = len(chunk)
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0b11111111111110, 14)
     bw.write(0, 1)
     bw.write(0, 1)  # fixed blocksize strategy: coded number = frame index
@@ -702,10 +603,9 @@ def _encode_frame(
     for b in _utf8_coded(frame_idx):
         bw.write(b, 8)
     bw.write(bs - 1, 16)
-    bw.align()
-    header = bw.bytes()
-    header += bytes([_crc8(header)])
-    bw = _BitWriter()
+    header = bw.flush()
+    header += bytes([crc_msb(header, 0x07, 8)])
+    bw = MsbWriter()
     cols = [chunk[:, c].tolist() for c in range(channels)]
     if stereo == "independent":
         subs = [(col, bits) for col in cols]
@@ -723,6 +623,5 @@ def _encode_frame(
         _encode_subframe(
             bw, chan, bps, order, lpc, porder, escape_raw, wide_rice
         )
-    bw.align()
-    body = header + bw.bytes()
-    return body + struct.pack(">H", _crc16(body))
+    body = header + bw.flush()
+    return body + struct.pack(">H", crc_msb(body, 0x8005, 16))

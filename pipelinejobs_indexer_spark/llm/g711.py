@@ -240,7 +240,7 @@ def parse_companded_wav(content: bytes) -> dict:
         if len(data) % (width * nch) != 0:
             # misaligned data would otherwise surface as struct.error
             # (or a silently dropped trailing partial frame) — raise
-            # the module's documented ValueError up front (ADVICE r10)
+            # the module's documented ValueError up front
             raise ValueError(
                 f"float WAV data chunk of {len(data)} bytes is not a "
                 f"multiple of the {width * nch}-byte frame "

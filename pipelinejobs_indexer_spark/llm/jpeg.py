@@ -11,7 +11,7 @@ meets in practice:
   * Huffman entropy coding (DHT), byte-stuffing-aware bit reader,
     restart markers (DRI / RSTn);
   * DQT 8-bit and 16-bit quantization tables;
-  * PROGRESSIVE mode (SOF2, round 9) — the variant most web JPEGs
+  * PROGRESSIVE mode (SOF2) — the variant most web JPEGs
     actually are: scans accumulate into a per-block coefficient store
     (DC-first interleaved or single-component, DC refinement bits,
     AC-first spectral bands with EOB runs, AC refinement per T.81
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import math
 import struct
+
+from .bits import MsbWriter, canonical_codes, read_symbol
 
 # Zigzag scan order: index i in the entropy stream -> (row, col) raster
 # position, per T.81 Figure 5.
@@ -77,18 +79,11 @@ _COS = [[math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)] for x in ra
 _C = [1 / math.sqrt(2)] + [1.0] * 7
 
 
-def build_huffman(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(code_length, code) -> symbol, per T.81 Annex C code assignment."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+def _huffman(bits: list[int], vals: list[int]) -> tuple[dict, dict]:
+    """(decode, encode) tables of a DHT's BITS counts and HUFFVAL
+    symbols: canonical codes in HUFFVAL order (T.81 Annex C)."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return canonical_codes([(ln, vals[i]) for i, ln in enumerate(lengths)])
 
 
 class _BitReader:
@@ -131,15 +126,6 @@ class _BitReader:
     def byte_align(self) -> None:
         self.bit = 0
 
-    def read_huffman(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
-
 
 class _MarkerHit(Exception):
     pass
@@ -173,7 +159,7 @@ def _fancy_upsample_h(plane: list[list[int]]) -> list[list[int]]:
     (3*in[i] + in[i-1] + 1) >> 2, out[2i+1] = (3*in[i] + in[i+1] + 2)
     >> 2. T.81 leaves the upsampling filter to the decoder; this is the
     de-facto-standard choice (libjpeg do_fancy_upsampling), pinned
-    externally by the round-10 JDK conformance fixtures."""
+    externally by the JDK conformance fixtures."""
     out = []
     for row in plane:
         n = len(row)
@@ -318,7 +304,7 @@ def _decode_jpeg(data: bytes):
                 bits = list(data[p + 1 : p + 17])
                 nv = sum(bits)
                 vals = list(data[p + 17 : p + 17 + nv])
-                (huff_ac if tc else huff_dc)[th] = build_huffman(bits, vals)
+                (huff_ac if tc else huff_dc)[th] = _huffman(bits, vals)[0]
                 p += 17 + nv
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", data, body)
@@ -549,7 +535,7 @@ def _prog_dc_scan(
             pred = {k: 0 for k in pred}
         coef = store[ci][by][bx]
         if ah == 0:
-            t = reader.read_huffman(huff_dc[td])
+            t = read_symbol(reader, huff_dc[td], 16)
             diff = _extend(reader.read_bits(t), t) if t else 0
             cid = frame["comps"][ci]["id"]
             pred[cid] += diff
@@ -595,7 +581,7 @@ def _ac_first_block(reader, coef, ac_table, ss, se, al, eobrun):
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = reader.read_huffman(ac_table)
+        rs = read_symbol(reader, ac_table, 16)
         r, s = rs >> 4, rs & 0x0F
         if s == 0:
             if r == 15:  # ZRL
@@ -628,7 +614,7 @@ def _ac_refine_block(reader, coef, ac_table, ss, se, al, eobrun):
     k = ss
     if not eobrun:
         while k <= se:
-            rs = reader.read_huffman(ac_table)
+            rs = read_symbol(reader, ac_table, 16)
             r, s = rs >> 4, rs & 0x0F
             newval = 0
             if s == 0:
@@ -800,13 +786,13 @@ def _planes_to_pixels(frame, planes):
 
 def _decode_block(reader, dc_table, ac_table, q, pred, cid):
     coef = [0] * 64
-    t = reader.read_huffman(dc_table)
+    t = read_symbol(reader, dc_table, 16)
     diff = _extend(reader.read_bits(t), t) if t else 0
     pred[cid] += diff
     coef[0] = pred[cid] * q[0]
     k = 1
     while k < 64:
-        rs = reader.read_huffman(ac_table)
+        rs = read_symbol(reader, ac_table, 16)
         r, s = rs >> 4, rs & 0x0F
         if s == 0:
             if r == 15:  # ZRL: skip 16 zeros
@@ -824,37 +810,25 @@ def _decode_block(reader, dc_table, ac_table, q, pred, cid):
 
 # ------------------------------------------------- fixture synthesis side
 # Hand-assembled bitstreams for tests and the distributed operator: the
-# encoder below shares NOTHING with the decoder above except the public
-# constants (zigzag order, Annex K tables) — headers are packed field by
-# field, Huffman codes are emitted from the inverse table, so the decoder
-# independently re-derives block layout, code assignment, EXTEND
-# semantics, and byte stuffing.
+# encoder below shares with the decoder above only the public constants
+# (zigzag order, Annex K tables) and the canonical code assignment
+# (`_huffman`, checked against Annex K's published DC codes in
+# test_bits.py). Headers are packed field by field, so the decoder
+# independently re-derives block layout, EXTEND semantics and byte
+# stuffing.
 
 
-def _inverse_huffman(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    return {sym: (ln, code) for (ln, code), sym in build_huffman(bits, vals).items()}
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc, self.n = 0, 0
+class _BitWriter(MsbWriter):
+    """Entropy-coded segment writer: flush pads the last byte with
+    1-bits and stuffs a 0x00 after every 0xFF byte (T.81 F.1.2.3)."""
 
     def flush(self) -> bytes:
-        while self.n:
-            self.write(1, 1)  # pad with 1-bits per T.81
-        return bytes(self.out)
+        self.write(0xFF, -self.nbits % 8)
+        return bytes(self.out).replace(b"\xff", b"\xff\x00")
+
+
+_DC_CODES = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+_AC_CODES = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
 
 
 def _seg(marker: int, payload: bytes) -> bytes:
@@ -887,8 +861,6 @@ def synth_dc_jpeg(
         + b"".join(bytes([i + 1, 0x00]) for i in range(nc))
         + bytes([0, 63, 0]),
     )
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
     bw = _BitWriter()
     n_blocks = (width // 8) * (height // 8)
     preds = [0] * nc
@@ -897,12 +869,10 @@ def synth_dc_jpeg(
             diff = dc_blocks[ci][b] - preds[ci]
             preds[ci] = dc_blocks[ci][b]
             t = diff.bit_length() if diff > 0 else (-diff).bit_length()
-            ln, code = dc_codes[t]
-            bw.write(code, ln)
+            bw.write(*_DC_CODES[t])
             if t:
                 bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-            eln, ecode = ac_codes[0x00]  # EOB
-            bw.write(ecode, eln)
+            bw.write(*_AC_CODES[0x00])  # EOB
     return (
         b"\xff\xd8" + qtab + sof + dht + sos + bw.flush() + b"\xff\xd9"
     )
@@ -932,8 +902,6 @@ def synth_ac_jpeg(
         + bytes([0x10]) + bytes(STD_AC_LUM_BITS) + bytes(STD_AC_LUM_VALS),
     )
     sos = _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
     bw = _BitWriter()
     n_blocks = (width // 8) * (height // 8)
     if len(blocks) != n_blocks:
@@ -947,8 +915,7 @@ def synth_ac_jpeg(
         diff = dc - pred
         pred = dc
         t = diff.bit_length() if diff > 0 else (-diff).bit_length()
-        ln, code = dc_codes[t]
-        bw.write(code, ln)
+        bw.write(*_DC_CODES[t])
         if t:
             bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
         # raster (0, u) sits at zigzag stream index k; run = k-1 zeros,
@@ -956,15 +923,12 @@ def synth_ac_jpeg(
         # index 27/28)
         run = ZIGZAG.index(u) - 1
         while run > 15:
-            zln, zcode = ac_codes[0xF0]
-            bw.write(zcode, zln)
+            bw.write(*_AC_CODES[0xF0])
             run -= 16
         size = abs(ac).bit_length()
-        ln, code = ac_codes[(run << 4) | size]
-        bw.write(code, ln)
+        bw.write(*_AC_CODES[(run << 4) | size])
         bw.write(ac if ac > 0 else ac + (1 << size) - 1, size)
-        eln, ecode = ac_codes[0x00]  # EOB
-        bw.write(ecode, eln)
+        bw.write(*_AC_CODES[0x00])  # EOB
     return b"\xff\xd8" + qtab + sof + dht + sos + bw.flush() + b"\xff\xd9"
 
 
@@ -997,8 +961,6 @@ def synth_progressive_jpeg(
         bytes([0x00]) + bytes(STD_DC_LUM_BITS) + bytes(STD_DC_LUM_VALS)
         + bytes([0x10]) + bytes(STD_AC_LUM_BITS) + bytes(STD_AC_LUM_VALS),
     )
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
 
     def sos(ss: int, se: int, ah: int, al: int) -> bytes:
         return _seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
@@ -1014,8 +976,7 @@ def synth_progressive_jpeg(
         diff = v - pred
         pred = v
         t = diff.bit_length() if diff > 0 else (-diff).bit_length()
-        ln, code = dc_codes[t]
-        bw.write(code, ln)
+        bw.write(*_DC_CODES[t])
         if t:
             bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
     out += bw.flush()
@@ -1073,7 +1034,7 @@ def synth_progressive_jpeg(
         raise ValueError("progressive AC scan uses too many symbols")
     flat_bits = [0] * 16
     flat_bits[7] = len(symbols)
-    flat_codes = _inverse_huffman(flat_bits, symbols)
+    flat_codes = _huffman(flat_bits, symbols)[1]
     out += _seg(
         0xC4, bytes([0x11]) + bytes(flat_bits) + bytes(symbols)
     )
@@ -1082,8 +1043,7 @@ def synth_progressive_jpeg(
 
     def emit(sym, raw) -> None:
         if sym is not None:
-            ln, code = flat_codes[sym]
-            bw.write(code, ln)
+            bw.write(*flat_codes[sym])
         else:
             bw.write(raw[0], raw[1])
 

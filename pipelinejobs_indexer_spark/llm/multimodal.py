@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 
 from ..registry import register
 from ..tables import doc_ids, load_table, map_rows, spread
+from .bits import crc_msb
 
 # magic-number table (reference analog: `filetype` sniffing; same table as
 # functions/udfs.py F12 but over raw bytes here)
@@ -1819,19 +1820,9 @@ def llm_multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------- L5q Ogg / MP3 container + frame probes
-def _ogg_crc(data: bytes) -> int:
-    """The Ogg page CRC (RFC 3533 §6): CRC-32 with polynomial
-    0x04C11DB7, non-reflected, init 0, no final xor. Pinned in tests
-    via the direct-algorithm identities crc(0x01) == poly and
-    crc(a)^crc(b) == crc(a^b) (linearity), which distinguish these
-    parameters from the reflected/inverted CRC-32 families."""
-    crc = 0
-    for b in data:
-        crc ^= b << 24
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x04C11DB7 if crc & 0x80000000 else crc << 1
-                   ) & 0xFFFFFFFF
-    return crc
+#: the Ogg page CRC (RFC 3533 §6) is CRC-32 over this polynomial,
+#: non-reflected, init 0, no final xor: bits.crc_msb at width 32
+_OGG_CRC_POLY = 0x04C11DB7
 
 
 def probe_ogg(content: bytes) -> dict:
@@ -1874,7 +1865,7 @@ def probe_ogg(content: bytes) -> dict:
             raise ValueError("truncated Ogg page body")
         page = bytearray(content[pos:page_end])
         page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc:
+        if crc_msb(bytes(page), _OGG_CRC_POLY, 32) != crc:
             raise ValueError(f"Ogg page CRC mismatch at {pos}")
         if serial is None:
             serial = ser
@@ -1915,7 +1906,7 @@ def synth_ogg(doc_id: int) -> bytes:
             "<qIIIB", granule, serial, i, 0, len(lacing)
         ) + lacing
         body = bytes((doc_id + j) % 251 for j in range(body_len))
-        crc = _ogg_crc(hdr + body)
+        crc = crc_msb(hdr + body, _OGG_CRC_POLY, 32)
         page = bytearray(hdr + body)
         page[22:26] = struct.pack("<I", crc)
         out += page

@@ -64,7 +64,7 @@ real: RunLengthDecode (§7.4.5), LZWDecode (§7.4.4.2 TIFF variant,
 MSB-first 9→12-bit codes, EarlyChange, predictors shared with
 FlateDecode), DCTDecode through the in-repo baseline JPEG decoder
 (jpeg.py), so a JPEG photo embedded the way real generators embed
-them comes back as pixels, and CCITTFaxDecode (§7.4.6, round 10)
+them comes back as pixels, and CCITTFaxDecode (§7.4.6)
 through fax.py — /K selects T.6 MMR (< 0), 1D MH (0) or mixed-2D T.4
 (> 0), with /Columns//Rows//BlackIs1//EncodedByteAlign honored and
 the packed bilevel raster expanded through the image's /Decode array
@@ -74,7 +74,7 @@ strip per page). Device color spaces (Gray/RGB/CMYK) and
 string or stream — mapped into the base space, §8.6.6.3) at 8 bits
 per component are in scope, plus 1-bit /DeviceGray bilevel rasters,
 /ImageMask stencil masks (§8.9.6.2: 1-bit, no color space,
-extracted through the same /Decode path), and — round 13 — 2/4-bit
+extracted through the same /Decode path), and 2/4-bit
 packed samples for Indexed palettes and plain /DeviceGray (MSB-first
 byte-padded rows §8.9.5.2, sharing the TIFF bit-unpack machinery).
 
@@ -95,6 +95,8 @@ import re
 import zlib
 
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+from .bits import packbits_encode
 
 #: cap on TOTAL decompressed content-stream bytes per document — a
 #: hostile FlateDecode stream must not balloon memory (gif.py bound
@@ -133,33 +135,6 @@ def _rle_decode(data: bytes) -> bytes:
                 f"RunLengthDecode inflates past the {MAX_TEXT_BYTES}-byte bound"
             )
     raise ValueError("RunLengthDecode stream missing EOD (128)")
-
-
-def _rle_encode(data: bytes) -> bytes:
-    """Writer-side RunLengthDecode encoder: repeat runs for >=3 equal
-    bytes, literal runs (<=128 bytes) otherwise, EOD-terminated."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        j = i
-        while (
-            j < n
-            and j - i < 128
-            and not (j + 2 < n and data[j] == data[j + 1] == data[j + 2])
-        ):
-            j += 1
-        out += bytes([j - i - 1]) + data[i:j]
-        i = j
-    out.append(128)
-    return bytes(out)
 
 
 def _lzw_decode(data: bytes, early: int = 1) -> bytes:
@@ -1168,8 +1143,8 @@ class _Document:
         if pred == 1 or pred is None:
             return raw
         if pred == 2:
-            # TIFF horizontal differencing (real since round 9 — image
-            # streams use it with LZW/Flate; xref streams never do)
+            # TIFF horizontal differencing: image streams use it with
+            # LZW/Flate; xref streams never do
             columns = self.resolve(parm.get("/Columns", 1))
             colors = self.resolve(parm.get("/Colors", 1))
             bpc = self.resolve(parm.get("/BitsPerComponent", 8))
@@ -1186,10 +1161,12 @@ class _Document:
                     f"TIFF-predictor rows misaligned: {len(raw)} bytes vs "
                     f"{row_len}-byte rows"
                 )
+            from .tiff import _undiff
+
             out = bytearray(raw)
+            rows = memoryview(out)
             for r0 in range(0, len(out), row_len):
-                for i in range(colors, row_len):
-                    out[r0 + i] = (out[r0 + i] + out[r0 + i - colors]) & 0xFF
+                _undiff(rows[r0 : r0 + row_len], colors)
             return bytes(out)
         if not (isinstance(pred, int) and pred >= 10):
             raise ValueError(f"bad PDF /Predictor {pred!r}")
@@ -1279,7 +1256,7 @@ class _Document:
         filter chain cannot pass silently. 8-bit components in the
         device color spaces, 1-bit /DeviceGray (expanded 0/255
         through the /Decode array), and 2/4-bit packed samples for
-        Indexed palettes / plain gray (round 13, TIFF bit-unpack) are
+        Indexed palettes / plain gray (TIFF bit-unpack) are
         in scope; 16-bit and sub-8 direct multi-component raise the
         documented NotImplementedError."""
         res = self.resolve(page.get("/Resources"))
@@ -1382,8 +1359,7 @@ class _Document:
             samples = self.stream_bytes((ref[1], ref[2]))
             if bpc in (2, 4):
                 # sub-8-bit packed samples (§8.9.5.2: MSB-first groups,
-                # rows byte-padded) — round 13, sharing the TIFF
-                # bit-unpack. In scope: Indexed palettes (any device
+                # rows byte-padded), sharing the TIFF bit-unpack. In scope: Indexed palettes (any device
                 # base — the INDEX is the single packed component) and
                 # plain /DeviceGray under the default /Decode; direct
                 # sub-8 multi-component and custom /Decode arrays stay
@@ -2291,15 +2267,15 @@ def write_pdf(
                 if ibits not in (2, 4, 8):
                     raise ValueError(f"bad indexed bits {ibits!r}")
                 if ibits != 8:
-                    # round 13: sub-8 index packing (MSB-first, rows
-                    # byte-padded §8.9.5.2) via the TIFF bit-packer
+                    # sub-8 index packing (MSB-first, rows byte-padded
+                    # §8.9.5.2) via the TIFF bit-packer
                     if max(body) >= (1 << ibits):
                         raise ValueError("index exceeds declared depth")
                     from .tiff import _pack_gray
 
                     w = spec["width"]
                     body = b"".join(
-                        bytes(_pack_gray(body[y * w : (y + 1) * w], w, ibits))
+                        _pack_gray(body[y * w : (y + 1) * w], w, ibits)
                         for y in range(spec["height"])
                     )
                 cs_entry = (
@@ -2321,7 +2297,7 @@ def write_pdf(
                 if rbits not in (2, 4, 8):
                     raise ValueError(f"bad raw bits {rbits!r}")
                 if rbits != 8:
-                    # round 13: sub-8 gray — pixels are the RAW small
+                    # sub-8 gray — pixels are the RAW small
                     # samples (0..2^bits-1), packed like the indexed leg
                     if ncomp != 1:
                         raise ValueError("sub-8-bit raw images are gray only")
@@ -2331,7 +2307,7 @@ def write_pdf(
 
                     w = spec["width"]
                     body = b"".join(
-                        bytes(_pack_gray(body[y * w : (y + 1) * w], w, rbits))
+                        _pack_gray(body[y * w : (y + 1) * w], w, rbits)
                         for y in range(spec["height"])
                     )
                 filt = spec.get("filter")
@@ -2339,7 +2315,7 @@ def write_pdf(
                     body = zlib.compress(body)
                     fl = " /Filter /FlateDecode"
                 elif filt == "rle":
-                    body = _rle_encode(body)
+                    body = packbits_encode(body) + b"\x80"  # EOD
                     fl = " /Filter /RunLengthDecode"
                 elif filt == "lzw":
                     body = _lzw_encode(body)

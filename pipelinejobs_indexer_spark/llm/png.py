@@ -1,13 +1,13 @@
 """Pure-stdlib PNG codec: zlib + struct + numpy, no codec libraries.
 
-Purpose: make one real media decode path (VERDICT r2 item 6) — the
+Purpose: a real media decode path with no codec library — the
 container has no Pillow/cv2/ffmpeg, but PNG is decodable with nothing
 beyond ``zlib`` (IDAT inflate) and numpy (per-row defiltering, including
 the Paeth predictor). The reference ships a PNG fixture
 (tests/store/uploads/emerald/201808/protein.png) through its magic-byte
 sniffing path; here the decode itself is real.
 
-Scope: every legal bit depth (round 10) — 8-bit everywhere, 16-bit
+Scope: every legal bit depth — 8-bit everywhere, 16-bit
 (big-endian sample pairs recombined AFTER the byte-oriented §9
 defiltering, returned as uint16), and 1/2/4-bit gray or palette
 (bit-group unpack per scanline; gray scales by the exact-integer

@@ -12,7 +12,7 @@ differencing predictor (tag 317 = 2) is a per-row prefix sum.
 Scope: classic TIFF AND BigTIFF (magic 43: 8-byte offsets, 20-byte
 IFD entries, LONG8 fields — the container modern large scans ship
 in), II and MM byte orders, the first IFD (decode_tiff) or the WHOLE
-multi-page IFD chain (decode_tiff_pages, round 10 — one IFD per page
+multi-page IFD chain (decode_tiff_pages — one IFD per page
 chained by the next-IFD pointer, cycle-guarded, the shape of
 multi-page scans and fax documents; writer mate write_tiff_multi);
 8-bit samples, PhotometricInterpretation 0/1 (grayscale, WhiteIsZero
@@ -24,18 +24,18 @@ single or multiple strips (RowsPerStrip); PhotometricInterpretation 3
 palette-color with 8/4/2/1-bit indices (the ColorMap is FILE
 data — 3*2^bits 16-bit entries — so no unrecallable constants are
 involved; sub-8 rows unpack MSB-first with byte padding, one loop
-for every depth since round 13);
+for every depth);
 Compression 2/3/4 (CCITT RLE / Group 3 T.4 / Group 4 T.6 bilevel fax,
-fax.py — REAL since round 10: the transcribed run-length tables are
+fax.py — the transcribed run-length tables are
 pinned EXTERNALLY by JDK-encoded conformance fixtures under
 tests/fixtures/conformance/, decoded bit-exactly in both directions);
 Compression 32946 (the pre-Adobe Deflate code, aliased to 8);
-and the TILED layout (round 10, TIFF 6.0 §15 — TileWidth/TileLength/
+and the TILED layout (TIFF 6.0 §15 — TileWidth/TileLength/
 TileOffsets/TileByteCounts, the organization pyramidal and
 GeoTIFF-style scans use): every codec above applies per tile, edge
 tiles are padded-then-cropped, and predictors/bit-packing reset at
 tile boundaries (per-tile width, not image width).
-Also in scope (round 10): 16-BIT GRAYSCALE (2-byte samples in the
+Also in scope: 16-BIT GRAYSCALE (2-byte samples in the
 file byte order, returned as 0..65535 ints — scientific/medical
 scans; strips or tiles, every byte codec, pinned by the JDK
 gray16_lzw/gray16_tiled fixtures); sub-8-bit GRAYSCALE (2/4-bit bit-packed
@@ -64,6 +64,7 @@ from __future__ import annotations
 
 import struct
 
+from .bits import MsbWriter, packbits_encode
 from .pdf import MAX_TEXT_BYTES, _lzw_decode, _lzw_encode
 
 II, MM = b"II", b"MM"
@@ -124,61 +125,27 @@ def packbits_decode(data: bytes, expected: int) -> bytes:
     return bytes(out)
 
 
-def packbits_encode(data: bytes) -> bytes:
-    """Writer-side PackBits: repeat runs for >=3 equal bytes, literal
-    runs (<=128) otherwise. No terminator — strips are length-framed."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        j = i
-        while (
-            j < n
-            and j - i < 128
-            and not (j + 2 < n and data[j] == data[j + 1] == data[j + 2])
-        ):
-            j += 1
-        out += bytes([j - i - 1]) + data[i:j]
-        i = j
-    return bytes(out)
-
-
 def _undiff(row: bytearray, spp: int) -> None:
     """Reverse horizontal differencing (predictor 2) in place."""
     for i in range(spp, len(row)):
         row[i] = (row[i] + row[i - spp]) & 0xFF
 
 
-def _pack_gray(row, width: int, gbits: int) -> bytearray:
+def _pack_gray(row, width: int, gbits: int) -> bytes:
     """Pack one row of raw sub-8-bit gray samples (0..2^gbits-1) into
     MSB-first groups, byte-padded — the writer-side mate of
     _unpack_gray."""
-    out = bytearray()
-    acc = n = 0
+    w = MsbWriter()
     for x in range(width):
-        acc = (acc << gbits) | (row[x] & ((1 << gbits) - 1))
-        n += gbits
-        if n == 8:
-            out.append(acc)
-            acc = n = 0
-    if n:
-        out.append(acc << (8 - n))
-    return out
+        w.write(row[x], gbits)
+    return w.flush()
 
 
 def _unpack_idx(row: bytes, width: int, ibits: int) -> list[int]:
     """Expand one bit-packed palette-index row (MSB-first groups of
     ibits, byte-padded) to RAW indices — the unscaled mate of
     :func:`_unpack_gray` (indices address the ColorMap; scaling them
-    would be wrong). One loop serves 1/2/4-bit alike (round 13: the
-    4-bit nibble special case generalized)."""
+    would be wrong). One loop serves 1/2/4-bit alike."""
     mask = (1 << ibits) - 1
     idxs: list[int] = []
     for b in row:
@@ -190,8 +157,8 @@ def _unpack_idx(row: bytes, width: int, ibits: int) -> list[int]:
 def _unpack_gray(row: bytes, width: int, gbits: int) -> bytearray:
     """Expand one bit-packed grayscale row (MSB-first groups of gbits,
     byte-padded) to 8-bit samples scaled by the linear full-range
-    mapping 255/(2^gbits - 1) — the scaled mate of :func:`_unpack_idx`
-    (one shared unpack loop, round 13)."""
+    mapping 255/(2^gbits - 1) — the scaled mate of :func:`_unpack_idx`,
+    sharing its unpack loop."""
     scale = 255 // ((1 << gbits) - 1)
     return bytearray(v * scale for v in _unpack_idx(row, width, gbits))
 
@@ -301,8 +268,8 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
     if next_ifd >= len(data):
         # a dangling next-IFD pointer is CORRUPTION (a truncated
         # multi-page file), not end-of-chain — ending silently would
-        # return fewer pages than the file claims, against the
-        # module's loud-corruption convention (ADVICE r10)
+        # return fewer pages than the file claims, and this module
+        # raises on corruption instead of returning partial data
         raise ValueError(
             f"TIFF next-IFD pointer {next_ifd} beyond the file "
             f"({len(data)} bytes) — truncated page chain"
@@ -324,8 +291,7 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
     predictor = one(TAG_PREDICTOR, 1)
     # BitsPerSample's spec default is 1 (bilevel, TIFF 6.0 §3); bilevel
     # writers lean on it — the JDK omits tag 258 for both fax and
-    # bit-packed files, which is how the round-10 conformance fixtures
-    # caught the old [8] assumption.
+    # bit-packed files, and the conformance fixtures carry no tag 258.
     bits = tags.get(TAG_BITS, [1])
     if not bits:
         # tag present but with a non-integer field type (fuzz-found):
@@ -337,13 +303,13 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
         raise ValueError("TIFF pixel volume beyond the decode bound")
     if compression == 32946:
         # the original Deflate code (pre-Adobe-8 registration) — same
-        # zlib strips; JDK ImageIO writes this one, which is how the
-        # round-10 conformance fixtures caught the missing alias
+        # zlib strips; JDK ImageIO writes this one, and so do the
+        # conformance fixtures
         compression = 8
     fax = compression in (2, 3, 4)
     if fax:
-        # CCITT fax (RLE/G3/G4, fax.py — REAL since round 10, tables
-        # externally pinned by the JDK-written conformance fixtures):
+        # CCITT fax (RLE/G3/G4, fax.py — tables externally pinned
+        # by the JDK-written conformance fixtures):
         # bilevel only, by definition of the codec
         if bits != [1] or spp != 1:
             raise ValueError(
@@ -369,7 +335,7 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
             # the bit-unpack path neither applies nor reverses
             # horizontal differencing — decoding would be silently
             # wrong, so refuse loudly like the sub-8 grayscale branch
-            # (ADVICE r10; pal-8 DOES apply predictor 2)
+            # (pal-8 DOES apply predictor 2)
             raise NotImplementedError(
                 f"predictor on {bits[0]}-bit palette indices"
             )
@@ -387,7 +353,7 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
     elif bits in ([1], [2], [4]) and photometric in (0, 1):
         # sub-8-bit grayscale with a byte-codec (or none): rows are
         # bit-packed MSB-first, padded to a byte boundary (TIFF 6.0
-        # §3). Bilevel is JDK fixture-pinned (round 10); 2/4-bit share
+        # §3). Bilevel is JDK fixture-pinned; 2/4-bit share
         # the identical nibble/bit unpack the externally-pinned 4-bit
         # palette fixtures exercise, with samples scaled to full range
         # by the linear mapping (x 255/(2^bits - 1): 4-bit x 17, 2-bit
@@ -571,8 +537,8 @@ def _decode_ifd(data: bytes, bo: str, big: bool, ifd_off: int):
         row = bytearray(raw[y * row_bytes : (y + 1) * row_bytes])
         if palette is not None:
             if bps < 8:
-                # MSB-first packed indices, byte-padded rows (round 13:
-                # one unpack for 1/2/4-bit — the nibble case generalized)
+                # MSB-first packed indices, byte-padded rows (one
+                # unpack for 1/2/4-bit)
                 idxs = _unpack_idx(row, width, bps)
             else:
                 if predictor == 2:
@@ -818,11 +784,9 @@ def write_tiff(
             raise ValueError("palette indices write at 1/2/4/8 bits")
         pal_bits = bits
         if bits != 8:
-            # MSB-first packed indices (round 13: _pack_gray packs the
-            # RAW small values, which is exactly what indices are)
-            flat = b"".join(
-                bytes(_pack_gray(row, width, bits)) for row in pixels
-            )
+            # MSB-first packed indices (_pack_gray packs the RAW small
+            # values, which is exactly what indices are)
+            flat = b"".join(_pack_gray(row, width, bits) for row in pixels)
             row_bytes = (width * bits + 7) // 8
         else:
             flat = bytes(v for row in pixels for v in row)
@@ -842,9 +806,7 @@ def write_tiff(
         # pixel values are the RAW small samples (0..2^bits-1)
         if compression in (2, 3, 4):
             raise ValueError("fax compression is bilevel only")
-        flat = b"".join(
-            bytes(_pack_gray(row, width, bits)) for row in pixels
-        )
+        flat = b"".join(_pack_gray(row, width, bits) for row in pixels)
         row_bytes = (width * bits + 7) // 8
     elif spp == 1:
         flat = bytes(v for row in pixels for v in row)

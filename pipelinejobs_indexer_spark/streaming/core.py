@@ -152,6 +152,20 @@ def state_store_conf(spark: SparkSession):
         spark.conf.set(key, saved)
 
 
+def drain(spark: SparkSession, writer, what: str) -> None:
+    """Start an availableNow ``writer`` under :func:`state_store_conf`
+    and block until it has consumed its source. awaitTermination
+    returns False on timeout with the query still running, and reading
+    the sink it half filled would look like a real (wrong) answer — so
+    a query still running after 600 s is stopped and TimeoutError
+    raised."""
+    with state_store_conf(spark):
+        q = writer.start()
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError(f"{what} replay exceeded 600s")
+
+
 def run_to_batch(
     stream_df: DataFrame,
     output_mode: str,
@@ -192,27 +206,20 @@ def run_to_batch(
         if small:
             ckpt = f"/dev/shm/spark_graft_replay_{name}"
     try:
-        with state_store_conf(spark):
-            if sf_dir is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(replay_partitions(sf_dir, table)),
-                )
-            writer = (
-                stream_df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
+        if sf_dir is not None:
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(replay_partitions(sf_dir, table)),
             )
-            if ckpt is not None:
-                writer = writer.option("checkpointLocation", ckpt)
-            q = writer.start()
-            # awaitTermination returns False on timeout with the query
-            # still running — returning the half-filled sink then would
-            # look like a real (wrong) answer. Stop it and fail loudly.
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(f"streaming replay {name} exceeded 600s")
+        writer = (
+            stream_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+        )
+        if ckpt is not None:
+            writer = writer.option("checkpointLocation", ckpt)
+        drain(spark, writer, f"streaming {name}")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
         if ckpt is not None:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..oracle import with_fixtures
 from ..registry import register
-from .core import events_stream, run_to_batch, state_store_conf
+from .core import drain, events_stream, run_to_batch
 from .fsm import fsm_apply
 
 # Streaming views mirror the batch fixture derivations (tables.messages /
@@ -507,18 +507,8 @@ def stream_event_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         # idempotent per epoch: one append per micro-batch, distributed write
         batch_df.write.mode("append").parquet(outbox)
 
-    with state_store_conf(spark):
-        q = (
-            exits.writeStream.foreachBatch(emit)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # same invariant as run_to_batch: a timed-out query left running
-        # would let the outbox read below return a PARTIAL append set as
-        # a real answer — stop it and fail loudly instead
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stream_event_forward replay exceeded 600s")
+    writer = exits.writeStream.foreachBatch(emit).trigger(availableNow=True)
+    drain(spark, writer, "stream_event_forward")
     return spark.read.schema("uuid string, state string, token string").parquet(outbox)
 
 
@@ -572,18 +562,8 @@ def incremental_upsert(je: DataFrame) -> DataFrame:
         )
         delta.write.mode("append").parquet(outbox)
 
-    with state_store_conf(spark):
-        q = (
-            je.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # run_to_batch's invariant: never read the outbox under a query
-        # that may still be appending (a timed-out half-filled delta set
-        # would compact into a plausible wrong catalog)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("incremental_upsert replay exceeded 600s")
+    writer = je.writeStream.foreachBatch(merge_batch).trigger(availableNow=True)
+    drain(spark, writer, "incremental_upsert")
     deltas = spark.read.schema(
         "job_uuid string, last_name string, last_seq bigint, n_batch bigint"
     ).parquet(outbox)

@@ -2,8 +2,9 @@
 subframe type / stereo mode / rice variant (hypothesis-driven), the
 integrity classes (CRC-8, CRC-16, MD5 each caught independently),
 corrupt-container errors, the memory bound, and bit-flip robustness.
-Encoder and decoder share only the published RFC 9639 constants, so a
-round trip cross-checks independently-written bit paths."""
+Encoder and decoder share the published RFC 9639 constants and
+bits.py's bit I/O (checked on its own in test_bits.py), so a round
+trip cross-checks the coding logic."""
 
 from __future__ import annotations
 
@@ -17,16 +18,18 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pipelinejobs_indexer_spark.llm.bits import (  # noqa: E402
+    MsbReader,
+    MsbWriter,
+    crc_msb,
+)
 from pipelinejobs_indexer_spark.llm.flac import (  # noqa: E402
     MAX_SAMPLES,
-    _BitWriter,
-    _crc8,
     _read_utf8_coded,
     _utf8_coded,
     decode_flac,
     encode_flac,
 )
-from pipelinejobs_indexer_spark.llm.flac import _BitReader  # noqa: E402
 
 
 def _rt(samples, rate=44100, bits=16, **kw):
@@ -117,10 +120,10 @@ def test_utf8_coded_number_roundtrip():
     for v in (0, 1, 0x7F, 0x80, 0x7FF, 0x800, 0xFFFF, 0x10000,
               0x1FFFFF, 0x3FFFFFF, 0x7FFFFFFF, (1 << 36) - 1):
         enc = _utf8_coded(v)
-        bw = _BitWriter()
+        bw = MsbWriter()
         for b in enc:
             bw.write(b, 8)
-        assert _read_utf8_coded(_BitReader(bw.bytes())) == v, v
+        assert _read_utf8_coded(MsbReader(bw.flush())) == v, v
 
 
 # -------------------------------------------------------- integrity classes
@@ -183,7 +186,7 @@ def test_memory_bound_refused_before_allocation():
     # STREAMINFO total-samples field: bytes 8+34-16-5..: rewrite the
     # 36-bit total to the maximum by patching the tail of the fixed
     # layout (bits 144..179 of the 34-byte block starting at byte 8)
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(64, 16)
     bw.write(64, 16)
     bw.write(0, 24)
@@ -192,7 +195,7 @@ def test_memory_bound_refused_before_allocation():
     bw.write(0, 3)
     bw.write(15, 5)
     bw.write((1 << 36) - 1, 36)
-    patched = data[:8] + bytearray(bw.bytes()) + data[8 + 18 :]
+    patched = data[:8] + bytearray(bw.flush()) + data[8 + 18 :]
     with pytest.raises(ValueError, match="sample bound"):
         decode_flac(bytes(patched))
     assert (1 << 36) > MAX_SAMPLES
@@ -253,7 +256,7 @@ def test_unknown_length_stream_still_bounded(monkeypatch):
                                  block_size=64))
     # rebuild STREAMINFO with total=0 (and zero MD5: the stream is
     # 'unverifiable', which is exactly the hostile shape)
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(64, 16)   # min block
     bw.write(64, 16)   # max block
     bw.write(0, 24)    # min frame
@@ -262,7 +265,7 @@ def test_unknown_length_stream_still_bounded(monkeypatch):
     bw.write(0, 3)     # channels-1
     bw.write(15, 5)    # bits-1
     bw.write(0, 36)    # total = 0: unknown length
-    patched = bytes(data[:8]) + bw.bytes() + b"\x00" * 16 + bytes(data[42:])
+    patched = bytes(data[:8]) + bw.flush() + b"\x00" * 16 + bytes(data[42:])
     # sanity: with the real bound the patched stream decodes fine
     assert len(decode_flac(patched)["samples"]) == 256
     monkeypatch.setattr(flacmod, "MAX_SAMPLES", 128)
@@ -362,14 +365,14 @@ def test_hand_authored_verbatim_fixture():
 
 
 def test_crc_published_check_values():
-    """External pins for the FLAC framing CRCs (round 10): the reveng
-    catalogue check values for the ASCII string '123456789' — CRC-8
-    poly 0x07 init 0 non-reflected = 0xF4; CRC-16 poly 0x8005 init 0
-    non-reflected (CRC-16/UMTS, the FLAC frame CRC) = 0xFEE8. A wrong
-    polynomial, init, or bit order cannot produce both."""
-    from pipelinejobs_indexer_spark.llm.flac import _crc8, _crc16
-
-    assert _crc8(b"123456789") == 0xF4
-    assert _crc16(b"123456789") == 0xFEE8
-    assert _crc8(b"") == 0
-    assert _crc16(b"") == 0
+    """External pins for the framing CRCs: the reveng catalogue check
+    values for the ASCII string '123456789' — CRC-8 poly 0x07 init 0
+    non-reflected = 0xF4; CRC-16 poly 0x8005 init 0 non-reflected
+    (CRC-16/UMTS, the FLAC frame CRC) = 0xFEE8; CRC-32 poly 0x04C11DB7
+    init 0 non-reflected, no final xor (the Ogg page CRC) = 0x89A1897F.
+    A wrong polynomial, init, or bit order cannot produce all three."""
+    assert crc_msb(b"123456789", 0x07, 8) == 0xF4
+    assert crc_msb(b"123456789", 0x8005, 16) == 0xFEE8
+    assert crc_msb(b"123456789", 0x04C11DB7, 32) == 0x89A1897F
+    assert crc_msb(b"", 0x07, 8) == 0
+    assert crc_msb(b"", 0x8005, 16) == 0

@@ -22,7 +22,7 @@ from pipelinejobs_indexer_spark.llm.jpeg import (  # noqa: E402
     STD_DC_LUM_VALS,
     ZIGZAG,
     _BitWriter,
-    _inverse_huffman,
+    _huffman,
     _seg,
     decode_jpeg,
     synth_dc_jpeg,
@@ -62,12 +62,12 @@ def _synth_gray_coef(zz_coefs, q=16):
         + bytes([0x10]) + bytes(STD_AC_LUM_BITS) + bytes(STD_AC_LUM_VALS),
     )
     sos = _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
+    dc_codes = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+    ac_codes = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
     bw = _BitWriter()
 
     def put(codes, sym, value, t):
-        ln, code = codes[sym]
+        code, ln = codes[sym]
         bw.write(code, ln)
         if t:
             bw.write(value if value > 0 else value + (1 << t) - 1, t)
@@ -169,8 +169,8 @@ def test_chroma_subsampled_420_quadrants():
     sos = _seg(
         0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0])
     )
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
+    dc_codes = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+    ac_codes = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
     bw = _BitWriter()
     y_dcs = [10, 20, -10, 0]  # TL, TR, BL, BR quadrants
     preds = {0: 0, 1: 0, 2: 0}
@@ -179,11 +179,11 @@ def test_chroma_subsampled_420_quadrants():
         diff = dc - preds[comp]
         preds[comp] = dc
         t = abs(diff).bit_length()
-        ln, code = dc_codes[t]
+        code, ln = dc_codes[t]
         bw.write(code, ln)
         if t:
             bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-        ln, code = ac_codes[0x00]
+        code, ln = ac_codes[0x00]
         bw.write(code, ln)
 
     for dc in y_dcs:  # one MCU: Y00 Y01 Y10 Y11 Cb Cr
@@ -251,8 +251,8 @@ def test_chroma_subsampled_422_halves():
         + bytes([0x10]) + bytes(STD_AC_LUM_BITS) + bytes(STD_AC_LUM_VALS),
     )
     sos = _seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
+    dc_codes = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+    ac_codes = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
     bw = _BitWriter()
     preds = {0: 0, 1: 0, 2: 0}
 
@@ -260,11 +260,11 @@ def test_chroma_subsampled_422_halves():
         diff = dc - preds[comp]
         preds[comp] = dc
         t = abs(diff).bit_length()
-        ln, code = dc_codes[t]
+        code, ln = dc_codes[t]
         bw.write(code, ln)
         if t:
             bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-        ln, code = ac_codes[0x00]
+        code, ln = ac_codes[0x00]
         bw.write(code, ln)
 
     block(0, 15)   # Y left half
@@ -337,8 +337,8 @@ def _build_dri_stream(sep: bytes, dcs=(10, 20, 30, 40)):
     )
     dri = _seg(0xDD, struct.pack(">H", 2))  # restart every 2 MCUs
     sos = _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
+    dc_codes = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+    ac_codes = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
 
     def interval(vals):
         bw = _BitWriter()
@@ -347,11 +347,11 @@ def _build_dri_stream(sep: bytes, dcs=(10, 20, 30, 40)):
             diff = dc - pred
             pred = dc
             t = abs(diff).bit_length()
-            ln, code = dc_codes[t]
+            code, ln = dc_codes[t]
             bw.write(code, ln)
             if t:
                 bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-            ln, code = ac_codes[0x00]
+            code, ln = ac_codes[0x00]
             bw.write(code, ln)
         return bw.flush()
 
@@ -443,12 +443,12 @@ def test_non_interleaved_scan_raises_not_garbage():
         + bytes([0x10]) + bytes(STD_AC_LUM_BITS) + bytes(STD_AC_LUM_VALS),
     )
     sos_y_only = _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dc_codes = _inverse_huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)
-    ac_codes = _inverse_huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)
+    dc_codes = _huffman(STD_DC_LUM_BITS, STD_DC_LUM_VALS)[1]
+    ac_codes = _huffman(STD_AC_LUM_BITS, STD_AC_LUM_VALS)[1]
     bw = _BitWriter()
-    ln, code = dc_codes[0]
+    code, ln = dc_codes[0]
     bw.write(code, ln)
-    ln, code = ac_codes[0x00]
+    code, ln = ac_codes[0x00]
     bw.write(code, ln)
     data = b"\xff\xd8" + qtab + sof + dht + sos_y_only + bw.flush() + b"\xff\xd9"
     with pytest.raises(ValueError, match="non-interleaved"):
@@ -557,8 +557,8 @@ def test_progressive_ac_refinement_hand_built():
 
     from pipelinejobs_indexer_spark.llm.jpeg import (
         _BitWriter,
+        _huffman,
         _idct_block,
-        _inverse_huffman,
     )
 
     q = 16
@@ -578,8 +578,8 @@ def test_progressive_ac_refinement_hand_built():
         + bytes([0x00]) + bytes(dc_bits) + bytes(dc_syms)
         + bytes([0x10]) + bytes(ac_bits) + bytes(ac_syms)
     )
-    dcc = _inverse_huffman(dc_bits, dc_syms)
-    acc = _inverse_huffman(ac_bits, ac_syms)
+    dcc = _huffman(dc_bits, dc_syms)[1]
+    acc = _huffman(ac_bits, ac_syms)[1]
 
     def sos(ss, se, ah, al):
         return (
@@ -591,7 +591,7 @@ def test_progressive_ac_refinement_hand_built():
     # scan 1: DC first, Al=0, dc = 6
     out += sos(0, 0, 0, 0)
     bw = _BitWriter()
-    ln, code = dcc[3]
+    code, ln = dcc[3]
     bw.write(code, ln)
     bw.write(6, 3)
     out += bw.flush()
@@ -599,21 +599,21 @@ def test_progressive_ac_refinement_hand_built():
     # then EOB (run of 1)
     out += sos(1, 63, 0, 1)
     bw = _BitWriter()
-    ln, code = acc[0x01]  # r=0, s=1
+    code, ln = acc[0x01]  # r=0, s=1
     bw.write(code, ln)
     bw.write(1, 1)  # value +1
-    ln, code = acc[0x00]  # EOB
+    code, ln = acc[0x00]  # EOB
     bw.write(code, ln)
     out += bw.flush()
     # scan 3: AC refinement Ah=1, Al=0 — walk: k=1 nonzero -> correction
     # bit 1 (2 -> 3); k=2 zero-history with r=0 -> place new -1; EOB run
     out += sos(1, 63, 1, 0)
     bw = _BitWriter()
-    ln, code = acc[0x01]
+    code, ln = acc[0x01]
     bw.write(code, ln)
     bw.write(0, 1)  # sign bit: negative -> newval = -1
     bw.write(1, 1)  # correction bit for existing coef at k=1
-    ln, code = acc[0x00]  # EOB run of 1: refine any remaining (none)
+    code, ln = acc[0x00]  # EOB run of 1: refine any remaining (none)
     bw.write(code, ln)
     out += bw.flush()
     out += b"\xff\xd9"
@@ -656,8 +656,8 @@ def test_progressive_ac_refinement_zrl_and_eobrun():
 
     from pipelinejobs_indexer_spark.llm.jpeg import (
         _BitWriter,
+        _huffman,
         _idct_block,
-        _inverse_huffman,
     )
 
     q = 16
@@ -679,8 +679,8 @@ def test_progressive_ac_refinement_zrl_and_eobrun():
         + bytes([0x00]) + bytes(dc_bits) + bytes(dc_syms)
         + bytes([0x10]) + bytes(ac_bits) + bytes(ac_syms)
     )
-    dcc = _inverse_huffman(dc_bits, dc_syms)
-    acc = _inverse_huffman(ac_bits, ac_syms)
+    dcc = _huffman(dc_bits, dc_syms)[1]
+    acc = _huffman(ac_bits, ac_syms)[1]
 
     def sos(ss, se, ah, al):
         return (
@@ -689,7 +689,7 @@ def test_progressive_ac_refinement_zrl_and_eobrun():
         )
 
     def wsym(bw, sym):
-        ln, code = acc[sym]
+        code, ln = acc[sym]
         bw.write(code, ln)
 
     out = bytearray(b"\xff\xd8" + qtab + sof + dht)
@@ -698,7 +698,7 @@ def test_progressive_ac_refinement_zrl_and_eobrun():
     bw = _BitWriter()
     for diff in (4, 4, -12):
         t = diff.bit_length() if diff > 0 else (-diff).bit_length()
-        ln, code = dcc[t]
+        code, ln = dcc[t]
         bw.write(code, ln)
         bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
     out += bw.flush()
@@ -756,7 +756,7 @@ def test_progressive_three_component_interleaved_dc():
 
     from pipelinejobs_indexer_spark.llm.jpeg import (
         _BitWriter,
-        _inverse_huffman,
+        _huffman,
     )
 
     q = 16
@@ -780,8 +780,8 @@ def test_progressive_three_component_interleaved_dc():
         + bytes([0x00]) + bytes(dc_bits) + bytes(dc_syms)
         + bytes([0x10]) + bytes(ac_bits) + bytes(ac_syms)
     )
-    dcc = _inverse_huffman(dc_bits, dc_syms)
-    acc = _inverse_huffman(ac_bits, ac_syms)
+    dcc = _huffman(dc_bits, dc_syms)[1]
+    acc = _huffman(ac_bits, ac_syms)[1]
     out = bytearray(b"\xff\xd8" + qtab + sof + dht)
     # interleaved DC-first scan over all three components, MCU order:
     # (c1,c2,c3) for block 0, then block 1 — per-component predictors
@@ -796,7 +796,7 @@ def test_progressive_three_component_interleaved_dc():
             diff = dcs[ci][b] - pred[ci]
             pred[ci] = dcs[ci][b]
             t = diff.bit_length() if diff > 0 else (-diff).bit_length()
-            ln, code = dcc[t]
+            code, ln = dcc[t]
             bw.write(code, ln)
             if t:
                 bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
@@ -808,7 +808,7 @@ def test_progressive_three_component_interleaved_dc():
             + bytes([1, comp_id, 0x00, 1, 63, 0x00])
         )
         bw = _BitWriter()
-        ln, code = acc[0x10]  # EOBn r=1
+        code, ln = acc[0x10]  # EOBn r=1
         bw.write(code, ln)
         bw.write(0, 1)  # eobrun = 2 (both blocks)
         out += bw.flush()

@@ -2731,19 +2731,22 @@ def test_ogg_mp3_probes():
     corruption classes."""
     import pytest as _pytest
 
+    from pipelinejobs_indexer_spark.llm.bits import crc_msb
     from pipelinejobs_indexer_spark.llm.multimodal import (
-        _ogg_crc,
+        _OGG_CRC_POLY,
         probe_mp3,
         probe_ogg,
         synth_mp3_frames,
         synth_ogg,
     )
 
-    assert _ogg_crc(b"\x00" * 9) == 0
-    assert _ogg_crc(b"\x01") == 0x04C11DB7
+    assert crc_msb(b"\x00" * 9, _OGG_CRC_POLY, 32) == 0
+    assert crc_msb(b"\x01", _OGG_CRC_POLY, 32) == 0x04C11DB7
     a, b = b"hello wor", b"ogg pages"
     ab = bytes(x ^ y for x, y in zip(a, b))
-    assert _ogg_crc(a) ^ _ogg_crc(b) == _ogg_crc(ab)
+    assert crc_msb(a, _OGG_CRC_POLY, 32) ^ crc_msb(b, _OGG_CRC_POLY, 32) == (
+        crc_msb(ab, _OGG_CRC_POLY, 32)
+    )
     for d in (0, 1, 7, 13, 38):
         og = probe_ogg(synth_ogg(d))
         assert og["n_pages"] == 2 + d % 4 == og["n_packets"]

@@ -730,11 +730,11 @@ def test_lzw_rle_codec_units():
     decoders' corruption classes."""
     import random
 
+    from pipelinejobs_indexer_spark.llm.bits import packbits_encode
     from pipelinejobs_indexer_spark.llm.pdf import (
         _lzw_decode,
         _lzw_encode,
         _rle_decode,
-        _rle_encode,
     )
 
     # hand-checkable spec stream: Clear,65,66,258('AB'),260('ABA'),65,EOD
@@ -746,7 +746,7 @@ def test_lzw_rle_codec_units():
     assert _lzw_decode(_lzw_encode(long)) == long  # crosses every width
     for data in (b"", b"A", b"A" * 500, (b"ABC" * 999)[:2000], long[:333]):
         assert _lzw_decode(_lzw_encode(data)) == data
-        assert _rle_decode(_rle_encode(data)) == data
+        assert _rle_decode(packbits_encode(data) + b"\x80") == data
     with pytest.raises(ValueError, match="EOD"):
         _rle_decode(b"\x04hello")  # literal run, then no EOD
     with pytest.raises(ValueError, match="truncated"):

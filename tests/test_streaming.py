@@ -528,3 +528,46 @@ def test_dead_letter_checkpoint_kill_and_resume(spark, tmp_path, backend):
         assert {**got1, **got2} == fresh == lateness
     finally:
         cfg.CONFIG = saved
+
+
+def test_drain_stops_and_raises_on_timeout(spark):
+    """A replay still running at the timeout must not hand back its
+    half-filled sink: drain() starts the writer under the configured
+    state-store provider, stops the query when awaitTermination returns
+    False, raises TimeoutError, and restores the session's provider."""
+    from pipelinejobs_indexer_spark import config
+    from pipelinejobs_indexer_spark.streaming.core import (
+        _STATE_STORE_PROVIDERS,
+        drain,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    active = _STATE_STORE_PROVIDERS[config.CONFIG.state_store]
+    other = next(v for v in _STATE_STORE_PROVIDERS.values() if v != active)
+    saved = spark.conf.get(key, None)
+    seen = []
+
+    class _Query:
+        def awaitTermination(self, timeout):
+            seen.append(("await", timeout))
+            return False
+
+        def stop(self):
+            seen.append(("stop",))
+
+    class _Writer:
+        def start(self):
+            seen.append(("start", spark.conf.get(key)))
+            return _Query()
+
+    spark.conf.set(key, other)
+    try:
+        with pytest.raises(TimeoutError, match="fake replay exceeded 600s"):
+            drain(spark, _Writer(), "fake")
+        assert seen == [("start", active), ("await", 600), ("stop",)]
+        assert spark.conf.get(key) == other
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

@@ -2,8 +2,9 @@
 over every transform / cache / LZ77 combination (hypothesis-driven),
 a hand-built meta-prefix (entropy image) stream the encoder never
 emits, the corrupt-container error classes, and the memory bound. The
-encoder and decoder share only the published bitstream constants, so a
-round trip cross-checks independently-written bit paths."""
+encoder and decoder share the published bitstream constants and
+bits.py's LSB-first bit I/O; the hand-authored fixtures below, packed
+by a test-local writer, derive the bit layout a second time."""
 
 from __future__ import annotations
 
@@ -18,9 +19,9 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pipelinejobs_indexer_spark.llm.bits import LsbWriter  # noqa: E402
 from pipelinejobs_indexer_spark.llm.webp import (  # noqa: E402
     MAX_PIXELS,
-    _BitWriter,
     decode_vp8l,
     decode_webp,
     encode_webp,
@@ -110,7 +111,7 @@ def test_roundtrip_hypothesis_full_random(h, w, seed):
 
 
 # --------------------------------------------- hand-built meta-prefix stream
-def _simple_code(bw: _BitWriter, symbols: list[int]) -> None:
+def _simple_code(bw: LsbWriter, symbols: list[int]) -> None:
     """Emit a 1- or 2-symbol simple prefix code (spec §: simple code)."""
     bw.write(1, 1)
     bw.write(len(symbols) - 1, 1)
@@ -133,7 +134,7 @@ def test_meta_prefix_entropy_image():
     simple code, so each group's literals cost zero bits — exactly the
     degenerate-code semantics the spec allows."""
     w, h = 8, 4
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0, 1)  # alpha hint
@@ -201,7 +202,7 @@ def test_lossy_vp8_keeps_stub_contract():
 
 def test_corrupt_bitstream_classes():
     with pytest.raises(ValueError, match="version"):
-        bw = _BitWriter()
+        bw = LsbWriter()
         bw.write(0, 14)
         bw.write(0, 14)
         bw.write(0, 1)
@@ -210,7 +211,7 @@ def test_corrupt_bitstream_classes():
     with pytest.raises(ValueError, match="truncated"):
         decode_vp8l(bytes([0x2F, 0x00]))
     with pytest.raises(ValueError, match="duplicate VP8L transform"):
-        bw = _BitWriter()
+        bw = LsbWriter()
         bw.write(0, 14)
         bw.write(0, 14)
         bw.write(0, 4)
@@ -220,7 +221,7 @@ def test_corrupt_bitstream_classes():
         decode_vp8l(bytes([0x2F]) + bw.flush())
     with pytest.raises(ValueError, match="Kraft"):
         # normal code whose lengths are over-subscribed: three 1-bit codes
-        bw = _BitWriter()
+        bw = LsbWriter()
         bw.write(0, 14)  # 1x1
         bw.write(0, 14)
         bw.write(0, 4)  # alpha+version
@@ -241,7 +242,7 @@ def test_corrupt_bitstream_classes():
 
 
 def test_memory_bound_refused_before_allocation():
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write((1 << 14) - 1, 14)  # 16384 x 16384 = 268M px > MAX_PIXELS
     bw.write((1 << 14) - 1, 14)
     bw.write(0, 4)
@@ -253,7 +254,7 @@ def test_memory_bound_refused_before_allocation():
 def test_backref_before_start_rejected():
     # hand stream: green code {256} (length sym 0 -> length 1) forces an
     # immediate backref at pos 0 -> "before image start"
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(3, 14)  # 4x1
     bw.write(0, 14)
     bw.write(0, 4)
@@ -335,7 +336,7 @@ def test_decode_image_dispatches_webp():
 # --------------------------- hand-authored spec fixtures (ADVICE r8)
 class _LsbWriter:
     """Test-local LSB-first bit packer, written straight off RFC 9649
-    §4 — deliberately NOT webp.py's _BitWriter, so these fixtures are a
+    §4 — deliberately NOT bits.py's LsbWriter, so these fixtures are a
     second, independent derivation of the bit layout (the container has
     no reference cwebp to generate goldens with)."""
 
