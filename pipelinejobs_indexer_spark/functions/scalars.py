@@ -363,7 +363,7 @@ def _storage_system_expr():
 )
 def fn_storage_uri_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F13: logical storage-URI → POSIX-path resolution — the last
-    reference behavior with no registered op (VERDICT r10 item 5). The
+    reference behavior that had no registered op. The
     reference maps ``agave://<storage-system>/<path>`` through its
     config's storagesystems table (config.yml:11-13) before listing
     (reactor.py:162-167); a user re-pointing this engine at

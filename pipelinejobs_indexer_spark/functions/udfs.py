@@ -184,8 +184,8 @@ def udaf_history_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("#"),
         F.col("name"),
     )
-    # Group on the integer job_key and derive job_uuid per GROUP (r14,
-    # guide §2.3 — result-identical: job_uuid = '107'||sha256(job_key)
+    # Group on the integer job_key and derive job_uuid per GROUP
+    # (guide §2.3; result-identical: job_uuid = '107'||sha256(job_key)
     # is injective, so the groups are the same sets): one sha256 per job
     # instead of per event row, computed after the exchange instead of
     # inside the serial scan stage, and an 8-byte shuffle key instead of

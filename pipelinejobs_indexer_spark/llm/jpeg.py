@@ -39,6 +39,7 @@ published T.81 specification; no third-party code.
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
 
@@ -81,7 +82,14 @@ _C = [1 / math.sqrt(2)] + [1.0] * 7
 
 def _huffman(bits: list[int], vals: list[int]) -> tuple[dict, dict]:
     """(decode, encode) tables of a DHT's BITS counts and HUFFVAL
-    symbols: canonical codes in HUFFVAL order (T.81 Annex C)."""
+    symbols: canonical codes in HUFFVAL order (T.81 Annex C). Equal
+    BITS and HUFFVAL share one pair of tables, which callers only read:
+    nearly every stream ships the Annex K tables."""
+    return _huffman_tables(tuple(bits), tuple(vals))
+
+
+@functools.lru_cache(maxsize=64)
+def _huffman_tables(bits: tuple, vals: tuple) -> tuple[dict, dict]:
     lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
     return canonical_codes([(ln, vals[i]) for i, ln in enumerate(lengths)])
 

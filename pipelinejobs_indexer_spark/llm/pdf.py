@@ -15,7 +15,10 @@ evidence (llm/text.py::llm_text_pdf_extract).
 
 Scope: %PDF header, indirect objects located by a full `N G obj` scan
 (robust to fixture PDFs with no xref, and immune to stale xref
-tables), dictionaries/arrays/names/numbers/strings/hex-strings/refs,
+tables), dictionaries/arrays/names/numbers/strings/hex-strings/refs
+read by one token grammar that objects, object streams and content
+streams share (a compiled pattern matched in place, and an iterative
+builder for the containers),
 the Root→Pages→Kids page tree (inter-node /Parent cycles rejected),
 page /Contents as a single stream or an array (concatenated in
 order), stream /Length possibly an indirect ref, filters FlateDecode
@@ -84,8 +87,10 @@ security handlers, unknown crypt filters, codec-class raster filters
 ICC/separation image formats raise NotImplementedError;
 structural corruption (bad header,
 unterminated stream/string, missing pages, cyclic or broken refs,
-malformed /Encrypt) raises ValueError. Decompressed stream output is
-size-capped so a zlib bomb in a hostile PDF cannot balloon memory.
+malformed /Encrypt, arrays/dictionaries or page trees nested deeper
+than MAX_NESTING = 64 levels) raises ValueError, never RecursionError.
+Decompressed stream output is size-capped so a zlib bomb in a hostile
+PDF cannot balloon memory.
 """
 
 from __future__ import annotations
@@ -102,10 +107,6 @@ from .bits import packbits_encode
 #: hostile FlateDecode stream must not balloon memory (gif.py bound
 #: discipline)
 MAX_TEXT_BYTES = 1 << 26
-
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
-
 
 # ------------------------------------------------------------------ filters
 def _rle_decode(data: bytes) -> bytes:
@@ -255,176 +256,166 @@ def _lzw_encode(data: bytes, early: int = 1) -> bytes:
     return bytes(out)
 
 
-class _Lexer:
-    """Byte-level PDF object lexer."""
+# ------------------------------------------------------------ token grammar
+#: nesting bound shared by the object builder and the page-tree walk: a
+#: hostile file nested thousands deep raises ValueError, not RecursionError
+MAX_NESTING = 64
 
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
+#: whitespace and ``%`` comments; the lookahead lets a comment end only
+#: at its end of line, so a run of comments splits one way and a failed
+#: match backtracks in linear time
+_SPACE = rb"(?:[\x00\t\n\x0c\r ]|%[^\n]*(?![^\n]))"
+_NAME_TAIL = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*"
 
-    def _skip_ws(self) -> None:
-        d = self.data
-        while self.pos < len(d):
-            c = d[self.pos : self.pos + 1]
-            if c in b"%":  # comment to end of line
-                nl = d.find(b"\n", self.pos)
-                self.pos = len(d) if nl < 0 else nl + 1
-            elif c in _WS:
-                self.pos += 1
-            else:
-                return
+#: one token at a time, always matched in place (``match(data, pos)``).
+#: Order matters: reals before integers, ``N G R`` before a bare integer
+#: (``R`` must end its word; signed integers never start a reference),
+#: ``<<`` before a hex string. ``bad`` matches the empty string, so the
+#: match itself never fails.
+_TOKEN = re.compile(
+    _SPACE + rb"*(?:"
+    rb"(?P<name>/" + _NAME_TAIL + rb")"
+    rb"|(?P<real>[+-]?(?:\d+\.\d*|\.\d+))"
+    rb"|(?P<ref>(?P<num>\d+)" + _SPACE + rb"+(?P<gen>\d+)\s+R(?![A-Za-z0-9]))"
+    rb"|(?P<int>[+-]?\d+)"
+    rb"|(?P<open><<|\[)"
+    rb"|(?P<close>>>|\])"
+    rb"|(?P<hex><[^>]*>)"
+    rb"|(?P<str>\()"
+    rb"|(?P<op>[A-Za-z'\"*][A-Za-z0-9'\"*]*)"
+    rb"|(?P<eof>\Z)"
+    rb"|(?P<bad>))"
+)
+_SKIP = re.compile(_SPACE + rb"*")
+_NAME_REST = re.compile(_NAME_TAIL)
+_NAME_ESCAPE = re.compile(rb"#([0-9A-Fa-f]{2})")
+#: a literal string's pieces: a plain run, one escape, or a parenthesis
+_STRING_PART = re.compile(rb"[^()\\]+|\\([0-7]{1,3}|\r\n?|[\s\S])|[()]")
+_ESCAPES = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+            b"\r": b"", b"\n": b"", b"\r\n": b""}
+_CLOSER = {b"[": b"]", b"<<": b">>"}
+_CONSTANTS = {"true": True, "false": False, "null": None}
+_WS = b"\x00\t\n\x0c\r "
 
-    def parse(self):
-        """Parse one object at the cursor; returns python values —
-        dict / list / bytes (strings) / str (names, prefixed '/') /
-        int / float / bool / None / ('ref', num, gen)."""
-        self._skip_ws()
-        d = self.data
-        if self.pos >= len(d):
-            raise ValueError("truncated PDF object")
-        c = d[self.pos : self.pos + 1]
-        if c == b"<":
-            if d[self.pos : self.pos + 2] == b"<<":
-                return self._parse_dict()
-            return self._parse_hex_string()
-        if c == b"(":
-            return self._parse_string()
-        if c == b"[":
-            return self._parse_array()
-        if c == b"/":
-            return self._parse_name()
-        if d.startswith(b"true", self.pos):
-            self.pos += 4
-            return True
-        if d.startswith(b"false", self.pos):
-            self.pos += 5
-            return False
-        if d.startswith(b"null", self.pos):
-            self.pos += 4
-            return None
-        return self._parse_number_or_ref()
 
-    def _parse_dict(self) -> dict:
-        self.pos += 2
-        out = {}
-        while True:
-            self._skip_ws()
-            if self.data[self.pos : self.pos + 2] == b">>":
-                self.pos += 2
-                return out
-            key = self.parse()
-            if not isinstance(key, str) or not key.startswith("/"):
-                raise ValueError("PDF dictionary key is not a name")
-            out[key] = self.parse()
+def _name(raw: bytes) -> str:
+    """Name bytes (with their leading byte) to str, ``#xx`` escapes
+    resolved."""
+    if b"#" in raw:
+        raw = _NAME_ESCAPE.sub(lambda m: bytes([int(m[1], 16)]), raw)
+    return raw.decode("latin-1")
 
-    def _parse_array(self) -> list:
-        self.pos += 1
-        out = []
-        while True:
-            self._skip_ws()
-            if self.data[self.pos : self.pos + 1] == b"]":
-                self.pos += 1
-                return out
-            out.append(self.parse())
 
-    def _parse_name(self) -> str:
-        d = self.data
-        start = self.pos
-        self.pos += 1
-        while self.pos < len(d) and d[self.pos] not in _WS and (
-            d[self.pos] not in _DELIM
-        ):
-            self.pos += 1
-        raw = d[start : self.pos].decode("latin-1")
-        # #xx hex escapes inside names
-        return re.sub(
-            r"#([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), raw
-        )
+def _unhex(body: bytes) -> bytes:
+    """Hex digits to bytes, whitespace ignored and an odd final digit
+    padded with 0: hex strings (§7.3.4.3) and ASCIIHexDecode (§7.4.2)."""
+    hx = body.translate(None, _WS)
+    if len(hx) % 2:
+        hx += b"0"
+    try:
+        return bytes.fromhex(hx.decode("ascii"))
+    except ValueError as exc:
+        raise ValueError(f"bad PDF hex string: {exc}") from None
 
-    def _parse_hex_string(self) -> bytes:
-        d = self.data
-        end = d.find(b">", self.pos)
-        if end < 0:
-            raise ValueError("unterminated PDF hex string")
-        hx = bytes(
-            b for b in d[self.pos + 1 : end] if bytes([b]) not in _WS
-        )
-        self.pos = end + 1
-        if len(hx) % 2:
-            hx += b"0"  # odd final digit pads with 0 (spec)
-        try:
-            return bytes.fromhex(hx.decode("ascii"))
-        except (UnicodeDecodeError, ValueError) as exc:
-            raise ValueError(f"bad PDF hex string: {exc}") from None
 
-    def _parse_string(self) -> bytes:
-        d = self.data
-        self.pos += 1
-        out = bytearray()
-        depth = 1
-        while True:
-            if self.pos >= len(d):
-                raise ValueError("unterminated PDF literal string")
-            c = d[self.pos]
-            self.pos += 1
-            if c == 0x5C:  # backslash escapes
-                if self.pos >= len(d):
-                    raise ValueError("unterminated PDF string escape")
-                e = d[self.pos]
-                self.pos += 1
-                if e in b"nrtbf":
-                    out.append(
-                        {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}[e]
-                    )
-                elif e in b"()\\":
-                    out.append(e)
-                elif 0x30 <= e <= 0x37:  # 1-3 octal digits
-                    oct_digits = [e]
-                    while (
-                        len(oct_digits) < 3
-                        and self.pos < len(d)
-                        and 0x30 <= d[self.pos] <= 0x37
-                    ):
-                        oct_digits.append(d[self.pos])
-                        self.pos += 1
-                    out.append(int(bytes(oct_digits), 8) & 0xFF)
-                elif e in b"\r\n":  # line continuation
-                    if e == 0x0D and self.pos < len(d) and d[self.pos] == 0x0A:
-                        self.pos += 1
-                else:  # unknown escape: the char stands for itself
-                    out.append(e)
-            elif c == 0x28:  # nested (
-                depth += 1
-                out.append(c)
-            elif c == 0x29:  # )
+def _literal(data: bytes, pos: int) -> tuple[bytes, int]:
+    """The literal string whose ``(`` ends at ``pos``: balanced
+    parentheses nest, ``\\n \\r \\t \\b \\f \\( \\) \\\\`` and 1-3 octal
+    digits escape, a backslash before an end of line continues the
+    line, and any other escaped byte stands for itself. Returns
+    (bytes, end)."""
+    out = bytearray()
+    depth = 1
+    # the parts tile the string; only a backslash at the end of the
+    # data matches none, and that string is unterminated anyway
+    for m in _STRING_PART.finditer(data, pos):
+        esc = m[1]
+        if esc is None:
+            part = m[0]
+            if part == b")":
                 depth -= 1
-                if depth == 0:
-                    return bytes(out)
-                out.append(c)
-            else:
-                out.append(c)
+                if not depth:
+                    return bytes(out), m.end()
+            elif part == b"(":
+                depth += 1
+            out += part
+        elif 0x30 <= esc[0] <= 0x37:
+            out.append(int(esc, 8) & 0xFF)
+        else:
+            out += _ESCAPES.get(esc, esc)
+    raise ValueError("unterminated PDF literal string")
 
-    def _parse_number_or_ref(self):
-        d = self.data
-        m = re.match(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)", d[self.pos :])
-        if not m:
-            raise ValueError(
-                f"unparsable PDF token at byte {self.pos}: "
-                f"{d[self.pos:self.pos + 12]!r}"
-            )
-        tok = m.group(0)
-        self.pos += len(tok)
-        if b"." in tok:
-            return float(tok)
-        # `N G R` indirect reference lookahead
-        save = self.pos
-        self._skip_ws()
-        m2 = re.match(rb"(\d+)\s+R(?![A-Za-z0-9])", d[self.pos :])
-        if m2 and not tok.startswith((b"+", b"-")):
-            self.pos += m2.end()
-            return ("ref", int(tok), int(m2.group(1)))
-        self.pos = save
-        return int(tok)
+
+def _token(data: bytes, pos: int) -> tuple[str, object, int]:
+    """The token at or after ``pos``: ``(kind, value, end)``. Kinds are
+    "num" (int, float or ``("ref", num, gen)``), "name" (str with its
+    '/'), "str" (bytes), "op" (a bare keyword as str), "open" and
+    "close" (the bracket bytes) and "eof"; anything else is
+    ValueError."""
+    m = _TOKEN.match(data, pos)
+    kind, end = m.lastgroup, m.end()
+    if kind == "int":
+        return "num", int(m[kind]), end
+    if kind == "real":
+        return "num", float(m[kind]), end
+    if kind == "ref":
+        return "num", ("ref", int(m["num"]), int(m["gen"])), end
+    if kind == "name":
+        return "name", _name(m[kind]), end
+    if kind == "op":
+        return "op", m[kind].decode("latin-1"), end
+    if kind == "str":
+        return ("str", *_literal(data, end))
+    if kind == "hex":
+        return "str", _unhex(m[kind][1:-1]), end
+    if kind in ("open", "close"):
+        return kind, m[kind], end
+    if kind == "eof":
+        return kind, None, end
+    raise ValueError(
+        f"unparsable PDF token at byte {end}: {data[end:end + 12]!r}"
+    )
+
+
+def _object(data: bytes, pos: int = 0) -> tuple[object, int]:
+    """Parse one object at or after ``pos``; returns (value, end).
+    Values are dict / list / bytes (strings) / str (names, prefixed
+    '/') / int / float / bool / None / ('ref', num, gen). Arrays and
+    dictionaries build on an explicit stack, so nesting deeper than
+    MAX_NESTING is ValueError, never RecursionError."""
+    stack: list[tuple[bytes, list]] = []
+    while True:
+        kind, val, pos = _token(data, pos)
+        if kind == "open":
+            if len(stack) == MAX_NESTING:
+                raise ValueError(
+                    f"PDF object nested deeper than {MAX_NESTING} levels"
+                )
+            stack.append((val, []))
+            continue
+        if kind == "close":
+            if not stack or _CLOSER[stack[-1][0]] != val:
+                raise ValueError(f"unbalanced {val!r} in PDF object")
+            opener, items = stack.pop()
+            if opener == b"<<":
+                keys = items[::2]
+                if len(items) % 2 or not all(isinstance(k, str) for k in keys):
+                    raise ValueError("PDF dictionary key is not a name")
+                items = dict(zip(keys, items[1::2]))
+            val = items
+        elif kind == "op":
+            # a constant ends with its word even when the keyword runs
+            # on: ``true1`` is true, then 1
+            word = next((w for w in _CONSTANTS if val.startswith(w)), None)
+            if word is None:
+                raise ValueError(f"unexpected PDF keyword {val!r}")
+            pos -= len(val) - len(word)
+            val = _CONSTANTS[word]
+        elif kind == "eof":
+            raise ValueError("truncated PDF object")
+        if not stack:
+            return val, pos
+        stack[-1][1].append(val)
 
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -706,7 +697,7 @@ class _Document:
             id_m = m
         if id_m is not None:
             try:
-                ids = _Lexer(self.data, id_m.end()).parse()
+                ids = _object(self.data, id_m.end())[0]
                 if isinstance(ids, list) and ids and isinstance(ids[0], bytes):
                     doc_id = ids[0]
             except ValueError:
@@ -807,7 +798,7 @@ class _Document:
             if m is None:
                 return  # classic layout: startxref points at `xref`
             key = (int(m.group(1)), int(m.group(2)))
-            info = _Lexer(self.data, m.end()).parse()
+            info = _object(self.data, m.end())[0]
             if not isinstance(info, dict) or info.get("/Type") != "/XRef":
                 return
             rows = self.stream_bytes(key)
@@ -862,7 +853,7 @@ class _Document:
             return
         for key in list(self.offsets):
             try:
-                info = _Lexer(self.data, self.offsets[key]).parse()
+                info = _object(self.data, self.offsets[key])[0]
             except (ValueError, NotImplementedError):
                 continue  # unrelated corrupt object: fails if resolved
             if not isinstance(info, dict) or info.get("/Type") != "/ObjStm":
@@ -886,7 +877,7 @@ class _Document:
             key = (stm_num, 0)
             if key not in self.offsets:
                 raise ValueError(f"PDF object stream {stm_num} not found")
-            info = _Lexer(self.data, self.offsets[key]).parse()
+            info = _object(self.data, self.offsets[key])[0]
             if not isinstance(info, dict) or info.get("/Type") != "/ObjStm":
                 raise ValueError(f"PDF object {stm_num} is not /Type /ObjStm")
             n = self.resolve(info.get("/N"))
@@ -903,18 +894,19 @@ class _Document:
                 )
             if first > len(content):
                 raise ValueError("PDF /ObjStm /First past stream end")
-            lex = _Lexer(content[:first])
+            head = content[:first]
+            pos = 0
             pairs = []
             for _ in range(n):
-                num = lex.parse()
-                off = lex.parse()
+                num, pos = _object(head, pos)
+                off, pos = _object(head, pos)
                 if not (isinstance(num, int) and isinstance(off, int)
                         and num > 0 and 0 <= off <= len(content) - first):
                     raise ValueError("bad PDF /ObjStm header pair")
                 pairs.append((num, off))
             out: dict[int, object] = {}
             for num, off in pairs:
-                out[num] = _Lexer(content, first + off).parse()
+                out[num] = _object(content, first + off)[0]
             self._objstm_cache[stm_num] = out
             return out
         finally:
@@ -945,8 +937,7 @@ class _Document:
                     depth += 1
                     continue
                 raise ValueError(f"PDF object {key[0]} {key[1]} not found")
-            lex = _Lexer(self.data, self.offsets[key])
-            val = lex.parse()
+            val = _object(self.data, self.offsets[key])[0]
             self._cache[key] = val
             obj = val
             depth += 1
@@ -964,14 +955,13 @@ class _Document:
                     "inside an object stream"
                 )
             raise ValueError(f"PDF stream object {key[0]} {key[1]} not found")
-        lex = _Lexer(self.data, self.offsets[key])
-        info = lex.parse()
+        info, pos = _object(self.data, self.offsets[key])
         if not isinstance(info, dict):
             raise ValueError("PDF content object is not a stream")
-        lex._skip_ws()
-        if not self.data.startswith(b"stream", lex.pos):
+        pos = _SKIP.match(self.data, pos).end()
+        if not self.data.startswith(b"stream", pos):
             raise ValueError("PDF stream keyword missing after dictionary")
-        pos = lex.pos + len(b"stream")
+        pos += len(b"stream")
         if self.data[pos : pos + 2] == b"\r\n":
             pos += 2
         elif self.data[pos : pos + 1] == b"\n":
@@ -1033,18 +1023,12 @@ class _Document:
                     )
                 raw = self._apply_predictor(raw, parm)
             elif f == "/ASCIIHexDecode":
-                body = raw.split(b">")[0]
-                hx = bytes(b for b in body if bytes([b]) not in _WS)
-                if len(hx) % 2:
-                    hx += b"0"
-                raw = bytes.fromhex(hx.decode("ascii"))
+                raw = _unhex(raw.split(b">")[0])
             elif f == "/ASCII85Decode":
                 import base64
 
                 body = raw.split(b"~>")[0]
-                raw = base64.a85decode(
-                    bytes(b for b in body if bytes([b]) not in _WS)
-                )
+                raw = base64.a85decode(body.translate(None, _WS))
             elif f == "/RunLengthDecode":
                 raw = _rle_decode(raw)
             elif f == "/LZWDecode":
@@ -1221,8 +1205,10 @@ class _Document:
             # tree nested thousands deep would otherwise blow Python's
             # recursion limit with an uncaught RecursionError instead of
             # the ValueError this module contracts for corruption.
-            if depth > 64:
-                raise ValueError("PDF page tree nested deeper than 64 levels")
+            if depth > MAX_NESTING:
+                raise ValueError(
+                    f"PDF page tree nested deeper than {MAX_NESTING} levels"
+                )
             node = self.resolve(node_ref)
             if not isinstance(node, dict):
                 raise ValueError("PDF page-tree node is not a dictionary")
@@ -1530,24 +1516,25 @@ _INLINE_CS = {"/G": 1, "/DeviceGray": 1, "/RGB": 3, "/DeviceRGB": 3,
               "/CMYK": 4, "/DeviceCMYK": 4}
 
 
-def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
-    """BI ... ID <raw> EI (§8.9.7): key/value pairs with the
-    abbreviated names, then raw sample data whose extent is computed
-    (uncompressed) or discovered by the zlib stream's own end (/Fl).
-    Returns (params, decoded samples)."""
-    d = lex.data
+def _inline_image(d: bytes, pos: int) -> tuple[dict, bytes, int]:
+    """BI ... ID <raw> EI (§8.9.7) from just past ``BI``: key/value pairs
+    with the abbreviated names, then raw sample data whose extent is
+    computed (uncompressed) or discovered by the zlib stream's own end
+    (/Fl). Returns (params, decoded samples, end)."""
     params: dict = {}
     while True:
-        lex._skip_ws()
-        if d.startswith(b"ID", lex.pos):
-            lex.pos += 2
+        pos = _SKIP.match(d, pos).end()
+        if d.startswith(b"ID", pos):
+            pos += 2
             break
-        if lex.pos >= len(d):
+        if pos >= len(d):
             raise ValueError("inline image missing ID")
-        key = lex._parse_name()
-        params[key] = lex.parse()
-    if lex.pos < len(d) and d[lex.pos] in _WS:
-        lex.pos += 1  # exactly one whitespace after ID
+        # a key is its first byte (normally '/') and the name bytes after
+        end = _NAME_REST.match(d, pos + 1).end()
+        key = _name(d[pos:end])
+        params[key], pos = _object(d, end)
+    if pos < len(d) and d[pos] in _WS:
+        pos += 1  # exactly one whitespace after ID
     w = params.get("/W", params.get("/Width"))
     h = params.get("/H", params.get("/Height"))
     bpc = params.get("/BPC", params.get("/BitsPerComponent", 8))
@@ -1570,16 +1557,15 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
     if filt in ("/Fl", "/FlateDecode"):
         dec = zlib.decompressobj()
         try:
-            raw = dec.decompress(d[lex.pos :], need + 1)
+            raw = dec.decompress(memoryview(d)[pos:], need + 1)
         except zlib.error as exc:
             raise ValueError(f"bad inline image Flate data: {exc}") from None
         if not dec.eof:
             raise ValueError("inline image Flate stream did not terminate")
-        consumed = len(d) - lex.pos - len(dec.unused_data)
-        lex.pos += consumed
+        pos = len(d) - len(dec.unused_data)
     elif filt is None:
-        raw = d[lex.pos : lex.pos + need]
-        lex.pos += need
+        raw = d[pos : pos + need]
+        pos += need
     else:
         raise NotImplementedError(
             f"inline image filter {filt!r} (only /Fl and raw decode here; "
@@ -1590,52 +1576,36 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
             f"inline image has {len(raw)} sample bytes for "
             f"{w}x{h}x{ncomp} geometry"
         )
-    lex._skip_ws()
-    if not d.startswith(b"EI", lex.pos):
+    pos = _SKIP.match(d, pos).end()
+    if not d.startswith(b"EI", pos):
         raise ValueError("inline image missing EI terminator")
-    lex.pos += 2
     params["/W"], params["/H"] = w, h
     params["_ncomp"] = ncomp
-    return params, raw
+    return params, raw, pos + 2
 
 
 def _tokenize_content(data: bytes):
-    """Yield ('str', bytes) / ('num', float) / ('op', name) /
-    ('arr', list) / ('inlimg', (params, samples)) tokens from a
-    content stream."""
-    lex = _Lexer(data)
-    d = data
+    """Yield ('str', bytes) / ('num', number) / ('name', str) /
+    ('op', name) / ('arr', list) / ('dict', dict) / ('inlimg', (params,
+    samples)) tokens from a content stream: the object grammar's tokens,
+    with bare keywords as operators."""
+    pos = 0
     while True:
-        lex._skip_ws()
-        if lex.pos >= len(d):
+        kind, val, end = _token(data, pos)
+        if kind == "eof":
             return
-        c = d[lex.pos : lex.pos + 1]
-        if c == b"(":
-            yield ("str", lex._parse_string())
-        elif c == b"<" and d[lex.pos : lex.pos + 2] != b"<<":
-            yield ("str", lex._parse_hex_string())
-        elif c == b"<":
-            yield ("dict", lex._parse_dict())
-        elif c == b"[":
-            yield ("arr", lex._parse_array())
-        elif c == b"/":
-            yield ("name", lex._parse_name())
-        elif re.match(rb"[+-.\d]", c):
-            yield ("num", lex._parse_number_or_ref())
-        else:
-            m = re.match(rb"[A-Za-z'\"*][A-Za-z0-9'\"*]*", d[lex.pos :])
-            if not m:
-                raise ValueError(
-                    f"unparsable PDF content token {d[lex.pos:lex.pos + 8]!r}"
-                )
-            lex.pos += m.end()
-            op = m.group(0).decode("latin-1")
-            if op == "BI":
-                # raw sample bytes follow — they MUST be consumed here
-                # or they would shred the token stream
-                yield ("inlimg", _parse_inline_image(lex))
-            else:
-                yield ("op", op)
+        if kind == "open":
+            val, end = _object(data, pos)
+            kind = "arr" if isinstance(val, list) else "dict"
+        elif kind == "close":
+            raise ValueError(f"unbalanced {val!r} in PDF content stream")
+        elif kind == "op" and val == "BI":
+            # raw sample bytes follow — they MUST be consumed here or
+            # they would shred the token stream
+            params, raw, end = _inline_image(data, end)
+            kind, val = "inlimg", (params, raw)
+        yield kind, val
+        pos = end
 
 
 # --------------------------------------------------------- font encodings

@@ -588,7 +588,7 @@ def llm_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     # keep-lowest-doc_id per content hash as a combiner min_by groupBy
-    # (r14, guide §2.5 — result-identical to the oracle's row_number()=1:
+    # (guide §2.5; result-identical to the oracle's row_number()=1:
     # doc_id is unique, so the argmin is the same row): partial
     # aggregation collapses duplicate classes map-side with no sort, and
     # a mega-duplicate-class can never funnel into one window task (the
@@ -2500,7 +2500,7 @@ def _curate_v5_sql() -> str:
 
 @register("llm_corpus_curate_v5", sql=lambda: _curate_v5_sql())
 def llm_corpus_curate_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L10e: curation DAG v5 (round-13 capstone) — v4 (normalized dedup
+    """L10e: curation DAG v5 (the curation capstone) — v4 (normalized dedup
     + decontamination + calibrated quality + repetition + LM-likelihood
     + substring-span gates) composed with the MULTIMODAL near-dup
     verdicts: the later document of every image DCT-phash pair (L2k),

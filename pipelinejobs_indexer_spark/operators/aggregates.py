@@ -88,7 +88,7 @@ def agg_state_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: jobs per (pipeline, state) — monitoring / batch re-index
     selection (states init-job.json:25; ensemble mode config.yml:5-8).
 
-    Scale rewrite (r14, result-identical to the oracle SQL): group on
+    Scale rewrite (result-identical to the oracle SQL): group on
     the narrow source columns and derive pipeline_uuid AFTER the
     aggregation — sha256 on one row per group instead of per job row
     (pipeline_uuid = '106'||sha256(o_orderpriority) is injective, so
@@ -262,7 +262,7 @@ def agg_storage_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = F.expr("percentile(length, array(0.50D, 0.90D, 0.99D))")
     # spread=False: the plan prunes every sha2-derived column (ext/length
     # only survive), so the keyed pre-repartition was pure overhead —
-    # partial aggregation collapses the scan stage map-side (r14 A/B).
+    # partial aggregation collapses the scan stage map-side.
     return (
         archive_files(spark, sf_dir, spread=False)
         .groupBy("ext")
@@ -293,8 +293,8 @@ def agg_storage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread=False: the plan prunes every sha2-derived column (ext/level/
     length only), so the keyed pre-repartition was pure overhead — the
     projection left in the scan stage is a few CASE/round expressions
-    and partial aggregation collapses it map-side (r14 A/B: 0.53 ->
-    0.35 s at sf0.1)."""
+    and partial aggregation collapses it map-side (measured A/B at
+    sf0.1: 0.53 -> 0.35 s)."""
     return (
         archive_files(spark, sf_dir, spread=False)
         .groupBy("ext", "level")

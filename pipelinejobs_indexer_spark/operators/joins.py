@@ -69,8 +69,8 @@ def join_files_job_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated_by=[process_uuid] on every indexed record).
 
     Joined on the integer ``job_key`` instead of the exploded 67-char
-    process uuid (r15, guide §2.3 — the same injective-key narrowing the
-    events family landed in r14): both provenance arrays are
+    process uuid (guide §2.3; the same injective-key narrowing as the
+    events family): both provenance arrays are
     single-element ``['117' || sha256(orderkey)]`` by construction, so
     unnest is a 1:1 map and proc equality holds exactly when the integer
     orderkeys match (sha256 is injective for every input that exists).
@@ -180,7 +180,7 @@ def join_range_events_in_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fan-out shrinks.
     """
     # The equi key is (job_key, tb) — the integer fixture key instead of
-    # the 67-char uuid (r14, guide §2.3; result-identical: job_uuid =
+    # the 67-char uuid (guide §2.3; result-identical: job_uuid =
     # '107'||sha256(job_key) is injective, so key equality is unchanged).
     # The uuid is derived AFTER the join for output rows only, moving the
     # sha256 out of the serial scan stage and off the shuffle key.
@@ -258,7 +258,7 @@ def join_asof_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     m = messages(spark, sf_dir)
     e = job_events(spark, sf_dir)
-    # Shuffle-narrowing rewrite (r14, guide §2.3 — result-identical to
+    # Shuffle-narrowing rewrite (guide §2.3; result-identical to
     # the oracle SQL): the timeline partitions on the integer job_key
     # instead of the 67-char uuid (uuid = '107'||sha256(job_key) is
     # injective, and BOTH fixture views carry job_key, so the window

@@ -42,7 +42,7 @@ def win_latest_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed latest-first, init-job.json:37-141; store.last_event
     reactor.py:127). Deterministic tie-break on event_seq.
 
-    Shuffle-narrowing rewrite (r14, guide §2.3 — result-identical): the
+    Shuffle-narrowing rewrite (guide §2.3; result-identical): the
     window partitions on the integer job_key (job_uuid =
     '107'||sha256(job_key) is injective, so the partitions are the same
     sets) and the uuid is derived for the ONE surviving row per job
@@ -79,7 +79,7 @@ def win_transition_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-state dwell time (the create→run→finish sequence,
     init-job.json:59,99,139)."""
     # Window keyed on the integer job_key; job_uuid derived post-window
-    # (r14, guide §2.3 — result-identical: the uuid is an injective
+    # (guide §2.3; result-identical: the uuid is an injective
     # function of job_key, so partitions match; the per-row sha256 moves
     # from the serial scan stage to the parallel post-shuffle stage and
     # the shuffle key narrows from 67 chars to 8 bytes).
@@ -126,7 +126,7 @@ def win_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing / re-index batch accounting, config.yml:5-8). Explicit
     rows-frame so the accumulation order is pinned on both engines."""
     # Same job_key-keyed window + post-window uuid derivation as W2
-    # (r14, guide §2.3 — result-identical, injective key mapping).
+    # (guide §2.3; result-identical, injective key mapping).
     w = (
         Window.partitionBy("job_key")
         .orderBy("date", "event_seq")
@@ -309,7 +309,7 @@ def sessionize(ev: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
     s = ev.withColumn("is_new", is_new).withColumn(
         "session_idx", F.sum("is_new").over(w_run)
     )
-    # Sum value on an integer cents grid (ADVICE r7): round(sum(double))
+    # Sum value on an integer cents grid: round(sum(double))
     # exposes per-session float summation ORDER, which differs between
     # Spark and DuckDB — a sum landing near a half-cent boundary could
     # round differently. Snapping each value to cents first (the repo's

@@ -486,7 +486,7 @@ def sink_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("shard"),
     )
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key, pdf):
         import io
         import tarfile
 

@@ -50,8 +50,8 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
     )
     # int-vs-float dtype divergence gate: the local %.12g canonicalization
     # renders 123.0 and 123 identically, but the EXTERNAL driver's hash is
-    # type-sensitive (round-1 reds: DuckDB HUGEINT sums → pandas float64
-    # vs Spark int64). Catch the class here so it can't pass locally and
+    # type-sensitive (DuckDB HUGEINT sums arrive as pandas float64 while
+    # Spark's are int64). Catch the class here so it can't pass locally and
     # fail the driver. (A column whose NULLs float-ify both engines' ints
     # identically does not trip this — both sides land float64.)
     for c in spark_pdf.columns:
@@ -61,7 +61,7 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
             # NULLs when the other engine's materialization kept a NULLABLE
             # int dtype (plain numpy int64 cannot hold NA, so the int side
             # having NAs proves its logical type is integer — this cannot
-            # be the round-1 HUGEINT/double bug class, where the int side
+            # be the HUGEINT/double bug class, where the int side
             # is NA-free). Requires the float side all-integral and equal
             # NULL counts (counts, not positions: rows are compared
             # order-insensitively); both columns are then normalized to

@@ -190,7 +190,7 @@ def test_cdc_hash_and_contam_cap_env_parsing(monkeypatch):
 
 
 def test_exact_embedding_baseline_row_cap(spark, sf_dir, monkeypatch):
-    """VERDICT r6 item 6: the exact all-pairs embedding baseline is a
+    """The exact all-pairs embedding baseline is a
     registered O(n²) theta join — fine as the LSH primary's ground
     truth at fixture scale, a cartesian time bomb on a real corpus. It
     must refuse loudly above the configured row ceiling (naming the LSH
@@ -257,7 +257,7 @@ def test_resilient_checkpoint_env_parsing(monkeypatch):
 
 
 def test_resilient_checkpoints_identical_results(spark, sf_dir, monkeypatch):
-    """VERDICT r4 item 2: the CC loop and BPE trainer must produce
+    """The CC loop and BPE trainer must produce
     IDENTICAL output whether lineage cuts are executor-local
     (localCheckpoint, the local-mode default) or reliable checkpoint()s
     to a checkpoint dir (the cluster/resilience path) — the flag changes
@@ -299,7 +299,7 @@ def test_state_store_env_parsing(monkeypatch):
 
 
 def test_state_store_backend_identical_results(spark, sf_dir, monkeypatch):
-    """VERDICT r6 item 5: the stateful streaming operators must produce
+    """The stateful streaming operators must produce
     IDENTICAL results on the in-heap HDFS-backed store (local default)
     and on RocksDB (SPARK_GRAFT_STATE_STORE=rocksdb — the 100 TB
     setting, where per-key state spills off-heap/on-disk with
@@ -400,7 +400,7 @@ def test_registry_loads_under_extreme_trainer_knobs():
 
 
 def test_registry_loads_under_lsh_tables_ceiling():
-    """Same lazily-rendered-oracle lesson for the round-7 lsh_tables
+    """Same lazily-rendered-oracle lesson for the lsh_tables
     knob: at the ceiling (64 tables x the default 4 planes = 256 bucket
     sign-projections, each over 64 literal weights) the embedding-LSH
     oracle is its largest — the registry must still load and the

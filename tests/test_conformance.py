@@ -2,9 +2,8 @@
 INDEPENDENT encoder (the JDK's javax.imageio plugins) and compare
 against the reference decode committed alongside.
 
-Until round 10 every codec claim rested on in-repo round-trips, which
-a symmetric encoder/decoder spec misreading survives (VERDICT r9
-item 1). The fixtures under tests/fixtures/conformance/ break that
+A codec claim that rests only on in-repo round-trips survives a
+symmetric encoder/decoder spec misreading. The fixtures under tests/fixtures/conformance/ break that
 loop: scripts/conformance/GenFixtures.java encodes deterministic
 images with com.sun.imageio's JPEG (baseline + progressive), PNG,
 GIF, and TIFF (LZW / PackBits / Deflate / CCITT RLE / T.4 / T.6)
@@ -134,16 +133,16 @@ def test_manifest_covers_every_claimed_codec():
     fax = {n for n in names if n.startswith("fax_")}
     assert {"fax_rle_a", "fax_g3_a", "fax_g4_a"} <= fax
     assert len(fax) >= 9  # noise + long-run + edge patterns
-    # round-10 tiled layout: one fixture per codec family through tiles
+    # tiled layout: one fixture per codec family through tiles
     tiled = {n for n in names if "tiled" in n}
     assert {"gray_tiled_lzw", "rgb_tiled_packbits", "gray_tiled_none",
             "gray_tiled_deflate", "fax_g4_tiled", "pal4_tiled"} <= tiled
-    # round-10 multi-page chain: one entry per page of one file
+    # multi-page chain: one entry per page of one file
     assert {"multipage_p0", "multipage_p1", "multipage_p2"} <= names
-    # round-10 PNG depths: 16-bit, every sub-8 depth, and palette
+    # PNG depths: 16-bit, every sub-8 depth, and palette
     assert {"gray16", "gray4", "gray2", "gray1", "pal_png"} <= names
     assert any(m.get("depth") == 16 for m in MANIFEST)
-    # round-10 16-bit TIFF and the animated-GIF frame walk
+    # 16-bit TIFF and the animated-GIF frame walk
     assert {"gray16_lzw", "gray16_tiled"} <= names
     assert {"anim_p0", "anim_p1", "anim_p2"} <= names
 

@@ -167,7 +167,7 @@ def test_mh_lines_byte_aligned():
 
 def test_pinned_jdk_crosschecked_stream():
     """The exact G4 bytes below were decoded pixel-exactly by the JDK
-    TIFFFaxDecompressor when the round-10 fixtures were generated;
+    TIFFFaxDecompressor when the conformance fixtures were generated;
     pinning them keeps the encoder from drifting off the
     cross-checked dialect."""
     rows = [[0, 1, 1, 0, 0, 0, 1, 0], [0, 0, 1, 1, 0, 1, 1, 1]]
@@ -257,7 +257,7 @@ def _strip_leading_bits(data: bytes, n: int) -> bytes:
 
 
 def test_t4_2d_missing_leading_eol_keeps_first_data_bit():
-    """ADVICE r10: the 1D/2D flag bit is a SUFFIX of the EOL (T.4
+    """The 1D/2D flag bit is a SUFFIX of the EOL (T.4
     §4.2.1.2), so an external mixed-2D stream that omits the leading
     EOL has NO flag bit before the first line's data — the tolerant
     path must assume a 1D first line, not consume the first data bit

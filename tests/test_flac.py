@@ -248,7 +248,7 @@ def test_decode_audio_dispatches_flac():
 def test_unknown_length_stream_still_bounded(monkeypatch):
     """STREAMINFO total=0 is spec-legal 'unknown length' and bypasses the
     declared-total check, so the decode loop itself must cap accumulated
-    samples (ADVICE r8): shrink the bound and feed a total=0 stream that
+    samples: shrink the bound and feed a total=0 stream that
     exceeds it — the decoder must raise, not keep allocating."""
     import pipelinejobs_indexer_spark.llm.flac as flacmod
 
@@ -273,7 +273,7 @@ def test_unknown_length_stream_still_bounded(monkeypatch):
         flacmod.decode_flac(patched)
 
 
-# --------------------------- hand-authored spec fixture (ADVICE r8)
+# --------------------------- hand-authored spec fixture (RFC 9639)
 def test_hand_authored_verbatim_fixture():
     """A whole FLAC stream written byte-by-byte from RFC 9639 — MSB-first
     packing, STREAMINFO layout, frame header field by field, a VERBATIM

@@ -157,7 +157,7 @@ def test_curate_full_matches_oracle_on_random_corpora(spark):
 def test_curate_variants_match_oracle_on_random_corpora(
     spark, core_attr, registered
 ):
-    """VERDICT r5 item 5: the v2-v4 curation DAGs carry exactly the gate
+    """The v2-v4 curation DAGs carry exactly the gate
     classes where float/tie discipline breaks on adversarial corpora —
     per-language MEDIAN thresholds (v2), a corpus logprob percentile
     tail (v3), and the substring-span drop (v4). Same corpus generator

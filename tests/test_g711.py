@@ -155,7 +155,7 @@ def test_wav_walker_and_dispatch():
 
 
 def test_mutation_robustness_wav_and_probes():
-    """Bit-flip fuzz over the round-9 audio surfaces: companded/ADPCM
+    """Bit-flip fuzz over the audio surfaces: companded/ADPCM
     WAVs and the Ogg/MP3 probes decode correctly or raise ValueError /
     NotImplementedError — never crash (the pdf15 fuzz discipline)."""
     import random
@@ -198,8 +198,8 @@ def test_mutation_robustness_wav_and_probes():
 
 # --------------------------------------------------------------------------
 # External conformance: CPython's audioop (an independent C implementation
-# of G.711 companding and IMA/DVI ADPCM) — round-10 discipline: codec
-# claims must not rest solely on in-repo round trips. audioop is
+# of G.711 companding and IMA/DVI ADPCM): codec claims must not rest
+# solely on in-repo round trips. audioop is
 # deprecated-but-present on this interpreter; skip cleanly if removed.
 audioop = pytest.importorskip("audioop")
 
@@ -284,7 +284,7 @@ def test_ima_adpcm_core_matches_audioop():
 
 
 def test_ieee_float_wav_decodes():
-    """WAVE_FMT_FLOAT (tag 3, round 10): float32/float64 frames in
+    """WAVE_FMT_FLOAT (tag 3): float32/float64 frames in
     [-1, 1] — the DAW-export format. Exactly-representable values
     round-trip bit-identically; sub-32-bit float widths are corrupt."""
     import struct
@@ -313,7 +313,7 @@ def test_ieee_float_wav_decodes():
 
 
 def test_ieee_float_wav_misaligned_data_is_loud():
-    """ADVICE r10: a data chunk that is not a whole number of frames
+    """A data chunk that is not a whole number of frames
     must raise the module's documented ValueError up front — not a
     struct.error on unpack (float32 mono, 10 bytes) and not a silently
     dropped trailing partial frame (float32 stereo, 12 bytes = 1.5

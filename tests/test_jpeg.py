@@ -455,7 +455,7 @@ def test_non_interleaved_scan_raises_not_garbage():
         decode_jpeg(data)
 
 
-# ---------------------- synth_ac_jpeg + Parseval bands (L5m, round 9)
+# ---------------------- synth_ac_jpeg + Parseval bands (L5m)
 def test_ac_blocks_parseval_energy_all_frequencies():
     """One AC coefficient at (0,u) must reconstruct to centered block
     energy (q*ac)^2 within the L5m band, for every u=1..7 (u=6,7 route

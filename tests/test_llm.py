@@ -673,8 +673,8 @@ def test_png_round_trip_every_filter():
 
 
 # Read at module import (collection time), not inside the test body:
-# the VERDICT r4 audit saw this fixture test skip in a full-suite run
-# while passing standalone — capturing the bytes eagerly makes the
+# this fixture test once skipped in a full-suite run while passing
+# standalone — capturing the bytes eagerly makes the
 # skip decision deterministic and immune to any test-order / sandbox
 # filesystem interaction later in the session.
 _EXTERNAL_PNG_PATH = "/root/reference/tests/store/uploads/emerald/201808/protein.png"
@@ -902,7 +902,7 @@ def test_gif_corrupt_and_routing_contract():
 
 
 def test_gif_hostile_stream_bounded_and_zero_size_frame():
-    """ADVICE r6: (a) a hostile GIF declaring a tiny image descriptor but
+    """(a) A hostile GIF declaring a tiny image descriptor but
     carrying a huge LZW body must not amplify memory — decode stops at
     w*h indices (and the LZW table append is capped at the 12-bit
     ceiling); (b) a zero-width/height frame raises the explicit
@@ -959,7 +959,7 @@ def test_gif_hostile_stream_bounded_and_zero_size_frame():
 
 
 def test_sample_frames_riff_contract():
-    """ADVICE r5: a truncated or non-AVI RIFF payload is corrupt INPUT
+    """A truncated or non-AVI RIFF payload is corrupt INPUT
     (ValueError), not a codec gap — NotImplementedError is reserved for
     genuinely non-RIFF inter-frame codecs."""
     import pytest
@@ -1082,7 +1082,7 @@ def test_ngram_novelty_matches_independent_python(spark):
         assert abs(r.novelty - round(n_novel / n_sh, 6)) < 1e-9
 
 
-# --- adversarial skew: df-capped candidate joins (VERDICT r4 item 8) ----
+# --- adversarial skew: df-capped candidate joins ----------------------
 
 
 def _keys_over(occ, key, cap):
@@ -1155,7 +1155,7 @@ def test_containment_hot_shingle_fanout_bounded(spark):
 
 def test_contamination_hot_shingle_fanout_bounded(spark):
     """Planted boilerplate sentence shared by an eval doc and 300 train
-    docs (VERDICT r5 item 1): uncapped, every boilerplate shingle joins
+    docs: uncapped, every boilerplate shingle joins
     all 300 train docs against the eval doc — the 103× join-row growth
     the sf10 probe measured. Pins that (a) the cap removes the hot
     shingles BEFORE the join — max per-shingle df in the capped universe
@@ -1434,7 +1434,7 @@ def test_avi_corrupt_container_classes_raise():
 
 
 def test_connected_components_planted_star_skew(spark):
-    """Adversarial skew (VERDICT r2 item 5): one hub vertex appears in
+    """Adversarial skew: one hub vertex appears in
     EVERY edge, so the window-over-u inside the CC loop concentrates the
     entire symmetric neighborhood of the hub in ONE task — the worst case
     the loop's AQE-off windows get no runtime help with. The design holds
@@ -1579,7 +1579,7 @@ def test_curate_v3_is_v2_minus_logprob_tail(spark):
 
 
 def test_curate_v5_is_v4_minus_multimodal_dups(spark):
-    """L10e stage consistency (the round-13 capstone's contract): v5's
+    """L10e stage consistency (the v5 capstone's contract): v5's
     keep set must equal v4's minus EXACTLY the union of the three
     independent registered multimodal near-dup operators' doc_b sets
     (image DCT-phash L2k, acoustic L2m, video shot-hash L2n) — the
@@ -1770,7 +1770,7 @@ def test_synth_wav_is_valid_riff_for_stdlib_parser():
         assert audio["rate"] == AUDIO_RATE and audio["channels"] == 1
         assert audio["frames"] == _audio_frames(doc_id)
         s = audio["samples"]
-        # round 10: the sample width cycles 16/24/32-bit per doc with
+        # the sample width cycles 16/24/32-bit per doc with
         # the amplitude scaled to the width
         amp = _audio_amp(doc_id) * (1 << (8 * ([2, 3, 4][doc_id % 3] - 2)))
         assert max(abs(v) for v in s) == amp
@@ -2450,7 +2450,7 @@ def test_corpus_report_matches_python_recompute(spark):
     """Every dataset-card column replayed independently in Python over a
     planted frame: an exact dup pair, two languages per source, known
     split buckets (ids 0,1,2 train; 33 valid; 53 test), and scores
-    recomputed on the same round-6/micro grid."""
+    recomputed on the same 6-decimal (micro) grid."""
     import hashlib
     import math
 
@@ -2924,7 +2924,7 @@ def test_png_depth_variants():
 
 
 def test_wav_24_32_bit_pcm():
-    """24/32-bit PCM WAV (round 10): 3-byte two's-complement sign
+    """24/32-bit PCM WAV: 3-byte two's-complement sign
     extension is cross-checked against audioop.lin2lin (independent C
     implementation), 32-bit against struct; odd widths stay refusals."""
     import struct
@@ -3021,12 +3021,12 @@ def test_gif_animation_frames():
 
 
 def test_phash_dct_banded_exactness_and_separation():
-    """The 256-bit DCT phash (round 11): the 16-band LSH plan must be
+    """The 256-bit DCT phash: the 16-band LSH plan must be
     result-identical to brute-force Hamming at radius 12 (pigeonhole:
     radius < band count), the fixture's within-radius pairs must all be
     in-group, and cross-base pairs must sit far outside the radius —
-    the over-clustering failure the 56-bit dHash showed at the r10 sf1
-    probe (VERDICT r10 item 2)."""
+    the over-clustering failure the 56-bit dHash showed in an sf1
+    probe."""
     import pandas as pd
 
     from pipelinejobs_indexer_spark.llm import dedup as D
@@ -3085,7 +3085,7 @@ def test_phash_dct_banded_exactness_and_separation():
 
 
 def test_audiohash_banded_exactness_and_separation():
-    """L2m (round 11): same invariants as the image DCT phash, over
+    """L2m: same invariants as the image DCT phash, over
     FLAC-round-tripped samples — banded plan result-identical to brute
     force at radius 12, within-radius pairs all in-group, cross-base
     pairs far outside, and no low-entropy band (the degenerate-band
@@ -3157,7 +3157,7 @@ def test_audiohash_flac_round_trip_is_load_bearing():
 
 
 def test_videohash_match_semantics_and_decode_is_load_bearing():
-    """L2n (round 11): the frame-hash rule — pairs at equal length
+    """L2n: the frame-hash rule — pairs at equal length
     sharing >= n_frames - 2 same-position frames — must hold exactly
     on the group fixture (in-group pairs qualify: the bump touches one
     frame of one doc; cross-group pairs never do), and the hashes must
@@ -3206,7 +3206,7 @@ def test_videohash_match_semantics_and_decode_is_load_bearing():
 
 
 def test_video_containment_offset_semantics():
-    """L2n2 (round 11): the fixture's sub-clip structure must resolve
+    """L2n2: the fixture's sub-clip structure must resolve
     exactly — each non-base doc's full frame sequence embeds in its
     base clip at the documented offset (1 for the head-trimmed
     sub-clip, 0 for the tail-trimmed), equal-length sibling sub-clips
@@ -3244,7 +3244,7 @@ def test_video_containment_offset_semantics():
 
 
 def test_winnow_guarantee_and_density():
-    """L2p (round 11): the winnowing GUARANTEE — any two texts sharing
+    """L2p: the winnowing GUARANTEE — any two texts sharing
     a run of >= w + k - 1 words share at least one selected
     fingerprint value — checked over randomized word sequences with a
     pure-Python reimplementation (same md5-to-bigint hash the Spark

@@ -21,6 +21,9 @@ ORACLE_NAMES = sorted(registry.ORACLE)
 ROWS_ONLY_NAMES = sorted(set(registry.QUERIES) - set(registry.ORACLE))
 
 
+# a grouped function with partial type hints makes PySpark warn that it
+# cannot infer the eval type; a registered query must not ship one
+@pytest.mark.filterwarnings("error:Cannot infer the eval type:UserWarning")
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, ddb, sf_dir, name):
     sdf = registry.QUERIES[name](spark, sf_dir)
@@ -55,8 +58,8 @@ def test_survey_section2_matches_registry():
     """SURVEY.md §2 is the coverage checklist the engine is graded
     against; its name set must equal the registry exactly — a query
     registered but not surveyed is invisible to the inventory, and a
-    surveyed name with no registration is a false claim (VERDICT r9
-    item 7 pinned a 175-vs-187 drift; this keeps it from recurring)."""
+    surveyed name with no registration is a false claim (a 175-vs-187
+    drift once went unnoticed; this keeps it from recurring)."""
     import os
     import re
 
@@ -78,8 +81,8 @@ def test_survey_section2_matches_registry():
 def test_survey_count_sentence_matches_tables():
     """The §2 count sentence ('N registered queries (A in the tables
     §2.1–2.11 + B registered extras in §2.12)') must be DERIVED from the
-    tables it summarizes — VERDICT r10 item 6 pinned a hand-maintained
-    '188 + 5' drift against 183 + 10 actual; this recounts every round."""
+    tables it summarizes — a hand-maintained '188 + 5' once drifted from
+    the actual 183 + 10; this recounts on every run."""
     import os
     import re
 
@@ -110,8 +113,8 @@ def test_survey_count_sentence_matches_tables():
 
 def test_plans_md_covers_every_registry_query():
     """PLANS.md is the plan-audit artifact: a user (or judge) checking a
-    query's physical plan must find a section for it (VERDICT r11 item
-    1 found the six round-11 queries absent). Every registry name must
+    query's physical plan must find a section for it (six newly
+    registered queries were once absent). Every registry name must
     have a `## name` section; regenerate with scripts/dump_plans.py
     whenever a query is added or renamed."""
     import os

@@ -232,7 +232,7 @@ def test_mutation_robustness(seed, n_flips):
 
 def test_page_tree_depth_bounded():
     """A non-cyclic page tree nested past 64 levels must raise ValueError
-    (the module's corruption contract), never RecursionError (ADVICE r8)."""
+    (the module's corruption contract), never RecursionError."""
     objs = [b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"]
     depth = 80
     for i in range(depth):
@@ -246,6 +246,75 @@ def test_page_tree_depth_bounded():
     body = b"%PDF-1.4\n" + b"".join(objs) + b"trailer << /Root 1 0 R >>\n%%EOF\n"
     with pytest.raises(ValueError, match="deeper than"):
         extract_pdf_text(body)
+
+
+def _deep_pdf(page_extra: bytes = b"", content: bytes = b"BT (x) Tj ET") -> bytes:
+    """A one-page PDF with ``page_extra`` spliced into the page dictionary
+    and ``content`` as its uncompressed content stream."""
+    return b"".join([
+        b"%PDF-1.4\n",
+        b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n",
+        b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n",
+        b"3 0 obj << /Type /Page /Contents 4 0 R " + page_extra + b" >> endobj\n",
+        b"4 0 obj << /Length %d >> stream\n" % len(content),
+        content,
+        b"\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n",
+    ])
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda n: _deep_pdf(page_extra=b"/Deep " + b"[" * n + b"]" * n),
+        lambda n: _deep_pdf(content=b"BT " + b"[" * n + b"]" * n + b" TJ ET"),
+        lambda n: _deep_pdf(page_extra=b"/Deep " + b"<< /A " * n + b"1" + b" >>" * n),
+    ],
+    ids=["array-in-page", "array-in-content", "dict-in-object"],
+)
+def test_deep_nesting_raises_value_error(make):
+    """Balanced brackets nested 3,000 deep are structural corruption: both
+    extractors raise ValueError, not RecursionError. The same shapes at a
+    legal depth parse."""
+    from pipelinejobs_indexer_spark.llm.pdf import extract_pdf_images
+
+    with pytest.raises(ValueError, match="deeper than"):
+        extract_pdf_text(make(3000))
+    with pytest.raises(ValueError, match="deeper than"):
+        extract_pdf_images(make(3000))
+    assert extract_pdf_images(make(60)) == [[]]
+
+
+@pytest.mark.parametrize(
+    "mode,src,want",
+    [
+        ("obj", b"/A#20B", "/A B"),
+        ("obj", b"[+.5 -3 4.]", [0.5, -3, 4.0]),
+        ("obj", b"[12 0 R]", [("ref", 12, 0)]),
+        ("content", b"12 0 R 12 0 Rx",
+         [("num", ("ref", 12, 0)), ("num", 12), ("num", 0), ("op", "Rx")]),
+        ("obj", b"<< /A 1 % note >> ]\n/B 2 >>", {"/A": 1, "/B": 2}),
+        ("content", b"(x) Tj % no newline", [("str", b"x"), ("op", "Tj")]),
+        ("obj", b"[true false null]", [True, False, None]),
+        ("obj", b"(a(b)c\\053d\\\r\ne)", b"a(b)c+de"),
+        ("obj", b"<41 4\n2 5>", b"ABP"),
+        ("obj", b"[<<>> [] <<>>]", [{}, [], {}]),
+    ],
+    ids=["name-escape", "numbers", "ref", "ref-needs-word-end",
+         "comment-in-dict", "comment-at-end", "constants",
+         "nested-string-escapes", "hex-odd-spaced", "empty-containers"],
+)
+def test_token_grammar_edge_cases(mode, src, want):
+    """The object and content-stream grammar on inputs the writer never
+    emits, parsed through the document's object store and the content
+    tokenizer."""
+    from pipelinejobs_indexer_spark.llm.pdf import _Document, _tokenize_content
+
+    if mode == "obj":
+        doc = _Document(b"%PDF-1.4\n1 0 obj\n" + src + b"\nendobj\n%%EOF\n")
+        got = doc.resolve(("ref", 1, 0))
+    else:
+        got = list(_tokenize_content(src))
+    assert repr(got) == repr(want)  # repr tells 4.0 from 4 and True from 1
 
 
 # ------------------------------------------------- PDF 1.5 compressed layout
@@ -310,7 +379,7 @@ def test_predictor_misalignment_rejected():
     bad = data.replace(b"/Predictor 12 /Columns 6", b"/Predictor 12 /Columns 7")
     with pytest.raises(ValueError, match="misaligned"):
         extract_pdf_text(bad)
-    # TIFF predictor 2 is REAL now (round 9): applied to the xref
+    # TIFF predictor 2 is real: applied to the xref
     # stream it merely garbles the table, and the scan-based fallback
     # still opens the document — the stale-xref robustness claim
     assert extract_pdf_text(
@@ -597,7 +666,7 @@ def test_image_roundtrip_all_filters_layouts_ciphers():
 )
 @settings(max_examples=30, deadline=None)
 def test_sub8_image_roundtrip_hypothesis(bits, w, h, indexed, flate, seed):
-    """Property (round 13): any geometry/depth/filter of a sub-8 PDF
+    """Property: any geometry/depth/filter of a sub-8 PDF
     image — Indexed or plain gray — round-trips through write_pdf ->
     extract_pdf_images to exactly the expected samples (fuzzes the
     row byte-padding edges the fixed fixtures cannot)."""
@@ -633,7 +702,7 @@ def test_sub8_image_roundtrip_hypothesis(bits, w, h, indexed, flate, seed):
 
 
 def test_sub8_images_round_trip():
-    """Round 13 (VERDICT r12 item 6): 2/4-bit packed samples decode for
+    """2/4-bit packed samples decode for
     Indexed palettes and plain /DeviceGray — MSB-first byte-padded rows
     (§8.9.5.2) through the shared TIFF bit-unpack — across filters and
     the cipher/layout matrix; direct sub-8 RGB stays a refusal."""
@@ -688,7 +757,7 @@ def test_image_error_classes():
     # sample-length mismatch: lie about /Width
     with pytest.raises(ValueError, match="sample bytes"):
         extract_pdf_images(data.replace(b"/Width 8", b"/Width 7"))
-    # sub-8 depths decode since round 13 — declaring 4-bit over 8-bit
+    # sub-8 depths decode — declaring 4-bit over 8-bit
     # sized data is now a loud geometry error, not a refusal
     with pytest.raises(ValueError, match="packed bytes"):
         extract_pdf_images(
@@ -839,7 +908,7 @@ def test_font_error_classes():
 @settings(max_examples=40, deadline=None)
 @given(seed=st.integers(0, 2**31 - 1), n_flips=st.integers(1, 12))
 def test_mutation_robustness_images_fonts(seed, n_flips):
-    """Bit-flip fuzz over the round-9 surfaces — image XObjects (all
+    """Bit-flip fuzz over the image and font surfaces — image XObjects (all
     four raster filters) and font machinery (Differences + Type0
     ToUnicode): decode correctly or raise ValueError /
     NotImplementedError — never crash, never balloon."""
@@ -1013,7 +1082,7 @@ def test_tounicode_array_destinations_do_not_flood():
 
 
 # --------------------------------------------------------------------------
-# Published cipher test vectors (round-10 external conformance): the PDF
+# Published cipher test vectors (external conformance): the PDF
 # Standard-handler crypto primitives checked against constants from the
 # public specifications — RC4 (the classic Key/Wiki/Secret vectors),
 # FIPS 197 Appendix C ECB examples, NIST SP 800-38A CBC examples. A
@@ -1110,7 +1179,7 @@ def test_hash_2b_pinned_vectors(args, digest):
 
 
 # --------------------------------------------------------------------------
-# Structure-aware fuzz (round 10, VERDICT r9 item 8): beyond bit flips —
+# Structure-aware fuzz: beyond bit flips —
 # surgically corrupted 1.5-layout structures. Contract everywhere:
 # correct text (the scan fallback rescued it) or ValueError; never a
 # crash, hang, or silently wrong output.
@@ -1218,7 +1287,7 @@ def test_mutual_objstm_reference_rejected():
 @settings(max_examples=40, deadline=None)
 @given(seed=st.integers(0, 2**31 - 1), n_flips=st.integers(1, 12))
 def test_mutation_robustness_ccittfax(seed, n_flips):
-    """Bit-flip fuzz over the round-10 CCITTFaxDecode surface: every
+    """Bit-flip fuzz over the CCITTFaxDecode surface: every
     /K dialect, byte alignment, BlackIs1 + /Decode pairing, and the
     container layouts — decode correctly or raise ValueError /
     NotImplementedError, never crash, never balloon."""

@@ -205,7 +205,7 @@ def test_gapfill_midnight_event_belongs_to_next_day(spark):
 
 
 def test_round2_ops_plan_shapes(spark, sf_dir):
-    """Scale-shape pins for the round-2 operators: no nested-loop or
+    """Scale-shape pins for five LLM-curation operators: no nested-loop or
     cartesian joins anywhere, no global (single-range) Sort outside a
     window's per-partition sort, and the shuffle-shard plan exchanges on
     the shard id rather than range-partitioning."""
@@ -459,7 +459,7 @@ def test_canonical_broadcasts_labels_into_one_doc_pass(spark, sf_dir):
     """L9c's incremental cost over L9 must be: one more documents scan
     (the score projection), the labels side entering via broadcast (the
     duplicate population is orders of magnitude smaller than the
-    corpus), and one combiner argmax + join-back (r13: was one window) —
+    corpus), and one combiner argmax + join-back (not a window) —
     no new corpus-scale shuffle, no sort-merge join of corpus against
     labels."""
     plan = _formatted_plan(registry.QUERIES["llm_dedup_canonical"](spark, sf_dir))
@@ -589,7 +589,7 @@ def test_retention_offsets_are_exact_weeks(spark):
 
 def test_cluster_sizes_join_back_not_window(spark, sf_dir):
     """L9's n_members must be a combiner groupBy + join-back, not
-    count() over a cluster_id window (VERDICT r12 item 2): a planted
+    count() over a cluster_id window: a planted
     10k-member mega-cluster — boilerplate dedup's normal output — must
     not funnel into one WindowExec task after the CC loop was made
     skew-proof. Pins (a) no window spec anywhere in the helper's plan,
@@ -620,8 +620,8 @@ def test_cluster_sizes_join_back_not_window(spark, sf_dir):
 
 def test_canonical_argmax_join_back_not_window(spark, sf_dir):
     """L9c's canonical selection must be a combiner-groupBy argmax +
-    join-back, not first_value over a cluster_id window (VERDICT r13
-    item 1 — the sibling of the n_members fix above): the same planted
+    join-back, not first_value over a cluster_id window (the sibling
+    of the n_members shape above): the same planted
     mega-cluster must not funnel into one WindowExec task to pick one
     winner. Pins (a) no window spec anywhere in the helper's plan, (b)
     a map-side partial max_by keyed on cluster_id, and (c) exact
@@ -673,7 +673,7 @@ _PROC_HASH = re.compile(r"concat\('?117'?, sha2\(")
 
 
 def test_provenance_join_is_int_keyed_no_explode(spark, sf_dir):
-    """J2 (r15): the provenance join runs on the integer job_key — the
+    """J2: the provenance join runs on the integer job_key — the
     injective '117'||sha256(orderkey) makes proc equality equivalent to
     key equality — so the plan must carry NO Generate (explode) node,
     join on the long key, and never compute the pruned proc sha256."""

@@ -472,7 +472,7 @@ def _run_dead_letter_checkpointed(spark, src, ckpt, name):
 
 @pytest.mark.parametrize("backend", ["hdfs", "rocksdb"])
 def test_dead_letter_checkpoint_kill_and_resume(spark, tmp_path, backend):
-    """T6b durability (VERDICT r9 item 4): stop the dead-letter stream
+    """T6b durability: stop the dead-letter stream
     after batch 1, restart from the SAME checkpoint, and the restarted
     query must (a) NOT re-emit batch 1's dead letters (source offsets
     committed) and (b) still hold every per-job high-water mark (the

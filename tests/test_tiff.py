@@ -67,7 +67,7 @@ def test_packbits_is_not_pdf_rle():
 
 def test_honest_refusal_scope():
     data = write_tiff(GRAY)
-    # Group 4 fax compression (tag 259 = 4) is REAL since round 10 —
+    # Group 4 fax compression (tag 259 = 4) decodes for real —
     # but grafting it onto an 8-bit gray file is a corrupt combination
     # (fax is bilevel by definition), a loud data error
     bad = bytearray(data)
@@ -79,7 +79,7 @@ def test_honest_refusal_scope():
     # BigTIFF magic has a malformed offset-size header
     with pytest.raises(ValueError, match="BigTIFF|offset size|IFD"):
         decode_tiff(b"II\x2b\x00" + data[4:])
-    # 16-bit is REAL since round 10 — but stamping depth 16 onto an
+    # 16-bit decodes for real — but stamping depth 16 onto an
     # 8-bit body halves the strip, a loud size error; 32-bit floats
     # stay a genuine refusal
     bad = bytearray(data)
@@ -239,8 +239,8 @@ def test_palette_tiff():
             )
             assert (h, w) == (4, 7)
             assert px == [[pal4[i] for i in row] for row in idx4]
-    # 2-bit and 1-bit palette indices decode honestly since round 13
-    # (the 4-bit unpack generalized — VERDICT r12 item 6); the write
+    # 2-bit and 1-bit palette indices decode honestly (the 4-bit
+    # unpack generalized); the write
     # side packs with the same MSB-first machinery
     pal2 = pal8[:4]
     idx2 = [[(x + 2 * y) % 4 for x in range(9)] for y in range(5)]
@@ -624,7 +624,7 @@ def test_sampleformat_and_orientation_guards():
 def test_palette_roundtrip_hypothesis():
     """Property: for any index depth in {1, 2, 4, 8}, geometry, codec,
     and byte order, write_tiff -> decode_tiff returns exactly the
-    palette-mapped pixels (round 13: one MSB-first pack/unpack serves
+    palette-mapped pixels (one MSB-first pack/unpack serves
     every depth; this fuzzes the width-padding edge the fixed-geometry
     tests cannot)."""
     from hypothesis import given, settings
@@ -655,7 +655,7 @@ def test_palette_roundtrip_hypothesis():
 
 
 def test_pal4_predictor_refused():
-    """ADVICE r10: LZW + predictor 2 on 4-bit palette indices was
+    """LZW + predictor 2 on 4-bit palette indices was
     neither applied nor refused — the nibble path skipped _undiff in
     both layouts, silently decoding wrong pixels. Must refuse loudly
     like the sub-8 grayscale branch (pal-8 applies the predictor)."""
@@ -669,7 +669,7 @@ def test_pal4_predictor_refused():
 
 
 def test_dangling_next_ifd_pointer_is_loud():
-    """ADVICE r10: a nonzero next-IFD pointer landing beyond the file
+    """A nonzero next-IFD pointer landing beyond the file
     is a truncated page chain — decode_tiff_pages must raise, not
     silently return fewer pages."""
     import struct

@@ -346,7 +346,7 @@ def test_pq_recall_improves_with_richer_codebook(spark, sf_dir):
     """The audit must move in the direction that justifies its existence:
     the shipping 16/16 default (the measured knee of the
     pq_sizing_probe.py surface) must not lose recall vs the deliberately
-    tiny 4x4 codebook it replaced (round 8), and every recall value must
+    tiny 4x4 codebook it replaced, and every recall value must
     be a consistent n_hits/k fraction in [0, 1]."""
     from pipelinejobs_indexer_spark.llm.train import (
         PQ_SEARCH_TOP_K,

@@ -333,7 +333,7 @@ def test_decode_image_dispatches_webp():
     assert np.array_equal(out, img)
 
 
-# --------------------------- hand-authored spec fixtures (ADVICE r8)
+# --------------------------- hand-authored spec fixtures (RFC 9649)
 class _LsbWriter:
     """Test-local LSB-first bit packer, written straight off RFC 9649
     §4 — deliberately NOT bits.py's LsbWriter, so these fixtures are a
