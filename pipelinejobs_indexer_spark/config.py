@@ -199,8 +199,10 @@ class EngineConfig:
     price at replay scale (scripts/checkpoint_overhead_probe.py,
     BENCH_sf1.md): tracks checkpointed VOLUME, not
     count — +19% on the CC loop (corpus-shaped edge frames each round),
-    ~0 on BPE (vocab-sized tables), +4% on the k-means trainer (one
-    quantized-frame checkpoint). The
+    +4% on the k-means trainer (one quantized-frame checkpoint). The BPE
+    trainer cuts its word table only past BPE_CHECKPOINT_EVERY = 8
+    merges, so the default 5-merge run never checkpoints; that cut's
+    price has not been measured. The
     checkpoint dir comes from SPARK_GRAFT_CHECKPOINT_DIR (point it at
     HDFS/S3 on a cluster; defaults to a session-scoped local temp dir,
     which demonstrates the mechanics but not cross-host durability).

@@ -2211,10 +2211,10 @@ def llm_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ L4j BPE merge training
 BPE_MERGES = 5  # merge rules to learn (the tokenizer-training step count)
-# Truncate the word table's lineage every N steps: without it the plan
-# depth (and the recompute cost of every step's argmax branch) grows
-# quadratically with K — the same localCheckpoint discipline as the CC
-# loop (dedup.connected_components).
+# Truncate the word table's lineage every N steps: without it step k's
+# argmax job re-applies all k replace projections (total work quadratic
+# in K) — the same localCheckpoint discipline as the CC loop
+# (dedup.connected_components).
 BPE_CHECKPOINT_EVERY = 8
 
 
@@ -2291,23 +2291,32 @@ def llm_bpe_train(
 
     Plan shape (the 100 TB story): the CORPUS is touched exactly once —
     the initial word-frequency groupBy (combiner-friendly; shuffle
-    O(distinct words)). Every merge step then operates on the cached
-    distinct-word table: a pair explode + combiner groupBy + a 1-row
-    TakeOrdered argmax broadcast back into a codegen replace projection.
-    K steps = K tiny shuffles over vocab-sized data. At web scale the
-    word table is millions of rows (still thousands of times smaller
-    than the corpus) and gets checkpointed every few tens of steps to
-    bound plan depth."""
-    merges, _ = _bpe_learn(spark, sf_dir, k_merges)
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
+    O(distinct words)), cached. Every merge step then runs one tiny
+    argmax action over the distinct-word table: a pair explode + combiner
+    groupBy + a 1-row TakeOrdered collected to the driver, whose pair
+    rides the next replace projection as two literals. K steps = K small
+    actions over vocab-sized data (about two jobs each under AQE), so the
+    job count is linear in K. At web scale the word table is millions of
+    rows (still thousands of times smaller than the corpus); its lineage
+    is cut every BPE_CHECKPOINT_EVERY steps to bound the replace depth.
+    The K rules come back as one small driver-built frame
+    (createDataFrame)."""
+    rules, _ = _bpe_learn(spark, sf_dir, k_merges)
+    return spark.createDataFrame(
+        rules,
+        "step int not null, l string not null, r string not null,"
+        " merged string not null, support bigint",
+    )
 
 
 def _bpe_learn(spark: SparkSession, sf_dir: str, k_merges: int):
-    """Run the K-step merge loop; returns ([per-step best-pair frames],
-    final word->symbol-string table AFTER all K merges applied)."""
+    """Run the merge loop; returns ([(step, l, r, merged, support)
+    rules], word->symbol-string table AFTER all merges applied).
+
+    Each step collects its winning pair with one action and binds it as
+    literals into the replace — never formatted into SQL, since symbols
+    may hold quotes. A step with no pair left ends the loop with an
+    empty word table, as the oracle's w{k+1} = w{k} x (empty b{k})."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     wc = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -2324,10 +2333,10 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, k_merges: int):
         ).alias("s"),
         "cnt",
     )
-    merges = []
+    rules = []
     for k in range(k_merges):
         sym = F.expr("split(trim(s), ' ')")
-        pairs = (
+        best = (
             w.select(sym.alias("sym"), "cnt")
             # fully-merged / single-symbol words contribute no pairs.
             # The filter is REQUIRED, not cosmetic: Spark's
@@ -2348,24 +2357,18 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, k_merges: int):
             )
             .groupBy("l", "r")
             .agg(F.sum("cnt").cast("bigint").alias("support"))
+            .orderBy(F.desc("support"), F.asc("l"), F.asc("r"))
+            .first()
         )
-        best = (
-            pairs.orderBy(F.desc("support"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .select(
-                F.lit(k).alias("step"),
-                "l",
-                "r",
-                F.concat("l", "r").alias("merged"),
-                "support",
-            )
-        )
-        merges.append(best)
-        w = w.crossJoin(F.broadcast(best.select("l", "r"))).select(
+        if best is None:
+            w = w.limit(0)
+            break
+        left, right = best["l"], best["r"]
+        rules.append((k, left, right, left + right, best["support"]))
+        w = w.select(
             "word",
-            F.expr(
-                "replace(s, ' ' || l || ' ' || r || ' ',"
-                " ' ' || l || r || ' ')"
+            F.replace(
+                "s", F.lit(f" {left} {right} "), F.lit(f" {left}{right} ")
             ).alias("s"),
             "cnt",
         )
@@ -2373,7 +2376,22 @@ def _bpe_learn(spark: SparkSession, sf_dir: str, k_merges: int):
             from ..session import iter_checkpoint
 
             w = iter_checkpoint(w)
-    return merges, w
+    return rules, w
+
+
+def _bpe_tokens(spark: SparkSession, sf_dir: str, k_merges: int, key: str):
+    """The corpus as (word, ``key``, n_sub) tokens: every word joined to
+    its subword count after the K learned merges, through the broadcast
+    vocab-sized word table."""
+    _, w = _bpe_learn(spark, sf_dir, k_merges)
+    seg = w.select(
+        "word",
+        F.expr("size(split(trim(s), ' '))").cast("long").alias("n_sub"),
+    )
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return docs.select(key, F.explode(F.split("text", " ")).alias("word")).join(
+        F.broadcast(seg), "word"
+    )
 
 
 def _bpe_encode_sql(k_merges: int = BPE_MERGES) -> str:
@@ -2409,17 +2427,8 @@ def llm_bpe_encode(
     the merge loop itself runs once on vocab-sized data (see
     llm_bpe_train). Oracle: the same K-step CTE chain extended with the
     join+count head."""
-    _, w_final = _bpe_learn(spark, sf_dir, k_merges)
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    tokens = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
-    seg = w_final.select(
-        "word",
-        F.expr("size(split(trim(s), ' '))").cast("long").alias("n_sub"),
-    )
     return (
-        tokens.join(F.broadcast(seg), "word")
+        _bpe_tokens(spark, sf_dir, k_merges, "doc_id")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_words"),
@@ -2929,17 +2938,8 @@ def llm_tokenizer_fertility(
     word→segmentation table, and the rollup is a tiny per-lang
     combiner aggregate — at 100 TB the join is the only corpus-sized
     stage and it carries no shuffle (broadcast dimension)."""
-    _, w_final = _bpe_learn(spark, sf_dir, k_merges)
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    tokens = docs.select(
-        "lang", F.explode(F.split("text", " ")).alias("word")
-    )
-    seg = w_final.select(
-        "word",
-        F.expr("size(split(trim(s), ' '))").cast("long").alias("n_sub"),
-    )
     return (
-        tokens.join(F.broadcast(seg), "word")
+        _bpe_tokens(spark, sf_dir, k_merges, "lang")
         .groupBy("lang")
         .agg(
             F.count("*").cast("bigint").alias("n_words"),

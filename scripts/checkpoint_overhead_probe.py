@@ -10,8 +10,8 @@ should use). Results are parity-pinned identical both ways
 (tests/test_config.py); this probe prices the durability.
 
 Cells: the heaviest iter_checkpoint consumers at sf0.1 — the CC loop
-(llm_dedup_clusters), the K-step BPE trainer (llm_bpe_train), and the
-Lloyd k-means trainer (llm_embedding_kmeans) — each timed best-of-3
+(llm_dedup_clusters) and the Lloyd k-means trainer
+(llm_embedding_kmeans) — each timed best-of-3
 warm in a fresh subprocess with the env knob exported (import-time
 config, like a production run). The checkpoint dir is a local tmpdir:
 on a real cluster it is HDFS/S3, so treat the measured delta as the
@@ -50,7 +50,7 @@ print("CELL " + json.dumps({"sec": round(best, 3), "rows": n}))
 spark.stop()
 """
 
-QUERIES = ["llm_dedup_clusters", "llm_bpe_train", "llm_embedding_kmeans"]
+QUERIES = ["llm_dedup_clusters", "llm_embedding_kmeans"]
 
 
 def _run_cell(name: str, resilient: bool) -> dict:

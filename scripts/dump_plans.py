@@ -76,7 +76,7 @@ SHOWCASE = {
     "llm_dedup_substring": "anchor-sample candidates + cached positional table + diagonal-run combiner groupBys; no per-pair alignment",
     "llm_corpus_curate_v4": "v3 stack + broadcast LEFT ANTI span gate — still zero corpus pair joins",
     "llm_corpus_curate_v5": "v4 stack + ONE broadcast LEFT ANTI over the union of the three multimodal pair sets (phash/audiohash/videohash doc_b) — the cross-modality keep/drop plan, zero new corpus-scale shuffles",
-    "llm_bpe_train": "K-step unrolled merge loop over the cached vocab-sized word table; argmax broadcast into codegen replace",
+    "llm_bpe_train": "the K driver-collected rules as one small createDataFrame scan (Scan ExistingRDD) — the loop ran one small argmax action per step (pair explode → combiner groupBy → 1-row TakeOrdered over the cached vocab-sized word table), each winning pair bound as literals into the next codegen replace",
     "llm_multimodal_video_frames": "one MapInPandas stage over the pruned doc_id scan — AVI walk + per-frame JPEG decode in place, only 9-int rows shuffle",
     "llm_multimodal_gif": "real GIF decode via mapInPandas: ArrowEvalPython over the doc_id projection only — O(rows) leaves the worker, no media bytes shuffle",
     "llm_multimodal_webp": "real lossless-WebP (VP8L) decode via mapInPandas over the pruned doc_id scan — prefix codes + LZ77 + transforms run in place, only 3-int rows shuffle",

@@ -267,20 +267,22 @@ def test_resilient_checkpoints_identical_results(spark, sf_dir, monkeypatch):
     from pipelinejobs_indexer_spark.llm.dedup import llm_dedup_clusters
     from pipelinejobs_indexer_spark.llm.text import llm_bpe_train
 
-    def run_both(fn):
+    def run_both(fn, **kw):
         monkeypatch.setattr(
             cfg, "CONFIG", dataclasses.replace(cfg.CONFIG, resilient_checkpoints=False)
         )
-        base = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        base = sorted(map(tuple, fn(spark, sf_dir, **kw).collect()))
         monkeypatch.setattr(
             cfg, "CONFIG", dataclasses.replace(cfg.CONFIG, resilient_checkpoints=True)
         )
-        resilient = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        resilient = sorted(map(tuple, fn(spark, sf_dir, **kw).collect()))
         return base, resilient
 
     cc_base, cc_res = run_both(llm_dedup_clusters)
     assert cc_base == cc_res and len(cc_base) > 0
-    bpe_base, bpe_res = run_both(llm_bpe_train)
+    # 10 merges cross the BPE_CHECKPOINT_EVERY=8 lineage cut; at the
+    # default 5 neither run would checkpoint
+    bpe_base, bpe_res = run_both(llm_bpe_train, k_merges=10)
     assert bpe_base == bpe_res and len(bpe_base) > 0
     # the resilient path must actually have set a checkpoint dir
     assert spark.sparkContext.getCheckpointDir() is not None

@@ -305,8 +305,6 @@ def test_bpe_train_matches_python_reference_on_random_corpora(
     chained-merge interactions a crafted corpus cannot enumerate."""
     from collections import Counter
 
-    from hypothesis import assume
-
     from pipelinejobs_indexer_spark.llm.text import llm_bpe_train
 
     def py_bpe(word_counts, k):
@@ -319,7 +317,7 @@ def test_bpe_train_matches_python_reference_on_random_corpora(
                 for a, b in zip(sym, sym[1:]):
                     pc[(a, b)] += c
             if not pc:
-                return None  # corpus fully merged before k steps
+                break  # fully merged: later steps emit no rule
             (left, right), support = min(
                 pc.items(), key=lambda kv: (-kv[1], kv[0])
             )
@@ -337,11 +335,10 @@ def test_bpe_train_matches_python_reference_on_random_corpora(
     )
     @given(
         words=st.lists(st.sampled_from(_BPE_WORDS), min_size=4, max_size=30),
-        k=st.integers(min_value=1, max_value=4),
+        k=st.integers(min_value=1, max_value=10),
     )
     def check(words, k):
         expect = py_bpe(Counter(words), k)
-        assume(expect is not None)
         sf = str(tmp_path / f"bpe_{abs(hash((tuple(words), k))) % 10**9}")
         rows = [(0, " ".join(words), "en", "src0", 1)]
         spark.createDataFrame(

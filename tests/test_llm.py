@@ -1905,6 +1905,29 @@ def test_bpe_deep_merge_loop_with_checkpoint_matches_oracle(spark, ddb, sf_dir):
     assert_frames_match(got, expect, "llm_bpe_train[k=10]")
 
 
+def test_bpe_train_job_count_grows_linearly_in_k(spark, sf_dir):
+    """Each merge step submits a bounded number of jobs (one small
+    argmax action): K=6 may cost at most 3 jobs per step more than K=3.
+    A lazy per-step decision frame re-derives every earlier step, and
+    its job count roughly doubles per merge."""
+    from pipelinejobs_indexer_spark.llm.text import llm_bpe_train
+
+    sc = spark.sparkContext
+
+    def jobs(k):
+        group = f"bpe-job-count-k{k}"
+        sc.setJobGroup(group, group)
+        try:
+            llm_bpe_train(spark, sf_dir, k_merges=k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    j3, j6 = jobs(3), jobs(6)
+    assert j3 > 0 and j6 - j3 <= 3 * 3, (j3, j6)
+
+
 def test_probe_video_largesize_and_corrupt_headers():
     """64-bit largesize boxes carry a 16-byte header — fields must be
     read past it; size==0 means to-end-of-enclosure; zero timescale is a
